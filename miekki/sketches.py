@@ -564,11 +564,11 @@ def len_quantiles(docs: DataFrame, len_col: str = "n_chars",
     corpus, so inputs above the bound raise instead of running."""
     from pyspark.sql import Window
 
-    n = docs.count()
-    if n > max_rows:
+    # the guard reads at most max_rows + 1 rows, never the corpus
+    if docs.limit(max_rows + 1).count() > max_rows:
         raise ValueError(
             f"len_quantiles is the EVIDENCE wrapper (exact per-group "
-            f"rank over all {n} rows > max_rows={max_rows}); use "
+            f"rank over more than max_rows={max_rows} rows); use "
             f"hdr_quantiles(hdr_histogram(...)) in production")
 
     est = hdr_quantiles(

@@ -1,26 +1,29 @@
 """O15–O18 — connected components via large-star/small-star
 alternation (Kiveris et al., SoCC 2014; mandated by BASELINE.json
-north_star), expressed as DataFrame self-joins — the candidate-pair
-"graph" is just a table (SURVEY.md §1.1/§2.7).
+north_star) — the candidate-pair "graph" is just a table (SURVEY.md
+§1.1/§2.7). Labels are deterministic: cluster_id = min (signed int64)
+doc_id in the component — partitioning-invariant by construction.
 
-Per-iteration ``localCheckpoint()`` truncates lineage: without it the
-Catalyst plan doubles per round and analysis time explodes. Labels are
-deterministic: cluster_id = min (signed int64) doc_id in the
-component — partitioning-invariant by construction.
+``cc_fixpoint`` runs each star as ONE window pass built from one SQL
+statement, and materializes each round — small-star then large-star,
+three Exchanges — with one ``localCheckpoint()`` (which also truncates
+lineage: without it the plan doubles per round). It stops as soon as
+the graph is a forest of stars centred on the component minima, a
+state the large-star window detects in the same pass.
+``large_star``/``small_star`` are the join-based reference operators.
 """
 
 from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame, Observation, Window, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 log = logging.getLogger(__name__)
 
-# rounds-to-convergence of the last cc_fixpoint call (ROADMAP r1 #2:
-# instrument the fixpoint; observed 2-7 on real corpora — grows
-# O(log max-component-diameter), so 10^12-doc boilerplate clusters
-# still converge in ~10 rounds once star edges shorten the paths)
+# small-star rounds the last cc_fixpoint call ran before reaching star
+# form (0 = the input already was stars); grows O(log max component
+# diameter), observed 1-6 on real corpora
 LAST_ROUNDS: int | None = None
 
 
@@ -54,102 +57,78 @@ def small_star(edges: DataFrame) -> DataFrame:
     return out1.unionByName(out2).where("src != dst").distinct()
 
 
-def fused_star_round(edges: DataFrame) -> DataFrame:
-    """One large-star + small-star round in THREE exchanges (r4,
-    VERDICT r3 next-step #5; the groupBy+join formulation above costs
-    ~8 shuffle stages per round and CC latency is pure round-trip
-    count). Each star's per-node minimum comes from ONE window pass:
-    over Window.partitionBy(node).orderBy(nbr), first(nbr) IS the
-    neighborhood minimum, and row_number marks one row per node for
-    small-star's (u, mn) emission — so large-star is a single
-    Exchange+Sort, small-star a second (its key is the other endpoint,
-    so a shuffle between them is unavoidable — the stars group by
-    different nodes), and the round-end distinct the third. Emits the
-    exact same edge SET as small_star(large_star(e)) for max-first
-    distinct input (parity pinned in tests/test_cc.py); intermediate
-    duplicate (v, m) rows across groups are tolerated — they cannot
-    change a min — and collapse in the final distinct. Window memory
-    is one node's neighborhood, same bound as the groupBy it replaces;
-    hot nodes shrink to O(1) rows after their first round (every
-    neighbor re-points to the min), so no salting is needed here."""
-    sym = _symmetrize(edges)
-    wl = Window.partitionBy("u").orderBy("v")
-    large = (sym.withColumn("m", F.least(F.first("v").over(wl), F.col("u")))
-             .where(F.col("v") > F.col("u"))
-             .select(F.col("v").alias("u"), F.col("m").alias("v")))
-    ws = Window.partitionBy("u").orderBy("v")
-    s = (large.withColumn("mn", F.first("v").over(ws))
-         .withColumn("rn", F.row_number().over(ws)))
-    # both small-star outputs in ONE projection (explode of a 2-slot
-    # struct array), NOT a union of two filters over `s`: a union
-    # duplicates the whole window subtree per branch and Catalyst's
-    # per-branch column pruning then makes the two S-window exchanges
-    # non-identical, so even AQE exchange reuse executed 4 shuffles
-    # (measured; the plan-level test pins the fixed shape at 3)
-    member = F.when(F.col("v") != F.col("mn"),
-                    F.struct(F.col("v").alias("src"),
-                             F.col("mn").alias("dst")))
-    head = F.when(F.col("rn") == 1,
-                  F.struct(F.col("u").alias("src"),
-                           F.col("mn").alias("dst")))
-    return (s.select(F.explode(F.array(member, head)).alias("e"))
-            .where(F.col("e").isNotNull())
-            .select("e.src", "e.dst").distinct())
+# Over PARTITION BY u ORDER BY v, first(v) is the neighbourhood minimum,
+# so each star is one Exchange+Sort. The inline symmetrizes while reading
+# {e} once: a union would plan the (on the first pass un-checkpointed)
+# upstream edges twice. `bad` is the star-form check (cc_fixpoint).
+_LARGE = """SELECT u, v, least(first(v) OVER w, u) AS m,
+       row_number() OVER w = 2 AND first(v) OVER w < u AS bad
+FROM (SELECT inline(array(named_struct('u', src, 'v', dst),
+                          named_struct('u', dst, 'v', src))) FROM {e})
+WHERE u != v WINDOW w AS (PARTITION BY u ORDER BY v)"""
+
+# Input is large-star output (src > dst, duplicates tolerated: they
+# cannot change a min). Every neighbour re-points to mn and each node's
+# row_number() = 1 row adds (u, mn); (x, x) rows are the non-emissions.
+_SMALL = """SELECT DISTINCT src, dst FROM (
+  SELECT inline(array(named_struct('src', v, 'dst', mn),
+                      named_struct('src', u, 'dst', IF(rn = 1, mn, u))))
+  FROM (SELECT src AS u, dst AS v, first(dst) OVER w AS mn,
+               row_number() OVER w AS rn
+        FROM {e} WINDOW w AS (PARTITION BY src ORDER BY dst)))
+WHERE src != dst"""
 
 
-_STAT_EXPRS = lambda: (F.count(F.lit(1)).alias("n"),  # noqa: E731
-                       F.bit_xor(F.xxhash64("src", "dst")).alias("h"))
-
-
-def _ckpt_with_stats(edges: DataFrame):
-    """localCheckpoint + convergence fingerprint in ONE job (r3,
-    VERDICT r2 next-step #4): an Observation rides the checkpoint's
-    materialization action, so the former per-round stats agg — a
-    full extra job over the edge table, ~half the CC fixed latency —
-    disappears. Fingerprint = (count, order-insensitive xxhash64
-    bit_xor): count alone can collide across rounds (SURVEY.md §2.7;
-    bit_xor instead of sum — ANSI mode forbids wrapping long sums)."""
+def _large_pass(e: DataFrame) -> tuple[DataFrame, Observation]:
+    """Large-star edges (v → m, v > u) plus an Observation of the input
+    rows `n` and the star-form count `bad`, taken before the filter."""
     obs = Observation()
-    out = edges.observe(obs, *_STAT_EXPRS()).localCheckpoint()
-    m = obs.get
-    return out, (m["n"], m["h"])
+    out = (e.sparkSession.sql(_LARGE, e=e)
+           .observe(obs, F.expr("count(1) AS n"),
+                    F.expr("count_if(bad) AS bad"))
+           .where("v > u").selectExpr("v AS src", "m AS dst"))
+    return out, obs
+
+
+def _small_pass(e: DataFrame) -> DataFrame:
+    return e.sparkSession.sql(_SMALL, e=e)
 
 
 def cc_fixpoint(edges: DataFrame, max_iter: int = 64) -> DataFrame:
-    """Alternate large/small star to fixpoint; returns star edges
-    (node → component-min)."""
-    # materialize the input edge set once — every star round reads it
-    # twice (groupBy + join back); without this the whole upstream
-    # pipeline would re-execute per use (SURVEY.md §4.2)
+    """Large-star pass, then (small-star, large-star) rounds until a
+    large-star input is in star form; returns that pass's output, the
+    star edges (node → component-min). The stop rule is exact:
+    - an Observation on the large-star window counts rows with
+      ``row_number() = 2 AND first(v) < u``: the nodes with a smaller
+      neighbour and at least two neighbours;
+    - zero means the input is already stars centred on their minima,
+      so the large-star output is exactly the final star set;
+    - duplicate rows can only raise the count, so the check can never
+      stop the loop too early."""
     global LAST_ROUNDS
-    e, prev = _ckpt_with_stats(
-        edges.select("src", "dst").where("src != dst").distinct())
-    if prev[0] == 0:
-        LAST_ROUNDS = 0
-        return e
-    # Adaptive partition count for the round loop: each round is ~8
-    # shuffle stages and the edge table shrinks fast, so running 6
-    # rounds at the global partition count (sized for the band table)
-    # is thousands of near-empty tasks — pure scheduler latency, the
-    # serial fraction that caps scaling efficiency. ~2M edges per
-    # partition keeps tasks meaningful at any scale (10^12-doc runs
-    # still get tens of thousands of partitions).
-    spark = e.sparkSession
+    spark = edges.sparkSession
+    e, obs = _large_pass(edges)
+    e = e.localCheckpoint()
+    # The rounds run at min(session, rows/4M + 16) partitions: the edge
+    # table shrinks fast and each pass is one shuffle, so beyond ~4M
+    # (symmetrized) rows per partition the tasks are near-empty, pure
+    # scheduler latency. A session asking for fewer keeps its count.
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    cc_parts = max(16, min(int(old_parts), prev[0] // 2_000_000 + 16))
+    cc_parts = min(int(old_parts), obs.get["n"] // 4_000_000 + 16)
     spark.conf.set("spark.sql.shuffle.partitions", str(cc_parts))
+    rounds = 0
     try:
-        for i in range(max_iter):
-            e, cur = _ckpt_with_stats(fused_star_round(e))
-            if cur == prev:
-                LAST_ROUNDS = i + 1
-                log.info("cc_fixpoint converged in %d rounds (%d edges)",
-                         i + 1, cur[0])
-                return e
-            prev = cur
+        while obs.get["bad"]:
+            if rounds == max_iter:
+                raise RuntimeError(
+                    f"CC did not converge in {max_iter} iterations")
+            e, obs = _large_pass(_small_pass(e))
+            e, rounds = e.localCheckpoint(), rounds + 1
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    raise RuntimeError(f"CC did not converge in {max_iter} iterations")
+    LAST_ROUNDS = rounds
+    log.info("cc_fixpoint reached star form in %d rounds", rounds)
+    return e
 
 
 def cc_labels(edges: DataFrame, nodes: DataFrame,

@@ -9,6 +9,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("MIEKKI_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "fast: the per-commit tier (CC, golden signatures, "
+        "kernel parity, plan pins, sf0.001 contracts); "
+        "run with -m fast, about 2 min on 4 cores")
+
+
 @pytest.fixture(scope="session")
 def spark():
     import tempfile

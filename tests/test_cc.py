@@ -1,11 +1,21 @@
 """large-star/small-star CC vs the networkx oracle (SURVEY.md §5.2,
 FIXTURES.md F3 cc_edges cases): path, star, two components,
-self-loops, 64-bit boundary ids, random graphs."""
+self-loops, 64-bit boundary ids, random graphs — plus the fixpoint's
+star-form stop rule, partition sizing and pass shapes."""
+
+import glob
+import io
+import json
+import os
+import re
+from contextlib import redirect_stdout
 
 import numpy as np
 import pytest
 
 from oracle.cc import cc_labels as oracle_cc
+
+pytestmark = pytest.mark.fast
 
 CASES = {
     "path": [(1, 2), (2, 3), (3, 4), (4, 5)],
@@ -51,22 +61,106 @@ def test_cc_random_graphs(spark):
         assert spark_cc(spark, edges, ids.tolist()) == oracle_cc(edges, ids.tolist())
 
 
-def test_fused_round_is_three_exchanges(spark):
-    """The r4 claim behind fused_star_round — one Exchange per star
-    window plus the round-end distinct, with the shared small-star
-    subtree served by exchange reuse — pinned at the plan level so a
-    regression back to the ~8-stage groupBy+join shape is caught."""
-    import io
-    import re
-    from contextlib import redirect_stdout
+def test_star_form_input_stops_after_first_pass(spark):
+    """Stars centred on their minima are the fixpoint: the first
+    large-star pass sees zero nodes with a smaller neighbour and two
+    neighbours and returns. Duplicate rows only raise that count (one
+    extra round, never an early stop)."""
+    from miekki.stages import cc
 
-    from miekki.stages.cc import fused_star_round
+    stars = [(1, 5), (1, 7), (9, 1), (-4, 3), (-4, 8)]
+    nodes = sorted({x for e in stars for x in e})
+    assert spark_cc(spark, stars, nodes) == oracle_cc(stars, nodes)
+    assert cc.LAST_ROUNDS == 0
+    dup = [(1, 2), (2, 1), (1, 3)]
+    assert spark_cc(spark, dup, [1, 2, 3]) == oracle_cc(dup, [1, 2, 3])
+    assert cc.LAST_ROUNDS == 1
+
+
+def _stage_tasks(spark, fn) -> list[int]:
+    """Runs fn and returns the task count of every stage it completed,
+    read from the session event log (spark.ui is off in tests; stage
+    completions are flush events, so the log is complete once the
+    listener bus drains)."""
+    app = spark.sparkContext.applicationId
+    (path,) = [p for p in glob.glob(os.path.join(spark._miekki_evlog_dir, "*"))
+               if app in os.path.basename(p)]
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    start = os.path.getsize(path)
+    fn()
+    bus.waitUntilEmpty()
+    tasks = []
+    with open(path, "rb") as f:
+        f.seek(start)
+        for raw in f:
+            try:
+                ev = json.loads(raw)
+            except ValueError:      # a line cut by the start offset
+                continue
+            if ev.get("Event") == "SparkListenerStageCompleted":
+                tasks.append(ev["Stage Info"]["Number of Tasks"])
+    return tasks
+
+
+def test_cc_rounds_run_at_session_partitions(spark):
+    """A session asking for 3 shuffle partitions gets at most 3 tasks
+    in every CC stage (the rounds used to floor at 16), and its
+    setting is back in place after the call. The long chain needs
+    several rounds and still ends at the oracle's star set."""
+    from miekki.stages import cc
+
+    chain = CASES["chain_long"]
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        e = spark.createDataFrame(chain, "src long, dst long").coalesce(1)
+        star = []
+        tasks = _stage_tasks(
+            spark, lambda: star.extend(cc.cc_fixpoint(e).collect()))
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    want = oracle_cc(chain, sorted({x for p in chain for x in p}))
+    assert {r.src: r.dst for r in star} == {
+        n: m for n, m in want.items() if n != m}
+    assert cc.LAST_ROUNDS > 1
+    assert len(tasks) >= 2 * cc.LAST_ROUNDS, tasks  # the log saw the rounds
+    assert max(tasks) <= 3, tasks
+
+
+def test_cc_partition_setting_restored(spark):
+    """A session above the round cap (16 partitions at this size) gets
+    its own setting back after the call, and also when the loop
+    raises."""
+    from miekki.stages.cc import cc_fixpoint
+
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "40")
+    try:
+        e = spark.createDataFrame(CASES["path"], "src long, dst long")
+        assert len(cc_fixpoint(e).collect()) == 4
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "40"
+        with pytest.raises(RuntimeError, match="did not converge"):
+            cc_fixpoint(e, max_iter=0)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "40"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def test_star_round_is_three_exchanges(spark):
+    """One full fixpoint round — small-star pass, then large-star pass,
+    over a checkpointed input — is one Exchange per star window plus
+    the round-end distinct; pinned at the plan level so a regression
+    back to the ~8-stage groupBy+join shape is caught."""
+    from miekki.stages.cc import _large_pass, _small_pass
 
     e = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6), (6, 7), (1, 7)], "src long, dst long")
+        [(2, 1), (3, 2), (6, 5), (7, 6), (7, 1)],
+        "src long, dst long").localCheckpoint()
     buf = io.StringIO()
     with redirect_stdout(buf):
-        fused_star_round(e).explain("formatted")
+        _large_pass(_small_pass(e))[0].explain("formatted")
     plan = buf.getvalue()
     # formatted explain lists every operator once in the tree and once
     # as a "(n) Exchange" detail header — count the headers
@@ -74,13 +168,16 @@ def test_fused_round_is_three_exchanges(spark):
     assert real <= 3, plan
 
 
-def test_fused_round_matches_two_star_composition(spark):
-    """fused_star_round (the r4 3-exchange window round used by
-    cc_fixpoint) must emit exactly the edge SET of
-    small_star(large_star(e)) — on named cases AND random graphs,
-    including negative/boundary ids where binary-comparison bugs in
-    the window min would show up."""
-    from miekki.stages.cc import fused_star_round, large_star, small_star
+def test_star_passes_match_two_star_composition(spark):
+    """The fixpoint's large-star pass then small-star pass must emit
+    exactly the edge SET of small_star(large_star(e)) — on named cases
+    AND random graphs, including negative/boundary ids where
+    binary-comparison bugs in the window min would show up. The input
+    is the raw edge list: the first pass reads it as given. All graphs
+    run as one table, each node tagged (graph, id): structs order
+    field by field, so graphs stay disjoint and keep their id order."""
+    from miekki.stages.cc import (_large_pass, _small_pass, large_star,
+                                  small_star)
 
     rng = np.random.Generator(np.random.PCG64(11))
     graphs = list(CASES.values())
@@ -88,10 +185,12 @@ def test_fused_round_matches_two_star_composition(spark):
         ids = np.unique(rng.integers(-(2**62), 2**62, size=n_nodes))
         graphs.append([(int(a), int(b)) for a, b in zip(
             rng.choice(ids, size=n_edges), rng.choice(ids, size=n_edges))])
-    for edges in graphs:
-        e = (spark.createDataFrame(edges, "src long, dst long")
-             .where("src != dst").distinct())
-        want = {(r.src, r.dst)
-                for r in small_star(large_star(e)).collect()}
-        got = {(r.src, r.dst) for r in fused_star_round(e).collect()}
-        assert got == want, (sorted(got - want)[:5], sorted(want - got)[:5])
+    rows = [(g, a, b) for g, edges in enumerate(graphs) for a, b in edges]
+    e = spark.createDataFrame(rows, "g int, a long, b long").selectExpr(
+        "named_struct('g', g, 'id', a) AS src",
+        "named_struct('g', g, 'id', b) AS dst")
+    want = {(r.src, r.dst) for r in small_star(large_star(e)).collect()}
+    got = {(r.src, r.dst)
+           for r in _small_pass(_large_pass(e)[0]).collect()}
+    assert {s.g for s, _ in want} == set(range(len(graphs)))
+    assert got == want, (sorted(got - want)[:5], sorted(want - got)[:5])

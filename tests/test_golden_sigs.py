@@ -4,6 +4,7 @@ shingling/permutation/simhash semantics fails loudly."""
 import os
 
 import pandas as pd
+import pytest
 
 from miekki.config import DedupConfig
 from miekki.stages.normalize import normalize, with_shingles
@@ -11,6 +12,8 @@ from miekki.stages.signatures import compute_signatures
 
 GOLDEN = os.path.join(os.path.dirname(__file__), "golden",
                       "minhash_sf0001_sample.parquet")
+
+pytestmark = pytest.mark.fast
 
 
 def test_signature_golden(spark, corpus_df):

@@ -41,6 +41,8 @@ def _run(batch, use_native):
 needs_native = pytest.mark.skipif(native.load() is None,
                                   reason="no C toolchain")
 
+pytestmark = pytest.mark.fast
+
 
 @needs_native
 def test_native_parity_mixed_corpus():

@@ -14,6 +14,8 @@ from miekki.config import DedupConfig
 CFG = DedupConfig()
 SF = "/root/testdata/sf0.001"
 
+pytestmark = pytest.mark.fast
+
 
 @pytest.fixture(autouse=True)
 def _fresh_plans(spark):

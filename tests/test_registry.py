@@ -3,11 +3,15 @@ driver records at most the first 50 keys of queries(), so the
 registry must stay <= 50 keys, fully oracled, with every unfolded
 operator reachable through exactly one key."""
 
+import pytest
+
 import __spark_entry__ as entry
 from miekki.driver_queries import (_ALL_ORACLE_SQL, _ALL_QUERIES,
                                    _EMBED_MEDIA_SUITE, _FOLDED_AWAY,
                                    _PIPELINE_CONTRACTS, _SIG_CONTRACTS,
                                    ORACLE_SQL, QUERIES)
+
+pytestmark = pytest.mark.fast
 
 
 def test_registry_at_most_50_keys():

@@ -106,6 +106,7 @@ def test_prod_datasketches_path_agrees(spark):
     assert abs(prod / pinned - 1.0) <= 2 * 5 * hll_rel_err(12)
 
 
+@pytest.mark.fast
 def test_vocab_contract_on_fixture(spark, corpus_df):
     """hll_vocab over the fixture corpus: one row per lang, exact
     n_tokens > 0, every within_tol true, estimator consistent with
@@ -221,6 +222,7 @@ def test_cms_bounded_state_and_md5_mode(spark):
     assert bad == 0
 
 
+@pytest.mark.fast
 def test_cms_vocab_contract_on_fixture(spark, corpus_df):
     """cms_vocab over the fixture corpus: k rows, every no_underest
     true, and the heavy head (top tokens, far above collision mass)
