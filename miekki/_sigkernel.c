@@ -1,20 +1,19 @@
-/* Fused shingle+xxh64+distinct+MinHash+SimHash kernel (C twin of the
- * numpy path in miekki/kernels.py — bit-exact by construction, parity
- * pinned in tests/test_native.py against the numpy kernel and the
+/* The native kernels of the dedup engine: fused shingle + xxh64 +
+ * distinct + MinHash + SimHash (sig_kernel), MinHash + SimHash over
+ * given hash arrays (minhash_kernel), distinct shingle hashes per row
+ * (shingle_kernel), winnowing anchors (anchor_kernel) and common-run
+ * verification (runs_kernel). These are the only production engine;
+ * the pure-Python oracle/ package is the reference every test pins
+ * them against (tests/test_native.py, tests/test_substr.py, the
  * golden signature fixtures).
  *
- * Why C: the numpy kernel spends ~55% of its wall in window-matrix
- * gathers + lexsort (per-length batching of xxh64) and ~40% in 128
- * full-buffer passes for the permutation min (profiled, OPTIMIZATION
- * _r06.md). One row-at-a-time C pass removes every temporary: windows
- * hash straight out of the text bytes, distinct is an open-addressing
- * probe, and the perm loop runs over an L1-resident distinct buffer.
- * gcc -O3 -march=native auto-vectorizes the multiply-add-min loop
- * (AVX-512 vpmullq on this host).
+ * Row-at-a-time passes with no temporaries: windows hash straight out
+ * of the text bytes, distinct is an open-addressing probe, and the
+ * permutation loop runs over an L1-resident distinct buffer. gcc -O3
+ * -march=native auto-vectorizes the multiply-add-min loop.
  *
- * Compiled at first use by miekki/native.py (gcc in the sandbox);
- * every call site falls back to the numpy path when no compiler or
- * MIEKKI_NATIVE=0.
+ * Compiled per host at first use by miekki/native.py; a host without
+ * gcc fails at the first kernel call with the compiler's error.
  */
 
 #include <stdint.h>
@@ -148,7 +147,78 @@ static inline int set_insert(uint64_t *table, int64_t mask, uint64_t h,
     return 1;
 }
 
-/* The full fused kernel over one Arrow batch worth of rows.
+/* Distinct char-k-shingle hashes of one row into s->distinct
+ * (insertion order). Windows start at UTF-8 char starts (byte & 0xC0
+ * != 0x80), matching Spark's code-point substring(norm, i, k); there
+ * are max(1, n_chars - (k-1)) of them, and a row shorter than k chars
+ * (or empty) hashes its whole bytes as one window. Returns the
+ * distinct count, or -1 on allocation failure. */
+static int64_t shingle_row(const uint8_t *row, int64_t row_bytes, int k,
+                           scratch_t *s) {
+    if (ensure_scratch(s, row_bytes) != 0) return -1;
+    int64_t n_chars = 0;
+    for (int64_t i = 0; i < row_bytes; i++)
+        if ((row[i] & 0xC0) != 0x80) s->char_pos[n_chars++] = i;
+    s->char_pos[n_chars] = row_bytes;   /* sentinel */
+
+    if (n_chars == 0) {
+        s->distinct[0] = xxh64(row, row_bytes, 42);
+        return 1;
+    }
+    int64_t m = n_chars - (k - 1);
+    if (m < 1) m = 1;
+    const int64_t mask = s->tab_cap - 1;
+    memset(s->table, 0, sizeof(uint64_t) * s->tab_cap);
+    int zero_seen = 0;
+    int64_t nd = 0;
+    for (int64_t i = 0; i < m; i++) {
+        int64_t sb = s->char_pos[i];
+        int64_t eb = (i + k < n_chars) ? s->char_pos[i + k] : row_bytes;
+        uint64_t h = xxh64(row + sb, eb - sb, 42);
+        if (set_insert(s->table, mask, h, &zero_seen))
+            s->distinct[nd++] = h;
+    }
+    return nd;
+}
+
+/* MinHash and SimHash of one row's nd hash values, written straight
+ * into the caller's output slots.
+ * MinHash: min over values of a[i]*v + b[i] (mod 2^64), perm-major so
+ * the inner loop over the values auto-vectorizes (multiply-add-min, no
+ * branches). SimHash: bit t is set when ones_t > nd/2 (integer
+ * division, ties -> 0). */
+static void sketch_row(const uint64_t *restrict vals, int64_t nd,
+                       const uint64_t *restrict a,
+                       const uint64_t *restrict b, int n_perm,
+                       int64_t *restrict minhash_out,
+                       int64_t *restrict simhash_out) {
+    for (int i = 0; i < n_perm; i++) {
+        const uint64_t ai = a[i], bi = b[i];
+        uint64_t mn = (uint64_t)-1;
+        for (int64_t j = 0; j < nd; j++) {
+            uint64_t t = ai * vals[j] + bi;
+            if (t < mn) mn = t;
+        }
+        minhash_out[i] = (int64_t)mn;
+    }
+    int64_t cnt[64] = {0};
+    for (int64_t j = 0; j < nd; j++) {
+        const uint64_t v = vals[j];
+        for (int t = 0; t < 64; t++)
+            cnt[t] += (int64_t)((v >> t) & 1ULL);
+    }
+    const int64_t half = nd / 2;
+    uint64_t fp = 0;
+    for (int t = 0; t < 64; t++)
+        if (cnt[t] > half) fp |= 1ULL << t;
+    *simhash_out = (int64_t)fp;
+}
+
+static void free_scratch(scratch_t *s) {
+    free(s->char_pos); free(s->distinct); free(s->table);
+}
+
+/* The fused kernel over one Arrow batch worth of rows.
  *   data     flat UTF-8 bytes
  *   offsets  n_rows+1 byte offsets into data (offsets[0] == 0)
  *   k        shingle width in CHARS
@@ -157,86 +227,59 @@ static inline int set_insert(uint64_t *table, int64_t mask, uint64_t h,
  *   minhash_out   n_rows * n_perm  (int64 bit pattern of uint64 mins)
  *   simhash_out   n_rows
  *   nsh_out       n_rows (distinct shingle count)
- * Returns 0 on success, -1 on allocation failure, -2 on an empty
- * shingle set (cannot happen: every row yields >= 1 window). */
+ * Returns 0 on success, -1 on allocation failure. */
 int sig_kernel(const uint8_t *data, const int64_t *offsets, int64_t n_rows,
                int k, const uint64_t *a, const uint64_t *b, int n_perm,
                int64_t *minhash_out, int64_t *simhash_out, int32_t *nsh_out) {
     scratch_t s = {0};
-    uint64_t mins[256];
-    int64_t cnt[64];
-
     for (int64_t r = 0; r < n_rows; r++) {
-        const int64_t row_start = offsets[r], row_end = offsets[r + 1];
-        const int64_t row_bytes = row_end - row_start;
-        const uint8_t *row = data + row_start;
-        if (ensure_scratch(&s, row_bytes) != 0) {
-            free(s.char_pos); free(s.distinct); free(s.table);
-            return -1;
-        }
-
-        /* char starts (UTF-8: byte & 0xC0 != 0x80) */
-        int64_t n_chars = 0;
-        for (int64_t i = 0; i < row_bytes; i++)
-            if ((row[i] & 0xC0) != 0x80) s.char_pos[n_chars++] = i;
-        s.char_pos[n_chars] = row_bytes;   /* sentinel */
-
-        /* windows -> distinct hashes (matches _shingle_hash_rows:
-         * m = max(1, n_chars - (k-1)); short/empty rows hash the
-         * whole row bytes) */
-        int64_t m = n_chars - (k - 1);
-        if (m < 1) m = 1;
-        int64_t mask = s.tab_cap - 1;
-        memset(s.table, 0, sizeof(uint64_t) * s.tab_cap);
-        int zero_seen = 0;
-        int64_t nd = 0;
-        if (n_chars == 0) {
-            /* whole (possibly empty) row, one window */
-            uint64_t h = xxh64(row, row_bytes, 42);
-            s.distinct[nd++] = h;
-            zero_seen = (h == 0);
-            if (!zero_seen) { /* keep table state consistent (unused) */ }
-        } else {
-            for (int64_t i = 0; i < m; i++) {
-                int64_t sb = s.char_pos[i];
-                int64_t eb = (i + k < n_chars) ? s.char_pos[i + k] : row_bytes;
-                uint64_t h = xxh64(row + sb, eb - sb, 42);
-                if (set_insert(s.table, mask, h, &zero_seen))
-                    s.distinct[nd++] = h;
-            }
-        }
+        int64_t nd = shingle_row(data + offsets[r], offsets[r + 1] - offsets[r],
+                                 k, &s);
+        if (nd < 0) { free_scratch(&s); return -1; }
         nsh_out[r] = (int32_t)nd;
-
-        /* MinHash: min over distinct of a[i]*v + b[i] (mod 2^64).
-         * perm-major: inner loop over the L1-resident distinct buffer
-         * auto-vectorizes (multiply-add-min, no branches). */
-        uint64_t *mh = mins;
-        for (int i = 0; i < n_perm; i++) {
-            const uint64_t ai = a[i], bi = b[i];
-            uint64_t mn = (uint64_t)-1;
-            for (int64_t j = 0; j < nd; j++) {
-                uint64_t t = ai * s.distinct[j] + bi;
-                if (t < mn) mn = t;
-            }
-            mh[i] = mn;
-        }
-        memcpy(minhash_out + r * n_perm, mh, sizeof(uint64_t) * n_perm);
-
-        /* SimHash votes: ones_j > nd/2 (integer div — ties -> 0) */
-        memset(cnt, 0, sizeof(cnt));
-        for (int64_t j = 0; j < nd; j++) {
-            const uint64_t v = s.distinct[j];
-            for (int t = 0; t < 64; t++)
-                cnt[t] += (int64_t)((v >> t) & 1ULL);
-        }
-        const int64_t half = nd / 2;
-        uint64_t fp = 0;
-        for (int t = 0; t < 64; t++)
-            if (cnt[t] > half) fp |= 1ULL << t;
-        simhash_out[r] = (int64_t)fp;
+        sketch_row(s.distinct, nd, a, b, n_perm, minhash_out + r * n_perm,
+                   simhash_out + r);
     }
-    free(s.char_pos); free(s.distinct); free(s.table);
+    free_scratch(&s);
     return 0;
+}
+
+/* MinHash + SimHash over given per-row hash values (the shingle-array
+ * path: SQL-computed shingle hashes, any hash_fn).
+ *   values   flat uint64 hashes; row r is values[offsets[r]..offsets[r+1])
+ * Returns 0 on success, -2 when a row is empty (MinHash of an empty
+ * set is undefined; shingling always yields >= 1 value). */
+int minhash_kernel(const uint64_t *values, const int64_t *offsets,
+                   int64_t n_rows, const uint64_t *a, const uint64_t *b,
+                   int n_perm, int64_t *minhash_out, int64_t *simhash_out) {
+    for (int64_t r = 0; r < n_rows; r++) {
+        if (offsets[r + 1] <= offsets[r]) return -2;
+        sketch_row(values + offsets[r], offsets[r + 1] - offsets[r], a, b,
+                   n_perm, minhash_out + r * n_perm, simhash_out + r);
+    }
+    return 0;
+}
+
+/* Distinct char-k-shingle hashes per row (shingle_row semantics),
+ * rows back to back in values_out (insertion order within a row).
+ * values_out must hold >= offsets[n_rows] + n_rows values (a row has
+ * at most max(1, bytes) windows). Returns the number of values
+ * written, or -1 on allocation failure. */
+int64_t shingle_kernel(const uint8_t *data, const int64_t *offsets,
+                       int64_t n_rows, int k, uint64_t *values_out,
+                       int32_t *counts_out) {
+    scratch_t s = {0};
+    int64_t out = 0;
+    for (int64_t r = 0; r < n_rows; r++) {
+        int64_t nd = shingle_row(data + offsets[r], offsets[r + 1] - offsets[r],
+                                 k, &s);
+        if (nd < 0) { free_scratch(&s); return -1; }
+        memcpy(values_out + out, s.distinct, sizeof(uint64_t) * nd);
+        counts_out[r] = (int32_t)nd;
+        out += nd;
+    }
+    free_scratch(&s);
+    return out;
 }
 
 /* Calibration/self-test hook: xxh64 of one buffer. */
@@ -245,8 +288,9 @@ uint64_t xxh64_one(const uint8_t *p, int64_t len, uint64_t seed) {
 }
 
 /* ------------------------------------------------------------------ */
-/* Winnowing anchor kernel — C twin of substr_kernels.batch_doc_anchors
- * (bit-parity pinned in tests/test_native.py). Pinned semantics:
+/* Winnowing anchor kernel behind substr_kernels.batch_doc_anchors
+ * (parity with oracle/winnow.py pinned in tests/test_substr.py).
+ * Pinned semantics:
  * rolling polynomial hash H_i = fmix64(sum_{t<k} d[i+t]*B^t) with
  * uint64 wraparound; per doc select the LEFTMOST argmin of every
  * w-window of hashes (deduped), or the single leftmost argmin when a
@@ -256,9 +300,7 @@ uint64_t xxh64_one(const uint8_t *p, int64_t len, uint64_t seed) {
  * (h' = (h - d[i])*B^-1 + d[i+k]*B^(k-1)) + monotonic-deque sliding
  * minimum (pop-while-strictly-greater keeps ties -> leftmost; the
  * leftmost-min index is non-decreasing over sliding windows, so
- * emit-on-change == the numpy path's global unique). Replaces ~35
- * full-array numpy passes (prefix products, span-doubling argmin,
- * reduceat short-doc path).                                           */
+ * emit-on-change == the deduped selected set).                        */
 
 #define ROLL_B    1099511628211ULL            /* FNV64 prime (odd)     */
 #define ROLL_BINV 0xCE965057AFF6957BULL       /* B^-1 mod 2^64         */
@@ -274,13 +316,12 @@ static inline uint64_t fmix64(uint64_t h) {
     return h;
 }
 
-/* Common-run verification — C twin of substr_kernels.batch_common_runs
- * (bit-parity pinned in tests/test_native.py). Per clipped pair:
- * if the k-byte anchor windows differ (or either runs past its clip)
- * the run is 0; otherwise extend byte-wise left within min(pos) and
- * right within min(len - pos) - k. Matches the numpy slab kernel's
- * clamp semantics exactly (indices are in-bounds by clip
- * construction; the bounds below are the same ones it enforces). */
+/* Common-run verification behind substr_kernels.batch_common_runs
+ * (parity with oracle/winnow.common_run_length pinned in
+ * tests/test_substr.py). Per clipped pair: if the k-byte anchor
+ * windows differ (or either runs past its clip) the run is 0;
+ * otherwise extend byte-wise left within min(pos) and right within
+ * min(len - pos) - k. */
 int runs_kernel(const uint8_t *data_a, const int64_t *offs_a,
                 const uint8_t *data_b, const int64_t *offs_b,
                 const int64_t *pos_a, const int64_t *pos_b,

@@ -1,11 +1,13 @@
-"""Arrow-vectorized kernels — the ONLY Python that touches row data
-(BASELINE.json input_hint: "vectorized pandas/Arrow UDFs (no per-row
-Python) throughout"; row-at-a-time F.udf is banned).
+"""Arrow-batch wrappers around the native kernels — the ONLY Python
+that touches row data (BASELINE.json input_hint: "vectorized
+pandas/Arrow UDFs (no per-row Python) throughout"; row-at-a-time F.udf
+is banned).
 
-The MinHash/SimHash kernel (SURVEY.md §2.3) runs over mapInArrow:
-one Arrow batch in, the ListArray's flat int64 value buffer + offsets
-out, numpy does the (n_perm x n_shingles) affine-permutation min with
-uint64 wraparound — no per-row Python objects anywhere.
+Every batch goes to one C call (miekki/_sigkernel.c via
+miekki/native.py) over the Arrow buffers: the fused text → MinHash +
+SimHash kernel (SURVEY.md §2.3), MinHash + SimHash over given
+shingle-hash arrays, and distinct shingle hashes per row. oracle/
+holds the reference they are tested against.
 """
 
 from __future__ import annotations
@@ -15,16 +17,17 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 
+from miekki import native
 from miekki.config import DedupConfig, perm_coeffs
+from miekki.native import ptr
 from miekki.textproc import extract_text
-
-SIG_SCHEMA = "doc_id long, minhash array<bigint>, simhash bigint"
 
 
 def sig_schema(id_type: str = "long") -> str:
-    """SIG_SCHEMA with a configurable doc_id type (binary for the
-    128-bit id option — the kernel passes the id column through
-    untouched, so only the declared type changes)."""
+    """Output schema of make_signature_kernel with a configurable
+    doc_id type (binary for the 128-bit id option — the kernel passes
+    the id column through untouched, so only the declared type
+    changes)."""
     return f"doc_id {id_type}, minhash array<bigint>, simhash bigint"
 
 
@@ -32,63 +35,11 @@ def fused_schema(id_type: str = "long") -> str:
     return (f"doc_id {id_type}, minhash array<bigint>, simhash bigint,"
             " n_shingles int")
 
-# memory + CACHE governor for the hot kernels. The minhash loop makes
-# n_perm=128 full passes over the value chunk (multiply + reduceat),
-# so the chunk must fit in per-core L2 (2 MiB here) or every pass
-# streams DRAM: measured on this host, 32k-value chunks (256 KB) make
-# the kernel 1.45x faster single-core AND flat under 4-way parallelism
-# where 200k-value chunks degrade 1.6x (memory bandwidth saturates) —
-# the r2 scaling-efficiency fix for the signature stage.
-_MAX_CHUNK_VALUES = 32_000
 
-
-def _row_chunks(offsets: np.ndarray, max_values: int) -> Iterator[tuple[int, int]]:
-    """Yield (row_start, row_end) slices whose flat value count stays
-    under max_values (always >= 1 row per slice)."""
-    n_rows = len(offsets) - 1
-    start = 0
-    while start < n_rows:
-        end = start + 1
-        while end < n_rows and offsets[end + 1] - offsets[start] <= max_values:
-            end += 1
-        yield start, end
-        start = end
-
-
-def _minhash_simhash_chunk(values_u64: np.ndarray, starts: np.ndarray,
-                           a: np.ndarray, b: np.ndarray, n_perm: int,
-                           scratch: np.ndarray):
-    """values_u64: flat shingle hashes; starts: row start offsets into
-    it (strictly increasing — shingling guarantees >=1 per row).
-    ``scratch``: reused uint64 buffer >= len(values_u64) — fresh large
-    allocations per chunk are page-fault-bound (~50x slower than the
-    arithmetic itself, measured) so all hot ops write into it.
-    Returns (sig (rows, n_perm) int64, fp (rows,) int64)."""
-    n_rows = len(starts)
-    n = len(values_u64)
-    buf = scratch[:n]
-    sig = np.empty((n_rows, n_perm), dtype=np.uint64)
-    for i in range(n_perm):
-        # uint64 wraparound multiply-add == (a*h + b) mod 2^64
-        np.multiply(values_u64, a[i], out=buf)
-        buf += b[i]
-        sig[:, i] = np.minimum.reduceat(buf, starts)
-
-    # SimHash rides the same flat buffer: per-row vote = 2*ones - n,
-    # fingerprint bit = vote > 0 (ties -> 0). One shift+mask+1-D
-    # reduceat per bit: the obvious unpackbits + 2-D axis-0 reduceat
-    # is ~18x slower (measured: 0.55s vs 0.03s per 165k values) —
-    # reduceat only vectorizes well on contiguous 1-D input.
-    counts = np.diff(np.append(starts, n)).astype(np.int64)   # (rows,)
-    half = counts // 2                  # vote > 0 <=> ones > count//2
-    fp = np.zeros(n_rows, dtype=np.uint64)
-    one = np.uint64(1)
-    for j in range(64):
-        np.right_shift(values_u64, np.uint64(j), out=buf)
-        np.bitwise_and(buf, one, out=buf)
-        ones_j = np.add.reduceat(buf, starts).astype(np.int64)
-        fp |= (ones_j > half).astype(np.uint64) << np.uint64(j)
-    return sig.view(np.int64), fp.view(np.int64)
+def _minhash_list(sig: np.ndarray, n_rows: int, n_perm: int) -> pa.ListArray:
+    return pa.ListArray.from_arrays(
+        pa.array(np.arange(n_rows + 1, dtype=np.int32) * n_perm),
+        pa.array(sig))
 
 
 def make_signature_kernel(cfg: DedupConfig):
@@ -98,200 +49,31 @@ def make_signature_kernel(cfg: DedupConfig):
     a, b = perm_coeffs(n_perm, cfg.perm_seed)
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        scratch = np.empty(_MAX_CHUNK_VALUES, dtype=np.uint64)
+        lib = native.load()
         for batch in batches:
             doc_id = batch.column("doc_id")
             lst = batch.column("shingles")
             if isinstance(lst, pa.ChunkedArray):  # pragma: no cover
                 lst = lst.combine_chunks()
-            offsets = lst.offsets.to_numpy().astype(np.int64)
-            values = lst.values.to_numpy(zero_copy_only=False).astype(np.int64).view(np.uint64)
-            # account for a non-zero buffer offset (sliced arrays)
-            if offsets[0] != 0:
-                values = values[: offsets[-1]]
-            if np.any(np.diff(offsets) <= 0):
-                raise ValueError("empty shingle set — shingling must yield >=1")
-
+            # offsets of a sliced list index the unsliced child values
+            offsets = np.ascontiguousarray(lst.offsets.to_numpy(),
+                                           dtype=np.int64)
+            values = np.ascontiguousarray(
+                lst.values.to_numpy(zero_copy_only=False), dtype=np.int64)
             n_rows = len(offsets) - 1
-            sig = np.empty((n_rows, n_perm), dtype=np.int64)
+            sig = np.empty(n_rows * n_perm, dtype=np.int64)
             fp = np.empty(n_rows, dtype=np.int64)
-            for rs, re_ in _row_chunks(offsets, _MAX_CHUNK_VALUES):
-                vals = values[offsets[rs]: offsets[re_]]
-                starts = offsets[rs:re_] - offsets[rs]
-                scr = scratch if len(vals) <= len(scratch) else \
-                    np.empty(len(vals), dtype=np.uint64)  # one giant row
-                s, f = _minhash_simhash_chunk(vals, starts, a, b, n_perm, scr)
-                sig[rs:re_] = s
-                fp[rs:re_] = f
-
-            mh = pa.ListArray.from_arrays(
-                pa.array(np.arange(n_rows + 1, dtype=np.int32) * n_perm),
-                pa.array(sig.reshape(-1)),
-            )
+            rc = lib.minhash_kernel(ptr(values), ptr(offsets), n_rows,
+                                    ptr(a), ptr(b), n_perm,
+                                    ptr(sig), ptr(fp))
+            if rc == -2:
+                raise ValueError("empty shingle set — shingling must yield >=1")
             yield pa.RecordBatch.from_arrays(
-                [doc_id, mh, pa.array(fp)],
+                [doc_id, _minhash_list(sig, n_rows, n_perm), pa.array(fp)],
                 names=["doc_id", "minhash", "simhash"],
             )
 
     return kernel
-
-
-# --------------------------------------------------------------------
-# fused shingle+signature kernel (ROADMAP r1 #1): the SQL
-# transform(sequence(...)) shingling is interpreted (no codegen for
-# lambdafunction — measured in tests/test_plans.py) and shipped ~1 GB
-# of shingle arrays through Arrow. This kernel takes norm_text
-# directly and does shingling + xxhash64 + distinct + MinHash/SimHash
-# in one numpy pass, bit-exact with the SQL path (parity pinned in
-# tests/test_kernels.py::test_fused_kernel_parity).
-# --------------------------------------------------------------------
-
-FUSED_SCHEMA = ("doc_id long, minhash array<bigint>, simhash bigint,"
-                " n_shingles int")
-
-_MASK64 = 0xFFFFFFFFFFFFFFFF
-_P1 = np.uint64(0x9E3779B185EBCA87)
-_P2 = np.uint64(0xC2B2AE3D27D4EB4F)
-_P3 = np.uint64(0x165667B19E3779F9)
-_P4 = np.uint64(0x85EBCA77C2B2AE63)
-_P5 = np.uint64(0x27D4EB2F165667C5)
-_SPARK_SEED = 42
-
-# fused-kernel row-chunk governor: bytes of text per numpy slice
-# (working set ~13x this: window matrix + hashes + lexsort buffers).
-# Sized for L2 like _MAX_CHUNK_VALUES: measured on this host the
-# fused kernel runs 2.0x faster at 125 KB than at 4 MB (the lexsort
-# temporaries stop thrashing DRAM) — see BENCH/BASELINE.md.
-_MAX_CHUNK_BYTES = 125_000
-
-
-def _rotl_v(x: np.ndarray, r: int) -> np.ndarray:
-    rr = np.uint64(r)
-    return (x << rr) | (x >> (np.uint64(64) - rr))
-
-
-def _le_word(mat: np.ndarray, off: int, nbytes: int = 8) -> np.ndarray:
-    """Little-endian word from columns [off, off+nbytes) of a (n, L)
-    uint8 matrix — vectorized over rows."""
-    w = mat[:, off].astype(np.uint64)
-    for b in range(1, nbytes):
-        w |= mat[:, off + b].astype(np.uint64) << np.uint64(8 * b)
-    return w
-
-
-def xxh64_fixed(mat: np.ndarray, seed: int = _SPARK_SEED) -> np.ndarray:
-    """Vectorized XXH64 over n same-length byte strings ((n, L) uint8
-    → uint64 (n,)). Lane-for-lane the algorithm of
-    oracle.xxh64.xxh64_bytes (itself pinned against Spark-generated
-    vectors), including the >=32-byte stripe path."""
-    n, L = mat.shape
-
-    def rnd(acc, w):
-        acc = acc + w * _P2
-        acc = _rotl_v(acc, 31)
-        return acc * _P1
-
-    i = 0
-    if L >= 32:
-        v1 = np.full(n, np.uint64((seed + 0x9E3779B185EBCA87
-                                   + 0xC2B2AE3D27D4EB4F) & _MASK64))
-        v2 = np.full(n, np.uint64((seed + 0xC2B2AE3D27D4EB4F) & _MASK64))
-        v3 = np.full(n, np.uint64(seed & _MASK64))
-        v4 = np.full(n, np.uint64((seed - 0x9E3779B185EBCA87) & _MASK64))
-        while i <= L - 32:
-            v1 = rnd(v1, _le_word(mat, i))
-            v2 = rnd(v2, _le_word(mat, i + 8))
-            v3 = rnd(v3, _le_word(mat, i + 16))
-            v4 = rnd(v4, _le_word(mat, i + 24))
-            i += 32
-        h = (_rotl_v(v1, 1) + _rotl_v(v2, 7)
-             + _rotl_v(v3, 12) + _rotl_v(v4, 18))
-        zero = np.uint64(0)
-        for v in (v1, v2, v3, v4):
-            h = (h ^ rnd(zero, v)) * _P1 + _P4
-    else:
-        h = np.full(n, np.uint64((seed + 0x27D4EB2F165667C5) & _MASK64))
-    h = h + np.uint64(L)
-    zero = np.uint64(0)
-    while i <= L - 8:
-        h = _rotl_v(h ^ rnd(zero, _le_word(mat, i)), 27) * _P1 + _P4
-        i += 8
-    if i <= L - 4:
-        h = h ^ (_le_word(mat, i, 4) * _P1)
-        h = _rotl_v(h, 23) * _P2 + _P3
-        i += 4
-    while i < L:
-        h = h ^ (mat[:, i].astype(np.uint64) * _P5)
-        h = _rotl_v(h, 11) * _P1
-        i += 1
-    h ^= h >> np.uint64(33)
-    h *= _P2
-    h ^= h >> np.uint64(29)
-    h *= _P3
-    h ^= h >> np.uint64(32)
-    return h
-
-
-def _shingle_hash_rows(data: np.ndarray, rel: np.ndarray, k: int):
-    """Distinct char-k-shingle xxhash64 per row.
-
-    data: flat UTF-8 bytes of a slice of rows; rel: (n_rows+1,) byte
-    offsets into data. Returns (values u64 flat, starts int64 (n_rows,),
-    counts int32 (n_rows,)) with values grouped by row (set order, not
-    first-occurrence order — min/sum consumers are order-free).
-
-    Window byte boundaries come from UTF-8 char starts ((b & 0xC0) !=
-    0x80), matching Spark's code-point substring semantics; windows
-    shorter than k chars (short docs) hash the whole row, empty rows
-    hash b'' — exactly substring(norm, i, k) of the SQL path."""
-    n_rows = len(rel) - 1
-    char_mask = (data & 0xC0) != 0x80
-    char_pos = np.flatnonzero(char_mask).astype(np.int64)
-    char_off = np.searchsorted(char_pos, rel).astype(np.int64)
-    n_chars = np.diff(char_off)
-
-    m = np.maximum(1, n_chars - (k - 1))              # windows per row
-    total = int(m.sum())
-    row_of_win = np.repeat(np.arange(n_rows, dtype=np.int64), m)
-    within = np.arange(total, dtype=np.int64) - np.repeat(
-        np.cumsum(m) - m, m)
-    start_char = char_off[row_of_win] + within
-    cp_take = np.minimum(start_char, len(char_pos) - 1) if len(char_pos) \
-        else np.zeros(total, dtype=np.int64)
-    starts_b = np.where(n_chars[row_of_win] > 0,
-                        char_pos[cp_take] if len(char_pos) else 0,
-                        rel[row_of_win])
-    end_char = start_char + k
-    row_end_char = char_off[row_of_win + 1]
-    ce_take = np.minimum(end_char, len(char_pos) - 1) if len(char_pos) \
-        else np.zeros(total, dtype=np.int64)
-    ends_b = np.where(end_char < row_end_char,
-                      char_pos[ce_take] if len(char_pos) else 0,
-                      rel[row_of_win + 1])
-    lens = ends_b - starts_b
-
-    hashes = np.empty(total, dtype=np.uint64)
-    for ln in np.unique(lens):
-        idx = np.flatnonzero(lens == ln)
-        if ln == 0:
-            hashes[idx] = xxh64_fixed(
-                np.empty((len(idx), 0), dtype=np.uint8))
-        else:
-            mat = data[starts_b[idx, None]
-                       + np.arange(int(ln), dtype=np.int64)[None, :]]
-            hashes[idx] = xxh64_fixed(mat)
-
-    # per-row distinct (array_distinct semantics as a SET)
-    order = np.lexsort((hashes, row_of_win))
-    r_s = row_of_win[order]
-    h_s = hashes[order]
-    keep = np.empty(total, dtype=bool)
-    keep[0] = True
-    keep[1:] = (r_s[1:] != r_s[:-1]) | (h_s[1:] != h_s[:-1])
-    values = h_s[keep]
-    counts = np.bincount(r_s[keep], minlength=n_rows).astype(np.int32)
-    starts = np.concatenate(([0], np.cumsum(counts)[:-1])).astype(np.int64)
-    return values, starts, counts
 
 
 def _utf8_view(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
@@ -321,25 +103,40 @@ def _utf8_view(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     return data, offs - offs[0]
 
 
+def shingle_hashes(data: np.ndarray, rel: np.ndarray, k: int
+                   ) -> tuple[np.ndarray, np.ndarray]:
+    """Distinct char-k-shingle xxhash64 per row: (values uint64 flat,
+    counts int32 (n_rows,)), values grouped by row and ascending within
+    a row (a fixed order, so float sums over them are reproducible).
+
+    data: flat UTF-8 bytes; rel: (n_rows+1,) byte offsets into data.
+    Windows follow Spark's code-point substring(norm, i, k); a row
+    shorter than k chars hashes its whole bytes, an empty row hashes
+    b''."""
+    n_rows = len(rel) - 1
+    data = np.ascontiguousarray(data)
+    rel = np.ascontiguousarray(rel, dtype=np.int64)
+    values = np.empty(int(rel[-1] - rel[0]) + n_rows, dtype=np.uint64)
+    counts = np.empty(n_rows, dtype=np.int32)
+    n = native.load().shingle_kernel(ptr(data), ptr(rel), n_rows, k,
+                                      ptr(values), ptr(counts))
+    if n < 0:  # pragma: no cover
+        raise MemoryError("shingle_kernel allocation failed")
+    rows = np.repeat(np.arange(n_rows, dtype=np.int64), counts)
+    values = values[:n]
+    return values[np.lexsort((values, rows))], counts
+
+
 def make_text_signature_kernel(cfg: DedupConfig):
     """mapInArrow: (doc_id, norm_text) batches → (doc_id,
     minhash[n_perm], simhash, n_shingles) — shingling, hashing,
-    distinct, and both sketches fused into one pass.
-
-    Two bit-identical engines (parity pinned in tests/test_native.py):
-    the compiled C kernel (miekki/_sigkernel.c via miekki/native.py —
-    r6: ~5x the numpy pass, which spent ~55% in window gathers +
-    lexsort and ~40% in 128 full-buffer permutation passes) and the
-    numpy fallback below (no gcc / MIEKKI_NATIVE=0)."""
+    distinct, and both sketches fused into one C pass per batch."""
     n_perm = cfg.n_perm
     k = cfg.shingle_k
     a, b = perm_coeffs(n_perm, cfg.perm_seed)
 
-    def native_kernel(batches: Iterator[pa.RecordBatch], lib
-                      ) -> Iterator[pa.RecordBatch]:
-        import ctypes
-        a_c = np.ascontiguousarray(a)
-        b_c = np.ascontiguousarray(b)
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        lib = native.load()
         for batch in batches:
             doc_id = batch.column("doc_id")
             data, rel = _utf8_view(batch.column("norm_text"))
@@ -349,69 +146,15 @@ def make_text_signature_kernel(cfg: DedupConfig):
             sig = np.empty(n_rows * n_perm, dtype=np.int64)
             fp = np.empty(n_rows, dtype=np.int64)
             n_sh = np.empty(n_rows, dtype=np.int32)
-            rc = lib.sig_kernel(
-                data.ctypes.data_as(ctypes.c_void_p),
-                rel.ctypes.data_as(ctypes.c_void_p),
-                n_rows, k,
-                a_c.ctypes.data_as(ctypes.c_void_p),
-                b_c.ctypes.data_as(ctypes.c_void_p),
-                n_perm,
-                sig.ctypes.data_as(ctypes.c_void_p),
-                fp.ctypes.data_as(ctypes.c_void_p),
-                n_sh.ctypes.data_as(ctypes.c_void_p))
+            rc = lib.sig_kernel(ptr(data), ptr(rel), n_rows, k,
+                                ptr(a), ptr(b), n_perm,
+                                ptr(sig), ptr(fp), ptr(n_sh))
             if rc != 0:  # pragma: no cover
                 raise MemoryError(f"sig_kernel failed rc={rc}")
-            mh = pa.ListArray.from_arrays(
-                pa.array(np.arange(n_rows + 1, dtype=np.int32) * n_perm),
-                pa.array(sig))
             yield pa.RecordBatch.from_arrays(
-                [doc_id, mh, pa.array(fp), pa.array(n_sh)],
+                [doc_id, _minhash_list(sig, n_rows, n_perm), pa.array(fp),
+                 pa.array(n_sh)],
                 names=["doc_id", "minhash", "simhash", "n_shingles"])
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        if n_perm <= 256:            # C kernel's per-row min buffer
-            from miekki import native
-
-            lib = native.load()
-            if lib is not None:
-                yield from native_kernel(batches, lib)
-                return
-        scratch = np.empty(_MAX_CHUNK_VALUES, dtype=np.uint64)
-        for batch in batches:
-            doc_id = batch.column("doc_id")
-            data, rel = _utf8_view(batch.column("norm_text"))
-            n_rows = len(rel) - 1
-            sig = np.empty((n_rows, n_perm), dtype=np.int64)
-            fp = np.empty(n_rows, dtype=np.int64)
-            n_sh = np.empty(n_rows, dtype=np.int32)
-            # row-chunk on text bytes so the window matrix + sort
-            # buffers stay bounded regardless of Arrow batch size
-            for rs, re_ in _row_chunks(rel, _MAX_CHUNK_BYTES):
-                d = data[rel[rs]: rel[re_]]
-                r = rel[rs: re_ + 1] - rel[rs]
-                values, starts, counts = _shingle_hash_rows(d, r, k)
-                n_sh[rs:re_] = counts
-                # signature pass reuses the shared chunk kernel
-                for vs, ve in _row_chunks(
-                        np.concatenate((starts, [len(values)])),
-                        _MAX_CHUNK_VALUES):
-                    vals = values[starts[vs]: (starts[ve] if ve < len(starts)
-                                               else len(values))]
-                    st = starts[vs:ve] - starts[vs]
-                    scr = scratch if len(vals) <= len(scratch) else \
-                        np.empty(len(vals), dtype=np.uint64)
-                    s, f = _minhash_simhash_chunk(vals, st, a, b,
-                                                  n_perm, scr)
-                    sig[rs + vs: rs + ve] = s
-                    fp[rs + vs: rs + ve] = f
-            mh = pa.ListArray.from_arrays(
-                pa.array(np.arange(n_rows + 1, dtype=np.int32) * n_perm),
-                pa.array(sig.reshape(-1)),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [doc_id, mh, pa.array(fp), pa.array(n_sh)],
-                names=["doc_id", "minhash", "simhash", "n_shingles"],
-            )
 
     return kernel
 

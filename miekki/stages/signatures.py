@@ -1,9 +1,9 @@
 """O6/O7 — MinHash + SimHash signatures in ONE Arrow pass.
 
-The only hot-path Python in the pipeline: shingle arrays stream
-through mapInArrow, numpy computes both sketches per batch
-(miekki.kernels). Everything before (shingling) and after (banding)
-is JVM-side SQL.
+The only hot-path Python in the pipeline: text (or shingle arrays)
+stream through mapInArrow and one native C call per batch computes
+both sketches (miekki.kernels over miekki/_sigkernel.c). Everything
+before (normalize) and after (banding) is JVM-side SQL.
 """
 
 from __future__ import annotations
@@ -34,11 +34,11 @@ def compute_signatures(docs_with_shingles: DataFrame, cfg: DedupConfig) -> DataF
 def signatures_from_text(docs_norm: DataFrame, cfg: DedupConfig) -> DataFrame:
     """(doc_id, norm_text) → T2 (doc_id, minhash[n_perm], simhash,
     n_shingles) via the fused Arrow kernel: shingling + xxhash64 +
-    distinct + both sketches in one numpy pass. Bit-exact with
-    compute_signatures(with_shingles(...)) — parity pinned in
-    tests/test_kernels.py — while skipping the interpreted
-    transform(sequence(...)) projection AND the shingle-array Arrow
-    transfer (the r1 bench's largest cost).
+    distinct + both sketches in one C pass. Bit-exact with
+    compute_signatures(with_shingles(...)) — both pinned against the
+    golden signatures in tests/test_golden_sigs.py — while skipping the
+    interpreted transform(sequence(...)) projection AND the
+    shingle-array Arrow transfer (the r1 bench's largest cost).
 
     hash_fn='md5' (the DuckDB-comparable mode) routes through the
     two-step SQL path: the fused kernel hashes shingles with xxh64

@@ -25,13 +25,13 @@ Properties the tests pin:
     shingle SET is identical, so x and v are.
   * near-duplicate text (small token edits) -> cosine near 1;
     unrelated random text -> cosine well below SemDeDup's tau.
-  * empty docs: the kernel hashes b'' (one shingle — kernels.py
-    semantics), so all empties embed identically: exact dups of each
-    other, never NaN.
+  * empty docs: the kernel hashes b'' (one shingle —
+    kernels.shingle_hashes semantics), so all empties embed
+    identically: exact dups of each other, never NaN.
 
-Scale shape: ONE map-only mapInArrow pass — tokenize/hash/bucket in
-the existing vectorized shingle kernel, then a single (rows x B
-sparse) @ (B x dim) accumulation per Arrow batch via np.add.at;
+Scale shape: ONE map-only mapInArrow pass — tokenize/hash in the
+native shingle kernel (kernels.shingle_hashes), then a single (rows x
+B sparse) @ (B x dim) accumulation per Arrow batch via np.add.at;
 no shuffle, no per-row Python, no driver state. At 100 TB this is
 embarrassingly parallel and bounded by the same scan that feeds
 signatures.
@@ -73,14 +73,13 @@ def text_embed(docs: DataFrame, dim: int = DIM_DEFAULT,
     def kernel(batches):
         import pyarrow as pa
 
-        from miekki.kernels import _shingle_hash_rows, _utf8_view
+        from miekki.kernels import _utf8_view, shingle_hashes
 
         R = projection_matrix(n_buckets, n_dim, rng_seed)
         for batch in batches:
             doc_id = batch.column("doc_id")
             data, rel = _utf8_view(batch.column("norm_col_"))
-            values, _starts, counts = _shingle_hash_rows(
-                data, rel, shingle_k)
+            values, counts = shingle_hashes(data, rel, shingle_k)
             n_rows = len(counts)
             buckets = (values % np.uint64(n_buckets)).astype(np.int64)
             row_idx = np.repeat(np.arange(n_rows, dtype=np.int64),

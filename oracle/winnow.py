@@ -1,6 +1,6 @@
 """Oracle for the exact-substring pass — deliberately naive
-implementations, independent of miekki.substr_kernels' vectorized
-code (SURVEY.md §5.1).
+implementations, independent of the C kernels behind
+miekki.substr_kernels (SURVEY.md §5.1).
 """
 
 from __future__ import annotations
@@ -40,6 +40,22 @@ def winnow_naive(hashes: list[int], w: int) -> list[int]:
         m = min(window)
         sel.add(t + window.index(m))
     return sorted(sel)
+
+
+def common_run_length(a: bytes, b: bytes, pa: int, pb: int, k: int) -> int:
+    """Length of the maximal common byte run around anchor pair
+    (pa, pb) by byte-wise extension; 0 if the k-byte anchor windows
+    differ (a hash collision) or either runs past its end."""
+    if pa + k > len(a) or pb + k > len(b) or a[pa: pa + k] != b[pb: pb + k]:
+        return 0
+    ext_l = 0
+    while ext_l < min(pa, pb) and a[pa - 1 - ext_l] == b[pb - 1 - ext_l]:
+        ext_l += 1
+    ext_r = 0
+    rmax = min(len(a) - pa, len(b) - pb) - k
+    while ext_r < rmax and a[pa + k + ext_r] == b[pb + k + ext_r]:
+        ext_r += 1
+    return ext_l + k + ext_r
 
 
 def longest_common_run(a: bytes, b: bytes) -> int:

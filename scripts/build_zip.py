@@ -11,7 +11,8 @@ with zipfile.ZipFile(OUT, "w") as z:
     for pkg in ("miekki", "oracle"):
         for root, _, files in os.walk(os.path.join(REPO, pkg)):
             for f in sorted(files):
-                if f.endswith(".py"):
+                # .c: miekki/native.py builds the kernels from the zip
+                if f.endswith((".py", ".c")):
                     p = os.path.join(root, f)
                     z.write(p, os.path.relpath(p, REPO))
 print(OUT)

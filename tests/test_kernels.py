@@ -1,5 +1,5 @@
-"""Spark-free kernel tests: the mapInArrow numpy kernel vs the
-plain-loop oracle, plus MinHash statistical properties
+"""Spark-free kernel tests: the mapInArrow wrappers over the native
+kernels vs the plain-loop oracle, plus MinHash statistical properties
 (SURVEY.md §5.1/§5.2). hypothesis drives random shingle sets.
 """
 
@@ -42,7 +42,7 @@ def test_kernel_matches_oracle(rows):
 
 
 def test_kernel_chunking_boundary():
-    # force the row-chunk governor: rows bigger than _MAX_CHUNK_VALUES/2
+    # rows of 10^5 values next to 1-3 value rows in one batch
     rng = np.random.Generator(np.random.PCG64(7))
     rows = [list(np.unique(rng.integers(-(2**62), 2**62, size=n)))
             for n in (150_000, 120_000, 3, 1, 99_000)]
@@ -95,28 +95,18 @@ def test_simhash_close_for_similar_sets():
 
 # --- fused text->signature kernel (r2) --------------------------------
 
-def test_xxh64_fixed_matches_oracle():
-    """Vectorized XXH64 vs the golden-pinned scalar oracle across all
-    lane paths: empty, byte tail, dword, word loop, >=32B stripes."""
-    from miekki.kernels import xxh64_fixed
-    from oracle.xxh64 import xxh64_bytes
+def test_empty_shingle_set_rejected():
+    import pytest
 
-    rng = np.random.Generator(np.random.PCG64(7))
-    for L in [0, 1, 2, 3, 4, 5, 7, 8, 9, 12, 15, 16, 20, 31, 32, 33,
-              40, 63, 64, 71]:
-        n = 17
-        mat = rng.integers(0, 256, size=(n, L), dtype=np.uint8)
-        got = xxh64_fixed(mat, 42)
-        want = np.array([xxh64_bytes(bytes(mat[i]), 42) for i in range(n)],
-                        dtype=np.uint64)
-        assert (got == want).all(), f"L={L}"
+    with pytest.raises(ValueError, match="empty shingle set"):
+        run_kernel([[1, 2], []])
 
 
 def test_shingle_hash_rows_matches_sql_semantics():
-    """Pure-numpy shingle pass vs the Python oracle shingle set
-    (char k-grams of UTF-8 text, whole-text window when shorter
-    than k, empty text hashes b'')."""
-    from miekki.kernels import _shingle_hash_rows
+    """Native shingle pass vs the Python oracle shingle set (char
+    k-grams of UTF-8 text, whole-text window when shorter than k,
+    empty text hashes b''), values ascending within each row."""
+    from miekki.kernels import shingle_hashes
     from miekki.textproc import char_shingles
     from oracle.xxh64 import xxh64_bytes
 
@@ -125,13 +115,13 @@ def test_shingle_hash_rows_matches_sql_semantics():
     k = CFG.shingle_k
     data = np.frombuffer("".join(texts).encode("utf-8"), dtype=np.uint8)
     rel = np.cumsum([0] + [len(t.encode("utf-8")) for t in texts]).astype(np.int64)
-    values, starts, counts = _shingle_hash_rows(data, rel, k)
+    values, counts = shingle_hashes(data, rel, k)
+    starts = np.concatenate(([0], np.cumsum(counts)))
     for i, t in enumerate(texts):
-        got = set(values[starts[i]: starts[i] + counts[i]].tolist())
+        got = values[starts[i]: starts[i + 1]].tolist()
         want = {xxh64_bytes(s.encode("utf-8"), 42)
-                for s in char_shingles(t, k)} or {xxh64_bytes(b"", 42)}
-        assert got == want, t
-        assert counts[i] == len(want)
+                for s in char_shingles(t, k)}
+        assert got == sorted(want), t
 
 
 def test_payload_hashes_trailing_empty_row():

@@ -1,6 +1,6 @@
-"""O13 exact-substring pass (SURVEY.md §2.6): kernel-vs-oracle
-winnowing parity, the Schleimer'03 anchor guarantee, extension
-verification, and end-to-end containment recall on the planted
+"""O13 exact-substring pass (SURVEY.md §2.6): native-kernel-vs-oracle
+rolling-hash, winnowing and run-extension parity, the Schleimer'03
+anchor guarantee, and end-to-end containment recall on the planted
 ``contain`` fixtures at the test config (L=40, w=16, k=16)."""
 
 import numpy as np
@@ -8,31 +8,56 @@ import pytest
 from hypothesis import given, settings, strategies as st
 
 from miekki.config import TEST_SUBSTR, DedupConfig
-from miekki.substr_kernels import (common_run_length, doc_anchors,
-                                   rolling_hashes, winnow_positions)
-from oracle.winnow import longest_common_run, window_hashes_naive, winnow_naive
+from miekki.substr_kernels import batch_common_runs, batch_doc_anchors
+from oracle.winnow import (common_run_length, longest_common_run,
+                           window_hashes_naive, winnow_naive)
 
 CFG = TEST_SUBSTR  # substr_len=40, winnow_w=16, anchor_k=16
 
 
+def _anchors(data: bytes, k: int, w: int):
+    """(fps as uint64 list, byte positions) of one doc."""
+    rows, fps, pos = batch_doc_anchors(
+        np.frombuffer(data, dtype=np.uint8),
+        np.array([0, len(data)], dtype=np.int64), k, w)
+    assert (rows == 0).all()
+    return fps.view(np.uint64).tolist(), pos.tolist()
+
+
+def _runs(pairs, k):
+    """batch_common_runs over (a, b, pos_a, pos_b) byte pairs."""
+    def flat(docs):
+        return (np.frombuffer(b"".join(docs), dtype=np.uint8),
+                np.cumsum([0] + [len(d) for d in docs]).astype(np.int64))
+
+    da, oa = flat([p[0] for p in pairs])
+    db, ob = flat([p[1] for p in pairs])
+    return batch_common_runs(da, oa, db, ob,
+                             np.array([p[2] for p in pairs], dtype=np.int32),
+                             np.array([p[3] for p in pairs], dtype=np.int32),
+                             k).tolist()
+
+
 def test_rolling_hash_matches_naive():
+    # w=1 selects every window, so the anchors are all rolling hashes
     rng = np.random.Generator(np.random.PCG64(3))
     for n in (16, 17, 40, 200):
         data = bytes(rng.integers(0, 256, size=n, dtype=np.uint8))
-        got = rolling_hashes(np.frombuffer(data, dtype=np.uint8), 16)
-        assert got.tolist() == window_hashes_naive(data, 16)
+        fps, pos = _anchors(data, 16, 1)
+        assert pos == list(range(n - 15))
+        assert fps == window_hashes_naive(data, 16)
 
 
 def test_rolling_hash_short_input():
-    assert len(rolling_hashes(np.zeros(5, dtype=np.uint8), 16)) == 0
+    assert _anchors(bytes(5), 16, 1) == ([], [])
 
 
 @settings(max_examples=60, deadline=None)
 @given(st.binary(min_size=0, max_size=300), st.integers(min_value=2, max_value=20))
 def test_winnow_matches_naive(data, w):
-    h = rolling_hashes(np.frombuffer(data, dtype=np.uint8), 8)
-    got = winnow_positions(h, w).tolist()
-    assert got == winnow_naive(h.tolist(), w)
+    h = window_hashes_naive(data, 8)
+    sel = winnow_naive(h, w)
+    assert _anchors(data, 8, w) == ([h[i] for i in sel], sel)
 
 
 @settings(max_examples=60, deadline=None)
@@ -51,8 +76,8 @@ def test_anchor_guarantee(data):
     sa = len(rng_a.decode("latin1").encode("utf-8"))
     sb = len(rng_b.decode("latin1").encode("utf-8"))
     rl = len(run.decode("latin1").encode("utf-8"))
-    fa, pa = doc_anchors(a, CFG.anchor_k, CFG.winnow_w)
-    fb, pb = doc_anchors(b, CFG.anchor_k, CFG.winnow_w)
+    fa, pa = _anchors(a.encode("utf-8"), CFG.anchor_k, CFG.winnow_w)
+    fb, pb = _anchors(b.encode("utf-8"), CFG.anchor_k, CFG.winnow_w)
     # shared fp anchored INSIDE the planted run at the same run offset
     a_off = {(f, p - sa) for f, p in zip(fa, pa)
              if sa <= p <= sa + rl - CFG.anchor_k}
@@ -65,23 +90,49 @@ def test_common_run_extension():
     a = b"xxxxxTHE COMMON RUN OF BYTES HEREyyyyy"
     b_ = b"zzTHE COMMON RUN OF BYTES HEREqqqqqqqqq"
     pa_, pb_ = a.index(b"COMMON"), b_.index(b"COMMON")
-    assert common_run_length(a, b_, pa_, pb_, 6) == len("THE COMMON RUN OF BYTES HERE")
-    assert common_run_length(a, b_, pa_, pb_, 6) == longest_common_run(a, b_)
+    want = len("THE COMMON RUN OF BYTES HERE")
+    assert want == longest_common_run(a, b_)
+    assert _runs([(a, b_, pa_, pb_)], 6) == [want]
+    assert common_run_length(a, b_, pa_, pb_, 6) == want
 
 
 def test_collision_rejected():
     # anchor windows differ -> run 0 regardless of positions
+    assert _runs([(b"abcdefgh", b"abcdxfgh", 0, 0)], 8) == [0]
     assert common_run_length(b"abcdefgh", b"abcdxfgh", 0, 0, 8) == 0
+
+
+def _random_clip_pairs(n, k, ext):
+    """n clipped pairs as substr pair verification ships them: a
+    quarter share an anchor with partial extensions, a quarter are
+    byte-identical clips (maximal run), half are random (run 0)."""
+    rng = np.random.Generator(np.random.PCG64(9))
+    pairs = []
+    for i in range(n):
+        la = int(rng.integers(k, 2 * ext + k + 1))
+        lb = int(rng.integers(k, 2 * ext + k + 1))
+        A = rng.integers(32, 127, size=la, dtype=np.uint8)
+        B = rng.integers(32, 127, size=lb, dtype=np.uint8)
+        p1 = int(rng.integers(0, la - k + 1))
+        p2 = int(rng.integers(0, lb - k + 1))
+        case = i % 4
+        if case == 0:          # shared anchor + partial extensions
+            B[p2:p2 + k] = A[p1:p1 + k]
+            left = min(p1, p2, int(rng.integers(0, 60)))
+            if left:
+                B[p2 - left:p2] = A[p1 - left:p1]
+            right = min(la - p1 - k, lb - p2 - k, int(rng.integers(0, 90)))
+            if right:
+                B[p2 + k:p2 + k + right] = A[p1 + k:p1 + k + right]
+        elif case == 1:        # byte-identical clips (max run)
+            p2, B = p1, A.copy()
+        pairs.append((A.tobytes(), B.tobytes(), p1, p2))
+    return pairs
 
 
 @settings(max_examples=40, deadline=None)
 @given(st.data())
-def test_batch_run_parity(data):
-    """batch_common_runs == common_run_length per pair, bit-exact —
-    including hash-collision rows (differing anchor windows), zero
-    extensions, and full-clip runs."""
-    from miekki.substr_kernels import batch_common_runs
-
+def _drawn_run_parity(data):
     k = 8
     n = data.draw(st.integers(min_value=1, max_value=12))
     pairs = []
@@ -98,15 +149,20 @@ def test_batch_run_parity(data):
         pairs.append((a, b, len(pre_a) + off, len(pre_b) + off))
     # plus a guaranteed-collision row (anchor windows differ)
     pairs.append((b"abcdefghXY", b"abcdXfghXY", 0, 0))
-    da = np.frombuffer(b"".join(p[0] for p in pairs), dtype=np.uint8)
-    db = np.frombuffer(b"".join(p[1] for p in pairs), dtype=np.uint8)
-    oa = np.cumsum([0] + [len(p[0]) for p in pairs]).astype(np.int64)
-    ob = np.cumsum([0] + [len(p[1]) for p in pairs]).astype(np.int64)
-    spos = np.array([p[2] for p in pairs], dtype=np.int32)
-    dpos = np.array([p[3] for p in pairs], dtype=np.int32)
-    got = batch_common_runs(da, oa, db, ob, spos, dpos, k, slab_rows=5)
-    want = [common_run_length(a, b, pa_, pb_, k) for a, b, pa_, pb_ in pairs]
-    assert got.tolist() == want
+    assert _runs(pairs, k) == [common_run_length(*p, k) for p in pairs]
+
+
+def test_batch_run_parity():
+    """batch_common_runs == oracle common_run_length per pair,
+    bit-exact — hypothesis-drawn planted runs with a hash-collision
+    row, then 4,000 random clip pairs at the production config (zero
+    extensions, partial extensions, full-clip runs)."""
+    cfg = DedupConfig()
+    pairs = _random_clip_pairs(4000, cfg.anchor_k, cfg.substr_len)
+    want = [common_run_length(*p, cfg.anchor_k) for p in pairs]
+    assert any(want) and not all(want)
+    assert _runs(pairs, cfg.anchor_k) == want
+    _drawn_run_parity()
 
 
 @pytest.fixture(scope="module")
@@ -169,27 +225,36 @@ def test_e2e_recall_with_substr(spark, corpus_df, fixture_corpus):
 
 
 def test_batch_anchor_parity():
-    """batch_doc_anchors == doc_anchors per doc, bit-exact — including
-    short docs (n <= w), empty docs, and boundary-adjacent content."""
-    import numpy as np
+    """batch_doc_anchors == winnow_naive(window_hashes_naive(doc)) per
+    doc, bit-exact, over one multi-doc batch — including short docs
+    (n <= w), empty docs, docs of exactly k-1 / k / w+k-1 / w+k bytes,
+    multi-byte UTF-8 and boundary-adjacent content."""
+    def check(texts, k, w):
+        bs = [t.encode("utf-8") for t in texts]
+        data = np.frombuffer(b"".join(bs), dtype=np.uint8)
+        offs = np.cumsum([0] + [len(b) for b in bs]).astype(np.int64)
+        rows, fps, pos = batch_doc_anchors(data, offs, k, w)
+        assert (np.diff(rows) >= 0).all()
+        for i, b in enumerate(bs):
+            m = rows == i
+            h = window_hashes_naive(b, k)
+            sel = winnow_naive(h, w)
+            assert pos[m].tolist() == sel, f"doc {i} pos"
+            assert fps[m].view(np.uint64).tolist() == \
+                [h[j] for j in sel], f"doc {i} fps"
 
-    from miekki.substr_kernels import batch_doc_anchors, doc_anchors
-
-    k, w = 16, 16
-    texts = [
-        "x" * 10,                                  # shorter than k -> none
-        "the quick brown fox jumps over the lazy dog " * 8,
-        "",                                        # empty
-        "the quick brown fox jumps over the lazy dog " * 8,  # dup of #1
-        "short but over k bytes, single window",   # nh <= w branch
-        "Z" * 200,                                 # degenerate repeats
-        "boundary" * 40,
-    ]
-    data = np.frombuffer("".join(texts).encode("utf-8"), dtype=np.uint8)
-    offs = np.cumsum([0] + [len(t.encode("utf-8")) for t in texts]).astype(np.int64)
-    rows, fps, pos = batch_doc_anchors(data, offs, k, w)
-    for i, t in enumerate(texts):
-        m = rows == i
-        efps, epos = doc_anchors(t, k, w)
-        assert np.array_equal(fps[m], efps), f"doc {i} fps"
-        assert np.array_equal(pos[m], epos), f"doc {i} pos"
+    check(["x" * 10,                                   # shorter than k -> none
+           "the quick brown fox jumps over the lazy dog " * 8,
+           "",                                         # empty
+           "the quick brown fox jumps over the lazy dog " * 8,  # dup of #1
+           "short but over k bytes, single window",    # nh <= w branch
+           "Z" * 200,                                  # degenerate repeats
+           "boundary" * 40], 16, 16)
+    k, w = DedupConfig().anchor_k, DedupConfig().winnow_w
+    rng = np.random.Generator(np.random.PCG64(5))
+    words = rng.integers(0, 9999, size=300 * 60)
+    texts = [" ".join(f"w{x:04d}" for x in words[i * 60:(i + 1) * 60])
+             for i in range(300)]
+    check(texts + ["", "a" * 10, "b" * (k - 1), "c" * k, "d" * (k + 5),
+                   "e" * (w + k - 1), "f" * (w + k), "ab" * 400, "ü" * 200,
+                   "boilerplate " * 100], k, w)
