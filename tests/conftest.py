@@ -18,19 +18,27 @@ def pytest_configure(config):
 
 @pytest.fixture(scope="session")
 def spark():
+    import shutil
     import tempfile
 
     from miekki.session import build_spark
 
-    # event log on tmpfs: the streaming flat-shuffle test reads
-    # per-stage shuffle metrics from it (spark.ui stays off; the log
-    # is a few MB of JSON for the whole suite)
-    evlog = tempfile.mkdtemp(prefix="miekki_evlog_", dir="/dev/shm")
+    # event log: the streaming flat-shuffle and CC task-count tests
+    # read per-stage metrics from it (spark.ui stays off). The whole
+    # suite writes ~1.2 GB of JSON, so it goes to disk, not tmpfs
+    # (RAM), and is removed at teardown.
+    evlog = tempfile.mkdtemp(prefix="miekki_evlog_")
     s = build_spark(
         master="local[8]",
         app_name="miekki-tests",
         shuffle_partitions=8,
         extra_conf={"spark.ui.showConsoleProgress": "false",
+                    # the 24g production default lets G1 grow the
+                    # heap past the RAM of a small test host, where
+                    # the kernel then kills the JVM mid-suite; the
+                    # sf0.001 fixtures need a fraction of this
+                    "spark.driver.memory":
+                        os.environ.get("MIEKKI_DRIVER_MEM", "4g"),
                     "spark.eventLog.enabled": "true",
                     # single uncompressed file so the shuffle meter can
                     # tail it by byte offset (Spark 4 defaults to a
@@ -42,6 +50,7 @@ def spark():
     s._miekki_evlog_dir = evlog
     yield s
     s.stop()
+    shutil.rmtree(evlog, ignore_errors=True)
 
 
 @pytest.fixture(scope="session")

@@ -102,6 +102,26 @@ def test_empty_shingle_set_rejected():
         run_kernel([[1, 2], []])
 
 
+def test_xxh64_fixed_matches_oracle():
+    """Native XXH64 (the entry the shingle kernels share) over
+    fixed-length rows vs the golden-pinned scalar oracle across all
+    lane paths: empty, byte tail, dword, word loop, >=32B stripes."""
+    import ctypes
+
+    from miekki import native
+    from oracle.xxh64 import xxh64_bytes
+
+    lib = native.load()
+    rng = np.random.Generator(np.random.PCG64(7))
+    for L in [0, 1, 2, 3, 4, 5, 7, 8, 9, 12, 15, 16, 20, 31, 32, 33,
+              40, 63, 64, 71]:
+        n = 17
+        mat = rng.integers(0, 256, size=(n, max(L, 1)), dtype=np.uint8)
+        got = [lib.xxh64_one(native.ptr(mat[i]), L, 42) for i in range(n)]
+        want = [xxh64_bytes(bytes(mat[i, :L]), 42) for i in range(n)]
+        assert got == want, f"L={L}"
+
+
 def test_shingle_hash_rows_matches_sql_semantics():
     """Native shingle pass vs the Python oracle shingle set (char
     k-grams of UTF-8 text, whole-text window when shorter than k,

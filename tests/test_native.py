@@ -89,12 +89,78 @@ def test_native_xxh64_vectors():
                     bytes(range(256)), "héllo wörld".encode()]:
         for seed in (0, 42, 2**63):
             assert one(payload, seed) == xxh64_bytes(payload, seed)
-    # every lane path: empty, byte tail, dword, word loop, >=32B stripes
-    rng = np.random.Generator(np.random.PCG64(7))
-    for n in range(72):
-        for _ in range(3):
-            payload = rng.integers(0, 256, size=n, dtype=np.uint8).tobytes()
-            assert one(payload, 42) == xxh64_bytes(payload, 42), n
+
+
+def test_native_anchor_parity():
+    """anchor_kernel at the production k = w vs the oracle's
+    winnow_naive(window_hashes_naive(doc)), per doc, bit-exact."""
+    from miekki.substr_kernels import batch_doc_anchors
+    from oracle.winnow import window_hashes_naive, winnow_naive
+
+    cfg = DedupConfig()
+    k, w = cfg.anchor_k, cfg.winnow_w
+    rng = np.random.Generator(np.random.PCG64(5))
+    words = rng.integers(0, 9999, size=300 * 60)
+    texts = [" ".join(f"w{x:04d}" for x in words[i * 60:(i + 1) * 60])
+             for i in range(300)]
+    texts += ["", "a" * 10, "b" * (k - 1), "c" * k, "d" * (k + 5),
+              "e" * (w + k - 1), "f" * (w + k), "ab" * 400, "ü" * 200,
+              "boilerplate " * 100]
+    bs = [t.encode() for t in texts]
+    data = np.frombuffer(b"".join(bs), dtype=np.uint8)
+    offs = np.cumsum([0] + [len(b) for b in bs]).astype(np.int64)
+    rows, fps, pos = batch_doc_anchors(data, offs, k, w)
+    assert len(rows) > 0 and (np.diff(rows) >= 0).all()
+    for i, b in enumerate(bs):
+        m = rows == i
+        h = window_hashes_naive(b, k)
+        sel = winnow_naive(h, w)
+        assert pos[m].tolist() == sel, f"doc {i} pos"
+        assert fps[m].view(np.uint64).tolist() == [h[j] for j in sel], i
+
+
+def test_native_runs_parity():
+    """runs_kernel vs the oracle's common_run_length on 4,000 clip
+    pairs at the production config, as substr pair verification ships
+    them: shared anchors with partial extensions, byte-identical clips
+    (maximal run) and random clips (anchor mismatch, run 0)."""
+    from miekki.substr_kernels import batch_common_runs
+    from oracle.winnow import common_run_length
+
+    cfg = DedupConfig()
+    k, ext = cfg.anchor_k, cfg.substr_len
+    rng = np.random.Generator(np.random.PCG64(9))
+    clips_a, clips_b, pa_, pb_ = [], [], [], []
+    for i in range(4000):
+        la = int(rng.integers(k, 2 * ext + k + 1))
+        lb = int(rng.integers(k, 2 * ext + k + 1))
+        A = rng.integers(32, 127, size=la, dtype=np.uint8)
+        B = rng.integers(32, 127, size=lb, dtype=np.uint8)
+        p1 = int(rng.integers(0, la - k + 1))
+        p2 = int(rng.integers(0, lb - k + 1))
+        case = i % 4
+        if case == 0:          # shared anchor + partial extensions
+            B[p2:p2 + k] = A[p1:p1 + k]
+            left = min(p1, p2, int(rng.integers(0, 60)))
+            if left:
+                B[p2 - left:p2] = A[p1 - left:p1]
+            right = min(la - p1 - k, lb - p2 - k, int(rng.integers(0, 90)))
+            if right:
+                B[p2 + k:p2 + k + right] = A[p1 + k:p1 + k + right]
+        elif case == 1:        # byte-identical clips (max run)
+            p2, B = p1, A.copy()
+        # cases 2/3: random clips — anchor mismatch, run 0
+        clips_a.append(A); clips_b.append(B); pa_.append(p1); pb_.append(p2)
+    got = batch_common_runs(
+        np.concatenate(clips_a),
+        np.cumsum([0] + [len(c) for c in clips_a]).astype(np.int64),
+        np.concatenate(clips_b),
+        np.cumsum([0] + [len(c) for c in clips_b]).astype(np.int64),
+        np.array(pa_, dtype=np.int32), np.array(pb_, dtype=np.int32), k)
+    want = [common_run_length(a.tobytes(), b.tobytes(), p, q, k)
+            for a, b, p, q in zip(clips_a, clips_b, pa_, pb_)]
+    assert any(want) and not all(want)
+    assert got.tolist() == want
 
 
 def test_build_dir_keyed_on_resolved_target(monkeypatch):

@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from miekki.config import TEST_SUBSTR, DedupConfig
+from miekki.config import TEST_SUBSTR
 from miekki.substr_kernels import batch_common_runs, batch_doc_anchors
 from oracle.winnow import (common_run_length, longest_common_run,
                            window_hashes_naive, winnow_naive)
@@ -102,37 +102,12 @@ def test_collision_rejected():
     assert common_run_length(b"abcdefgh", b"abcdxfgh", 0, 0, 8) == 0
 
 
-def _random_clip_pairs(n, k, ext):
-    """n clipped pairs as substr pair verification ships them: a
-    quarter share an anchor with partial extensions, a quarter are
-    byte-identical clips (maximal run), half are random (run 0)."""
-    rng = np.random.Generator(np.random.PCG64(9))
-    pairs = []
-    for i in range(n):
-        la = int(rng.integers(k, 2 * ext + k + 1))
-        lb = int(rng.integers(k, 2 * ext + k + 1))
-        A = rng.integers(32, 127, size=la, dtype=np.uint8)
-        B = rng.integers(32, 127, size=lb, dtype=np.uint8)
-        p1 = int(rng.integers(0, la - k + 1))
-        p2 = int(rng.integers(0, lb - k + 1))
-        case = i % 4
-        if case == 0:          # shared anchor + partial extensions
-            B[p2:p2 + k] = A[p1:p1 + k]
-            left = min(p1, p2, int(rng.integers(0, 60)))
-            if left:
-                B[p2 - left:p2] = A[p1 - left:p1]
-            right = min(la - p1 - k, lb - p2 - k, int(rng.integers(0, 90)))
-            if right:
-                B[p2 + k:p2 + k + right] = A[p1 + k:p1 + k + right]
-        elif case == 1:        # byte-identical clips (max run)
-            p2, B = p1, A.copy()
-        pairs.append((A.tobytes(), B.tobytes(), p1, p2))
-    return pairs
-
-
 @settings(max_examples=40, deadline=None)
 @given(st.data())
-def _drawn_run_parity(data):
+def test_batch_run_parity(data):
+    """batch_common_runs == oracle common_run_length per pair,
+    bit-exact — including hash-collision rows (differing anchor
+    windows), zero extensions, and full-clip runs."""
     k = 8
     n = data.draw(st.integers(min_value=1, max_value=12))
     pairs = []
@@ -150,19 +125,6 @@ def _drawn_run_parity(data):
     # plus a guaranteed-collision row (anchor windows differ)
     pairs.append((b"abcdefghXY", b"abcdXfghXY", 0, 0))
     assert _runs(pairs, k) == [common_run_length(*p, k) for p in pairs]
-
-
-def test_batch_run_parity():
-    """batch_common_runs == oracle common_run_length per pair,
-    bit-exact — hypothesis-drawn planted runs with a hash-collision
-    row, then 4,000 random clip pairs at the production config (zero
-    extensions, partial extensions, full-clip runs)."""
-    cfg = DedupConfig()
-    pairs = _random_clip_pairs(4000, cfg.anchor_k, cfg.substr_len)
-    want = [common_run_length(*p, cfg.anchor_k) for p in pairs]
-    assert any(want) and not all(want)
-    assert _runs(pairs, cfg.anchor_k) == want
-    _drawn_run_parity()
 
 
 @pytest.fixture(scope="module")
@@ -227,34 +189,25 @@ def test_e2e_recall_with_substr(spark, corpus_df, fixture_corpus):
 def test_batch_anchor_parity():
     """batch_doc_anchors == winnow_naive(window_hashes_naive(doc)) per
     doc, bit-exact, over one multi-doc batch — including short docs
-    (n <= w), empty docs, docs of exactly k-1 / k / w+k-1 / w+k bytes,
-    multi-byte UTF-8 and boundary-adjacent content."""
-    def check(texts, k, w):
-        bs = [t.encode("utf-8") for t in texts]
-        data = np.frombuffer(b"".join(bs), dtype=np.uint8)
-        offs = np.cumsum([0] + [len(b) for b in bs]).astype(np.int64)
-        rows, fps, pos = batch_doc_anchors(data, offs, k, w)
-        assert (np.diff(rows) >= 0).all()
-        for i, b in enumerate(bs):
-            m = rows == i
-            h = window_hashes_naive(b, k)
-            sel = winnow_naive(h, w)
-            assert pos[m].tolist() == sel, f"doc {i} pos"
-            assert fps[m].view(np.uint64).tolist() == \
-                [h[j] for j in sel], f"doc {i} fps"
-
-    check(["x" * 10,                                   # shorter than k -> none
-           "the quick brown fox jumps over the lazy dog " * 8,
-           "",                                         # empty
-           "the quick brown fox jumps over the lazy dog " * 8,  # dup of #1
-           "short but over k bytes, single window",    # nh <= w branch
-           "Z" * 200,                                  # degenerate repeats
-           "boundary" * 40], 16, 16)
-    k, w = DedupConfig().anchor_k, DedupConfig().winnow_w
-    rng = np.random.Generator(np.random.PCG64(5))
-    words = rng.integers(0, 9999, size=300 * 60)
-    texts = [" ".join(f"w{x:04d}" for x in words[i * 60:(i + 1) * 60])
-             for i in range(300)]
-    check(texts + ["", "a" * 10, "b" * (k - 1), "c" * k, "d" * (k + 5),
-                   "e" * (w + k - 1), "f" * (w + k), "ab" * 400, "ü" * 200,
-                   "boilerplate " * 100], k, w)
+    (n <= w), empty docs, and boundary-adjacent content."""
+    k, w = 16, 16
+    texts = [
+        "x" * 10,                                  # shorter than k -> none
+        "the quick brown fox jumps over the lazy dog " * 8,
+        "",                                        # empty
+        "the quick brown fox jumps over the lazy dog " * 8,  # dup of #1
+        "short but over k bytes, single window",   # nh <= w branch
+        "Z" * 200,                                 # degenerate repeats
+        "boundary" * 40,
+    ]
+    bs = [t.encode("utf-8") for t in texts]
+    data = np.frombuffer(b"".join(bs), dtype=np.uint8)
+    offs = np.cumsum([0] + [len(b) for b in bs]).astype(np.int64)
+    rows, fps, pos = batch_doc_anchors(data, offs, k, w)
+    for i, b in enumerate(bs):
+        m = rows == i
+        h = window_hashes_naive(b, k)
+        sel = winnow_naive(h, w)
+        assert pos[m].tolist() == sel, f"doc {i} pos"
+        assert fps[m].view(np.uint64).tolist() == [h[j] for j in sel], \
+            f"doc {i} fps"
