@@ -1,11 +1,10 @@
 /* The native kernels of the dedup engine: fused shingle + xxh64 +
- * distinct + MinHash + SimHash (sig_kernel), MinHash + SimHash over
- * given hash arrays (minhash_kernel), distinct shingle hashes per row
- * (shingle_kernel), winnowing anchors (anchor_kernel) and common-run
- * verification (runs_kernel). These are the only production engine;
- * the pure-Python oracle/ package is the reference every test pins
- * them against (tests/test_native.py, tests/test_substr.py, the
- * golden signature fixtures).
+ * distinct + MinHash + SimHash (sig_kernel, the one signature path),
+ * distinct shingle hashes per row (shingle_kernel), winnowing anchors
+ * (anchor_kernel) and common-run verification (runs_kernel). These
+ * are the only production engine; the pure-Python oracle/ package is
+ * the reference every test pins them against (tests/test_native.py,
+ * tests/test_substr.py, the golden signature fixtures).
  *
  * Row-at-a-time passes with no temporaries: windows hash straight out
  * of the text bytes, distinct is an open-addressing probe, and the
@@ -241,22 +240,6 @@ int sig_kernel(const uint8_t *data, const int64_t *offsets, int64_t n_rows,
                    simhash_out + r);
     }
     free_scratch(&s);
-    return 0;
-}
-
-/* MinHash + SimHash over given per-row hash values (the shingle-array
- * path: SQL-computed shingle hashes, any hash_fn).
- *   values   flat uint64 hashes; row r is values[offsets[r]..offsets[r+1])
- * Returns 0 on success, -2 when a row is empty (MinHash of an empty
- * set is undefined; shingling always yields >= 1 value). */
-int minhash_kernel(const uint64_t *values, const int64_t *offsets,
-                   int64_t n_rows, const uint64_t *a, const uint64_t *b,
-                   int n_perm, int64_t *minhash_out, int64_t *simhash_out) {
-    for (int64_t r = 0; r < n_rows; r++) {
-        if (offsets[r + 1] <= offsets[r]) return -2;
-        sketch_row(values + offsets[r], offsets[r + 1] - offsets[r], a, b,
-                   n_perm, minhash_out + r * n_perm, simhash_out + r);
-    }
     return 0;
 }
 

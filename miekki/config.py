@@ -5,6 +5,11 @@ Every semantic knob of the pipeline lives in ONE frozen dataclass.
 refuses to mix configs (BASELINE.json north_rule: "at the same
 shingle/signature config"). Changing any default invalidates all
 golden files under tests/golden/.
+
+Every hash the dedup pipeline computes (doc ids, shingles, band
+hashes) is Spark's xxhash64 with seed 42; there is no hash knob. The
+DuckDB-checked sketch, bloom and DSIR queries take md5 as their own
+function argument, not from this config.
 """
 
 from __future__ import annotations
@@ -52,10 +57,6 @@ class DedupConfig:
     # function of doc_id so S never changes cluster output, only the
     # shuffle shape (tests/test_spark_stages.py pins that invariance).
     salt_buckets: int = 1024
-    lsh_chain: int = 0           # >0 adds successor-chain pairs per salted
-                                 # band bucket (recall-critical runs; §2.4)
-    # --- hashing ---
-    hash_fn: str = "xxhash64"    # 'xxhash64' (prod) | 'md5' (DuckDB-comparable)
     # --- doc-id width ---
     # 64: doc_id = xxhash64(url) as bigint (default; ~2.7e4 birthday
     #     collisions expected at 10^12 docs — SCALE.md).

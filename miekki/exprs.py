@@ -1,10 +1,9 @@
-"""Hash-expression helpers (SURVEY.md §3.2 hash-portability rule).
+"""SQL expression helpers shared by the dedup stages.
 
-Production uses Spark-native ``xxhash64`` (JVM, codegen'd). For the
-driver's DuckDB cross-check, ``hash_fn='md5'`` swaps in an
-md5-derived 60-bit integer that is hex-identical in both engines:
-``conv(substring(md5(x),1,15),16,10)``. Multi-arg hashes in md5 mode
-concat with '|' — same formula on the DuckDB side.
+Every hash is Spark-native ``xxhash64`` (JVM, codegen'd; SURVEY.md
+§3.2). The DuckDB-checked driver keys compare against md5 twins that
+the sketch, bloom and DSIR operators take as their own argument, and
+the signature arrays themselves are checked as contract keys.
 """
 
 from __future__ import annotations
@@ -12,31 +11,15 @@ from __future__ import annotations
 from miekki.config import DedupConfig
 
 
-def hash1_sql(arg_sql: str, cfg: DedupConfig) -> str:
-    """64-bit hash of ONE string/long SQL expression → bigint."""
-    if cfg.hash_fn == "xxhash64":
-        return f"xxhash64({arg_sql})"
-    return f"cast(conv(substring(md5(cast({arg_sql} as string)), 1, 15), 16, 10) as bigint)"
-
-
-def hash_multi_sql(args_sql: list[str], cfg: DedupConfig) -> str:
-    """Chained multi-argument hash → bigint (band hashes)."""
-    if cfg.hash_fn == "xxhash64":
-        return f"xxhash64({', '.join(args_sql)})"
-    joined = ", ".join(f"cast({a} as string)" for a in args_sql)
-    return (f"cast(conv(substring(md5(concat_ws('|', {joined})), 1, 15), 16, 10)"
-            " as bigint)")
-
-
 def doc_id_sql(url_sql: str, cfg: DedupConfig) -> str:
-    """doc-id expression (O4). 64-bit: hash1_sql (bigint). 128-bit:
+    """doc-id expression (O4). 64-bit: xxhash64(url) (bigint). 128-bit:
     hi||lo packed into BINARY(16) via hex/unhex — hi is exactly the
     64-bit id (lpad: hex() drops leading zeros on bigint), so the two
     modes agree on identity up to the collision rescue."""
+    hi = f"xxhash64({url_sql})"
     if cfg.id_bits == 64:
-        return hash1_sql(url_sql, cfg)
-    hi = hash1_sql(url_sql, cfg)
-    lo = hash1_sql(f"reverse({url_sql})", cfg)
+        return hi
+    lo = f"xxhash64(reverse({url_sql}))"
     return (f"unhex(concat(lpad(hex({hi}), 16, '0'),"
             f" lpad(hex({lo}), 16, '0')))")
 
@@ -45,13 +28,6 @@ def id_spark_type(cfg: DedupConfig) -> str:
     """DDL type of doc_id-valued columns (Arrow kernel schemas are
     built with this so binary ids pass through untouched)."""
     return "long" if cfg.id_bits == 64 else "binary"
-
-
-def md5_hash1_py(value) -> int:
-    """Python twin of hash1_sql in md5 mode (oracle use)."""
-    import hashlib
-
-    return int(hashlib.md5(str(value).encode("utf-8")).hexdigest()[:15], 16)
 
 
 def zip_word_grams(words, n: int):

@@ -5,9 +5,8 @@ is banned).
 
 Every batch goes to one C call (miekki/_sigkernel.c via
 miekki/native.py) over the Arrow buffers: the fused text → MinHash +
-SimHash kernel (SURVEY.md §2.3), MinHash + SimHash over given
-shingle-hash arrays, and distinct shingle hashes per row. oracle/
-holds the reference they are tested against.
+SimHash kernel (SURVEY.md §2.3) and distinct shingle hashes per row.
+oracle/ holds the reference they are tested against.
 """
 
 from __future__ import annotations
@@ -23,14 +22,6 @@ from miekki.native import ptr
 from miekki.textproc import extract_text
 
 
-def sig_schema(id_type: str = "long") -> str:
-    """Output schema of make_signature_kernel with a configurable
-    doc_id type (binary for the 128-bit id option — the kernel passes
-    the id column through untouched, so only the declared type
-    changes)."""
-    return f"doc_id {id_type}, minhash array<bigint>, simhash bigint"
-
-
 def fused_schema(id_type: str = "long") -> str:
     return (f"doc_id {id_type}, minhash array<bigint>, simhash bigint,"
             " n_shingles int")
@@ -42,65 +33,40 @@ def _minhash_list(sig: np.ndarray, n_rows: int, n_perm: int) -> pa.ListArray:
         pa.array(sig))
 
 
-def make_signature_kernel(cfg: DedupConfig):
-    """mapInArrow function: (doc_id, shingles:array<long>) batches →
-    (doc_id, minhash:array<long>[n_perm], simhash:long) batches."""
-    n_perm = cfg.n_perm
-    a, b = perm_coeffs(n_perm, cfg.perm_seed)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        lib = native.load()
-        for batch in batches:
-            doc_id = batch.column("doc_id")
-            lst = batch.column("shingles")
-            if isinstance(lst, pa.ChunkedArray):  # pragma: no cover
-                lst = lst.combine_chunks()
-            # offsets of a sliced list index the unsliced child values
-            offsets = np.ascontiguousarray(lst.offsets.to_numpy(),
-                                           dtype=np.int64)
-            values = np.ascontiguousarray(
-                lst.values.to_numpy(zero_copy_only=False), dtype=np.int64)
-            n_rows = len(offsets) - 1
-            sig = np.empty(n_rows * n_perm, dtype=np.int64)
-            fp = np.empty(n_rows, dtype=np.int64)
-            rc = lib.minhash_kernel(ptr(values), ptr(offsets), n_rows,
-                                    ptr(a), ptr(b), n_perm,
-                                    ptr(sig), ptr(fp))
-            if rc == -2:
-                raise ValueError("empty shingle set — shingling must yield >=1")
-            yield pa.RecordBatch.from_arrays(
-                [doc_id, _minhash_list(sig, n_rows, n_perm), pa.array(fp)],
-                names=["doc_id", "minhash", "simhash"],
-            )
-
-    return kernel
-
-
-def _utf8_view(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+def _bin_view(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     """(flat uint8 bytes, per-row byte offsets rebased to 0) of an
-    Arrow string array; handles sliced arrays, rejects nulls (normalize
-    coalesces NULL text to '' before this kernel)."""
+    Arrow binary or string array; handles sliced arrays. Nulls are
+    not checked here (callers whose input may hold them go through
+    _utf8_view)."""
     if isinstance(arr, pa.ChunkedArray):  # pragma: no cover
         arr = arr.combine_chunks()
-    if arr.null_count:
-        raise ValueError("norm_text must be non-null (normalize() pins"
-                         " NULL text to '')")
-    # offset width follows the Arrow type (the _bin_view guard, ADVICE
-    # r3): Spark emits large_string when
-    # spark.sql.execution.arrow.useLargeVarTypes=true, and reading its
-    # int64 offsets as int32 would silently hash the WRONG bytes into
-    # every signature — corrupt results, no error
-    if pa.types.is_string(arr.type):
+    if len(arr) == 0:  # empty arrays may carry no buffers at all
+        return (np.empty(0, dtype=np.uint8), np.zeros(1, dtype=np.int64))
+    # offset width follows the Arrow type (ADVICE r3): Spark emits
+    # large_string/large_binary when
+    # spark.sql.execution.arrow.useLargeVarTypes=true, and reading
+    # their int64 offsets as int32 would silently hash the WRONG bytes
+    # into every signature or run length — corrupt results, no error
+    if pa.types.is_binary(arr.type) or pa.types.is_string(arr.type):
         off_dtype: type = np.int32
-    elif pa.types.is_large_string(arr.type):  # pragma: no cover
+    elif pa.types.is_large_binary(arr.type) or pa.types.is_large_string(arr.type):
         off_dtype = np.int64
     else:  # pragma: no cover
-        raise TypeError(f"_utf8_view: unsupported Arrow type {arr.type}")
+        raise TypeError(f"_bin_view: unsupported Arrow type {arr.type}")
     bufs = arr.buffers()
     offs = np.frombuffer(bufs[1], dtype=off_dtype)[
         arr.offset: arr.offset + len(arr) + 1].astype(np.int64)
     data = np.frombuffer(bufs[2], dtype=np.uint8)[offs[0]: offs[-1]]
     return data, offs - offs[0]
+
+
+def _utf8_view(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """_bin_view of a norm_text column; rejects nulls (normalize
+    coalesces NULL text to '' before this kernel)."""
+    if arr.null_count:
+        raise ValueError("norm_text must be non-null (normalize() pins"
+                         " NULL text to '')")
+    return _bin_view(arr)
 
 
 def shingle_hashes(data: np.ndarray, rel: np.ndarray, k: int

@@ -24,7 +24,7 @@ from collections.abc import Iterator
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
-from miekki.stages.substr import _bin_view
+from miekki.kernels import _bin_view
 from miekki.substr_kernels import fmix64, payload_hashes
 
 MEDIA_SCHEMA = ("media_id long, kind string, payload binary,"

@@ -34,8 +34,6 @@ _P = ctypes.c_void_p
 _SIGNATURES = {
     "sig_kernel": (ctypes.c_int, [_P, _P, ctypes.c_int64, ctypes.c_int, _P,
                                   _P, ctypes.c_int, _P, _P, _P]),
-    "minhash_kernel": (ctypes.c_int, [_P, _P, ctypes.c_int64, _P, _P,
-                                      ctypes.c_int, _P, _P]),
     "shingle_kernel": (ctypes.c_int64, [_P, _P, ctypes.c_int64,
                                         ctypes.c_int, _P, _P]),
     "xxh64_one": (ctypes.c_uint64, [_P, ctypes.c_int64, ctypes.c_uint64]),

@@ -20,7 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from miekki.config import DedupConfig
-from miekki.exprs import hash_multi_sql
 
 
 def band_table(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -37,9 +36,8 @@ def band_table(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     transform loop is a tight per-element eval. The same unroll DID
     win for repetition_columns' grams (r5); measure per site."""
     r = cfg.rows_per_band
-    h = hash_multi_sql(
-        ["cast(b as bigint)"] + [f"minhash[b*{r}+{j}]" for j in range(r)], cfg
-    )
+    row_cols = ", ".join(f"minhash[b*{r}+{j}]" for j in range(r))
+    h = f"xxhash64(cast(b as bigint), {row_cols})"
     bands = F.expr(f"transform(sequence(0, {cfg.bands - 1}), b -> {h})")
     out = signatures.select("doc_id", F.posexplode(bands).alias("band_id", "band_hash"))
     # salt is a pure function of doc_id: it only partitions work,
@@ -81,9 +79,7 @@ def star_edges(bucketed: DataFrame, key_cols: list[str], cfg: DedupConfig,
     bucket, true pairs inside that bucket can be dropped. With b=32
     bands the probability a dup pair shares NO bucket with a
     same-cluster minimum is negligible (each band re-draws the
-    minimum), so the default stays star-only; recall-critical runs set
-    cfg.lsh_chain > 0 to add bounded successor-chain pairs per salted
-    bucket (the scheme simhash/substr already use)."""
+    minimum), so the band pass stays star-only."""
     w1 = Window.partitionBy(*key_cols, salt_col)
     lv1 = bucketed.withColumn("m1", F.min(id_col).over(w1))
     edges1 = (lv1.where(F.col(id_col) != F.col("m1"))
@@ -101,28 +97,10 @@ def star_edges(bucketed: DataFrame, key_cols: list[str], cfg: DedupConfig,
     return edges1.unionByName(edges2).dropDuplicates(["src", "dst"])
 
 
-def chain_pairs(bucketed: DataFrame, key_cols: list[str], successors: int,
-                id_col: str = "doc_id") -> DataFrame:
-    """Each bucket member paired with its <= ``successors`` id-order
-    successors — linear in bucket size; lead() over a sorted window
-    (same boxing-free rewrite as star_edges, see its docstring)."""
-    w = Window.partitionBy(*key_cols).orderBy(id_col)
-    succ = F.array(*[F.lead(id_col, i).over(w)
-                     for i in range(1, successors + 1)])
-    return (bucketed.select(F.col(id_col).alias("src"), succ.alias("succ"))
-            .select("src", F.explode("succ").alias("dst"))
-            .where(F.col("dst").isNotNull()))
-
-
 def minhash_candidate_edges(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     """T2 → candidate (src, dst) edges from LSH band collisions."""
     bands = band_table(signatures, cfg)
-    edges = star_edges(bands, ["band_id", "band_hash"], cfg)
-    if cfg.lsh_chain > 0:
-        chains = chain_pairs(bands, ["band_id", "band_hash", "salt"],
-                             cfg.lsh_chain)
-        edges = edges.unionByName(chains).dropDuplicates(["src", "dst"])
-    return edges
+    return star_edges(bands, ["band_id", "band_hash"], cfg)
 
 
 # =====================================================================

@@ -1,9 +1,10 @@
-"""O3/O4/O5 — normalization, deterministic doc ids, shingling.
+"""O3/O4 — normalization and deterministic doc ids.
 
 All pure Spark SQL (JVM whole-stage codegen; no Python): lower →
 collapse [ \\t\\r\\n]+ → trim; doc_id = xxhash64(url) (NEVER
-monotonically_increasing_id — partitioning-dependent, SURVEY.md §4.4);
-character k-shingles as array_distinct of hashed substrings.
+monotonically_increasing_id — partitioning-dependent, SURVEY.md §4.4).
+Character k-shingling (O5) happens inside the fused signature kernel
+(miekki.stages.signatures).
 """
 
 from __future__ import annotations
@@ -11,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from miekki.config import DedupConfig
-from miekki.exprs import doc_id_sql, hash1_sql
+from miekki.exprs import doc_id_sql
 
 # actual control characters, passed through the DataFrame API so no
 # SQL-literal escaping ambiguity exists (pinned vs oracle normalize_ws)
@@ -19,8 +20,8 @@ WS_PATTERN = "[ \t\r\n]+"
 
 
 def norm_text_col(col_name: str = "text") -> F.Column:
-    """NULL text is pinned to '' here so no NULL shingle array can
-    reach the Arrow kernel (which fails the whole job on one bad row);
+    """NULL text is pinned to '' here so no NULL text can reach the
+    Arrow signature kernel (which fails the whole job on one bad row);
     null-text docs become trivial exact-dups of each other, which is
     the honest semantic for an empty page. The DuckDB oracle
     (_NORM_DUCK) carries the same coalesce."""
@@ -80,20 +81,3 @@ def audit_id_collisions(docs: DataFrame, id_col: str = "doc_id",
     return (docs.groupBy(id_col)
             .agg(F.countDistinct(url_col).alias("n_urls"))
             .where(F.col("n_urls") > 1))
-
-
-def shingle_expr(cfg: DedupConfig, text_col: str = "norm_text") -> F.Column:
-    """Distinct char-k-shingle hashes: array<long>, always >= 1 element
-    (docs shorter than k yield one whole-text shingle, SURVEY.md §2.1)."""
-    k = cfg.shingle_k
-    h = hash1_sql(f"substring({text_col}, i, {k})", cfg)
-    return F.expr(
-        f"array_distinct(transform("
-        f"sequence(1, greatest(1, char_length({text_col}) - {k - 1})),"
-        f" i -> {h}))"
-    )
-
-
-def with_shingles(docs_norm: DataFrame, cfg: DedupConfig) -> DataFrame:
-    df = docs_norm.withColumn("shingles", shingle_expr(cfg))
-    return df.withColumn("n_shingles", F.size("shingles"))

@@ -23,6 +23,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 
 from miekki.config import DedupConfig
+from miekki.kernels import _bin_view, _utf8_view
 from miekki.substr_kernels import batch_common_runs, batch_doc_anchors
 
 def _anchor_schema(id_type: str) -> str:
@@ -34,31 +35,6 @@ def _verify_schema(id_type: str) -> str:
 
 MAX_ANCHORS_PER_PAIR = 4
 CHAIN_SUCCESSORS = 2
-
-
-def _bin_view(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """(flat uint8 bytes, per-row byte offsets rebased to 0) of an
-    Arrow binary array — the binary twin of kernels._utf8_view.
-    Nulls impossible here: clips come from substring() over non-null
-    encoded text."""
-    if isinstance(arr, pa.ChunkedArray):  # pragma: no cover
-        arr = arr.combine_chunks()
-    if len(arr) == 0:  # empty arrays may carry no buffers at all
-        return (np.empty(0, dtype=np.uint8), np.zeros(1, dtype=np.int64))
-    # offset width follows the Arrow type: misreading a large_binary
-    # buffer as int32 would silently corrupt run lengths (ADVICE r3)
-    if pa.types.is_binary(arr.type) or pa.types.is_string(arr.type):
-        off_dtype = np.int32
-    elif (pa.types.is_large_binary(arr.type)
-          or pa.types.is_large_string(arr.type)):  # pragma: no cover
-        off_dtype = np.int64
-    else:  # pragma: no cover
-        raise TypeError(f"_bin_view: unsupported Arrow type {arr.type}")
-    bufs = arr.buffers()
-    offs = np.frombuffer(bufs[1], dtype=off_dtype)[
-        arr.offset: arr.offset + len(arr) + 1].astype(np.int64)
-    data = np.frombuffer(bufs[2], dtype=np.uint8)[offs[0]: offs[-1]]
-    return data, offs - offs[0]
 
 
 def _first_last_per_fp(rows: np.ndarray, fps: np.ndarray, pos: np.ndarray):
@@ -91,8 +67,6 @@ def make_anchor_kernel(cfg: DedupConfig):
     k, w = cfg.anchor_k, cfg.winnow_w
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from miekki.kernels import _utf8_view
-
         for batch in batches:
             doc_id = batch.column("doc_id").to_numpy(zero_copy_only=False)
             data, offs = _utf8_view(batch.column("norm_text"))
@@ -212,6 +186,7 @@ def make_verify_kernel(cfg: DedupConfig):
             dst = batch.column("dst").to_numpy(zero_copy_only=False)
             spos = batch.column("src_pos").to_numpy(zero_copy_only=False)
             dpos = batch.column("dst_pos").to_numpy(zero_copy_only=False)
+            # clips come from substring() over non-null encoded text
             da, oa = _bin_view(batch.column("t_src"))
             db, ob = _bin_view(batch.column("t_dst"))
             # one flat-buffer vectorized pass over the whole batch (r3)

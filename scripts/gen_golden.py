@@ -15,8 +15,8 @@ from miekki.config import DedupConfig
 from miekki.fixtures import make_corpus
 from miekki.pipeline import dedup_labels
 from miekki.session import build_spark
-from miekki.stages.normalize import normalize, with_shingles
-from miekki.stages.signatures import compute_signatures
+from miekki.stages.normalize import normalize
+from miekki.stages.signatures import signatures_from_text
 
 GOLDEN = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                       "tests", "golden")
@@ -34,9 +34,10 @@ labels.to_parquet(os.path.join(GOLDEN, "cluster_labels_sf0001.parquet"), index=F
 print("labels:", len(labels), "clusters:", labels.cluster_id.nunique())
 
 # 50-doc signature freeze
-ws = with_shingles(normalize(corpus, cfg), cfg)
+dn = normalize(corpus, cfg)
 sample_ids = sorted(labels.doc_id)[:50]
-sig = (compute_signatures(ws.where(ws.doc_id.isin(sample_ids)), cfg)
+sig = (signatures_from_text(dn.where(dn.doc_id.isin(sample_ids)), cfg)
+       .select("doc_id", "minhash", "simhash")
        .toPandas().sort_values("doc_id").reset_index(drop=True))
 sig.to_parquet(os.path.join(GOLDEN, "minhash_sf0001_sample.parquet"), index=False)
 print("sig sample:", len(sig))

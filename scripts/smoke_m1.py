@@ -1,8 +1,8 @@
 """M1 smoke: full mini-pipeline on sf0.001 vs the pure-Python oracle.
 
 Checks, per SURVEY.md §5:
-  - Spark shingle hashes == oracle shingle hashes (set equality/doc)
-  - Spark minhash/simhash == oracle bit-for-bit (sample)
+  - production signature path (signatures_from_text): shingle count,
+    minhash and simhash == oracle bit-for-bit (sample)
   - Spark cluster labels == networkx oracle labels over the SAME
     verified edge set, and vs truth families (recall)
 """
@@ -20,8 +20,8 @@ from miekki.config import DedupConfig
 from miekki.fixtures import make_corpus
 from miekki.session import build_spark
 from miekki.pipeline import dedup_labels, candidate_edges
-from miekki.stages.normalize import normalize, with_shingles
-from miekki.stages.signatures import compute_signatures
+from miekki.stages.normalize import normalize
+from miekki.stages.signatures import signatures_from_text
 from oracle import sketches
 from oracle.cc import cc_labels as oracle_cc
 from oracle.xxh64 import spark_xxhash64
@@ -37,33 +37,23 @@ corpus = spark.createDataFrame(corpus_pdf[["url", "warc_ts", "text", "lang"]])
 
 # --- kernel parity on a sample -------------------------------------
 dn = normalize(corpus, cfg)
-ws = with_shingles(dn, cfg)
-sample = ws.select("doc_id", "url", "norm_text", "shingles").limit(20).collect()
-sigs_sample = (compute_signatures(ws, cfg)
-               .join(ws.select("doc_id"), "doc_id").limit(0))  # noqa - just types
+sigs = signatures_from_text(dn, cfg)
+sample = (dn.select("doc_id", "url").limit(20)
+          .join(sigs, "doc_id").collect())
 bad = 0
 for r in sample:
     otext_row = corpus_pdf[corpus_pdf.url == r.url].iloc[0]
     oh = sketches.shingle_hashes(otext_row.text, cfg)
-    if sorted(set(r.shingles)) != oh:
-        print("SHINGLE MISMATCH", r.url); bad += 1
-print(f"shingles parity on 20 docs: {'OK' if not bad else 'FAIL'}")
-
-sig_rows = compute_signatures(ws, cfg).limit(0)
-sig_sample = (compute_signatures(ws.where(F_urls := ws.doc_id.isin([r.doc_id for r in sample[:10]])), cfg)
-              .collect())
-by_id = {r.doc_id: r for r in sig_sample}
-for r in sample[:10]:
-    otext_row = corpus_pdf[corpus_pdf.url == r.url].iloc[0]
-    oh = sketches.shingle_hashes(otext_row.text, cfg)
+    if r.n_shingles != len(oh):
+        print("SHINGLE COUNT MISMATCH", r.url, r.n_shingles, len(oh)); bad += 1
     osig = sketches.minhash_signature(oh, cfg)
     ofp = sketches.simhash_fingerprint(oh, cfg)
-    s = by_id[r.doc_id]
-    if list(osig) != list(s.minhash) or ofp != s.simhash:
+    if list(osig) != list(r.minhash) or ofp != r.simhash:
         print("SIG MISMATCH", r.url,
-              "mh", list(osig)[:3], list(s.minhash)[:3], "fp", ofp, s.simhash)
+              "mh", list(osig)[:3], list(r.minhash)[:3], "fp", ofp, r.simhash)
         bad += 1
-print(f"minhash/simhash parity on 10 docs: {'OK' if not bad else 'FAIL'}")
+print(f"shingle-count/minhash/simhash parity on {len(sample)} docs:"
+      f" {'OK' if not bad else 'FAIL'}")
 
 # --- end-to-end ------------------------------------------------------
 t1 = time.time()
@@ -77,7 +67,6 @@ print(f"pipeline: {len(lab_pdf)} labels, {lab_pdf.cluster_id.nunique()} clusters
 # which mis-read every substr-only merge as a label mismatch)
 from miekki.stages.substr import substr_candidate_edges
 
-sigs = compute_signatures(ws, cfg)
 edges_pdf = (candidate_edges(sigs, cfg).select("src", "dst")
              .unionByName(substr_candidate_edges(
                  dn.localCheckpoint(), cfg).select("src", "dst"))

@@ -107,14 +107,14 @@ def pipeline_result(spark, corpus_df):
     e2e/recall/golden tests. Returns (labels_pdf, edges_pdf)."""
     from miekki.config import DedupConfig
     from miekki.pipeline import candidate_edges, dedup_labels
-    from miekki.stages.normalize import normalize, with_shingles
-    from miekki.stages.signatures import compute_signatures
+    from miekki.stages.normalize import normalize
+    from miekki.stages.signatures import signatures_from_text
     from miekki.stages.substr import substr_candidate_edges
 
     cfg = DedupConfig()
     labels_pdf = dedup_labels(corpus_df, cfg).toPandas()
     docs = normalize(corpus_df, cfg).localCheckpoint()
-    sigs = compute_signatures(with_shingles(docs, cfg), cfg).localCheckpoint()
+    sigs = signatures_from_text(docs, cfg).localCheckpoint()
     edges = candidate_edges(sigs, cfg).unionByName(
         substr_candidate_edges(docs, cfg))
     return labels_pdf, edges.toPandas()

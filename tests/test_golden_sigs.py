@@ -1,7 +1,6 @@
 """Frozen 50-doc signature golden (FIXTURES.md F3): any change to
-shingling/permutation/simhash semantics fails loudly — on both the
-shingle-array path (compute_signatures) and the production fused
-path (signatures_from_text)."""
+shingling/permutation/simhash semantics of the fused signature path
+(signatures_from_text) fails loudly."""
 
 import os
 
@@ -9,9 +8,8 @@ import pandas as pd
 import pytest
 
 from miekki.config import DedupConfig
-from miekki.stages.normalize import normalize, with_shingles
-from miekki.stages.signatures import (compute_signatures,
-                                      signatures_from_text)
+from miekki.stages.normalize import normalize
+from miekki.stages.signatures import signatures_from_text
 
 GOLDEN = os.path.join(os.path.dirname(__file__), "golden",
                       "minhash_sf0001_sample.parquet")
@@ -19,26 +17,14 @@ GOLDEN = os.path.join(os.path.dirname(__file__), "golden",
 pytestmark = pytest.mark.fast
 
 
-def _assert_golden(sigs, golden):
-    got = sigs.toPandas().sort_values("doc_id").reset_index(drop=True)
+def test_signature_golden_from_text(spark, corpus_df):
+    golden = pd.read_parquet(GOLDEN)
+    cfg = DedupConfig()
+    dn = normalize(corpus_df, cfg)
+    got = (signatures_from_text(dn.where(dn.doc_id.isin(golden.doc_id.tolist())), cfg)
+           .toPandas().sort_values("doc_id").reset_index(drop=True))
     assert len(got) == len(golden)
     for g, w in zip(golden.itertuples(), got.itertuples()):
         assert g.doc_id == w.doc_id
         assert list(g.minhash) == list(w.minhash)
         assert g.simhash == w.simhash
-
-
-def test_signature_golden(spark, corpus_df):
-    golden = pd.read_parquet(GOLDEN)
-    cfg = DedupConfig()
-    ws = with_shingles(normalize(corpus_df, cfg), cfg)
-    _assert_golden(compute_signatures(
-        ws.where(ws.doc_id.isin(golden.doc_id.tolist())), cfg), golden)
-
-
-def test_signature_golden_from_text(spark, corpus_df):
-    golden = pd.read_parquet(GOLDEN)
-    cfg = DedupConfig()
-    dn = normalize(corpus_df, cfg)
-    _assert_golden(signatures_from_text(
-        dn.where(dn.doc_id.isin(golden.doc_id.tolist())), cfg), golden)

@@ -1,6 +1,7 @@
 """Spark-free kernel tests: the mapInArrow wrappers over the native
 kernels vs the plain-loop oracle, plus MinHash statistical properties
-(SURVEY.md §5.1/§5.2). hypothesis drives random shingle sets.
+(SURVEY.md §5.1/§5.2). hypothesis drives random texts through the
+fused signature kernel.
 """
 
 import numpy as np
@@ -8,48 +9,54 @@ import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
 from miekki.config import DedupConfig, perm_coeffs
-from miekki.kernels import make_signature_kernel
+from miekki.kernels import make_text_signature_kernel
+from miekki.textproc import char_shingles
 from oracle.sketches import (est_jaccard, minhash_signature,
                              simhash_fingerprint)
+from oracle.xxh64 import spark_xxhash64
 
 CFG = DedupConfig()
 
-i64 = st.integers(min_value=-(2**63), max_value=2**63 - 1)
-shingle_sets = st.lists(i64, min_size=1, max_size=200, unique=True)
 
-
-def run_kernel(rows):
-    """rows: list of shingle-hash lists -> (minhash rows, simhash rows)"""
-    kernel = make_signature_kernel(CFG)
+def assert_matches_oracle(texts):
+    """The fused kernel vs the oracle composition char_shingles ->
+    spark_xxhash64 -> minhash_signature / simhash_fingerprint, row by
+    row. Returns the kernel's n_shingles."""
     batch = pa.RecordBatch.from_arrays(
-        [pa.array(list(range(len(rows))), type=pa.int64()),
-         pa.array(rows, type=pa.list_(pa.int64()))],
-        names=["doc_id", "shingles"],
+        [pa.array(list(range(len(texts))), type=pa.int64()),
+         pa.array(texts, type=pa.string())],
+        names=["doc_id", "norm_text"],
     )
-    out = list(kernel(iter([batch])))
+    out = list(make_text_signature_kernel(CFG)(iter([batch])))
     assert len(out) == 1
-    return (out[0].column("minhash").to_pylist(),
-            out[0].column("simhash").to_pylist())
+    mhs = out[0].column("minhash").to_pylist()
+    fps = out[0].column("simhash").to_pylist()
+    nsh = out[0].column("n_shingles").to_pylist()
+    for text, mh, fp, n in zip(texts, mhs, fps, nsh):
+        hashes = {spark_xxhash64(s) for s in char_shingles(text, CFG.shingle_k)}
+        assert mh == list(minhash_signature(hashes, CFG))
+        assert fp == simhash_fingerprint(hashes, CFG)
+        assert n == len(hashes)
+    return nsh
 
 
 @settings(max_examples=50, deadline=None)
-@given(st.lists(shingle_sets, min_size=1, max_size=8))
-def test_kernel_matches_oracle(rows):
-    mhs, fps = run_kernel(rows)
-    for row, mh, fp in zip(rows, mhs, fps):
-        assert mh == list(minhash_signature(row, CFG))
-        assert fp == simhash_fingerprint(row, CFG)
+@given(st.lists(st.text(max_size=200), min_size=1, max_size=8))
+def test_kernel_matches_oracle(texts):
+    assert_matches_oracle(texts)
 
 
 def test_kernel_chunking_boundary():
-    # rows of 10^5 values next to 1-3 value rows in one batch
+    # rows of ~10^5 distinct 5-grams next to 1-3 char rows in one batch
     rng = np.random.Generator(np.random.PCG64(7))
-    rows = [list(np.unique(rng.integers(-(2**62), 2**62, size=n)))
-            for n in (150_000, 120_000, 3, 1, 99_000)]
-    mhs, fps = run_kernel(rows)
-    for row, mh, fp in zip(rows, mhs, fps):
-        assert mh == list(minhash_signature(row, CFG))
-        assert fp == simhash_fingerprint(row, CFG)
+    alphabet = np.array(list("abcdefghijklmnopqrstuvwxyz0123456789 éü中"))
+
+    def big(n_chars):
+        return "".join(rng.choice(alphabet, size=n_chars))
+
+    texts = [big(150_004), big(120_004), "abc", "a", big(99_004), "zz"]
+    n_shingles = assert_matches_oracle(texts)
+    assert n_shingles[0] > 149_000 and n_shingles[4] > 98_000, n_shingles
 
 
 def test_perm_bijectivity():
@@ -91,15 +98,6 @@ def test_simhash_close_for_similar_sets():
     fb = simhash_fingerprint(variant, CFG)
     ham = bin((fa ^ fb) & (2**64 - 1)).count("1")
     assert ham <= 8  # 1% feature churn stays within a few bits
-
-
-# --- fused text->signature kernel (r2) --------------------------------
-
-def test_empty_shingle_set_rejected():
-    import pytest
-
-    with pytest.raises(ValueError, match="empty shingle set"):
-        run_kernel([[1, 2], []])
 
 
 def test_xxh64_fixed_matches_oracle():
@@ -160,39 +158,23 @@ def test_payload_hashes_trailing_empty_row():
 
 
 def test_utf8_view_large_string_offsets():
-    """large_string carries int64 offsets; reading them as int32
-    silently hashes the wrong bytes into every signature (the
-    _bin_view guard, applied to the text view)."""
+    """large_string/large_binary carry int64 offsets; reading them as
+    int32 silently hashes the wrong bytes into every signature or run
+    length. One offset-width decision (_bin_view) serves the text view
+    and the binary views of the substr and media kernels."""
     import pyarrow as pa
 
-    from miekki.kernels import _utf8_view
+    from miekki.kernels import _bin_view, _utf8_view
 
     for t in (pa.string(), pa.large_string()):
         data, offs = _utf8_view(pa.array(["hello", "world"], type=t))
         assert list(offs) == [0, 5, 10], t
         assert bytes(data[:5]) == b"hello", t
-
-
-def test_md5_mode_signatures_consistent(spark):
-    """DedupConfig(hash_fn='md5') must route signatures_from_text
-    through the SQL shingle path: the fused kernel only speaks xxh64,
-    and silently using it would mix md5 doc ids with xxh64 shingle
-    hashes (matches neither oracle)."""
-    from miekki.config import DedupConfig
-    from miekki.stages.normalize import with_shingles
-    from miekki.stages.signatures import (compute_signatures,
-                                          signatures_from_text)
-
-    cfg = DedupConfig(hash_fn="md5")
-    docs = spark.createDataFrame(
-        [(i, f"doc {i} " + "lorem ipsum dolor sit amet " * 3)
-         for i in range(20)], ["doc_id", "norm_text"])
-    fused = {r["doc_id"]: r for r in
-             signatures_from_text(docs, cfg).collect()}
-    two_step = {r["doc_id"]: r for r in
-                compute_signatures(with_shingles(docs, cfg), cfg).collect()}
-    assert set(fused) == set(two_step)
-    for i in fused:
-        assert fused[i]["minhash"] == two_step[i]["minhash"]
-        assert fused[i]["simhash"] == two_step[i]["simhash"]
-        assert fused[i]["n_shingles"] > 0
+    for t in (pa.binary(), pa.large_binary()):
+        arr = pa.array([b"skip", b"hello", b"", b"world"], type=t)
+        data, offs = _bin_view(arr.slice(1))
+        assert list(offs) == [0, 5, 5, 10], t
+        assert bytes(data) == b"helloworld", t
+        # a zero-length array may carry no buffers at all
+        data, offs = _bin_view(pa.array([], type=t))
+        assert len(data) == 0 and list(offs) == [0], t

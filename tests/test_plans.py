@@ -47,34 +47,38 @@ def test_column_pruning_at_scan(spark):
 
 
 def test_shingle_path_is_codegen(spark):
-    from miekki.stages.normalize import normalize, with_shingles
+    from miekki.stages.normalize import normalize
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").withColumn(
         "url", F.col("doc_id").cast("string")).withColumn(
         "warc_ts", F.current_timestamp())
-    plan = _plan(with_shingles(normalize(docs, CFG), CFG))
+    plan = _plan(normalize(docs, CFG))
     # normalize + doc_id hash projections are whole-stage codegen'd
-    # ("codegen id" markers in formatted mode). The shingle transform
-    # itself is a higher-order function — interpreted by design in
-    # Spark (no codegen for lambdafunction) — which is the measured
-    # ~5us/shingle cost; moving shingling into the Arrow kernel is
-    # the known optimization if it ever dominates.
+    # ("codegen id" markers in formatted mode); shingling itself runs
+    # inside the fused signature kernel, not in SQL
     assert "codegen id" in plan
-    assert "xxhash64" in plan and "array_distinct" in plan
+    assert "xxhash64" in plan
 
 
-def test_signature_stage_prunes_columns(spark, corpus_df):
-    """Only doc_id + shingles may cross the Arrow boundary — html /
-    norm_text must be pruned out before mapInArrow (SURVEY.md §4)."""
-    from miekki.stages.normalize import normalize, with_shingles
-    from miekki.stages.signatures import compute_signatures
+def test_signature_stage_prunes_columns(spark, corpus_df, tmp_path):
+    """Only doc_id + norm_text may cross the Arrow boundary — html
+    must be pruned out before mapInArrow (SURVEY.md §4)."""
+    from miekki.stages.normalize import normalize
+    from miekki.stages.signatures import signatures_from_text
 
-    sigs = compute_signatures(with_shingles(normalize(corpus_df, CFG), CFG), CFG)
+    # a parquet source, so the plan has a scan whose schema can be read
+    # (an in-memory DataFrame shows none)
+    path = str(tmp_path / "corpus.parquet")
+    corpus_df.write.parquet(path)
+    corpus = spark.read.parquet(path)
+    assert "html" in corpus.columns
+    sigs = signatures_from_text(normalize(corpus, CFG), CFG)
     plan = _plan(sigs)
     m = re.search(r"ArrowEvalPython|MapInArrow", plan)
     assert m, plan
     # the scan that feeds the kernel must not carry html
     scan_schemas = re.findall(r"ReadSchema: (.*)", plan)
+    assert scan_schemas, plan
     for s in scan_schemas:
         assert "html" not in s, s
 

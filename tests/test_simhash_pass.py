@@ -64,13 +64,12 @@ def test_all_edges_satisfy_hamming(spark, corpus_df):
     """On the real fixture corpus every emitted simhash edge must obey
     the Hamming bound (cross-check vs the oracle popcount)."""
     from miekki.config import DedupConfig
-    from miekki.stages.normalize import normalize, with_shingles
-    from miekki.stages.signatures import compute_signatures
+    from miekki.stages.normalize import normalize
+    from miekki.stages.signatures import signatures_from_text
     from oracle.sketches import hamming64
 
     cfg = DedupConfig()
-    sigs = compute_signatures(
-        with_shingles(normalize(corpus_df, cfg), cfg), cfg).localCheckpoint()
+    sigs = signatures_from_text(normalize(corpus_df, cfg), cfg).localCheckpoint()
     fp = {r.doc_id: r.simhash for r in sigs.select("doc_id", "simhash").collect()}
     edges = simhash_candidate_edges(sigs, cfg).collect()
     assert edges, "fixture corpus must produce simhash edges (exact dups)"

@@ -1,5 +1,5 @@
 """Spark stage output vs the pure-Python oracle, bit-for-bit
-(SURVEY.md §5.1): normalize, shingles, signatures, band hashes —
+(SURVEY.md §5.1): normalize, shingle counts, signatures, band hashes —
 on real fixture-corpus texts (en/fr/es/zh/de)."""
 
 import numpy as np
@@ -7,8 +7,8 @@ from pyspark.sql import functions as F
 
 from miekki.config import DedupConfig
 from miekki.stages.lsh import band_table
-from miekki.stages.normalize import normalize, with_shingles
-from miekki.stages.signatures import compute_signatures
+from miekki.stages.normalize import normalize
+from miekki.stages.signatures import signatures_from_text
 from oracle import sketches
 from oracle.xxh64 import spark_xxhash64
 from miekki.textproc import normalize_text
@@ -36,22 +36,27 @@ def test_normalize_matches_oracle(spark, corpus_df, fixture_corpus):
         assert r.norm_text == normalize_text(by_url[r.url]), r.url
 
 
+def _sigs(corpus_df, urls):
+    docs = normalize(corpus_df.where(corpus_df.url.isin(urls)), CFG)
+    return signatures_from_text(docs, CFG)
+
+
 def test_shingles_match_oracle(spark, corpus_df, fixture_corpus):
     corpus_pdf, _, _ = fixture_corpus
     urls = _sample(corpus_pdf)
-    df = with_shingles(normalize(corpus_df.where(corpus_df.url.isin(urls)), CFG), CFG)
+    got = {r.doc_id: r.n_shingles
+           for r in _sigs(corpus_df, urls).select("doc_id", "n_shingles").collect()}
+    assert len(got) == len(urls)
     by_url = corpus_pdf.set_index("url").text
-    for r in df.select("url", "shingles", "n_shingles").collect():
-        expect = sketches.shingle_hashes(by_url[r.url], CFG)
-        assert sorted(set(r.shingles)) == expect, r.url
-        assert r.n_shingles == len(set(r.shingles))
+    for url in urls:
+        expect = sketches.shingle_hashes(by_url[url], CFG)
+        assert got[spark_xxhash64(url)] == len(expect), url
 
 
 def test_signatures_match_oracle(spark, corpus_df, fixture_corpus):
     corpus_pdf, _, _ = fixture_corpus
     urls = _sample(corpus_pdf, n=20)
-    ws = with_shingles(normalize(corpus_df.where(corpus_df.url.isin(urls)), CFG), CFG)
-    sigs = {r.doc_id: r for r in compute_signatures(ws, CFG).collect()}
+    sigs = {r.doc_id: r for r in _sigs(corpus_df, urls).collect()}
     by_url = corpus_pdf.set_index("url").text
     for url in urls:
         did = spark_xxhash64(url)
@@ -63,8 +68,7 @@ def test_signatures_match_oracle(spark, corpus_df, fixture_corpus):
 def test_band_hashes_match_oracle(spark, corpus_df, fixture_corpus):
     corpus_pdf, _, _ = fixture_corpus
     urls = _sample(corpus_pdf, n=10)
-    ws = with_shingles(normalize(corpus_df.where(corpus_df.url.isin(urls)), CFG), CFG)
-    sigs = compute_signatures(ws, CFG).localCheckpoint()
+    sigs = _sigs(corpus_df, urls).localCheckpoint()
     bands = band_table(sigs, CFG)
     got = {}
     for r in bands.collect():
@@ -76,39 +80,35 @@ def test_band_hashes_match_oracle(spark, corpus_df, fixture_corpus):
         assert sorted(pairs) == sorted(expect)
 
 
-def test_fused_kernel_parity(spark, corpus_df):
-    """signatures_from_text (fused numpy shingle+sketch kernel) is
-    bit-exact with the SQL-shingling + Arrow-sketch reference path on
-    the whole fixture corpus plus adversarial rows (CJK, emoji,
-    accents, empty, NULL, shorter-than-k)."""
-    from miekki.stages.normalize import normalize, with_shingles
-    from miekki.stages.signatures import (compute_signatures,
-                                          signatures_from_text)
-
-    extra = spark.createDataFrame(
-        [("x1", "中文测试文档内容很长的一段话测试"),
-         ("x2", "emoji 🎉🎊 test 🚀 mixed"),
-         ("x3", "héllo wörld àccents"),
-         ("x4", ""), ("x5", None), ("x6", "ab"),
-         ("x7", "aaaaaaaaaaaaaaaa")],
-        "url string, text string") \
+def test_fused_kernel_parity(spark, corpus_df, fixture_corpus):
+    """signatures_from_text (fused C shingle+sketch kernel) is
+    bit-exact with the oracle composition on sampled fixture docs plus
+    adversarial rows (CJK, emoji, accents, empty, NULL, shorter-than-k,
+    one repeated char)."""
+    corpus_pdf, _, _ = fixture_corpus
+    urls = _sample(corpus_pdf)
+    adversarial = [("x1", "中文测试文档内容很长的一段话测试"),
+                   ("x2", "emoji 🎉🎊 test 🚀 mixed"),
+                   ("x3", "héllo wörld àccents"),
+                   ("x4", ""), ("x5", None), ("x6", "ab"),
+                   ("x7", "aaaaaaaaaaaaaaaa")]
+    extra = spark.createDataFrame(adversarial, "url string, text string") \
         .withColumn("warc_ts", F.current_timestamp()) \
         .withColumn("lang", F.lit("en")) \
         .withColumn("html", F.encode(F.coalesce("text", F.lit("")), "utf-8"))
-    corpus = corpus_df.unionByName(extra, allowMissingColumns=True)
-    docs = normalize(corpus, CFG).localCheckpoint()
-
-    ws = with_shingles(docs, CFG)
-    ref = compute_signatures(ws, CFG).join(
-        ws.select("doc_id", "n_shingles"), "doc_id").toPandas() \
-        .set_index("doc_id").sort_index()
-    got = signatures_from_text(docs, CFG).toPandas() \
-        .set_index("doc_id").sort_index()
-    assert list(ref.index) == list(got.index)
-    assert (ref.simhash == got.simhash).all()
-    assert (ref.n_shingles == got.n_shingles).all()
-    for did in ref.index:
-        assert list(ref.loc[did].minhash) == list(got.loc[did].minhash), did
+    corpus = corpus_df.where(corpus_df.url.isin(urls)).unionByName(
+        extra, allowMissingColumns=True)
+    got = {r.doc_id: r for r in signatures_from_text(
+        normalize(corpus, CFG), CFG).collect()}
+    texts = corpus_pdf.set_index("url").text
+    expect = [(u, texts[u]) for u in urls] + adversarial
+    assert len(got) == len(expect)
+    for url, text in expect:
+        hashes = sketches.shingle_hashes(text or "", CFG)
+        r = got[spark_xxhash64(url)]
+        assert list(r.minhash) == list(sketches.minhash_signature(hashes, CFG)), url
+        assert r.simhash == sketches.simhash_fingerprint(hashes, CFG), url
+        assert r.n_shingles == len(hashes), url
 
 
 def test_nfc_sample_guard(spark):
