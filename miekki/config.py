@@ -53,9 +53,12 @@ class DedupConfig:
     # Two-level salted aggregation (§2.4). Memory bound per reducer
     # group: level 1 holds <= ceil(|hot bucket| / S) ids x 8B, level 2
     # holds <= S ids x 8B. S=1024 bounds a 10^9-doc boilerplate bucket
-    # at ~8 MB per level-1 group and 8 KB at level 2; salt is a pure
-    # function of doc_id so S never changes cluster output, only the
-    # shuffle shape (tests/test_spark_stages.py pins that invariance).
+    # at ~8 MB per level-1 group and 8 KB at level 2. Salt is a pure
+    # function of doc_id, so the connected components of every
+    # candidate-pair graph are invariant in S
+    # (tests/test_spark_stages.py::test_candidate_components_salt_invariant).
+    # Verified edges may differ with S, because stars centre on
+    # salt-group minima.
     salt_buckets: int = 1024
     # --- doc-id width ---
     # 64: doc_id = xxhash64(url) as bigint (default; ~2.7e4 birthday

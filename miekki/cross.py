@@ -44,14 +44,11 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from miekki.config import DedupConfig
 from miekki.stages.lsh import band_table
-from miekki.stages.verify import est_j_matches_sql
-
-CROSS_REP_SALTS = 16
+from miekki.stages.verify import EST_J
 
 
 def cross_candidates(sigs_b: DataFrame, sigs_a: DataFrame,
-                     cfg: DedupConfig, reps_per_bucket: int = 2,
-                     salts: int = CROSS_REP_SALTS) -> DataFrame:
+                     cfg: DedupConfig, reps_per_bucket: int = 2) -> DataFrame:
     """Bipartite candidate pairs (b_id, a_id) via A-side bucket
     representatives. Never pairs B with B or A with A."""
     bands_a = band_table(sigs_a, cfg)
@@ -81,7 +78,7 @@ def cross_dedup(sigs_b: DataFrame, sigs_a: DataFrame,
                        F.col("minhash").alias("mh_src"))
     sb = sigs_b.select(F.col("doc_id").alias("b_id"),
                        F.col("minhash").alias("mh_dst"))
-    est = (F.expr(est_j_matches_sql(cfg.n_perm))
+    est = (F.expr(EST_J)
            / F.lit(float(cfg.n_perm))).alias("est_j")
     scored = (cand.join(sb, "b_id").join(sa, "a_id")
               .select("b_id", "a_id", est))

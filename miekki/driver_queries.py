@@ -154,13 +154,14 @@ def _portable_buckets(spark, sf_dir, prefix_len: int) -> DataFrame:
 
 
 def q_bucket_edges(spark, sf_dir):
-    """REAL two-level salted star-edge operator (miekki.stages.lsh)
-    over a portable bucketing + portable salt."""
-    from miekki.stages.lsh import star_edges
+    """REAL two-level salted star-edge operator (miekki.stages.lsh
+    bucket_pairs, star pairs only) over a portable bucketing +
+    portable salt."""
+    from miekki.stages.lsh import bucket_pairs
 
     b = (_portable_buckets(spark, sf_dir, 2)
          .withColumn("salt", F.pmod(F.col("doc_id"), F.lit(4)).cast("int")))
-    return star_edges(b, ["bucket"], CFG)
+    return bucket_pairs(b, ["bucket"]).dropDuplicates(["src", "dst"])
 
 
 def _chain_edges(spark, sf_dir) -> DataFrame:

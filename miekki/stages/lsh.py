@@ -1,15 +1,17 @@
-"""O8/O9/O10 — LSH band hashing + salted star-edge extraction.
+"""O8/O9/O10 — LSH band hashing, and ``bucket_pairs``: the one salted
+bucket → candidate-pair operator. The MinHash band pass, streaming,
+the SimHash pass and the exact-substring pass all call it.
 
 Hot-bucket skew (boilerplate pages collapse millions of docs into one
 band bucket) is defused two ways (SURVEY.md §2.4, mandated by
 BASELINE.json north_star "salted repartition-by-band"):
 
-1. NEVER all-pairs: per bucket emit star edges (bucket_min, doc) —
-   |bucket|-1 edges; connectivity (hence clusters) is preserved
-   exactly.
-2. Two-level salted aggregation: level 1 groups by
-   (band_id, band_hash, salt) — max group ~ bucket/S; level 2 joins
-   the S salt-mins per bucket to the global bucket min — max group S.
+1. NEVER all-pairs: each member pairs with its group minimum (a star,
+   |bucket|-1 pairs that keep the bucket connected) and with at most
+   ``succ`` successors.
+2. Two-level salt: level 1 groups by (keys, salt) — max group ~
+   bucket/S; level 2 runs the same pairing over the <= S salt minima
+   of each bucket, which connects them to the bucket minimum.
 
 AQE's skew handling covers joins, not groupBy/window — hence the
 manual salt.
@@ -17,9 +19,18 @@ manual salt.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from miekki.config import DedupConfig
+
+
+def salt(cfg: DedupConfig) -> Column:
+    """The salt of a row: a pure function of doc_id in
+    [0, salt_buckets). It shapes the shuffle; the components of the
+    candidate-pair graph do not depend on it (SURVEY.md §2.4)."""
+    return F.pmod(F.xxhash64("doc_id"), F.lit(cfg.salt_buckets)).cast("int")
 
 
 def band_table(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -40,67 +51,90 @@ def band_table(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     h = f"xxhash64(cast(b as bigint), {row_cols})"
     bands = F.expr(f"transform(sequence(0, {cfg.bands - 1}), b -> {h})")
     out = signatures.select("doc_id", F.posexplode(bands).alias("band_id", "band_hash"))
-    # salt is a pure function of doc_id: it only partitions work,
-    # never changes cluster output (SURVEY.md §2.4)
-    return out.withColumn(
-        "salt", F.pmod(F.xxhash64("doc_id"), F.lit(cfg.salt_buckets)).cast("int")
-    )
+    return out.withColumn("salt", salt(cfg))
 
 
-def star_edges(bucketed: DataFrame, key_cols: list[str], cfg: DedupConfig,
-               id_col: str = "doc_id", salt_col: str = "salt") -> DataFrame:
-    """Generic two-level salted bucket→edges operator (the MinHash
-    band pass and streaming reuse it; the simhash and exact-substring
-    passes use sibling windowed pair generators — simhash._chain_pairs
-    and substr._chain_pairs_with_pos — which additionally carry chain
-    successors/positions that this min-only operator doesn't).
+def _side(side: str, col: str) -> str:
+    return side if col == "doc_id" else f"{side}_{col}"
 
-    Emits (src, dst) with src = bucket minimum < dst; linear in bucket
-    size, bounded reducer groups at both levels.
 
-    Implementation (r2 rewrite): min-over-window per salted bucket —
-    ONE shuffle + one per-partition sort of the band table, zero
-    joins, zero boxing. The r1 version collect_list-ed every group:
-    12M mostly-singleton ArrayBuffers of boxed Longs per band table —
-    allocation/GC churn that kept the stage at a 1.0-1.9x speedup
-    from 4->16 cores (measured). Alternatives measured at 16 cores on
-    12.3M band rows: collect_list 17-58s, min/count agg + join-back
-    13.7s (AQE pre-shuffles the probe side before noticing the minima
-    fit a broadcast; an explicit broadcast hint gets 2.4s but dies at
-    10^12 docs where the hot-bucket set outgrows the driver), window
-    10.4s unconditionally. WindowExec buffers one GROUP at a time, so
-    the salt bound (SURVEY.md §2.4) caps its memory at
-    <= ceil(bucket/S) rows at level 1 and <= S at level 2.
+def _pair_level(df: DataFrame, part: list[str], succ: int,
+                cols: list[str]) -> tuple[DataFrame, DataFrame]:
+    """One level of ``bucket_pairs``: (pairs, the rows that are their
+    group's minimum, with the partition columns)."""
+    w = Window.partitionBy(*part).orderBy(*cols)
+    nxt = [F.struct(*[F.lead(c, i).over(w).alias(c) for c in cols])
+           for i in range(1, succ + 1)]
+    lv = df.select(*part, *cols,
+                   *[F.first(c).over(w).alias(f"_m_{c}") for c in cols],
+                   *([F.array(*nxt).alias("_succ")] if succ else []))
+    is_min = reduce(lambda a, b: a & b,
+                    [F.col(c) == F.col(f"_m_{c}") for c in cols])
+    pairs = lv.where(~is_min).select(
+        *[F.col(f"_m_{c}").alias(_side("src", c)) for c in cols],
+        *[F.col(c).alias(_side("dst", c)) for c in cols])
+    if succ:
+        chain = (lv.select(*cols, F.explode("_succ").alias("_n"))
+                 .where(F.col("_n.doc_id").isNotNull())
+                 .select(*[F.col(c).alias(_side("src", c)) for c in cols],
+                         *[F.col(f"_n.{c}").alias(_side("dst", c))
+                           for c in cols]))
+        pairs = chain.unionByName(pairs)
+    return pairs, lv.where(is_min).select(*part, *cols)
 
-    Recall caveat (ADVICE r1): star edges preserve connectivity of the
-    UNVERIFIED candidate graph exactly, but downstream est_J
-    verification compares each member only against the bucket minimum
-    — if a low-similarity doc happens to be the minimum of a band
-    bucket, true pairs inside that bucket can be dropped. With b=32
-    bands the probability a dup pair shares NO bucket with a
-    same-cluster minimum is negligible (each band re-draws the
-    minimum), so the band pass stays star-only."""
-    w1 = Window.partitionBy(*key_cols, salt_col)
-    lv1 = bucketed.withColumn("m1", F.min(id_col).over(w1))
-    edges1 = (lv1.where(F.col(id_col) != F.col("m1"))
-              .select(F.col("m1").alias("src"), F.col(id_col).alias("dst")))
-    # level 2 connects ALL salt minima (singleton salt groups included
-    # — they carry cross-salt connectivity) to the per-bucket global
-    # minimum; the minima table is <= S rows per bucket
-    mins = (lv1.where(F.col(id_col) == F.col("m1"))
-            .select(*key_cols, salt_col, "m1")
-            .dropDuplicates([*key_cols, salt_col]))
-    w2 = Window.partitionBy(*key_cols)
-    lv2 = mins.withColumn("m2", F.min("m1").over(w2))
-    edges2 = (lv2.where(F.col("m1") != F.col("m2"))
-              .select(F.col("m2").alias("src"), F.col("m1").alias("dst")))
-    return edges1.unionByName(edges2).dropDuplicates(["src", "dst"])
+
+def bucket_pairs(df: DataFrame, keys: list[str], succ: int = 0,
+                 carry: tuple[str, ...] = ()) -> DataFrame:
+    """Salted bucket → candidate pairs, linear in bucket size.
+
+    ``df`` holds doc_id, the bucket ``keys``, a ``salt`` column and the
+    ``carry`` columns. Within each (keys, salt) group, and then again
+    within each bucket over the salt-group minima, every member pairs
+    with the group minimum and with its ``succ`` successors in
+    (doc_id, *carry) order. Emits (src, dst) plus src_<c>, dst_<c> per
+    carried column. src is the earlier row in that order; a duplicate
+    (doc_id, *carry) row can pair with itself, and a pair can repeat
+    across buckets: callers filter and de-duplicate.
+
+    Star pairs make a verified component a star, so CC converges in ~2
+    rounds; successor pairs keep it connected where a member fails
+    verification against the minimum (chains alone are path graphs,
+    O(log n) CC rounds).
+
+    lead()/first() over one sorted window per level (r2): ONE shuffle
+    and one per-partition sort, zero joins, zero boxing. The r1 form
+    collect_list-ed every group: 12M mostly-singleton ArrayBuffers of
+    boxed Longs per band table — GC churn that held every
+    bucket-pairing stage to a 1.0-1.9x speedup from 4->16 cores.
+    Measured at 16 cores on 12.3M band rows: collect_list 17-58 s,
+    min/count agg + join-back 13.7 s (an explicit broadcast hint gets
+    2.4 s but dies at 10^12 docs, where the hot-bucket set outgrows
+    the driver), window 10.4 s. WindowExec buffers one GROUP at a
+    time, so the salt caps its memory at <= ceil(bucket/S) rows at
+    level 1 and <= S at level 2. The level-2 input comes from the SAME
+    windowed branch (r3): rows that ARE their group's first, so
+    ReusedExchange serves every consumer from one shuffle write (a
+    separate groupBy shuffled the full table a second time). Nothing
+    is persisted: the windowed table is O(rows) at corpus scale.
+
+    Recall caveat (ADVICE r1): stars preserve connectivity of the
+    UNVERIFIED candidate graph exactly, but verification then compares
+    each member only against its group minimum (and its successors) —
+    if a low-similarity doc is the minimum, true pairs inside that
+    bucket can be dropped. With b=32 bands the MinHash pass stays
+    star-only: each band re-draws the minimum, so the chance that a
+    dup pair shares NO bucket with a same-cluster minimum is
+    negligible."""
+    cols = ["doc_id", *carry]
+    lvl1, mins = _pair_level(df, [*keys, "salt"], succ, cols)
+    lvl2, _ = _pair_level(mins, keys, succ, cols)
+    return lvl1.unionByName(lvl2)
 
 
 def minhash_candidate_edges(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     """T2 → candidate (src, dst) edges from LSH band collisions."""
     bands = band_table(signatures, cfg)
-    return star_edges(bands, ["band_id", "band_hash"], cfg)
+    return bucket_pairs(bands, ["band_id", "band_hash"]).dropDuplicates(["src", "dst"])
 
 
 # =====================================================================

@@ -3,12 +3,12 @@ SURVEY.md §2.5).
 
 Pigeonhole: Hamming(a,b) <= 3 on a 64-bit fingerprint ⇒ at least one
 of 4 contiguous 16-bit blocks is identical. Explode each doc to its
-4 (block_id, block_val) keys, bucket on them, and within a bucket
-pair each member with up to C successors in doc_id order (bounded —
-never all-pairs; hot SimHash buckets hold near-identical fingerprints
-so the successor chain keeps the component connected, and the MinHash
-path runs regardless). Buckets are salted with the same two-level
-scheme as LSH banding; level 2 chains the per-salt minima.
+4 (block_id, block_val) keys and pair each bucket with
+``lsh.bucket_pairs``: star pairs to the salted bucket minimum plus up
+to ``simhash_chain`` successors in doc_id order (bounded — never
+all-pairs; hot SimHash buckets hold near-identical fingerprints so
+the successor chain keeps the component connected, and the MinHash
+path runs regardless).
 
 Final edges are verified exactly: bit_count(fp_src ^ fp_dst) <= k,
 JVM-side — via joins back to T2 DELIBERATELY (r6): carrying both
@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from miekki.config import DedupConfig
+from miekki.stages.lsh import bucket_pairs, salt
 
 
 def _block_table(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -40,60 +41,14 @@ def _block_table(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
         for j in range(cfg.simhash_blocks)])
     return (signatures
             .select("doc_id", F.posexplode(blocks).alias("block_id", "block_val"))
-            .withColumn("salt", F.pmod(F.xxhash64("doc_id"),
-                                       F.lit(cfg.salt_buckets)).cast("int")))
-
-
-def _chain_pairs(df: DataFrame, part_cols: list[str], c: int) -> DataFrame:
-    """Pair each row with its <= c successors in doc_id order within
-    the bucket; linear in bucket size.
-
-    lead()/first() over a sorted window instead of
-    sort_array(collect_list) (r2, same rewrite as the LSH star and
-    substr chain operators): WindowExec streams unsafe rows after one
-    shuffle + per-partition sort, where collect_list built one boxed
-    buffer per mostly-singleton bucket — the GC churn that throttled
-    4->16-core scaling of every bucket-pairing stage.
-
-    Besides the <=c successor pairs, every member also pairs with the
-    bucket MINIMUM (first() over the same window): when those star
-    pairs pass verification (the common case — hot buckets hold
-    near-identical items) the verified component is a star and CC
-    converges in ~2 rounds instead of O(log chain-length); chain pairs
-    remain for the cases where the min fails pairwise verification.
-
-    Returns (pairs, mins): mins = each group's minimum row WITH its
-    partition columns, extracted from the SAME windowed branch (r3,
-    same rewrite as substr: a separate groupBy shuffled the full
-    block table a second time; ReusedExchange now serves all
-    consumers from one shuffle write)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*part_cols).orderBy("doc_id")
-    succ = F.array(*[F.lead("doc_id", i).over(w)
-                     for i in range(1, c + 1)])
-    lv = df.select(*part_cols,
-                   F.col("doc_id").alias("src"), succ.alias("succ"),
-                   F.first("doc_id").over(w).alias("m"))
-    chain = (lv.select("src", F.explode("succ").alias("dst"))
-             .where(F.col("dst").isNotNull()))
-    star = (lv.where(F.col("src") != F.col("m"))
-            .select(F.col("m").alias("src"), F.col("src").alias("dst")))
-    mins = lv.where(F.col("src") == F.col("m")) \
-        .select(*part_cols, F.col("src").alias("doc_id"))
-    return chain.unionByName(star.select("src", "dst")), mins
+            .withColumn("salt", salt(cfg)))
 
 
 def simhash_candidate_edges(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     """T2 → verified simhash edges (src < dst, origin='simhash',
     weight = 1 - hamming/bits)."""
-    b = _block_table(signatures, cfg)
-    lvl1, salt_mins = _chain_pairs(b, ["block_id", "block_val", "salt"],
-                                   cfg.simhash_chain)
-    lvl2, _ = _chain_pairs(salt_mins.drop("salt"),
-                           ["block_id", "block_val"], cfg.simhash_chain)
-    cand = lvl1.unionByName(lvl2).dropDuplicates(["src", "dst"])
-
+    cand = bucket_pairs(_block_table(signatures, cfg), ["block_id", "block_val"],
+                        cfg.simhash_chain).dropDuplicates(["src", "dst"])
     fp = signatures.select("doc_id", "simhash")
     s = fp.withColumnRenamed("doc_id", "src").withColumnRenamed("simhash", "fp_src")
     d = fp.withColumnRenamed("doc_id", "dst").withColumnRenamed("simhash", "fp_dst")

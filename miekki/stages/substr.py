@@ -7,8 +7,9 @@ Jaccard). Spark-native re-expression of the suffix-array approach:
   1. winnowing anchors per doc (Arrow kernel, miekki.substr_kernels)
   2. explode to a fingerprint table (fp, doc_id, pos) — streamed,
      never checkpointed (the big intermediate at corpus scale)
-  3. salted chain-pair candidate generation per fp bucket (bounded,
-     never all-pairs; carries anchor positions through)
+  3. salted star + chain candidate pairs per fp bucket
+     (``lsh.bucket_pairs``: bounded, never all-pairs; carries anchor
+     positions through)
   4. exact byte-extension verification around <= A anchors per pair
      (Arrow kernel; the anchor window is byte-compared, so hash
      collisions cannot create false edges)
@@ -24,6 +25,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from miekki.config import DedupConfig
 from miekki.kernels import _bin_view, _utf8_view
+from miekki.stages.lsh import bucket_pairs, salt
 from miekki.substr_kernels import batch_common_runs, batch_doc_anchors
 
 def _anchor_schema(id_type: str) -> str:
@@ -100,61 +102,13 @@ def anchor_table(docs_norm: DataFrame, cfg: DedupConfig) -> DataFrame:
         make_anchor_kernel(cfg), _anchor_schema(id_spark_type(cfg)))
 
 
-def _chain_pairs_with_pos(df: DataFrame, part_cols: list[str]
-                          ) -> tuple[DataFrame, DataFrame]:
-    """Within each fp bucket, pair each (doc,pos) with its <= C
-    successors in (doc_id, pos) order — linear, position-carrying.
-    Returns (pairs, mins) where mins = the group-minimum (doc, pos)
-    rows WITH their partition columns.
-
-    lead()/first() over a sorted window instead of
-    sort_array(collect_list(struct)) (r2): the collect_list built 8.8M
-    mostly-singleton boxed-struct buffers per anchor table — GC churn
-    that throttled 4->16-core scaling; WindowExec streams unsafe rows
-    (one salt-bounded GROUP buffered at a time) after one shuffle +
-    per-partition sort. Star pairs to the bucket minimum ride the same
-    window (first() = ds[0]): verified stars collapse CC to ~2 rounds
-    (chains alone are path graphs -> O(log n) rounds).
-
-    r3: mins come from the SAME windowed branch (rows that ARE their
-    group's first) instead of a separate groupBy — the old two-branch
-    plan shuffled the full anchor table TWICE (window exchange +
-    groupBy exchange); now ReusedExchange serves all three consumers
-    from one shuffle write (no persist: the windowed table is
-    O(anchors) and must never be pinned at corpus scale)."""
-    w = Window.partitionBy(*part_cols).orderBy("doc_id", "pos")
-    succ = F.array(*[
-        F.struct(F.lead("doc_id", i).over(w).alias("dst"),
-                 F.lead("pos", i).over(w).alias("dst_pos"))
-        for i in range(1, CHAIN_SUCCESSORS + 1)])
-    lv = df.select(
-        *part_cols,
-        F.col("doc_id").alias("src"), F.col("pos").alias("src_pos"),
-        succ.alias("succ"),
-        F.first("doc_id").over(w).alias("m_doc"),
-        F.first("pos").over(w).alias("m_pos"))
-    chain = (lv.select("src", "src_pos", F.explode("succ").alias("p"))
-             .where(F.col("p.dst").isNotNull())
-             .select("src", "src_pos", "p.dst", "p.dst_pos"))
-    is_min = (F.col("src") == F.col("m_doc")) & \
-             (F.col("src_pos") == F.col("m_pos"))
-    star = (lv.where(~is_min)
-            .select(F.col("m_doc").alias("src"), F.col("m_pos").alias("src_pos"),
-                    F.col("src").alias("dst"), F.col("src_pos").alias("dst_pos")))
-    mins = lv.where(is_min).select(
-        *part_cols, F.col("src").alias("doc_id"),
-        F.col("src_pos").alias("pos"))
-    return chain.unionByName(star), mins
-
-
 def candidate_anchor_pairs(anchors: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """fp table → (src, dst, src_pos, dst_pos), salted two-level,
-    <= MAX_ANCHORS_PER_PAIR rows per pair."""
-    salted = anchors.withColumn(
-        "salt", F.pmod(F.xxhash64("doc_id"), F.lit(cfg.salt_buckets)).cast("int"))
-    lvl1, mins = _chain_pairs_with_pos(salted, ["fp", "salt"])
-    lvl2, _ = _chain_pairs_with_pos(mins.drop("salt"), ["fp"])
-    pairs = lvl1.unionByName(lvl2).where(F.col("src") != F.col("dst"))
+    """fp table → (src, dst, src_pos, dst_pos): ``lsh.bucket_pairs``
+    per fp bucket in (doc_id, pos) order, <= MAX_ANCHORS_PER_PAIR rows
+    per pair."""
+    pairs = (bucket_pairs(anchors.withColumn("salt", salt(cfg)), ["fp"],
+                          CHAIN_SUCCESSORS, ("pos",))
+             .where(F.col("src") != F.col("dst")))
     # cap ranked by a deterministic hash, NOT by earliest position:
     # earliest-first lets a repeated prefix crowd out run-interior
     # anchors (ADVICE r1); hash rank spreads the kept anchors over the

@@ -13,18 +13,13 @@ from pyspark.sql import DataFrame, functions as F
 
 from miekki.config import DedupConfig
 
+# Positionwise-equality count of the two minhash arrays. Kept as the
+# aggregate/zip_with HOF: unrolling into n_perm if() terms (guide
+# §4.1's CodegenFallback cure) measured 3x SLOWER on the verify join
+# at mult=16 (1.5 s → 4.7 s noop) — the 128-term tree blows the
+# generated method past JIT limits. Measure per site before unrolling
+# lambdas.
 EST_J = "aggregate(zip_with(mh_src, mh_dst, (x, y) -> if(x = y, 1, 0)), 0, (acc, v) -> acc + v)"
-
-
-def est_j_matches_sql(n_perm: int) -> str:
-    """Positionwise-equality count of two n_perm-long minhash arrays —
-    value-identical to EST_J (kernel signatures always carry exactly
-    n_perm non-null elements). Kept as the aggregate/zip_with HOF:
-    unrolling into n_perm if() terms (guide §4.1's CodegenFallback
-    cure) measured 3x SLOWER on the verify join at mult=16 (1.5 s →
-    4.7 s noop) — the 128-term tree blows the generated method past
-    JIT limits. Measure per site before unrolling lambdas."""
-    return EST_J
 
 
 def verify_edges(edges: DataFrame, signatures: DataFrame, cfg: DedupConfig,
@@ -46,7 +41,7 @@ def verify_edges(edges: DataFrame, signatures: DataFrame, cfg: DedupConfig,
     # rand() ∈ [0, 1) is always finite, 0.0 * finite = +0.0, and
     # x + +0.0 == x bit-for-bit for every non-negative x (EST_J/128
     # is never -0.0) — output verified exceptAll-identical.
-    est = ((F.expr(est_j_matches_sql(cfg.n_perm))
+    est = ((F.expr(EST_J)
             + F.lit(0.0) * F.rand(42)) / F.lit(float(cfg.n_perm)))
     return (edges.join(s, "src").join(d, "dst")
             .withColumn("weight", est)

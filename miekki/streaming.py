@@ -23,7 +23,7 @@ from miekki.stages.cc import cc_labels
 from miekki.stages.normalize import normalize
 from miekki.stages.signatures import signatures_from_text
 from miekki.stages.verify import verify_edges
-from miekki.stages.lsh import band_table, star_edges
+from miekki.stages.lsh import band_table, bucket_pairs
 
 
 # streaming state tables are hash-BUCKETED (r4, ROADMAP #5):
@@ -147,7 +147,8 @@ def incremental_dedup_batch(spark: SparkSession, catalog: Catalog,
         active = old_hit.unionByName(new_bands)
     else:
         active = new_bands
-    cand = star_edges(active, ["band_id", "band_hash"], cfg).localCheckpoint()
+    cand = (bucket_pairs(active, ["band_id", "band_hash"])
+            .dropDuplicates(["src", "dst"]).localCheckpoint())
 
     # signatures for verify: ONLY candidate endpoints. The history is
     # bucketed by doc_id, so the semi-join is one-sided whichever form

@@ -153,3 +153,39 @@ def test_bucketed_readback_survives_reregistration(spark, corpus_df, tmp_path):
                   bucket_by=(4, ["doc_id"]))
     assert cat.snapshot_id("signatures") != s1
     assert cat.read("signatures").count() == 10
+
+
+def _tree_counts(df, names=("Exchange", "ReusedExchange", "Sort", "Window")):
+    """Node counts in the operator tree of the formatted plan."""
+    tree = _plan(df).split("\n\n", 1)[0]
+    return tuple(len(re.findall(rf"\b{n} \(\d+\)", tree)) for n in names)
+
+
+def test_bucket_pairing_plans_pinned(spark, corpus_df):
+    """The three candidate passes built on ``lsh.bucket_pairs`` keep
+    their shuffle shape: per level one Exchange, the level-2 input and
+    the pair branches reading it back through ReusedExchange. As
+    (Exchange, ReusedExchange, Sort, Window) over checkpointed inputs,
+    AQE off; in ``executedPlan().toString().count("Exchange")`` terms
+    (a ReusedExchange line names its source too) these are 5, 9 and 9,
+    the last being 8 for pair generation plus the cap's (src, dst)
+    Exchange. An extra shuffle, or a lost reuse, changes a count."""
+    from miekki.stages.lsh import bucket_pairs, minhash_candidate_edges
+    from miekki.stages.normalize import normalize
+    from miekki.stages.signatures import signatures_from_text
+    from miekki.stages.simhash import _block_table
+    from miekki.stages.substr import anchor_table, candidate_anchor_pairs
+
+    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        docs = normalize(corpus_df, CFG).localCheckpoint()
+        sigs = signatures_from_text(docs, CFG).localCheckpoint()
+        anchors = anchor_table(docs, CFG).localCheckpoint()
+        sim_cand = bucket_pairs(_block_table(sigs, CFG), ["block_id", "block_val"],
+                                CFG.simhash_chain).dropDuplicates(["src", "dst"])
+        assert _tree_counts(minhash_candidate_edges(sigs, CFG)) == (3, 1, 3, 3)
+        assert _tree_counts(sim_cand) == (3, 3, 5, 5)
+        assert _tree_counts(candidate_anchor_pairs(anchors, CFG)) == (3, 3, 7, 7)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)

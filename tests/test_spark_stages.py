@@ -3,6 +3,7 @@
 on real fixture-corpus texts (en/fr/es/zh/de)."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from miekki.config import DedupConfig
@@ -109,6 +110,60 @@ def test_fused_kernel_parity(spark, corpus_df, fixture_corpus):
         assert list(r.minhash) == list(sketches.minhash_signature(hashes, CFG)), url
         assert r.simhash == sketches.simhash_fingerprint(hashes, CFG), url
         assert r.n_shingles == len(hashes), url
+
+
+@pytest.mark.fast
+def test_candidate_components_salt_invariant(spark, corpus_df):
+    """salt_buckets only shapes the shuffle: for each pass built on
+    lsh.bucket_pairs (MinHash bands, SimHash blocks, substring
+    anchors), the connected components of the candidate-pair graph
+    on the sf0.001 fixture corpus are the same at S = 1, 3 and 1024.
+    The pair sets themselves may differ with S (stars centre on
+    salt-group minima), so verified edges may too."""
+    from miekki.stages.lsh import bucket_pairs, minhash_candidate_edges
+    from miekki.stages.simhash import _block_table
+    from miekki.stages.substr import anchor_table, candidate_anchor_pairs
+    from oracle.cc import cc_labels
+
+    docs = normalize(corpus_df, CFG).localCheckpoint()
+    sigs = signatures_from_text(docs, CFG).localCheckpoint()
+    anchors = anchor_table(docs, CFG).localCheckpoint()
+    ids = [r.doc_id for r in docs.select("doc_id").collect()]
+    passes = {
+        "minhash": lambda c: minhash_candidate_edges(sigs, c),
+        "simhash": lambda c: bucket_pairs(_block_table(sigs, c),
+                                          ["block_id", "block_val"],
+                                          c.simhash_chain),
+        "substr": lambda c: candidate_anchor_pairs(anchors, c),
+    }
+    for name, cand in passes.items():
+        comps = {}
+        for s in (1, 3, 1024):
+            edges = cand(DedupConfig(salt_buckets=s)).select("src", "dst").collect()
+            assert edges, (name, s)
+            comps[s] = cc_labels(edges, ids)
+        assert comps[1] == comps[3] == comps[1024], name
+        # the corpus has planted dups, so the check is not vacuous
+        assert len(set(comps[1].values())) < len(ids), name
+
+
+@pytest.mark.fast
+def test_hot_bucket_salted_star(spark):
+    """One 5,000-member bucket at S=8, star pairs only: one component
+    and exactly |bucket| - 1 pairs, none repeated."""
+    from miekki.stages.lsh import bucket_pairs, salt
+    from oracle.cc import cc_labels
+
+    n = 5000
+    bucket = (spark.range(n).select(F.col("id").alias("doc_id"),
+                                    F.lit(7).alias("k"))
+              .withColumn("salt", salt(DedupConfig(salt_buckets=8))))
+    assert bucket.select("salt").distinct().count() == 8
+    edges = bucket_pairs(bucket, ["k"]).collect()
+    assert len(edges) == n - 1
+    assert len({(e.src, e.dst) for e in edges}) == n - 1
+    assert all(e.src < e.dst for e in edges)
+    assert set(cc_labels(edges, range(n)).values()) == {0}
 
 
 def test_nfc_sample_guard(spark):
