@@ -57,6 +57,12 @@ class Catalog(ABC):
     def snapshot_id(self, name: str) -> str | None:
         """Opaque version token; changes on every successful write."""
 
+    @abstractmethod
+    def data_files(self, name: str) -> list[tuple[int, int]]:
+        """(rows, bytes) per data file of the table's current snapshot,
+        from file metadata (T6 metrics; each write task leaves one
+        file)."""
+
 
 class HadoopCatalog(Catalog):
     """Parquet-dir catalog with manifest-last atomic overwrite."""
@@ -221,19 +227,19 @@ class HadoopCatalog(Catalog):
         with open(self._manifest(name)) as f:
             return json.load(f)["snapshot"]
 
-    def table_bytes(self, name: str) -> int | None:
-        """Total on-disk bytes of the table's current data files
-        (metrics T6 bytes_out attribution)."""
-        if not self.exists(name):
-            return None
+    def data_files(self, name: str) -> list[tuple[int, int]]:
+        """(rows, bytes) of each current data file, in path order:
+        row counts from the parquet footers, bytes from the file
+        system — no Spark job."""
+        import pyarrow.parquet as pq
+
         with open(self._manifest(name)) as f:
-            data = json.load(f)["data"]
-        total = 0
-        for root, _, files in os.walk(os.path.join(self._dir(name), data)):
-            for fn in files:
-                if not fn.startswith(("_", ".")):
-                    total += os.path.getsize(os.path.join(root, fn))
-        return total
+            data = os.path.join(self._dir(name), json.load(f)["data"])
+        paths = sorted(os.path.join(root, fn)
+                       for root, _, files in os.walk(data)
+                       for fn in files if not fn.startswith(("_", ".")))
+        return [(pq.read_metadata(p).num_rows, os.path.getsize(p))
+                for p in paths]
 
 
 def iceberg_corpus_ddl(namespace: str, table: str = "corpus") -> str:
@@ -344,10 +350,8 @@ class IcebergCatalog(Catalog):
             " ORDER BY committed_at DESC LIMIT 1").first()
         return str(row["snapshot_id"]) if row else None
 
-    def table_bytes(self, name: str) -> int | None:
-        if not self.exists(name):
-            return None
-        row = self.spark.sql(
-            f"SELECT sum(file_size_in_bytes) AS b"
-            f" FROM {self._tbl(name)}.files").first()
-        return int(row["b"]) if row and row["b"] is not None else None
+    def data_files(self, name: str) -> list[tuple[int, int]]:
+        return [(r["record_count"], r["file_size_in_bytes"])
+                for r in self.spark.sql(
+                    f"SELECT record_count, file_size_in_bytes"
+                    f" FROM {self._tbl(name)}.files").collect()]

@@ -16,11 +16,11 @@ Method (the O8-O11 machinery, bipartite):
 1. Band both sides with the SAME DedupConfig (bands must agree for
    buckets to align — the config-hash discipline of O22 applies).
 2. A-side representatives: the exact ``reps_per_bucket`` smallest A
-   doc_ids per (band_id, band_hash) — the two-level salted selection
-   X25/X28 established (level-1 window bounded by |bucket|/salts,
-   level-2 over ≤ reps·salts rows), so a boilerplate bucket with 10^8
-   A members never serializes into one task and the candidate count
-   is ≤ reps·|buckets|, never |bucket|² and never |A|.
+   doc_ids per (band_id, band_hash) — ``tiers.capped_topk``, the
+   two-level salted selection of X25/X28 (level-1 window bounded by
+   |bucket|/salts, level-2 over ≤ reps·salts rows), so a boilerplate
+   bucket with 10^8 A members never serializes into one task and the
+   candidate count is ≤ reps·|buckets|, never |bucket|² and never |A|.
 3. Candidates: B bands ⋈ reps on (band_id, band_hash) → distinct
    (b_id, a_id). A B doc's true partner shares ≥1 of its 32 bands
    w.h.p. (the §2.2 S-curve); in any shared bucket either the partner
@@ -40,26 +40,23 @@ matched_a/est_j NULL when no bucket produced a candidate.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from miekki.config import DedupConfig
 from miekki.stages.lsh import band_table
 from miekki.stages.verify import EST_J
+from miekki.tiers import capped_topk
 
 
 def cross_candidates(sigs_b: DataFrame, sigs_a: DataFrame,
                      cfg: DedupConfig, reps_per_bucket: int = 2) -> DataFrame:
     """Bipartite candidate pairs (b_id, a_id) via A-side bucket
     representatives. Never pairs B with B or A with A."""
-    bands_a = band_table(sigs_a, cfg)
+    bands_a = band_table(sigs_a, cfg).drop("salt")
     bands_b = band_table(sigs_b, cfg).drop("salt")
-    w1 = (Window.partitionBy("band_id", "band_hash", "salt")
-          .orderBy("doc_id"))
-    lvl1 = (bands_a.withColumn("rn1", F.row_number().over(w1))
-            .where(F.col("rn1") <= reps_per_bucket).drop("rn1", "salt"))
-    w2 = Window.partitionBy("band_id", "band_hash").orderBy("doc_id")
-    reps = (lvl1.withColumn("rn", F.row_number().over(w2))
-            .where(F.col("rn") <= reps_per_bucket)
+    reps = (capped_topk(bands_a, ["band_id", "band_hash"],
+                        reps_per_bucket, rank_col="doc_id",
+                        salts=cfg.salt_buckets)
             .select("band_id", "band_hash",
                     F.col("doc_id").alias("a_id")))
     return (bands_b.join(reps, ["band_id", "band_hash"])

@@ -84,10 +84,10 @@ def run(spark, catalog, cfg: DedupConfig = DedupConfig(),
         run_id: str = "run0", corpus_table: str = "corpus",
         check_invariant: bool = False,
         use_simhash: bool = True, use_substr: bool = True,
-        collect_metrics: bool = True, n_buckets: int = 32,
+        n_buckets: int = 32,
         emit_tiers: bool = False) -> dict:
     """Durable pipeline: corpus table → checkpointed T1/T2/T4/T5 in
-    the catalog with lineage + per-partition metrics (O21–O23).
+    the catalog with lineage + per-file metrics (O21–O23).
 
     Stage graph (each row = one catalog table, one lineage unit):
       docs_norm      ← corpus                      (O3/O4)
@@ -106,8 +106,7 @@ def run(spark, catalog, cfg: DedupConfig = DedupConfig(),
     """
     from miekki.lineage import StageRunner
 
-    runner = StageRunner(catalog, run_id, cfg.config_hash(),
-                         collect_metrics=collect_metrics)
+    runner = StageRunner(catalog, run_id, cfg.config_hash())
     corpus_snap = catalog.snapshot_id(corpus_table) or "none"
     corpus = catalog.read(corpus_table)
 
@@ -165,7 +164,7 @@ def run(spark, catalog, cfg: DedupConfig = DedupConfig(),
         "labels": labels,
         "executed": runner.executed,
         "skipped": runner.skipped,
-        "n_docs": labels.count(),
+        "n_docs": sum(n for n, _ in catalog.data_files("cluster_labels")),
     }
     if emit_tiers:
         from miekki.tiers import pipeline_doc_tiers

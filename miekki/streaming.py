@@ -369,9 +369,13 @@ def run_incremental_stream(spark: SparkSession, catalog: Catalog,
         dropDuplicates in incremental_dedup_batch)."""
         if batch_df.isEmpty():
             return
+        n_applied = 0
         if catalog.exists("stream_batches"):
-            done = catalog.read("stream_batches") \
-                .where(F.col("batch_id") == int(batch_id)).limit(1).count()
+            # one single-row job over the ledger (a row per applied
+            # batch) answers both "replayed?" and the compaction cadence
+            n_applied, done = catalog.read("stream_batches").agg(
+                F.count(F.lit(1)),
+                F.max(F.col("batch_id") == int(batch_id))).first()
             if done:
                 return
         incremental_dedup_batch(spark, catalog, batch_df, cfg,
@@ -381,7 +385,7 @@ def run_incremental_stream(spark: SparkSession, catalog: Catalog,
             catalog.append("stream_batches", ledger)
         else:
             catalog.overwrite("stream_batches", ledger, f"b{batch_id}")
-        n_applied = catalog.read("stream_batches").count()
+        n_applied += 1
         if compact_every and n_applied % compact_every == 0:
             compact_stream_state(catalog, run_id=f"compact_b{batch_id}")
 

@@ -144,26 +144,29 @@ def pipeline_doc_tiers(docs_norm: DataFrame, edges: DataFrame,
 CLUSTER_CAP_SALTS = 64
 
 
-def capped_topk(df: DataFrame, key_col: str, k: int,
+def capped_topk(df: DataFrame, key_cols: list[str], k: int,
                 rank_col: str = "rk", tie_col: str = "doc_id",
                 salts: int = CLUSTER_CAP_SALTS) -> DataFrame:
-    """EXACT k-smallest-by-(rank, tie) rows per ``key_col``, skew-free
+    """EXACT k-smallest-by-(rank, tie) rows per ``key_cols``, skew-free
     — the two-level selection X25 (webstats.domain_cap) established,
-    factored out so any hot-key group (hosts, dup clusters) reuses it:
+    factored out so any hot-key group (hosts, dup clusters, LSH
+    buckets) reuses it:
 
-      level 1: row_number over (key, pmod(rank, salts)) — group size
-               bounded by |key|/salts; keep rn <= k.
+      level 1: row_number over (key, pmod(xxhash64(tie), salts)) —
+               group size bounded by |key|/salts for any rank type or
+               rank ties; keep rn <= k.
       level 2: row_number over key alone, over at most k*salts
                pre-filtered rows per key.
 
     Exact because membership in a group's k smallest is monotone
     under taking subsets that contain the row: level 1 never discards
     a level-2 winner. Adds an int column 'rn' (1..k)."""
-    w1 = (Window.partitionBy(key_col, F.pmod(F.col(rank_col), F.lit(salts)))
-          .orderBy(rank_col, tie_col))
-    lvl1 = (df.withColumn("rn1", F.row_number().over(w1))
-            .where(F.col("rn1") <= k).drop("rn1"))
-    w2 = Window.partitionBy(key_col).orderBy(rank_col, tie_col)
+    w1 = Window.partitionBy(*key_cols, "__salt").orderBy(rank_col, tie_col)
+    lvl1 = (df.withColumn("__salt",
+                          F.pmod(F.xxhash64(tie_col), F.lit(salts)))
+            .withColumn("rn1", F.row_number().over(w1))
+            .where(F.col("rn1") <= k).drop("rn1", "__salt"))
+    w2 = Window.partitionBy(*key_cols).orderBy(rank_col, tie_col)
     return (lvl1.withColumn("rn", F.row_number().over(w2))
             .where(F.col("rn") <= k)
             .withColumn("rn", F.col("rn").cast("int")))
@@ -182,7 +185,7 @@ def cluster_cap(labels: DataFrame, k: int = 4,
     rk = (rank_col if rank_col is not None
           else F.xxhash64(F.lit("ccap"), F.col("doc_id")))  # domain tag
     base = labels.select("doc_id", "cluster_id", rk.alias("rk"))
-    return (capped_topk(base, "cluster_id", k, salts=salts)
+    return (capped_topk(base, ["cluster_id"], k, salts=salts)
             .select("doc_id", "cluster_id", "rn"))
 
 

@@ -446,8 +446,8 @@ def domain_cap(docs: DataFrame, k: int = 100, url_col: str = "url",
     the same hot-key shape as LSH mega-buckets (stages/lsh.py), and
     the same fix applies — two-level selection:
 
-      level 1: row_number over (host, pmod(rank, salts)) — group
-               size is bounded by |host|/salts; keep rank <= k.
+      level 1: row_number over (host, pmod(xxhash64(doc_id), salts))
+               — group size is bounded by |host|/salts; keep rank <= k.
       level 2: row_number over host alone, but over at most
                k*salts pre-filtered rows per host.
 
@@ -465,7 +465,7 @@ def domain_cap(docs: DataFrame, k: int = 100, url_col: str = "url",
           else F.xxhash64(F.lit("dcap"), F.col("doc_id")))  # domain tag
     base = docs.select("doc_id", host_col(url_col).alias("host"),
                        rk.alias("rk"))
-    return (capped_topk(base, "host", k, salts=salts)
+    return (capped_topk(base, ["host"], k, salts=salts)
             .select("doc_id", "host", "rn"))
 
 

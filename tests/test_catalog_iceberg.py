@@ -53,11 +53,15 @@ class FakeRow(dict):
 
 
 class FakeSQLResult:
-    def __init__(self, row):
+    def __init__(self, row, rows):
         self.row = row
+        self.rows = rows
 
     def first(self):
         return self.row
+
+    def collect(self):
+        return self.rows
 
 
 class FakeCatalogAPI:
@@ -69,14 +73,15 @@ class FakeCatalogAPI:
 
 
 class FakeSpark:
-    def __init__(self, existing=(), snapshot_row=None):
+    def __init__(self, existing=(), snapshot_row=None, rows=()):
         self.catalog = FakeCatalogAPI(set(existing))
         self.snapshot_row = snapshot_row
+        self.rows = list(rows)
         self.sql_log = []
 
     def sql(self, q):
         self.sql_log.append(q)
-        return FakeSQLResult(self.snapshot_row)
+        return FakeSQLResult(self.snapshot_row, self.rows)
 
 
 def test_overwrite_call_sequence():
@@ -129,13 +134,17 @@ def test_snapshot_id_queries_latest_snapshot():
     assert cat.snapshot_id("nope") is None
 
 
-def test_table_bytes_sums_file_sizes():
+def test_data_files_lists_rows_and_bytes():
     spark = FakeSpark(existing={"lake.dedup.signatures"},
-                      snapshot_row=FakeRow(b=4096))
+                      rows=[FakeRow(record_count=10,
+                                    file_size_in_bytes=4096),
+                            FakeRow(record_count=3,
+                                    file_size_in_bytes=900)])
     cat = IcebergCatalog(spark, "lake.dedup")
-    assert cat.table_bytes("signatures") == 4096
-    assert "file_size_in_bytes" in spark.sql_log[-1]
-    assert "lake.dedup.signatures.files" in spark.sql_log[-1]
+    assert cat.data_files("signatures") == [(10, 4096), (3, 900)]
+    q = spark.sql_log[-1]
+    assert "record_count" in q and "file_size_in_bytes" in q
+    assert "lake.dedup.signatures.files" in q
 
 
 def test_corpus_ddl_hidden_partitioning():

@@ -31,7 +31,7 @@ def _labels_pdf(res):
 
 def test_full_run_then_resume(spark, catalog):
     cfg = DedupConfig()
-    r1 = run(spark, catalog, cfg, run_id="r1", collect_metrics=True)
+    r1 = run(spark, catalog, cfg, run_id="r1")
     assert r1["executed"] == STAGES and not r1["skipped"]
     first = _labels_pdf(r1)
 
@@ -82,23 +82,29 @@ def test_crashed_halfwrite_invisible(spark, catalog):
 
 
 def test_metrics_bytes_out_real(spark, corpus_df, tmp_path):
-    """T6 bytes_out is the table's real on-disk size attributed by
-    rows (r1 hardcoded 0); per-stage sums must be positive and equal
-    the current table bytes for freshly-written stages."""
+    """T6 holds one row per data file with its exact rows and bytes:
+    per stage, sum(bytes_out) is the on-disk data bytes and
+    sum(rows_out) the table's row count."""
     from miekki.catalog import HadoopCatalog
     from miekki import pipeline
 
     cat = HadoopCatalog(spark, str(tmp_path / "cat_m"))
     cat.overwrite("corpus", corpus_df.limit(120), "seed")
-    pipeline.run(spark, cat, run_id="m1", n_buckets=4)
+    res = pipeline.run(spark, cat, run_id="m1", n_buckets=4)
     m = cat.read("metrics").toPandas()
-    sums = m.groupby("stage").bytes_out.sum()
-    assert (sums > 0).all(), sums
-    for stage, table in [("signatures", "signatures"),
-                         ("cluster_labels", "cluster_labels")]:
-        want = cat.table_bytes(table)
-        got = int(sums[stage])
-        assert abs(got - want) <= m[m.stage == stage].shape[0], (got, want)
+    assert set(m.stage) == set(STAGES)
+    for stage in STAGES:
+        part = m[m.stage == stage]
+        with open(os.path.join(cat.root, stage, "_MANIFEST.json")) as f:
+            d = os.path.join(cat.root, stage, json.load(f)["data"])
+        on_disk = sum(os.path.getsize(os.path.join(r, f))
+                      for r, _, fs in os.walk(d) for f in fs
+                      if not f.startswith(("_", ".")))
+        assert on_disk > 0
+        assert int(part.bytes_out.sum()) == on_disk, stage
+        assert int(part.rows_out.sum()) == cat.read(stage).count(), stage
+        assert sorted(part.partition_id) == list(range(len(part)))
+    assert res["n_docs"] == cat.read("cluster_labels").count() == 120
 
 
 def test_config_alternation_never_serves_stale_table(

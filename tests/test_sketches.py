@@ -317,6 +317,25 @@ def test_hdr_quantiles_contain_exact_rank_stat(spark):
     assert all(r["exact"] == 1 and r["n_vals"] == 1
                for r in by_group["c"])
 
+    # edge inputs, ungrouped and grouped: no values give no rows;
+    # all-zero values land in bin -1 = [0, 0]; a single value answers
+    # every quantile with its own bin
+    for g in ((), ("g",)):
+        def read_out(rows):
+            df = _lens(spark, rows).select(*g, "x")
+            return hdr_quantiles(hdr_histogram(df, "x", g), g).collect()
+
+        assert read_out([]) == [], g
+        zeros = read_out([("z", 0)] * 5)
+        assert len(zeros) == 3, g
+        assert all((r["n_vals"], r["bin"], r["lo"], r["hi"])
+                   == (5, -1, 0, 0) for r in zeros), zeros
+        one = read_out([("s", 12345)])
+        assert len(one) == 3, g
+        assert len({(r["r"], r["bin"], r["lo"], r["hi"])
+                    for r in one}) == 1, one
+        assert one[0]["lo"] <= 12345 <= one[0]["hi"], one
+
 
 def test_hdr_relative_error_bound(spark):
     """Bin width / lo <= ~1/s for octaves >= s: the estimate interval
@@ -329,15 +348,14 @@ def test_hdr_relative_error_bound(spark):
 
 
 def test_hdr_quantile_plan_bounded_windows_no_python(spark):
-    """The read-out windows run over histogram bins (bounded), never
-    over raw rows; no Python eval anywhere."""
+    """The read-out runs over histogram bins (bounded), never over raw
+    rows; no Python eval anywhere."""
     hist = hdr_histogram(_lens(spark, [("g", i + 1) for i in range(100)]),
                          "x", ("g",))
     q = hdr_quantiles(hist, ("g",))
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    # windows exist but their input is the grouped histogram, whose
-    # aggregation precedes them in the plan
+    # the bin aggregation precedes the per-group read-out aggregation
     assert plan.count("HashAggregate") >= 2
 
 
@@ -435,26 +453,22 @@ def test_cms_update_state_nonstring_group_col(spark, tmp_path):
 
 
 def test_hdr_quantiles_no_single_partition_window(spark):
-    """The ungrouped read-out must not plan an empty-partition-spec
-    Window (VERDICT r5 wrong #2): the spec partitions on the
-    non-foldable pmod(bin, 1) and the window input is the bounded bin
-    frame (HashAggregate below the Window), not raw rows."""
+    """The read-out plans no Window, grouped or ungrouped, so no
+    empty-spec WindowExec (VERDICT r5 wrong #2) or a spec that only
+    dodges it can come back; one groupBy over the bin frame keeps the
+    ungrouped plan at <= 6 Exchanges."""
     from miekki.sketches import hdr_histogram, hdr_quantiles
 
-    df = spark.range(5000).selectExpr("id % 997 + 1 AS len")
-    plan = (hdr_quantiles(hdr_histogram(df, "len"))
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "Window" in plan
-    # every Window node carries a non-empty partition spec: the
-    # pmod(bin, 1) key is projected out as _w0 and survives into
-    # windowspecdefinition (an empty spec would read
-    # `windowspecdefinition(<frame>)` with no partition column)
-    for line in plan.splitlines():
-        if "windowspecdefinition" in line:
-            assert "windowspecdefinition(_w0" in line, line
-    assert "pmod(bin" in plan
-    # the window consumes the aggregated bin frame
-    assert "HashAggregate" in plan
+    df = spark.range(5000).selectExpr("id % 997 + 1 AS len",
+                                      "CAST(id % 3 AS STRING) AS g")
+    plans = {g: (hdr_quantiles(hdr_histogram(df, "len", g), g)
+                 ._jdf.queryExecution().executedPlan().toString())
+             for g in ((), ("g",))}
+    for g, plan in plans.items():
+        assert "Window" not in plan, (g, plan)
+        # the read-out consumes the aggregated bin frame
+        assert "HashAggregate" in plan
+    assert plans[()].count("Exchange") <= 6, plans[()]
 
 
 def test_len_quantiles_evidence_guard(spark):

@@ -386,14 +386,25 @@ def test_real_stream_two_batches(spark, split_corpus, tmp_path_factory):
 
     spark.createDataFrame(part1.assign(html=b"")[
         ["url", "warc_ts", "html", "text", "lang"]]).write.mode("append").parquet(src)
-    run_incremental_stream(spark, cat, src, str(root / "ckpt"), cfg)
+    run_incremental_stream(spark, cat, src, str(root / "ckpt"), cfg,
+                           compact_every=2)
     n1 = read_stream_labels(cat).count()
     assert n1 == len(part1)
 
+    def labels_writer():
+        with open(os.path.join(cat.root, "stream_labels",
+                               "_MANIFEST.json")) as f:
+            return json.load(f)["run_id"]
+
+    assert not labels_writer().startswith("compact")
+
     spark.createDataFrame(part2.assign(html=b"")[
         ["url", "warc_ts", "html", "text", "lang"]]).write.mode("append").parquet(src)
-    run_incremental_stream(spark, cat, src, str(root / "ckpt"), cfg)
+    run_incremental_stream(spark, cat, src, str(root / "ckpt"), cfg,
+                           compact_every=2)
     assert read_stream_labels(cat).count() == len(part1) + len(part2)
+    # the second applied batch hits the compaction cadence
+    assert labels_writer() == "compact_b1"
 
 
 def test_windowed_event_counts(spark):

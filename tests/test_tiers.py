@@ -48,17 +48,20 @@ def test_tier_labels_total(spark, tier_case):
 
 def test_capped_topk_matches_single_level(spark):
     """Two-level selection == the naive one-window selection on a
-    corpus with one hot key (the exactness argument, executed)."""
-    rows = [(i, "hot" if i % 4 else f"cold{i}", (i * 37) % 101)
+    corpus with one hot key (the exactness argument, executed), keyed
+    by one column and by two (the cross-corpus (band_id, band_hash)
+    bucket shape, ranked by doc_id itself)."""
+    rows = [(i, "hot" if i % 4 else f"cold{i}", i % 3, (i * 37) % 101)
             for i in range(1, 401)]
-    df = spark.createDataFrame(rows, ["doc_id", "key", "rk"])
-    got = capped_topk(df, "key", k=5, salts=7)
-    w = Window.partitionBy("key").orderBy("rk", "doc_id")
-    want = (df.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= 5)
-            .withColumn("rn", F.col("rn").cast("int")))
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
+    df = spark.createDataFrame(rows, ["doc_id", "key", "key2", "rk"])
+    for keys, rank in ((["key"], "rk"), (["key", "key2"], "doc_id")):
+        got = capped_topk(df, keys, k=5, rank_col=rank, salts=7)
+        w = Window.partitionBy(*keys).orderBy(rank, "doc_id")
+        want = (df.withColumn("rn", F.row_number().over(w))
+                .where(F.col("rn") <= 5)
+                .withColumn("rn", F.col("rn").cast("int")))
+        assert got.exceptAll(want).count() == 0, keys
+        assert want.exceptAll(got).count() == 0, keys
 
 
 def test_cluster_cap_bounds_and_singletons(spark):
@@ -148,7 +151,7 @@ def test_pipeline_doc_tiers_stage(spark, corpus_df, tmp_path):
     cat = HadoopCatalog(spark, str(tmp_path / "cat_tiers"))
     cat.overwrite("corpus", corpus_df.limit(400), run_id="ingest")
     r = pipeline.run(spark, cat, run_id="t1", n_buckets=4,
-                     emit_tiers=True, collect_metrics=False)
+                     emit_tiers=True)
     assert "doc_tiers" in r["executed"]
     tiers = cat.read("doc_tiers").toPandas()
     labels = r["labels"].toPandas()
@@ -168,7 +171,7 @@ def test_pipeline_doc_tiers_stage(spark, corpus_df, tmp_path):
 
     # resume: a second run skips the tier stage too
     r2 = pipeline.run(spark, cat, run_id="t2", n_buckets=4,
-                      emit_tiers=True, collect_metrics=False)
+                      emit_tiers=True)
     assert "doc_tiers" in r2["skipped"]
 
 
