@@ -120,7 +120,7 @@ def bpe_tokenize(docs: DataFrame, merges: list[tuple[str, str]],
     ranks ride the task closure; per-batch word cache amortizes the
     per-word loop over Zipfian repetition.
 
-    Measured cost (r6, VERDICT r5 #6; bench_extra.py `bpe` stage at
+    Measured cost (r6, VERDICT r5 #6; bench_stages.py `bpe` stage at
     sf0.1/mult=16/local[32]): 81.3M tokens over 192k docs in ~16-18 s
     wall = ~4.4M tokens/s (~280k tokens/s per task slot) at a ~50%
     word-cache hit rate — a floor, not typical: the widened bench

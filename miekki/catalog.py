@@ -27,7 +27,23 @@ import time
 import uuid
 from abc import ABC, abstractmethod
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+
+def local_df(spark: SparkSession, rows: list[tuple],
+             schema: StructType | str) -> DataFrame:
+    """A few driver-side rows (lineage, metrics, ledger and rider
+    rows) as a DataFrame that writes one file. Built from pandas
+    (Arrow), its write needs no Python worker, unlike a list of
+    tuples: 0.15 s vs 0.49 s (min of 8) per one-row append on
+    local[4]. Spark spreads local rows over min(rows, cores) tasks, so
+    without the coalesce each append would add that many files."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names),
+                                 schema).coalesce(1)
 
 
 class Catalog(ABC):

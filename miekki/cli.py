@@ -7,7 +7,7 @@
       --namespace warehouse.dedup --corpus db.corpus --run-id R1
   python -m miekki.cli ingest --sf-dir /root/testdata/sf0.1 \
       --catalog-root /tmp/cat          # sandbox: fixture corpus → catalog
-  python scripts/bench_scaling.py      # local[N] vs local[4N] protocol
+  python scripts/bench_cluster_scaling.py   # N vs 4N executors protocol
 
 On a real cluster the session comes from spark-submit's conf; locally
 build_spark supplies local[N] defaults.

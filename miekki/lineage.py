@@ -12,22 +12,13 @@ from __future__ import annotations
 import time
 from datetime import datetime, timezone
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from miekki import schemas
-from miekki.catalog import Catalog
+from miekki.catalog import Catalog, local_df
 
 LINEAGE_TABLE = "lineage"
 METRICS_TABLE = "metrics"
-
-
-def _local_df(spark, rows: list[tuple], schema) -> DataFrame:
-    """A few driver-side rows as a DataFrame. Built from pandas (Arrow),
-    its write needs no Python worker, unlike a list of tuples: 0.15 s
-    vs 0.49 s (min of 8) per one-row append on local[4]."""
-    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names),
-                                 schema)
 
 
 class LineageLog:
@@ -67,7 +58,7 @@ class LineageLog:
         row = [(run_id, stage, input_snapshot, config_hash, status,
                 output_snapshot, datetime.now(timezone.utc))]
         self.catalog.append(LINEAGE_TABLE,
-                            _local_df(spark, row, schemas.LINEAGE))
+                            local_df(spark, row, schemas.LINEAGE))
 
 
 def emit_partition_metrics(catalog: Catalog, run_id: str, stage: str,
@@ -82,7 +73,7 @@ def emit_partition_metrics(catalog: Catalog, run_id: str, stage: str,
     rows = [(run_id, stage, i, n, b, wall_ms, ts)
             for i, (n, b) in enumerate(catalog.data_files(table))]
     catalog.append(METRICS_TABLE,
-                   _local_df(catalog.spark, rows, schemas.METRICS))
+                   local_df(catalog.spark, rows, schemas.METRICS))
 
 
 class StageRunner:

@@ -63,6 +63,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from miekki.catalog import local_df
+
 HLL_P_DEFAULT = 12                  # m = 4096 registers, ~1.6% rel err
 _MASK60 = (1 << 60) - 1
 
@@ -355,8 +357,8 @@ def cms_update_state(cat, table: str, batch: DataFrame, col: str,
             cms_build(batch, col, group_cols, d, wp, hash_fn))
     else:
         sketch = cms_build(batch, col, group_cols, d, wp, hash_fn)
-    rider = sketch.sparkSession.createDataFrame(
-        [(-1, -1, bseq)], "row_idx int, col_idx int, cnt long")
+    rider = local_df(sketch.sparkSession, [(-1, -1, bseq)],
+                     "row_idx int, col_idx int, cnt long")
     if group_cols:
         # each rider NULL takes the group column's ACTUAL dtype from
         # the sketch schema (ADVICE r5 low: a hardcoded 'string' cast

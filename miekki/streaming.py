@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import (DataFrame, Observation, SparkSession, Window,
                          functions as F)
 
-from miekki.catalog import Catalog
+from miekki.catalog import Catalog, local_df
 from miekki.config import DedupConfig
 from miekki.schemas import CORPUS
 from miekki.stages.cc import cc_labels
@@ -380,7 +380,7 @@ def run_incremental_stream(spark: SparkSession, catalog: Catalog,
                 return
         incremental_dedup_batch(spark, catalog, batch_df, cfg,
                                 run_id=f"stream_b{batch_id}")
-        ledger = spark.createDataFrame([(int(batch_id),)], "batch_id long")
+        ledger = local_df(spark, [(int(batch_id),)], "batch_id long")
         if catalog.exists("stream_batches"):
             catalog.append("stream_batches", ledger)
         else:

@@ -1,22 +1,38 @@
-"""Per-stage Amdahl decomposition of the dedup pipeline (VERDICT r1
-next-round #6: "publish the Amdahl decomposition (per-stage wall at
-local[N] vs local[4N]) so the miss is explained by measurement").
+"""Per-stage timer: every pipeline operator, and the operators off the
+dedup path, timed in isolation one way.
 
-Times each pipeline stage in isolation (inputs localCheckpoint-ed so
-a stage's wall measures only its own compute + shuffles) at ONE
-parallelism level; run it twice at the two levels the scaling
-protocol uses and diff the walls to see which stage stops scaling.
+Each stage's inputs are built once and ``localCheckpoint``-ed outside
+the timer, so a stage's wall is its own compute and shuffles. The
+stage frame then goes to the noop sink (``count()`` for ``cc`` and
+``e2e``, whose checkpointed rounds are the cost, as in bench.py).
+Session settings are bench.py's; ``MIEKKI_MASTER`` overrides the master
+URL, so running this at ``local-cluster[2,1,*]`` and
+``local-cluster[8,1,*]`` and diffing the walls shows which stage stops
+scaling.
 
 Usage:
-  SPARK_GRAFT_CPUS=4  MIEKKI_BENCH_MULT=32 python scripts/bench_stages.py
-  SPARK_GRAFT_CPUS=16 MIEKKI_BENCH_MULT=32 python scripts/bench_stages.py
+  python scripts/bench_stages.py [--stages a,b,c] [--reps N] [--explain TAG]
 
-Prints one JSON line: {"cpus": N, "stages": {name: sec, ...},
-"total": sec, "docs": D}.
+--stages   comma-separated subset of the stage table (default: all)
+--reps     timed repetitions per stage; the stage's wall is the
+           minimum, every rep is reported (default 2: a stage's first
+           run pays its own plan's warm-up, up to 2x at small sizes)
+--explain  write plans/<TAG>/<stage>.txt, the formatted explain of
+           each stage frame
+
+Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, MIEKKI_BENCH_MULT,
+MIEKKI_BENCH_PARTITIONS and MIEKKI_MASTER, as in bench.py.
+
+Prints one JSON line: {"stages": {name: min sec}, "reps": {name:
+[sec, ...]}, "load": {name: [before, after]}, "steal_pct": {name: %},
+"total": sum of the dedup-path stages, "docs", "mult", "cpus",
+"master", "calib_sec"}.
 """
 
 from __future__ import annotations
 
+import argparse
+import functools
 import json
 import os
 import sys
@@ -25,126 +41,171 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+# the stages dedup_labels runs, in order; their walls sum to "total"
+DEDUP_PATH = ("normalize", "signatures", "lsh_star_edges", "verify_estj",
+              "simhash_pass", "substr_pass", "edge_union", "cc",
+              "canonical")
+COUNTED = ("cc", "e2e")
+
+
+def _load() -> float:
+    with open("/proc/loadavg") as f:
+        return float(f.read().split()[0])
+
+
+def _steal() -> int:
+    with open("/proc/stat") as f:
+        return int(f.readline().split()[8])  # steal jiffies
+
 
 def main():
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "16")
-    mult = int(os.environ.get("MIEKKI_BENCH_MULT", "32"))
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--stages", default="")
+    ap.add_argument("--reps", type=int, default=2)
+    ap.add_argument("--explain", metavar="TAG")
+    args = ap.parse_args()
+    if args.reps < 1:
+        ap.error("--reps must be >= 1")
 
-    from bench import prepare_corpus
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    mult = int(os.environ.get("MIEKKI_BENCH_MULT", "16"))
+
+    from bench import calibration_probe, prepare_corpus
+    corpus_path, n_docs = prepare_corpus(sf_dir, mult,
+                                         os.path.join(REPO, ".cache"))
+    calib = calibration_probe()   # before the JVM exists, as bench.py
+
+    from pyspark.sql import functions as F
+
+    from miekki.bpe import bpe_tokenize, fit_bpe
     from miekki.config import DedupConfig
+    from miekki.pipeline import _doc_meta, dedup_labels
     from miekki.session import build_spark
+    from miekki.sketches import (cms_build, hdr_histogram, hdr_quantiles,
+                                 hll_estimate, hll_registers)
     from miekki.stages.canonical import select_canonical
     from miekki.stages.cc import cc_labels
-    from miekki.stages.lsh import minhash_candidate_edges
+    from miekki.stages.lsh import band_table, minhash_candidate_edges
     from miekki.stages.normalize import normalize
     from miekki.stages.signatures import signatures_from_text
     from miekki.stages.simhash import simhash_candidate_edges
-    from miekki.stages.substr import substr_candidate_edges
+    from miekki.stages.substr import (anchor_table, candidate_anchor_pairs,
+                                      substr_candidate_edges)
     from miekki.stages.verify import verify_edges
+    from miekki.webstats import filter_battery
 
-    corpus_path, n_docs = prepare_corpus(sf_dir, mult,
-                                         os.path.join(REPO, ".cache"))
     cfg = DedupConfig()
+    if int(cpus) > 16:
+        os.environ.setdefault("MIEKKI_TASK_CPUS", "2")
     master = os.environ.get("MIEKKI_MASTER", f"local[{cpus}]")
     spark = build_spark(master=master, app_name="miekki-stages",
                         extra_conf={"spark.ui.showConsoleProgress": "false"})
     n_parts = int(os.environ.get("MIEKKI_BENCH_PARTITIONS", "96"))
-    corpus = (spark.read.parquet(corpus_path).repartition(n_parts)
-              .localCheckpoint())
+    corpus = spark.read.parquet(corpus_path).repartition(n_parts)
     corpus.count()
+    corpus = corpus.localCheckpoint()
 
-    # warm python workers / codegen on a small slice (protocol excludes
-    # process-spawn costs; workers are long-lived on a real cluster)
-    from miekki.pipeline import dedup_labels
+    # warm python workers / codegen on a small slice: workers are
+    # long-lived on a real cluster, so process spawn is not stage cost
     dedup_labels(corpus.limit(256), cfg).count()
 
-    walls: dict[str, float] = {}
+    def toks(docs):
+        return (docs.select(F.explode(F.split("norm_text", " "))
+                            .alias("token"))
+                .where(F.col("token") != ""))
 
-    def _steal():
-        with open("/proc/stat") as f:
-            return int(f.readline().split()[8])  # steal jiffies
+    # name -> (the stages whose checkpointed outputs it reads, builder)
+    stages = {
+        "normalize": ((), lambda: normalize(corpus, cfg)),
+        "signatures": (("normalize",),
+                       lambda d: signatures_from_text(d, cfg)),
+        "band_table": (("signatures",), lambda s: band_table(s, cfg)),
+        "lsh_star_edges": (("signatures",),
+                           lambda s: minhash_candidate_edges(s, cfg)),
+        "verify_estj": (("lsh_star_edges", "signatures"),
+                        lambda c, s: verify_edges(c, s, cfg)),
+        "simhash_pass": (("signatures",),
+                         lambda s: simhash_candidate_edges(s, cfg)),
+        "substr_pass": (("normalize",),
+                        lambda d: substr_candidate_edges(d, cfg)),
+        "substr_anchors": (("normalize",), lambda d: anchor_table(d, cfg)),
+        "substr_pairs": (("substr_anchors",),
+                         lambda a: candidate_anchor_pairs(a, cfg)),
+        "edge_union": (("verify_estj", "simhash_pass", "substr_pass"),
+                       lambda m, s, x: m.unionByName(s).unionByName(x)
+                       .select("src", "dst").dropDuplicates(["src", "dst"])),
+        "cc": (("edge_union", "normalize"),
+               lambda p, d: cc_labels(p, d.select("doc_id"))),
+        "canonical": (("cc", "normalize"), lambda lab, d: select_canonical(
+            lab, _doc_meta(d, corpus))),
+        "filter_battery": (("normalize",), lambda d: filter_battery(
+            d, norm_col="norm_text")),
+        "hll": (("normalize",), lambda d: hll_estimate(
+            hll_registers(toks(d), "token"))),
+        "cms": (("normalize",), lambda d: cms_build(toks(d), "token")),
+        "hdr": (("normalize",), lambda d: hdr_quantiles(hdr_histogram(
+            d.select(F.length("norm_text").alias("len")), "len"))),
+        "bpe": (("normalize",), lambda d: bpe_tokenize(
+            d, merges, norm_col="norm_text")),
+        "e2e": ((), lambda: dedup_labels(corpus, cfg)),
+    }
+    only = [s for s in args.stages.split(",") if s] or list(stages)
+    unknown = set(only) - set(stages)
+    if unknown:
+        spark.stop()
+        ap.error(f"unknown stages {sorted(unknown)}; known: {list(stages)}")
 
-    def _load():
-        with open("/proc/loadavg") as f:
-            return float(f.read().split()[0])
+    @functools.cache
+    def ck(name):
+        """Stage ``name``'s output, built from checkpointed inputs and
+        checkpointed itself, once."""
+        needs, build = stages[name]
+        return build(*map(ck, needs)).localCheckpoint()
 
-    rep_walls: dict[str, list[float]] = {}
+    # the BPE fit is driver-side over a bounded sample; only the
+    # tokenizer is timed
+    merges = (fit_bpe(ck("normalize"), norm_col="norm_text")
+              if "bpe" in only else None)
 
-    def _timed(name, fn):
-        l0, s0, t0 = _load(), _steal(), time.time()
-        out = fn()
-        dt = round(time.time() - t0, 2)
-        # steal% = other tenants on the physical host during this stage
-        steal_pct = (100 * (_steal() - s0) / os.sysconf("SC_CLK_TCK")
-                     / max(dt, 1e-9) / os.cpu_count())
-        print(f"  {name}: {dt}s (load {l0:.1f}->{_load():.1f},"
-              f" steal {steal_pct:.1f}%)", file=sys.stderr, flush=True)
-        return out, dt
+    if args.explain:
+        pdir = os.path.join(REPO, "plans", args.explain)
+        os.makedirs(pdir, exist_ok=True)
+        mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode
 
-    def timed(name, fn):
-        out, dt = _timed(name, fn)
-        walls[name] = dt
-        return out
-
-    # MIEKKI_STAGE_REPS > 1 re-times each stage: the stage's JSON
-    # entry is min-of-reps (tenant noise swings single timings 2-3x;
-    # the minimum is the honest wall), all rep timings are reported
-    # under "stage_reps", and 'total' sums each stage ONCE so it
-    # remains the min-of-reps pipeline wall (ADVICE r2)
-    reps = int(os.environ.get("MIEKKI_STAGE_REPS", "1"))
-
-    def timed_reps(name, fn):
-        out, dt = _timed(name, fn)
-        times = [dt]
-        for i in range(reps - 1):
-            _, dt2 = _timed(f"{name} (rep {i + 2})", fn)
-            times.append(dt2)
-        walls[name] = min(times)
-        if reps > 1:
-            rep_walls[name] = times
-        return out
-
-    only = set(filter(None, os.environ.get(
-        "MIEKKI_STAGE_ONLY", "").split(",")))
-
-    def want(name):
-        return not only or name in only
-
-    docs = timed("normalize",
-                 lambda: normalize(corpus, cfg).localCheckpoint())
-    sigs = timed("signatures",
-                 lambda: signatures_from_text(docs, cfg).localCheckpoint())
-    cand = timed_reps("lsh_star_edges",
-                      lambda: minhash_candidate_edges(sigs, cfg).localCheckpoint())
-    edges_mh = timed_reps("verify_estj",
-                          lambda: verify_edges(cand, sigs, cfg).localCheckpoint())
-    if want("simhash_pass"):
-        edges_sh = timed_reps("simhash_pass",
-                              lambda: simhash_candidate_edges(sigs, cfg).localCheckpoint())
-    else:
-        edges_sh = None
-    if want("substr_pass"):
-        edges_ss = timed_reps("substr_pass",
-                              lambda: substr_candidate_edges(docs, cfg).localCheckpoint())
-    else:
-        edges_ss = None
-    pairs = edges_mh
-    for e in (edges_sh, edges_ss):
-        if e is not None:
-            pairs = pairs.unionByName(e)
-    pairs = pairs.select("src", "dst").dropDuplicates(["src", "dst"])
-    pairs = timed("edge_union", lambda: pairs.localCheckpoint())
-    labels = timed_reps("cc", lambda: cc_labels(
-        pairs, docs.select("doc_id")).localCheckpoint())
-    meta = docs.select("doc_id", "url").join(
-        corpus.select("url", "warc_ts"), "url")
-    timed("canonical", lambda: select_canonical(labels, meta).count())
+    walls, reps, load, steal = {}, {}, {}, {}
+    for name in only:
+        needs, build = stages[name]
+        ins = [ck(n) for n in needs]
+        times = []
+        l0, s0 = _load(), _steal()
+        for rep in range(args.reps):
+            spark.sparkContext.setJobDescription(f"{name} rep{rep + 1}")
+            t0 = time.time()
+            df = build(*ins)
+            if name in COUNTED:
+                df.count()
+            else:
+                df.write.format("noop").mode("overwrite").save()
+            times.append(round(time.time() - t0, 2))
+        # steal% = other tenants on the physical host during the stage
+        steal[name] = round(100 * (_steal() - s0) / os.sysconf("SC_CLK_TCK")
+                            / max(sum(times), 1e-9) / os.cpu_count(), 1)
+        load[name] = [l0, _load()]
+        walls[name], reps[name] = min(times), times
+        print(f"  {name}: {times} (load {l0:.1f}->{load[name][1]:.1f},"
+              f" steal {steal[name]}%)", file=sys.stderr, flush=True)
+        if args.explain:
+            with open(os.path.join(pdir, f"{name}.txt"), "w") as f:
+                f.write(df._jdf.queryExecution().explainString(
+                    mode.fromString("formatted")))
 
     spark.stop()
-    print(json.dumps({"cpus": int(cpus), "mult": mult, "docs": n_docs,
-                      "stages": walls, "stage_reps": rep_walls,
-                      "total": round(sum(walls.values()), 2)}))
+    print(json.dumps({
+        "stages": walls, "reps": reps, "load": load, "steal_pct": steal,
+        "total": round(sum(walls[s] for s in DEDUP_PATH if s in walls), 2),
+        "docs": n_docs, "mult": mult, "cpus": int(cpus), "master": master,
+        "calib_sec": calib}))
 
 
 if __name__ == "__main__":

@@ -13,58 +13,33 @@ ranked by max task wall (the critical-path contribution).
 
 from __future__ import annotations
 
-import json
+import os
 import statistics
 import sys
 from collections import defaultdict
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from contextlib import contextmanager
-
-
-@contextmanager
-def _open_lines(path: str):
-    """Event logs may be zstd-compressed (Spark's rolling event-log
-    default); stream through the zstd CLI when so. The subprocess is
-    waited on and its exit code checked — a truncated/corrupt file
-    raises instead of silently yielding partial output (ADVICE r2)."""
-    if path.endswith(".zstd"):
-        import subprocess
-
-        with subprocess.Popen(["zstd", "-d", "-c", path],
-                              stdout=subprocess.PIPE, text=True) as p:
-            yield p.stdout
-            p.stdout.close()
-            if p.wait() != 0:
-                raise RuntimeError(
-                    f"zstd -d failed on {path} (exit {p.returncode})")
-    else:
-        with open(path) as f:
-            yield f
+from miekki.eventlog import events  # noqa: E402
 
 
 def main(path: str, top: int = 20):
     stage_name: dict[int, str] = {}
     tasks: dict[int, list[float]] = defaultdict(list)
     gc: dict[int, float] = defaultdict(float)
-    with _open_lines(path) as f:
-        for line in f:
-            try:
-                ev = json.loads(line)
-            except json.JSONDecodeError:
-                continue
-            kind = ev.get("Event")
-            if kind == "SparkListenerStageSubmitted":
-                si = ev["Stage Info"]
-                stage_name[si["Stage ID"]] = si["Stage Name"]
-            elif kind == "SparkListenerTaskEnd":
-                ti = ev.get("Task Info") or {}
-                tm = ev.get("Task Metrics") or {}
-                sid = ev.get("Stage ID")
-                dur = (ti.get("Finish Time", 0) - ti.get("Launch Time", 0)) / 1e3
-                if sid is not None and dur > 0:
-                    tasks[sid].append(dur)
-                    gc[sid] += tm.get("JVM GC Time", 0) / 1e3
+    for _, ev in events(path):
+        kind = ev.get("Event")
+        if kind == "SparkListenerStageSubmitted":
+            si = ev["Stage Info"]
+            stage_name[si["Stage ID"]] = si["Stage Name"]
+        elif kind == "SparkListenerTaskEnd":
+            ti = ev.get("Task Info") or {}
+            tm = ev.get("Task Metrics") or {}
+            sid = ev.get("Stage ID")
+            dur = (ti.get("Finish Time", 0) - ti.get("Launch Time", 0)) / 1e3
+            if sid is not None and dur > 0:
+                tasks[sid].append(dur)
+                gc[sid] += tm.get("JVM GC Time", 0) / 1e3
 
     rows = []
     for sid, ds in tasks.items():

@@ -40,14 +40,13 @@ def spark():
                     "spark.driver.memory":
                         os.environ.get("MIEKKI_DRIVER_MEM", "4g"),
                     "spark.eventLog.enabled": "true",
-                    # single uncompressed file so the shuffle meter can
-                    # tail it by byte offset (Spark 4 defaults to a
+                    # single uncompressed file so eventlog.Tail can
+                    # follow it by byte offset (Spark 4 defaults to a
                     # rolling zstd v2 layout)
                     "spark.eventLog.rolling.enabled": "false",
                     "spark.eventLog.compress": "false",
                     "spark.eventLog.dir": evlog},
     )
-    s._miekki_evlog_dir = evlog
     yield s
     s.stop()
     shutil.rmtree(evlog, ignore_errors=True)

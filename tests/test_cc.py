@@ -3,16 +3,14 @@ FIXTURES.md F3 cc_edges cases): path, star, two components,
 self-loops, 64-bit boundary ids, random graphs — plus the fixpoint's
 star-form stop rule, partition sizing and pass shapes."""
 
-import glob
 import io
-import json
-import os
 import re
 from contextlib import redirect_stdout
 
 import numpy as np
 import pytest
 
+from miekki.eventlog import Tail
 from oracle.cc import cc_labels as oracle_cc
 
 pytestmark = pytest.mark.fast
@@ -79,28 +77,11 @@ def test_star_form_input_stops_after_first_pass(spark):
 
 def _stage_tasks(spark, fn) -> list[int]:
     """Runs fn and returns the task count of every stage it completed,
-    read from the session event log (spark.ui is off in tests; stage
-    completions are flush events, so the log is complete once the
-    listener bus drains)."""
-    app = spark.sparkContext.applicationId
-    (path,) = [p for p in glob.glob(os.path.join(spark._miekki_evlog_dir, "*"))
-               if app in os.path.basename(p)]
-    bus = spark.sparkContext._jsc.sc().listenerBus()
-    bus.waitUntilEmpty()
-    start = os.path.getsize(path)
+    read from the session event log (spark.ui is off in tests)."""
+    tail = Tail(spark)
     fn()
-    bus.waitUntilEmpty()
-    tasks = []
-    with open(path, "rb") as f:
-        f.seek(start)
-        for raw in f:
-            try:
-                ev = json.loads(raw)
-            except ValueError:      # a line cut by the start offset
-                continue
-            if ev.get("Event") == "SparkListenerStageCompleted":
-                tasks.append(ev["Stage Info"]["Number of Tasks"])
-    return tasks
+    return [ev["Stage Info"]["Number of Tasks"] for ev in tail.take()
+            if ev.get("Event") == "SparkListenerStageCompleted"]
 
 
 def test_cc_rounds_run_at_session_partitions(spark):

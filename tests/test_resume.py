@@ -93,6 +93,8 @@ def test_metrics_bytes_out_real(spark, corpus_df, tmp_path):
     res = pipeline.run(spark, cat, run_id="m1", n_buckets=4)
     m = cat.read("metrics").toPandas()
     assert set(m.stage) == set(STAGES)
+    # one append per stage, each one file however many rows it holds
+    assert len(cat.data_files("metrics")) == len(STAGES)
     for stage in STAGES:
         part = m[m.stage == stage]
         with open(os.path.join(cat.root, stage, "_MANIFEST.json")) as f:

@@ -3,10 +3,8 @@ same clusters as one batch run over the full corpus; the stream
 wrapper processes micro-batches through a real readStream; windowed
 event counts match a plain groupBy oracle."""
 
-import glob
 import json
 import os
-import time
 import zlib
 
 import pandas as pd
@@ -15,6 +13,7 @@ from pyspark.sql import functions as F
 
 from miekki.catalog import HadoopCatalog
 from miekki.config import DedupConfig
+from miekki.eventlog import Tail
 
 
 def _crc(u: str) -> int:
@@ -132,52 +131,19 @@ def test_three_batches_state_visible_and_compacted(
         assert moved <= 0.01 * len(got), moved
 
 
-class _ShuffleMeter:
-    """Sums stage-level shuffle-read bytes from the session event log
-    between take() calls — the deterministic metrics source for the
-    flat-shuffle assertion (spark.ui stays off in tests). Stage
-    completions are flush events, so after the listener bus drains the
-    log is complete up to the last finished job."""
+_SHUFFLE_READ = ("internal.metrics.shuffle.read.localBytesRead",
+                 "internal.metrics.shuffle.read.remoteBytesRead")
 
-    _NAMES = ("internal.metrics.shuffle.read.localBytesRead",
-              "internal.metrics.shuffle.read.remoteBytesRead")
 
-    def __init__(self, spark):
-        self.spark = spark
-        app = spark.sparkContext.applicationId
-        paths = [p for p in glob.glob(
-            os.path.join(spark._miekki_evlog_dir, "*"))
-            if app in os.path.basename(p)]
-        assert paths, (spark._miekki_evlog_dir, app)
-        self.path = paths[0]
-        self._drain()
-        self.offset = os.path.getsize(self.path)
-
-    def _drain(self):
-        bus = self.spark.sparkContext._jsc.sc().listenerBus()
-        try:
-            bus.waitUntilEmpty()
-        except Exception:
-            time.sleep(1.0)
-
-    def take(self) -> int:
-        self._drain()
-        total = 0
-        with open(self.path, "rb") as f:
-            f.seek(self.offset)
-            for raw in f:
-                if not raw.endswith(b"\n"):
-                    break           # partially flushed tail: next take
-                self.offset += len(raw)
-                try:
-                    ev = json.loads(raw)
-                except ValueError:  # mid-line start after init seek
-                    continue
-                if ev.get("Event") == "SparkListenerStageCompleted":
-                    for acc in ev["Stage Info"].get("Accumulables", []):
-                        if acc.get("Name") in self._NAMES:
-                            total += int(acc.get("Value", 0))
-        return total
+def _shuffle_read(tail) -> int:
+    """Stage-level shuffle-read bytes logged since the last take — the
+    deterministic metrics source for the flat-shuffle assertion
+    (spark.ui stays off in tests)."""
+    return sum(int(acc.get("Value", 0))
+               for ev in tail.take()
+               if ev.get("Event") == "SparkListenerStageCompleted"
+               for acc in ev["Stage Info"].get("Accumulables", [])
+               if acc.get("Name") in _SHUFFLE_READ)
 
 
 def test_stream_cost_bounded_by_batch(spark, tmp_path_factory, monkeypatch):
@@ -209,24 +175,24 @@ def test_stream_cost_bounded_by_batch(spark, tmp_path_factory, monkeypatch):
         return spark.createDataFrame(
             pd.DataFrame(rows, columns=["url", "warc_ts", "text", "lang"]))
 
-    meter = _ShuffleMeter(spark)
+    tail = Tail(spark)
     incremental_dedup_batch(spark, cat, mk("state", 500, 0), cfg, "a0")
-    meter.take()                                  # discard builder cost
+    _shuffle_read(tail)                           # discard builder cost
     incremental_dedup_batch(spark, cat, mk("probe", 50, 0), cfg, "p1")
-    early = meter.take()
+    early = _shuffle_read(tail)
     monkeypatch.setattr(st, "BROADCAST_IDS_MAX", 0)
     incremental_dedup_batch(spark, cat, mk("probef", 50, 0), cfg, "p1f")
-    early_fb = meter.take()
+    early_fb = _shuffle_read(tail)
     monkeypatch.setattr(st, "BROADCAST_IDS_MAX", bc_max)
     for k in range(3):                            # state 600 -> 2100
         incremental_dedup_batch(spark, cat, mk("state", 500, 500 * (k + 1)),
                                 cfg, f"a{k + 1}")
-    meter.take()
+    _shuffle_read(tail)
     incremental_dedup_batch(spark, cat, mk("probe", 50, 50), cfg, "p2")
-    late = meter.take()
+    late = _shuffle_read(tail)
     monkeypatch.setattr(st, "BROADCAST_IDS_MAX", 0)
     incremental_dedup_batch(spark, cat, mk("probef", 50, 50), cfg, "p2f")
-    late_fb = meter.take()
+    late_fb = _shuffle_read(tail)
 
     # (a)+(b) flat shuffle: 4x the state, same probe -> same bytes (2x
     # / +512KB slack for partition-placement noise; the O(history)
@@ -495,28 +461,6 @@ def test_sessionize_stream_converges_to_batch(spark, tmp_path_factory):
                                   check_dtype=False)
 
 
-class _JobMeter(_ShuffleMeter):
-    """Counts SparkListenerJobStart events between take() calls —
-    pins the number of driver job round-trips a micro-batch costs."""
-
-    def take(self) -> int:
-        self._drain()
-        total = 0
-        with open(self.path, "rb") as f:
-            f.seek(self.offset)
-            for raw in f:
-                if not raw.endswith(b"\n"):
-                    break
-                self.offset += len(raw)
-                try:
-                    ev = json.loads(raw)
-                except ValueError:
-                    continue
-                if ev.get("Event") == "SparkListenerJobStart":
-                    total += 1
-        return total
-
-
 def test_warm_batch_job_count_pinned(spark, fixture_corpus,
                                      tmp_path_factory):
     """VERDICT r4 #3: the broadcast-gate counts (new_bands, need) ride
@@ -533,11 +477,12 @@ def test_warm_batch_job_count_pinned(spark, fixture_corpus,
     incremental_dedup_batch(
         spark, cat, spark.createDataFrame(corpus_pdf[part == 0][cols]),
         cfg, run_id="b0")
-    meter = _JobMeter(spark)
+    tail = Tail(spark)
     incremental_dedup_batch(
         spark, cat, spark.createDataFrame(corpus_pdf[part == 1][cols]),
         cfg, run_id="b1")
-    jobs = meter.take()
+    jobs = sum(ev.get("Event") == "SparkListenerJobStart"
+               for ev in tail.take())
     # measured 46 on this batch with the Observation-folded gates; the
     # r5 by-cluster label projection adds its append jobs → measured
     # 48. The two count() jobs of the pre-Observation code would put
