@@ -89,8 +89,6 @@ class DedupConfig:
             raise ValueError("id_bits must be 64 or 128")
 
 
-DEFAULT = DedupConfig()
-
 # Small-fixture config for the exact-substring pass (FIXTURES.md F2):
 # tests use L=40 / w=16 so containment fixtures stay small — config,
 # not code, changes.

@@ -83,15 +83,6 @@ def canonical_url_col(url_col) -> Column:
             .otherwise(canon)
 
 
-def canonicalize_urls(df: DataFrame, url_col: str = "url",
-                      out_col: str = "canon_url") -> DataFrame:
-    """Map-only operator: add the canonical-URL column. At 100 TB this
-    stays inside whole-stage codegen (string/regex built-ins only) and
-    is the natural pre-dedup key normalization: exact-dup grouping on
-    canon_url collapses tracking-param-only variants for free."""
-    return df.withColumn(out_col, canonical_url_col(url_col))
-
-
 def url_dedup(docs: DataFrame, url_col: str = "url",
               len_col: str = "n_chars") -> DataFrame:
     """X46 — URL-level dedup (the step every crawl pipeline runs

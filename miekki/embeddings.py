@@ -10,8 +10,8 @@ ANN components a training-data pipeline needs at corpus scale.
   (+ optional 1-bit multiprobe). The scale path: shuffle-on-bucket,
   never all-pairs; recall measured against brute force in tests.
 - ``embedding_dedup_edges``: cosine >= threshold pairs inside LSH
-  buckets → near-dup edges, same (src<dst, origin, weight) shape the
-  text pipeline uses, so they union straight into the edge table.
+  buckets, paired by the text passes' ``lsh.bucket_pairs`` → near-dup
+  edges in the (src<dst, origin, weight) shape of the edge table.
 
 All math is done in double (float32 parquet values upcast) so results
 are deterministic across partitionings.
@@ -21,6 +21,9 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
+
+from miekki.config import DedupConfig
+from miekki.stages.lsh import bucket_pairs, salt
 
 COS = ("aggregate(zip_with(va, vb, (x, y) -> x * y), 0D, (a, x) -> a + x)"
        " / (norm_a * norm_b)")
@@ -345,26 +348,28 @@ def embedding_dedup_edges(vectors: DataFrame, threshold: float = 0.98,
                           n_planes: int = 12,
                           id_col: str = "vec_id",
                           vec_col: str = "embedding") -> DataFrame:
-    """Embedding-cosine near-dup pass: bucket by sign-LSH, pair each
-    vector with its successors inside the bucket (bounded, same shape
-    as the text passes), keep cosine >= threshold."""
-    v = (_with_norm(_with_assign(vectors.select(id_col, vec_col), vec_col,
-                                 "bucket", _bucket_fn(n_planes)),
-                    vec_col, "vb", "norm_b")
-         .select(F.col(id_col).alias("doc_id"), "vb", "norm_b", "bucket"))
-    w = Window.partitionBy("bucket").orderBy("doc_id")
-    leads = F.array(*[F.lead(F.struct("doc_id", "vb", "norm_b"), i).over(w)
-                      for i in range(1, 9)])
-    pairs = (v.withColumn("leads", leads)
-             .select(F.col("doc_id").alias("src"),
-                     F.col("vb").alias("va"), F.col("norm_b").alias("norm_a"),
-                     F.explode("leads").alias("nxt"))
-             .where(F.col("nxt").isNotNull())
-             .select("src", "va", "norm_a",
-                     F.col("nxt.doc_id").alias("dst"),
-                     F.col("nxt.vb").alias("vb"),
-                     F.col("nxt.norm_b").alias("norm_b")))
-    return (pairs.withColumn("cosine", F.expr(COS))
+    """Embedding-cosine near-dup pass: bucket by sign-LSH, pair inside
+    each bucket with ``lsh.bucket_pairs`` (salted star pairs plus 8
+    successors, like the SimHash pass), keep cosine >= threshold.
+
+    The vectors are joined back to the pairs, as verify_edges does,
+    rather than carried through the pairing windows: on the planted
+    near-dup test corpus (550 x 64-dim) the join-back form measured
+    1.84 s against 2.36 s carried (min of 6, one session, local[8]
+    on 4 cores)."""
+    slim = vectors.select(F.col(id_col).alias("doc_id"), vec_col)
+    keys = (_with_assign(slim, vec_col, "bucket", _bucket_fn(n_planes))
+            .select("doc_id", "bucket", salt(DedupConfig()).alias("salt")))
+    cand = (bucket_pairs(keys, ["bucket"], 8)
+            .where(F.col("src") < F.col("dst"))
+            .dropDuplicates(["src", "dst"]))
+    vec = _with_norm(slim, vec_col, "vb", "norm_b").select(
+        "doc_id", "vb", "norm_b")
+    va = vec.withColumnsRenamed({"doc_id": "src", "vb": "va",
+                                 "norm_b": "norm_a"})
+    return (cand.join(va, "src")
+            .join(vec.withColumnRenamed("doc_id", "dst"), "dst")
+            .withColumn("cosine", F.expr(COS))
             .where(F.col("cosine") >= threshold)
             .select("src", "dst", F.lit("embedding").alias("origin"),
                     F.col("cosine").alias("weight")))

@@ -62,8 +62,8 @@ class LineageLog:
 
 
 def emit_partition_metrics(catalog: Catalog, run_id: str, stage: str,
-                           table: str, wall_ms: int) -> None:
-    """T6: one row per data file of the just-written table
+                           wall_ms: int) -> None:
+    """T6: one row per data file of the stage's just-written table
     (partition_id = the file's ordinal), with the file's exact
     rows_out and bytes_out from catalog.data_files — the table is not
     read back. A stage's rows_in is by construction the upstream
@@ -71,43 +71,51 @@ def emit_partition_metrics(catalog: Catalog, run_id: str, stage: str,
     §1.2)."""
     ts = datetime.now(timezone.utc)
     rows = [(run_id, stage, i, n, b, wall_ms, ts)
-            for i, (n, b) in enumerate(catalog.data_files(table))]
+            for i, (n, b) in enumerate(catalog.data_files(stage))]
     catalog.append(METRICS_TABLE,
                    local_df(catalog.spark, rows, schemas.METRICS))
 
 
 class StageRunner:
     """Idempotent stage wrapper: skip-if-done, write-then-mark,
-    metrics emission; timing captured around the action."""
+    metrics emission; timing captured around the action.
 
-    def __init__(self, catalog: Catalog, run_id: str, config_hash: str):
+    Lineage key (input_snapshot) of a stage: ``source_snapshot`` for
+    the first stage, then the "+"-joined output snapshots of every
+    stage materialized before it — so re-running an upstream stage
+    invalidates all downstream stages."""
+
+    def __init__(self, catalog: Catalog, run_id: str, config_hash: str,
+                 source_snapshot: str):
         self.catalog = catalog
         self.lineage = LineageLog(catalog)
         self.run_id = run_id
         self.config_hash = config_hash
+        self.source_snapshot = source_snapshot
+        self.outputs: list[str] = []
         self.executed: list[str] = []
         self.skipped: list[str] = []
 
-    def materialize(self, stage: str, table: str, build, input_snapshot: str,
+    def materialize(self, stage: str, build,
                     bucket_by: tuple[int, list[str]] | None = None) -> DataFrame:
-        """build: () -> DataFrame. Returns the (possibly pre-existing)
-        table contents."""
-        done = self.lineage.done_snapshots(stage, input_snapshot,
-                                           self.config_hash)
-        if (done and self.catalog.exists(table)
-                and self.catalog.snapshot_id(table) in done):
+        """build: () -> DataFrame, written to the table named ``stage``.
+        Returns the (possibly pre-existing) table contents."""
+        key = "+".join(self.outputs) or self.source_snapshot
+        done = self.lineage.done_snapshots(stage, key, self.config_hash)
+        snap = self.catalog.snapshot_id(stage) if done else None
+        if snap in done:
             self.skipped.append(stage)
-            return self.catalog.read(table)
-        t0 = time.time()
-        self.lineage.mark(self.run_id, stage, input_snapshot,
-                          self.config_hash, "started")
-        self.catalog.overwrite(table, build(), self.run_id,
-                               bucket_by=bucket_by)
-        wall_ms = int((time.time() - t0) * 1000)
-        emit_partition_metrics(self.catalog, self.run_id, stage, table,
-                               wall_ms)
-        self.lineage.mark(self.run_id, stage, input_snapshot,
-                          self.config_hash, "done",
-                          output_snapshot=self.catalog.snapshot_id(table))
-        self.executed.append(stage)
-        return self.catalog.read(table)
+        else:
+            t0 = time.time()
+            self.lineage.mark(self.run_id, stage, key, self.config_hash,
+                              "started")
+            self.catalog.overwrite(stage, build(), self.run_id,
+                                   bucket_by=bucket_by)
+            wall_ms = int((time.time() - t0) * 1000)
+            emit_partition_metrics(self.catalog, self.run_id, stage, wall_ms)
+            snap = self.catalog.snapshot_id(stage)
+            self.lineage.mark(self.run_id, stage, key, self.config_hash,
+                              "done", output_snapshot=snap)
+            self.executed.append(stage)
+        self.outputs.append(snap)
+        return self.catalog.read(stage)

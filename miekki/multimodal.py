@@ -27,8 +27,6 @@ from pyspark.sql import DataFrame, functions as F
 from miekki.kernels import _bin_view
 from miekki.substr_kernels import fmix64, payload_hashes
 
-MEDIA_SCHEMA = ("media_id long, kind string, payload binary,"
-                " meta map<string,string>")
 DECODED_SCHEMA = ("media_id long, kind string, width int, height int,"
                   " n_channels int, n_frames int, ok boolean")
 FEATURE_DIM = 8

@@ -1,7 +1,9 @@
 """End-to-end dedup pipeline (SURVEY.md §3.1).
 
-``dedup_labels`` is the pure dataflow (DataFrame in → DataFrame out,
-no I/O) used by tests and the driver contract; ``run`` adds
+The stage graph is defined once: ``dedup_edges`` (T1 + T2 → T4) and
+``cluster_labels`` (T4 + T1 → T5). ``dedup_labels`` composes them as
+the pure dataflow (DataFrame in → DataFrame out, no I/O) used by tests
+and the driver contract; ``run`` materializes the same functions with
 checkpointing / lineage / metrics via the catalog layer (O21–O23) and
 resumes mid-pipeline: a stage re-executes only when its input
 snapshot or the config hash changed or no 'done' lineage row exists.
@@ -22,14 +24,25 @@ from miekki.stages.verify import verify_edges
 
 def candidate_edges(signatures: DataFrame, cfg: DedupConfig,
                     use_simhash: bool = True) -> DataFrame:
-    """T2 → verified candidate edges (T4): minhash ∪ simhash (O14);
-    the substring pass unions in at dedup_labels via extra_edges."""
+    """T2 → verified candidate edges (T4): minhash ∪ simhash (O14)."""
     cand = minhash_candidate_edges(signatures, cfg)
     edges = verify_edges(cand, signatures, cfg, origin="minhash")
     if use_simhash:
         from miekki.stages.simhash import simhash_candidate_edges
 
         edges = edges.unionByName(simhash_candidate_edges(signatures, cfg))
+    return edges
+
+
+def dedup_edges(docs: DataFrame, sigs: DataFrame, cfg: DedupConfig,
+                use_simhash: bool = True,
+                use_substr: bool = True) -> DataFrame:
+    """T1 + T2 → T4: candidate_edges ∪ the exact-substring pass."""
+    edges = candidate_edges(sigs, cfg, use_simhash=use_simhash)
+    if use_substr:
+        from miekki.stages.substr import substr_candidate_edges
+
+        edges = edges.unionByName(substr_candidate_edges(docs, cfg))
     return edges
 
 
@@ -47,13 +60,21 @@ def _doc_meta(docs, corpus):
             .join(meta_ts, "url"))
 
 
+def cluster_labels(edges: DataFrame, docs: DataFrame,
+                   corpus: DataFrame) -> DataFrame:
+    """T4 + T1 → T5 (doc_id, cluster_id, url, warc_ts, is_canonical):
+    CC over the de-duplicated (src, dst) pairs, then one canonical per
+    cluster."""
+    pairs = edges.select("src", "dst").dropDuplicates(["src", "dst"])
+    labels = cc_labels(pairs, docs.select("doc_id"))
+    return select_canonical(labels, _doc_meta(docs, corpus))
+
+
 def dedup_labels(corpus: DataFrame, cfg: DedupConfig = DedupConfig(),
-                 extra_edges: list[DataFrame] | None = None,
                  use_simhash: bool = True,
                  use_substr: bool = True) -> DataFrame:
     """corpus (url, warc_ts, text, lang[, html]) → labels
     (doc_id, cluster_id, url, warc_ts, is_canonical)."""
-    docs = normalize(corpus, cfg)
     # signatures feed three consumers (banding + both verify joins):
     # materialize once instead of recomputing the Arrow kernel 3x.
     # pipeline.run() checkpoints T2 to the catalog instead (O23).
@@ -65,19 +86,10 @@ def dedup_labels(corpus: DataFrame, cfg: DedupConfig = DedupConfig(),
     # more than the skinny join-side exchanges it saves. On a real
     # cluster the equivalent partition reuse comes free from the
     # bucketed T1/T2 catalog writes in run() (SURVEY.md §4.5).
-    docs = docs.localCheckpoint()
+    docs = normalize(corpus, cfg).localCheckpoint()
     sigs = signatures_from_text(docs, cfg).localCheckpoint()
-    edges = candidate_edges(sigs, cfg, use_simhash=use_simhash)
-    if use_substr:
-        from miekki.stages.substr import substr_candidate_edges
-
-        edges = edges.unionByName(substr_candidate_edges(docs, cfg))
-    for ex in extra_edges or []:
-        edges = edges.unionByName(ex, allowMissingColumns=True)
-    edge_pairs = edges.select("src", "dst").dropDuplicates(["src", "dst"])
-    labels = cc_labels(edge_pairs, docs.select("doc_id"))
-    meta = _doc_meta(docs, corpus)
-    return select_canonical(labels, meta)
+    edges = dedup_edges(docs, sigs, cfg, use_simhash, use_substr)
+    return cluster_labels(edges, docs, corpus)
 
 
 def run(spark, catalog, cfg: DedupConfig = DedupConfig(),
@@ -100,14 +112,15 @@ def run(spark, catalog, cfg: DedupConfig = DedupConfig(),
                        across rounds)
 
     Resume: stage skipped iff a 'done' lineage row matches
-    (stage, input_snapshot, config_hash) AND the output table exists;
-    snapshots chain, so re-running an upstream stage invalidates all
-    downstream stages automatically.
+    (stage, input_snapshot, config_hash) AND the output table still
+    holds that row's snapshot; StageRunner keys each stage by the
+    output snapshots of the stages before it, so re-running an
+    upstream stage invalidates all downstream stages automatically.
     """
     from miekki.lineage import StageRunner
 
-    runner = StageRunner(catalog, run_id, cfg.config_hash())
-    corpus_snap = catalog.snapshot_id(corpus_table) or "none"
+    runner = StageRunner(catalog, run_id, cfg.config_hash(),
+                         catalog.snapshot_id(corpus_table) or "none")
     corpus = catalog.read(corpus_table)
 
     if check_invariant:
@@ -120,45 +133,20 @@ def run(spark, catalog, cfg: DedupConfig = DedupConfig(),
                 f"extract invariant violated on {bad} rows (BASELINE input_hint)")
         assert_nfc_sample(corpus)
 
-    docs = runner.materialize(
-        "docs_norm", "docs_norm",
-        lambda: normalize(corpus, cfg)
-        .select("doc_id", "url", "lang", "norm_text"),
-        corpus_snap)
-
+    docs = runner.materialize("docs_norm", lambda: normalize(corpus, cfg))
     # T2 bucketed by doc_id: both verify joins (src- and dst-side)
     # then read the signatures shuffle-free (SURVEY.md §4.5); at
     # 10^12 docs n_buckets is sized so one bucket ~ one executor core
     # worth of signatures (physical knob, not part of config_hash).
-    docs_snap = catalog.snapshot_id("docs_norm")
     sigs = runner.materialize(
-        "signatures", "signatures",
-        lambda: signatures_from_text(
-            docs.select("doc_id", "norm_text"), cfg),
-        docs_snap, bucket_by=(n_buckets, ["doc_id"]))
-
-    def build_edges():
-        e = candidate_edges(sigs, cfg, use_simhash=use_simhash)
-        if use_substr:
-            from miekki.stages.substr import substr_candidate_edges
-
-            e = e.unionByName(substr_candidate_edges(
-                docs.select("doc_id", "norm_text"), cfg))
-        return e
-
-    edges_snap = f"{docs_snap}+{catalog.snapshot_id('signatures')}"
-    edges = runner.materialize("candidate_edges", "candidate_edges",
-                               build_edges, edges_snap,
-                               bucket_by=(n_buckets, ["src"]))
-
-    def build_labels():
-        pairs = edges.select("src", "dst").dropDuplicates(["src", "dst"])
-        labels = cc_labels(pairs, docs.select("doc_id"))
-        return select_canonical(labels, _doc_meta(docs, corpus))
-
-    labels_snap = f"{edges_snap}+{catalog.snapshot_id('candidate_edges')}"
-    labels = runner.materialize("cluster_labels", "cluster_labels",
-                                build_labels, labels_snap)
+        "signatures", lambda: signatures_from_text(docs, cfg),
+        bucket_by=(n_buckets, ["doc_id"]))
+    edges = runner.materialize(
+        "candidate_edges",
+        lambda: dedup_edges(docs, sigs, cfg, use_simhash, use_substr),
+        bucket_by=(n_buckets, ["src"]))
+    labels = runner.materialize(
+        "cluster_labels", lambda: cluster_labels(edges, docs, corpus))
 
     out = {
         "labels": labels,
@@ -170,8 +158,5 @@ def run(spark, catalog, cfg: DedupConfig = DedupConfig(),
         from miekki.tiers import pipeline_doc_tiers
 
         out["tiers"] = runner.materialize(
-            "doc_tiers", "doc_tiers",
-            lambda: pipeline_doc_tiers(
-                docs.select("doc_id", "norm_text"), edges),
-            f"{edges_snap}+{catalog.snapshot_id('candidate_edges')}")
+            "doc_tiers", lambda: pipeline_doc_tiers(docs, edges))
     return out

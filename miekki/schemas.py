@@ -1,6 +1,9 @@
-"""Pinned table schemas (SURVEY.md §1.2) — nothing is inferred at
-runtime; schema inference is nondeterministic across partitionings
-and is banned."""
+"""Pinned schemas of the tables read or written from Python rows
+(SURVEY.md §1.2): the streamed T0 corpus and the T6 metrics / T7
+lineage rows — these are never inferred, since schema inference is
+nondeterministic across partitionings. T1–T5 take the schema of the
+stage that writes them (doc_id is bigint at id_bits=64, binary(16) at
+id_bits=128)."""
 
 from __future__ import annotations
 
@@ -13,52 +16,6 @@ CORPUS = T.StructType([
     T.StructField("html", T.BinaryType(), False),
     T.StructField("text", T.StringType(), False),
     T.StructField("lang", T.StringType(), False),
-])
-
-# T1 — normalized docs (n_shingles moved to T2 in r2: the fused
-# signature kernel computes it for free; keeping it here forced an
-# interpreted shingling pass just to materialize a count)
-DOCS_NORM = T.StructType([
-    T.StructField("doc_id", T.LongType(), False),
-    T.StructField("url", T.StringType(), False),
-    T.StructField("lang", T.StringType(), False),
-    T.StructField("norm_text", T.StringType(), False),
-])
-
-# T2 — signatures (from the fused kernel; n_shingles rides along)
-SIGNATURES = T.StructType([
-    T.StructField("doc_id", T.LongType(), False),
-    T.StructField("minhash", T.ArrayType(T.LongType(), False), False),
-    T.StructField("simhash", T.LongType(), False),
-    T.StructField("n_shingles", T.IntegerType(), False),
-])
-
-# T3 — LSH bands (transient)
-BANDS = T.StructType([
-    T.StructField("doc_id", T.LongType(), False),
-    T.StructField("band_id", T.IntegerType(), False),
-    T.StructField("band_hash", T.LongType(), False),
-    T.StructField("salt", T.IntegerType(), False),
-])
-
-# T4 — candidate edges. `weight` semantics per origin: minhash =
-# estimated Jaccard (in [tau, 1]); simhash = 1 - hamming/bits; substr =
-# verified common-run bytes, SATURATING at 2*substr_len + anchor_k
-# (verification ships clipped windows — the >= substr_len accept
-# decision is exact, but run lengths above the cap are reported as
-# the cap; see stages/substr.py docstring / ADVICE r2).
-CANDIDATE_EDGES = T.StructType([
-    T.StructField("src", T.LongType(), False),
-    T.StructField("dst", T.LongType(), False),
-    T.StructField("origin", T.StringType(), False),
-    T.StructField("weight", T.DoubleType(), True),
-])
-
-# T5 — cluster labels
-CLUSTER_LABELS = T.StructType([
-    T.StructField("doc_id", T.LongType(), False),
-    T.StructField("cluster_id", T.LongType(), False),
-    T.StructField("is_canonical", T.BooleanType(), False),
 ])
 
 # T6 — per-partition metrics rows
@@ -87,14 +44,3 @@ LINEAGE = T.StructType([
     T.StructField("ts", T.TimestampType(), False),
 ])
 
-# Ground truth (FIXTURES.md F2)
-TRUTH_PAIRS = T.StructType([
-    T.StructField("src", T.LongType(), False),
-    T.StructField("dst", T.LongType(), False),
-    T.StructField("kind", T.StringType(), False),
-    T.StructField("jaccard", T.DoubleType(), False),
-])
-TRUTH_CLUSTERS = T.StructType([
-    T.StructField("doc_id", T.LongType(), False),
-    T.StructField("family_id", T.LongType(), False),
-])

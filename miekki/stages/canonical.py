@@ -25,11 +25,3 @@ def cluster_stats(labels: DataFrame, top_k: int = 20) -> DataFrame:
             .orderBy(F.desc("n_docs"), "cluster_id")
             .limit(top_k))
 
-
-def dedup_summary(labels: DataFrame) -> DataFrame:
-    """One-row summary: docs, clusters, dup ratio."""
-    return labels.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.countDistinct("cluster_id").alias("n_clusters"),
-        (1.0 - F.countDistinct("cluster_id") / F.count(F.lit(1))).alias("dup_ratio"),
-    )

@@ -101,8 +101,8 @@ def bucket_pairs(df: DataFrame, keys: list[str], succ: int = 0,
     verification against the minimum (chains alone are path graphs,
     O(log n) CC rounds).
 
-    lead()/first() over one sorted window per level (r2): ONE shuffle
-    and one per-partition sort, zero joins, zero boxing. The r1 form
+    lead()/first() over one sorted window per level (r2): zero joins,
+    zero boxing. The r1 form
     collect_list-ed every group: 12M mostly-singleton ArrayBuffers of
     boxed Longs per band table — GC churn that held every
     bucket-pairing stage to a 1.0-1.9x speedup from 4->16 cores.
@@ -113,9 +113,17 @@ def bucket_pairs(df: DataFrame, keys: list[str], succ: int = 0,
     time, so the salt caps its memory at <= ceil(bucket/S) rows at
     level 1 and <= S at level 2. The level-2 input comes from the SAME
     windowed branch (r3): rows that ARE their group's first, so
-    ReusedExchange serves every consumer from one shuffle write (a
-    separate groupBy shuffled the full table a second time). Nothing
-    is persisted: the windowed table is O(rows) at corpus scale.
+    ReusedExchange serves every consumer from one shuffle write per
+    level (a separate groupBy shuffled the full table a second time).
+    The sort is NOT shared: every consumer branch of a level (chain
+    pairs, star pairs, and the level-2 input once per level-2 branch)
+    re-sorts and re-windows the reused shuffle. The pinned plans show
+    Sort = 3 / 5 / 7 for the MinHash / SimHash / substring passes
+    (tests/test_plans.py, the substring count including its (src, dst)
+    cap), and plans/r09/substr_pairs.txt evaluates the level-1
+    (fp, salt) window in four branches (nodes 5, 15, 22, 36). One
+    consumer per level would cut those Sorts; unmeasured. Nothing is
+    persisted: the windowed table is O(rows) at corpus scale.
 
     Recall caveat (ADVICE r1): stars preserve connectivity of the
     UNVERIFIED candidate graph exactly, but verification then compares

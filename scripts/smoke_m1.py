@@ -19,7 +19,7 @@ import pandas as pd
 from miekki.config import DedupConfig
 from miekki.fixtures import make_corpus
 from miekki.session import build_spark
-from miekki.pipeline import dedup_labels, candidate_edges
+from miekki.pipeline import cluster_labels, dedup_edges
 from miekki.stages.normalize import normalize
 from miekki.stages.signatures import signatures_from_text
 from oracle import sketches
@@ -36,8 +36,8 @@ spark = build_spark(master="local[8]", app_name="smoke_m1")
 corpus = spark.createDataFrame(corpus_pdf[["url", "warc_ts", "text", "lang"]])
 
 # --- kernel parity on a sample -------------------------------------
-dn = normalize(corpus, cfg)
-sigs = signatures_from_text(dn, cfg)
+dn = normalize(corpus, cfg).localCheckpoint()
+sigs = signatures_from_text(dn, cfg).localCheckpoint()
 sample = (dn.select("doc_id", "url").limit(20)
           .join(sigs, "doc_id").collect())
 bad = 0
@@ -56,21 +56,14 @@ print(f"shingle-count/minhash/simhash parity on {len(sample)} docs:"
       f" {'OK' if not bad else 'FAIL'}")
 
 # --- end-to-end ------------------------------------------------------
+# labels and the oracle's input come from ONE checkpointed edge set
+# (minhash ∪ simhash ∪ substr), so CC parity compares like with like
 t1 = time.time()
-labels = dedup_labels(corpus, cfg).cache()
-lab_pdf = labels.toPandas()
-print(f"pipeline: {len(lab_pdf)} labels, {lab_pdf.cluster_id.nunique()} clusters "
-      f"({time.time()-t1:.1f}s)")
-
-# oracle CC over the SAME verified edge set dedup_labels uses
-# (minhash ∪ simhash ∪ substr — the substr union was missing here,
-# which mis-read every substr-only merge as a label mismatch)
-from miekki.stages.substr import substr_candidate_edges
-
-edges_pdf = (candidate_edges(sigs, cfg).select("src", "dst")
-             .unionByName(substr_candidate_edges(
-                 dn.localCheckpoint(), cfg).select("src", "dst"))
-             .toPandas())
+edges = dedup_edges(dn, sigs, cfg).localCheckpoint()
+lab_pdf = cluster_labels(edges, dn, corpus).toPandas()
+print(f"edges + labels: {len(lab_pdf)} labels, {lab_pdf.cluster_id.nunique()}"
+      f" clusters ({time.time()-t1:.1f}s)")
+edges_pdf = edges.select("src", "dst").toPandas()
 all_ids = [spark_xxhash64(u) for u in corpus_pdf.url]
 olab = oracle_cc(list(edges_pdf.itertuples(index=False, name=None)), all_ids)
 mism = sum(1 for _, r in lab_pdf.iterrows() if olab[r.doc_id] != r.cluster_id)

@@ -103,17 +103,16 @@ def truth_components(fixture_corpus):
 @pytest.fixture(scope="session")
 def pipeline_result(spark, corpus_df):
     """Run the full pipeline ONCE per test session; reused by the
-    e2e/recall/golden tests. Returns (labels_pdf, edges_pdf)."""
+    e2e/recall/golden tests. Returns (labels_pdf, edges_pdf): labels
+    are cluster_labels over exactly the edge set returned."""
     from miekki.config import DedupConfig
-    from miekki.pipeline import candidate_edges, dedup_labels
+    from miekki.pipeline import cluster_labels, dedup_edges
     from miekki.stages.normalize import normalize
     from miekki.stages.signatures import signatures_from_text
-    from miekki.stages.substr import substr_candidate_edges
 
     cfg = DedupConfig()
-    labels_pdf = dedup_labels(corpus_df, cfg).toPandas()
     docs = normalize(corpus_df, cfg).localCheckpoint()
     sigs = signatures_from_text(docs, cfg).localCheckpoint()
-    edges = candidate_edges(sigs, cfg).unionByName(
-        substr_candidate_edges(docs, cfg))
-    return labels_pdf, edges.toPandas()
+    edges = dedup_edges(docs, sigs, cfg).localCheckpoint()
+    labels = cluster_labels(edges, docs, corpus_df)
+    return labels.toPandas(), edges.toPandas()

@@ -99,6 +99,33 @@ def test_determinism_across_partitionings(spark, corpus_df, pipeline_result):
     pd.testing.assert_frame_equal(a, b)
 
 
+def test_run_labels_equal_dedup_labels(spark, corpus_df, tmp_path):
+    """The durable run() and the in-memory dedup_labels compose the
+    same stage graph, so they give the same T5; run()'s lineage keys
+    chain the upstream output snapshots (the form catalogs written
+    before StageRunner derived the keys resume from)."""
+    from miekki.catalog import HadoopCatalog
+    from miekki.pipeline import dedup_labels, run
+
+    cat = HadoopCatalog(spark, str(tmp_path / "cat"))
+    cat.overwrite("corpus", corpus_df, run_id="ingest")
+    res = run(spark, cat, run_id="t", n_buckets=4)
+    cols = ["doc_id", "cluster_id", "url", "warc_ts", "is_canonical"]
+    a, b = (df.select(*cols).toPandas().sort_values("doc_id")
+            .reset_index(drop=True)
+            for df in (res["labels"], dedup_labels(corpus_df)))
+    pd.testing.assert_frame_equal(a, b)
+
+    snaps = [cat.snapshot_id(t) for t in ("corpus", "docs_norm",
+                                          "signatures", "candidate_edges")]
+    lin = cat.read("lineage").where("status = 'done'").toPandas()
+    keys = dict(zip(lin.stage, lin.input_snapshot))
+    assert keys == {"docs_norm": snaps[0],
+                    "signatures": snaps[1],
+                    "candidate_edges": "+".join(snaps[1:3]),
+                    "cluster_labels": "+".join(snaps[1:4])}
+
+
 def test_golden_labels(pipeline_result):
     """Freeze end-to-end semantics: any drift fails loudly
     (FIXTURES.md F3). Regenerate via scripts/gen_golden.py ONLY on an

@@ -83,11 +83,26 @@ def test_signature_stage_prunes_columns(spark, corpus_df, tmp_path):
         assert "html" not in s, s
 
 
+# Spark jobs dedup_labels runs while building its result on the
+# fixture corpus: the two checkpoints, the CC rounds and the AQE query
+# stages they cover. A stage-graph change that adds a materialization
+# changes it.
+DEDUP_LABELS_JOBS = 25
+
+
 def test_recall_truth_join_broadcasts(spark, corpus_df, fixture_corpus):
     from miekki.pipeline import dedup_labels
 
     _, truth_pairs, _ = fixture_corpus
-    labels = dedup_labels(corpus_df, CFG).select("doc_id", "cluster_id")
+    sc = spark.sparkContext
+    sc.setJobGroup("dedup_labels_jobs", "dedup_labels")
+    try:
+        labels = dedup_labels(corpus_df, CFG).select("doc_id", "cluster_id")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("dedup_labels_jobs")
+    assert len(jobs) == DEDUP_LABELS_JOBS, sorted(jobs)
     tp = spark.createDataFrame(truth_pairs)
     j = F.broadcast(tp).join(
         labels.withColumnRenamed("doc_id", "src"), "src")
