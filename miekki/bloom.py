@@ -103,9 +103,8 @@ def bloom_probe(df: DataFrame, bloom: DataFrame, col: str,
                 key_cols: Sequence[str] = ("doc_id",),
                 m_bits: int = BLOOM_M_DEFAULT,
                 k: int = BLOOM_K_DEFAULT,
-                hash_fn: str = "xxhash64",
-                out_col: str = "maybe_in_ref") -> DataFrame:
-    """One row per distinct key: out_col = all k bits of `col`'s
+                hash_fn: str = "xxhash64") -> DataFrame:
+    """One row per distinct key: maybe_in_ref = all k bits of `col`'s
     positions are set (never-false-negative membership). Callers
     keep key_cols unique per probe value (the groupBy folds rows
     sharing a key)."""
@@ -117,18 +116,17 @@ def bloom_probe(df: DataFrame, bloom: DataFrame, col: str,
         F.col("bits").bitwiseAND(F.col("mask")) != 0, F.lit(False))
     return (probes.join(bloom, "word_idx", "left")
             .groupBy(*key_cols)
-            .agg(F.bool_and(hit).alias(out_col)))
+            .agg(F.bool_and(hit).alias("maybe_in_ref")))
 
 
-def paragraphs(df: DataFrame, text_col: str = "text",
-               key_col: str = "doc_id") -> DataFrame:
-    """(key, para_idx, para): split on the literal blank line
-    ('\\n\\n'), space-trim each piece, drop empties. para_idx is the
+def paragraphs(df: DataFrame) -> DataFrame:
+    """(doc_id, para_idx, para) of ``text``: split on the literal blank
+    line ('\\n\\n'), space-trim each piece, drop empties. para_idx is the
     position in the ORIGINAL split (stable under filtering — a doc's
     3rd paragraph keeps idx 2 even if the 2nd was whitespace). The
     Dolma-style dedup unit; map-only."""
-    parts = F.split(F.col(text_col), r"\n\n", -1)
-    return (df.select(key_col,
+    parts = F.split(F.col("text"), r"\n\n", -1)
+    return (df.select("doc_id",
                       F.posexplode(parts).alias("para_idx", "para"))
             .withColumn("para", F.trim("para"))
             .where(F.length("para") > 0))
@@ -178,15 +176,14 @@ def bloom_decontam(docs_norm: DataFrame, n: int = 5,
 
 def bloom_decontam_duck_sql(norm_cte: str, n: int = 5,
                             m_bits: int = BLOOM_M_DEFAULT,
-                            k: int = BLOOM_K_DEFAULT,
-                            bench_mod: int = 97) -> str:
+                            k: int = BLOOM_K_DEFAULT) -> str:
     """DuckDB twin of bloom_decontam(hash_fn='md5'): identical grams
     (the X17 twin's list-comprehension construction), identical bit
     positions (hex-identical md5-60bit), identical word/mask/bit_or
     filter, identical probe verdicts — a full value twin of an
     APPROXIMATE structure, false positives included bit-for-bit."""
     kk = n - 1
-    bench = f"((doc_id % {bench_mod}) + {bench_mod}) % {bench_mod} = 0"
+    bench = "((doc_id % 97) + 97) % 97 = 0"
     hpos = ("CAST(('0x' || substr(md5(j::VARCHAR || '|' || gram),"
             f" 1, 15)) AS BIGINT) % {m_bits}")
     return f"""

@@ -44,20 +44,20 @@ STRIDE_DEFAULT = 1792          # 256-char overlap
 
 
 def chunk_passages(docs: DataFrame, chunk_len: int = CHUNK_LEN_DEFAULT,
-                   stride: int = STRIDE_DEFAULT,
-                   text_col: str = "norm") -> DataFrame:
-    """(doc_id, chunk_idx, chunk, n_chars) — see module doc for the
-    pinned spec. Map-only; one output row per chunk."""
+                   stride: int = STRIDE_DEFAULT) -> DataFrame:
+    """(doc_id, chunk_idx, chunk, n_chars) of the ``norm`` column — see
+    module doc for the pinned spec. Map-only; one output row per
+    chunk."""
     if not (0 < stride <= chunk_len):
         raise ValueError(f"need 0 < stride <= chunk_len,"
                          f" got {stride} > {chunk_len}")
-    ln = F.length(F.coalesce(F.col(text_col), F.lit("")))
+    ln = F.length(F.coalesce(F.col("norm"), F.lit("")))
     n_chunks = F.when(ln <= chunk_len, F.lit(1)).otherwise(
-        F.expr(f"(length(coalesce({text_col}, '')) - {chunk_len}"
+        F.expr(f"(length(coalesce(norm, '')) - {chunk_len}"
                f" + {stride} - 1) div {stride}") + 1)
     chunks = F.transform(
         F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.substring(F.coalesce(F.col(text_col), F.lit("")),
+        lambda i: F.substring(F.coalesce(F.col("norm"), F.lit("")),
                               i * stride + 1, chunk_len))
     return (docs
             .select("doc_id", F.posexplode(chunks)
@@ -66,11 +66,10 @@ def chunk_passages(docs: DataFrame, chunk_len: int = CHUNK_LEN_DEFAULT,
 
 
 def chunk_duck_sql(docs_cte: str, chunk_len: int = CHUNK_LEN_DEFAULT,
-                   stride: int = STRIDE_DEFAULT,
-                   text_col: str = "norm") -> str:
+                   stride: int = STRIDE_DEFAULT) -> str:
     """DuckDB twin recomputing identical rows (same integer n_chunks
     arithmetic, same 1-based substr windows, same empty-doc pin)."""
-    t = f"coalesce({text_col}, '')"
+    t = "coalesce(norm, '')"
     n = (f"CASE WHEN length({t}) <= {chunk_len} THEN 1"
          f" ELSE (length({t}) - {chunk_len} + {stride} - 1)"
          f" // {stride} + 1 END")
@@ -88,10 +87,9 @@ FROM sized
 
 
 def chunk_tokens(docs: DataFrame, chunk_len: int = 256,
-                 stride: int = 224,
-                 tokens_col: str = "tokens") -> DataFrame:
+                 stride: int = 224) -> DataFrame:
     """Token-space passage chunking (VERDICT r4 next-step #4): the
-    char spec transposed onto a pre-tokenized array column (X30's
+    char spec transposed onto the pre-tokenized ``tokens`` column (X30's
     tokenizer upstream, or any BPE id array as array<string>):
 
       (doc_id, chunk_idx, chunk: array<...>, n_tok)
@@ -108,7 +106,7 @@ def chunk_tokens(docs: DataFrame, chunk_len: int = 256,
     if not (0 < stride <= chunk_len):
         raise ValueError(f"need 0 < stride <= chunk_len,"
                          f" got {stride} > {chunk_len}")
-    toks = F.coalesce(F.col(tokens_col), F.array().cast("array<string>"))
+    toks = F.coalesce(F.col("tokens"), F.array().cast("array<string>"))
     n = F.size(toks)
     n_chunks = F.when(n <= chunk_len, F.lit(1)).otherwise(
         F.floor((n - chunk_len + stride - 1) / stride).cast("int") + 1)

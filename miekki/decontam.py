@@ -83,8 +83,7 @@ def canonical_url_col(url_col) -> Column:
             .otherwise(canon)
 
 
-def url_dedup(docs: DataFrame, url_col: str = "url",
-              len_col: str = "n_chars") -> DataFrame:
+def url_dedup(docs: DataFrame, len_col: str = "n_chars") -> DataFrame:
     """X46 — URL-level dedup (the step every crawl pipeline runs
     BEFORE content dedup: C4/CCNet/RefinedWeb all collapse re-crawls
     of one page first): group captures by canonical URL, keep the
@@ -101,7 +100,7 @@ def url_dedup(docs: DataFrame, url_col: str = "url",
     Output: (doc_id, canon_url, n_dups, kept)."""
     lc = F.col(len_col)
     base = docs.select("doc_id",
-                       canonical_url_col(url_col).alias("canon_url"),
+                       canonical_url_col("url").alias("canon_url"),
                        lc.cast("long").alias("__len"))
     stats = base.groupBy("canon_url").agg(
         F.count(F.lit(1)).alias("n_dups"),
@@ -113,18 +112,17 @@ def url_dedup(docs: DataFrame, url_col: str = "url",
                     .alias("kept")))
 
 
-def url_dedup_duck_sql(src: str, url_expr: str = "url",
-                       len_expr: str = "n_chars") -> str:
-    """DuckDB twin of url_dedup: window-function formulation
-    (independent decomposition — rank over captures instead of the
-    groupBy+join max-struct)."""
-    return (f"SELECT doc_id, canon_url,"
-            f" CAST(count(*) OVER (PARTITION BY canon_url) AS BIGINT)"
-            f" AS n_dups,"
-            f" row_number() OVER (PARTITION BY canon_url"
-            f"   ORDER BY {len_expr} DESC, doc_id DESC) = 1 AS kept"
-            f" FROM (SELECT doc_id, {len_expr},"
-            f" {canonical_url_duck(url_expr)} AS canon_url FROM {src})")
+def url_dedup_duck_sql(src: str) -> str:
+    """DuckDB twin of url_dedup over (doc_id, url, n_chars):
+    window-function formulation (independent decomposition — rank
+    over captures instead of the groupBy+join max-struct)."""
+    return ("SELECT doc_id, canon_url,"
+            " CAST(count(*) OVER (PARTITION BY canon_url) AS BIGINT)"
+            " AS n_dups,"
+            " row_number() OVER (PARTITION BY canon_url"
+            "   ORDER BY n_chars DESC, doc_id DESC) = 1 AS kept"
+            " FROM (SELECT doc_id, n_chars,"
+            f" {canonical_url_duck('url')} AS canon_url FROM {src})")
 
 
 def canonical_url_duck(expr: str) -> str:
@@ -254,14 +252,12 @@ def decontaminate(docs_norm: DataFrame, n: int = 13,
             .withColumn("contaminated", F.col("n_hit_grams") > 0))
 
 
-def decontaminate_duck_sql(norm_cte: str, n: int = 13,
-                           bench_mod: int = 97) -> str:
+def decontaminate_duck_sql(norm_cte: str, n: int = 13) -> str:
     """DuckDB twin of ``decontaminate(hash_grams=False)`` over the
     normalized-docs CTE (doc_id, norm)."""
     k = n - 1
     grams = (
-        f"SELECT doc_id, ((doc_id % {bench_mod}) + {bench_mod})"
-        f" % {bench_mod} = 0 AS bench,"
+        "SELECT doc_id, ((doc_id % 97) + 97) % 97 = 0 AS bench,"
         " unnest(list_distinct(list_transform("
         f" generate_series(1, greatest(1,"
         f" length(str_split(norm, ' ')) - {k})),"
@@ -279,6 +275,5 @@ def decontaminate_duck_sql(norm_cte: str, n: int = 13,
         " SELECT d.doc_id, coalesce(h.n, 0) AS n_hit_grams,"
         " coalesce(h.n, 0) > 0 AS contaminated"
         f" FROM (SELECT doc_id FROM ({norm_cte})"
-        f"  WHERE ((doc_id % {bench_mod}) + {bench_mod})"
-        f" % {bench_mod} <> 0) d"
+        "  WHERE ((doc_id % 97) + 97) % 97 <> 0) d"
         " LEFT JOIN hits h USING (doc_id)")

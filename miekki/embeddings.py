@@ -6,9 +6,10 @@ ANN components a training-data pipeline needs at corpus scale.
   zip_with/aggregate dot products, rank with one window. The
   correctness baseline.
 - ``lsh_topk``: random-hyperplane (sign) LSH — vectors hash to
-  2^n_planes sign buckets; top-k searched within the query's bucket
-  (+ optional 1-bit multiprobe). The scale path: shuffle-on-bucket,
-  never all-pairs; recall measured against brute force in tests.
+  2^8 sign buckets; top-k searched within the query's bucket and
+  every bucket up to 2 bits away (multiprobe). The scale path:
+  shuffle-on-bucket, never all-pairs; recall measured against brute
+  force in tests.
 - ``embedding_dedup_edges``: cosine >= threshold pairs inside LSH
   buckets, paired by the text passes' ``lsh.bucket_pairs`` → near-dup
   edges in the (src<dst, origin, weight) shape of the edge table.
@@ -49,23 +50,24 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
                     F.round("cosine", 6).alias("cosine")))
 
 
-def brute_force_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
-                     id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """(query_id, neighbor_id, rank, cosine) — exact top-k by cosine,
-    self-match excluded; ties broken by neighbor id."""
-    cand = _with_norm(vectors, vec_col, "vb", "norm_b") \
-        .select(F.col(id_col).alias("neighbor_id"), "vb", "norm_b")
-    q = _with_norm(queries, vec_col, "va", "norm_a") \
-        .select(F.col(id_col).alias("query_id"), "va", "norm_a")
+def brute_force_topk(vectors: DataFrame, queries: DataFrame,
+                     k: int = 5) -> DataFrame:
+    """(query_id, neighbor_id, rank, cosine) — exact top-k by cosine
+    of (vec_id, embedding) rows, self-match excluded; ties broken by
+    neighbor id."""
+    cand = _with_norm(vectors, "embedding", "vb", "norm_b") \
+        .select(F.col("vec_id").alias("neighbor_id"), "vb", "norm_b")
+    q = _with_norm(queries, "embedding", "va", "norm_a") \
+        .select(F.col("vec_id").alias("query_id"), "va", "norm_a")
     scored = (cand.join(F.broadcast(q))
               .where(F.col("query_id") != F.col("neighbor_id"))
               .withColumn("cosine", F.expr(COS)))
     return _rank_topk(scored, k)
 
 
-def hyperplanes(dim: int, n_planes: int = 12, seed: int = 42) -> np.ndarray:
+def hyperplanes(dim: int, n_planes: int = 12) -> np.ndarray:
     """Deterministic random hyperplanes (part of the pinned config)."""
-    rng = np.random.Generator(np.random.PCG64(seed))
+    rng = np.random.Generator(np.random.PCG64(42))
     return rng.standard_normal((n_planes, dim))
 
 
@@ -167,12 +169,12 @@ def _with_assign(df: DataFrame, vec_col: str, out_col: str, make_fn,
     return df.mapInArrow(mapper, out_schema)
 
 
-def _bucket_fn(n_planes: int, seed: int = 42):
+def _bucket_fn(n_planes: int):
     """Sign-bucket ids, bit j = (v . h_j) > 0, as ONE numpy matmul per
     Arrow batch — (batch, dim) @ (dim, planes) is the scale shape at
     dim 768–4096. The plane matrix is derived lazily from the first
-    batch's dim (deterministic per (seed, dim), identical on every
-    worker) — no `.first()` driver action to learn the dimension."""
+    batch's dim (deterministic per dim, identical on every worker) —
+    no `.first()` driver action to learn the dimension."""
     weights = (1 << np.arange(n_planes, dtype=np.int64))
     plane_cache: dict[int, np.ndarray] = {}
 
@@ -181,45 +183,41 @@ def _bucket_fn(n_planes: int, seed: int = 42):
             return np.empty(0, dtype=np.int32)
         dim = m.shape[1]
         if dim not in plane_cache:
-            plane_cache[dim] = hyperplanes(dim, n_planes, seed).T
+            plane_cache[dim] = hyperplanes(dim, n_planes).T
         return (((m @ plane_cache[dim]) > 0) @ weights).astype(np.int32)
 
     return fn
 
 
-def _probe_masks(n_planes: int, bits: int) -> list[int]:
-    """XOR masks for every bucket within Hamming<=bits of the query's
+def _probe_masks(n_planes: int) -> list[int]:
+    """XOR masks for every bucket within Hamming<=2 of the query's
     bucket (0-, 1-, and 2-bit flips)."""
-    masks = [0]
-    if bits >= 1:
-        masks += [1 << j for j in range(n_planes)]
-    if bits >= 2:
-        masks += [(1 << i) | (1 << j)
-                  for i in range(n_planes) for j in range(i + 1, n_planes)]
-    return masks
+    return ([0] + [1 << j for j in range(n_planes)]
+            + [(1 << i) | (1 << j)
+               for i in range(n_planes) for j in range(i + 1, n_planes)])
 
 
-def lsh_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
-             n_planes: int = 8,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             multiprobe_bits: int = 2) -> DataFrame:
-    """Approximate top-k: candidates share the query's sign bucket or
-    any bucket within Hamming<=multiprobe_bits of it — the classic
-    multiprobe trick that recovers most of the recall a single bucket
-    loses while still scanning a small corpus fraction. Defaults
-    (8 planes, 2-bit probes) scan ~14% of buckets; clustered
-    real-world embeddings do far better than the uniform-sphere
-    worst case."""
-    cand = (_with_norm(_with_assign(vectors.select(id_col, vec_col),
-                                    vec_col, "bucket", _bucket_fn(n_planes)),
-                       vec_col, "vb", "norm_b")
-            .select(F.col(id_col).alias("neighbor_id"), "vb", "norm_b", "bucket"))
-    q = (_with_norm(_with_assign(queries.select(id_col, vec_col),
-                                 vec_col, "bucket0", _bucket_fn(n_planes)),
-                    vec_col, "va", "norm_a")
-         .select(F.col(id_col).alias("query_id"), "va", "norm_a", "bucket0"))
+def lsh_topk(vectors: DataFrame, queries: DataFrame,
+             k: int = 5) -> DataFrame:
+    """Approximate top-k over (vec_id, embedding) rows: candidates
+    share the query's sign bucket or any bucket within Hamming<=2 of
+    it — the classic multiprobe trick that recovers most of the recall
+    a single bucket loses while still scanning a small corpus
+    fraction. 8 planes with 2-bit probes scan ~14% of buckets;
+    clustered real-world embeddings do far better than the
+    uniform-sphere worst case."""
+    cand = (_with_norm(_with_assign(vectors.select("vec_id", "embedding"),
+                                    "embedding", "bucket", _bucket_fn(8)),
+                       "embedding", "vb", "norm_b")
+            .select(F.col("vec_id").alias("neighbor_id"), "vb", "norm_b",
+                    "bucket"))
+    q = (_with_norm(_with_assign(queries.select("vec_id", "embedding"),
+                                 "embedding", "bucket0", _bucket_fn(8)),
+                    "embedding", "va", "norm_a")
+         .select(F.col("vec_id").alias("query_id"), "va", "norm_a",
+                 "bucket0"))
     probes = [F.expr(f"int(bucket0) ^ {m}").cast("int")
-              for m in _probe_masks(n_planes, multiprobe_bits)]
+              for m in _probe_masks(8)]
     q = (q.withColumn("bucket", F.explode(F.array(*probes)))
           .drop("bucket0"))
 
@@ -231,19 +229,19 @@ def lsh_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
 
 
 def kmeans_centroids(vectors: DataFrame, n_centroids: int = 32,
-                     sample: int = 20_000, iters: int = 10,
-                     seed: int = 42, id_col: str = "vec_id",
+                     id_col: str = "vec_id",
                      vec_col: str = "embedding") -> np.ndarray:
-    """Coarse quantizer for IVF: Lloyd k-means fit driver-side on a
-    bounded, DETERMINISTIC sample (lowest ids — TakeOrderedAndProject,
-    no full sort), returning L2-normalized (k, dim) centroids.
+    """Coarse quantizer for IVF: 10 Lloyd k-means iterations fit
+    driver-side on a bounded, DETERMINISTIC sample (the 20,000 lowest
+    ids — TakeOrderedAndProject, no full sort), returning
+    L2-normalized (k, dim) centroids.
 
     At 10^12 vectors the quantizer is always fit on a sample; what
     must stay distributed is ASSIGNMENT, which ivf_topk does via one
     numpy matmul per Arrow batch. Empty cells are re-seeded from the
     farthest points so k stays exact."""
     tbl = (vectors.select(id_col, vec_col).orderBy(id_col)
-           .limit(sample).toArrow())
+           .limit(20_000).toArrow())
     m = _densify(tbl.column(vec_col))       # flat-buffer, no row loop
     if len(m) == 0:
         raise ValueError("kmeans_centroids: no vectors to fit on")
@@ -255,9 +253,9 @@ def kmeans_centroids(vectors: DataFrame, n_centroids: int = 32,
     # centroids than asked is the correct degraded quantizer
     n_centroids = min(n_centroids, len(m))
     m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-    rng = np.random.Generator(np.random.PCG64(seed))
+    rng = np.random.Generator(np.random.PCG64(42))
     c = m[rng.choice(len(m), size=n_centroids, replace=False)]
-    for _ in range(iters):
+    for _ in range(10):
         sims = m @ c.T                        # cosine == dot (unit)
         assign = sims.argmax(axis=1)
         empty = []
@@ -297,27 +295,25 @@ def _cell_fn(centroids: np.ndarray, top: int = 1):
     return fn
 
 
-def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
-             n_centroids: int = 32, n_probe: int = 8,
-             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """IVF approximate top-k — the second ANN scale path next to
-    sign-LSH (ROADMAP r1 #7): a sampled k-means coarse quantizer
-    partitions the corpus into cells; each query scans only its
-    ``n_probe`` nearest cells (~n_probe/n_centroids of the corpus).
+def ivf_topk(vectors: DataFrame, queries: DataFrame,
+             k: int = 5) -> DataFrame:
+    """IVF approximate top-k over (vec_id, embedding) rows — the second
+    ANN scale path next to sign-LSH (ROADMAP r1 #7): a sampled k-means
+    coarse quantizer partitions the corpus into 32 cells; each query
+    scans only its 8 nearest cells (~1/4 of the corpus).
     Shuffle-on-cell, never all-pairs; recall vs brute force pinned in
     tests/test_extras.py."""
-    cents = kmeans_centroids(vectors, n_centroids,
-                             id_col=id_col, vec_col=vec_col)
-    cand = (_with_norm(_with_assign(vectors.select(id_col, vec_col),
-                                    vec_col, "cell", _cell_fn(cents)),
-                       vec_col, "vb", "norm_b")
-            .select(F.col(id_col).alias("neighbor_id"), "vb", "norm_b",
+    cents = kmeans_centroids(vectors, 32)
+    cand = (_with_norm(_with_assign(vectors.select("vec_id", "embedding"),
+                                    "embedding", "cell", _cell_fn(cents)),
+                       "embedding", "vb", "norm_b")
+            .select(F.col("vec_id").alias("neighbor_id"), "vb", "norm_b",
                     "cell"))
-    q = (_with_norm(_with_assign(queries.select(id_col, vec_col), vec_col,
-                                 "cells", _cell_fn(cents, top=n_probe),
-                                 top=n_probe),
-                    vec_col, "va", "norm_a")
-         .select(F.col(id_col).alias("query_id"), "va", "norm_a",
+    q = (_with_norm(_with_assign(queries.select("vec_id", "embedding"),
+                                 "embedding", "cells",
+                                 _cell_fn(cents, top=8), top=8),
+                    "embedding", "va", "norm_a")
+         .select(F.col("vec_id").alias("query_id"), "va", "norm_a",
                  F.explode("cells").alias("cell")))
     scored = (cand.join(F.broadcast(q), "cell")
               .where(F.col("query_id") != F.col("neighbor_id"))
@@ -325,45 +321,41 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
     return _rank_topk(scored, k)
 
 
-def plant_near_dups(vectors: DataFrame, n: int = 50,
-                    id_offset: int = 1_000_000,
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
-    """corpus ∪ deterministic near-duplicates of the first ``n``
-    vectors: id + id_offset, each component nudged by
-    0.003*sin(7*id + i) (cosine vs the original ~0.9998 for unit
+def plant_near_dups(vectors: DataFrame, n: int = 50) -> DataFrame:
+    """(vec_id, embedding) corpus ∪ deterministic near-duplicates of
+    the first ``n`` vectors: vec_id + 1,000,000, each component nudged
+    by 0.003*sin(7*id + i) (cosine vs the original ~0.9998 for unit
     vectors). Used by tests and the driver key so the near-dup
     operator is exercised on data that actually contains near-dups."""
-    base = vectors.select(id_col, vec_col)
-    dup = (vectors.where(F.col(id_col) < n)
-           .select((F.col(id_col) + id_offset).alias(id_col),
+    base = vectors.select("vec_id", "embedding")
+    dup = (vectors.where(F.col("vec_id") < n)
+           .select((F.col("vec_id") + 1_000_000).alias("vec_id"),
                    F.expr(
-                       f"transform({vec_col}, (x, i) -> cast(x +"
-                       f" 0.003 * sin(7 * {id_col} + i) as float))"
-                   ).alias(vec_col)))
+                       "transform(embedding, (x, i) -> cast(x +"
+                       " 0.003 * sin(7 * vec_id + i) as float))"
+                   ).alias("embedding")))
     return base.unionByName(dup)
 
 
-def embedding_dedup_edges(vectors: DataFrame, threshold: float = 0.98,
-                          n_planes: int = 12,
-                          id_col: str = "vec_id",
-                          vec_col: str = "embedding") -> DataFrame:
-    """Embedding-cosine near-dup pass: bucket by sign-LSH, pair inside
-    each bucket with ``lsh.bucket_pairs`` (salted star pairs plus 8
-    successors, like the SimHash pass), keep cosine >= threshold.
+def embedding_dedup_edges(vectors: DataFrame,
+                          threshold: float = 0.98) -> DataFrame:
+    """Embedding-cosine near-dup pass over (vec_id, embedding) rows:
+    bucket by 12-plane sign-LSH, pair inside each bucket with
+    ``lsh.bucket_pairs`` (salted star pairs plus 8 successors, like the
+    SimHash pass), keep cosine >= threshold.
 
     The vectors are joined back to the pairs, as verify_edges does,
     rather than carried through the pairing windows: on the planted
     near-dup test corpus (550 x 64-dim) the join-back form measured
     1.84 s against 2.36 s carried (min of 6, one session, local[8]
     on 4 cores)."""
-    slim = vectors.select(F.col(id_col).alias("doc_id"), vec_col)
-    keys = (_with_assign(slim, vec_col, "bucket", _bucket_fn(n_planes))
+    slim = vectors.select(F.col("vec_id").alias("doc_id"), "embedding")
+    keys = (_with_assign(slim, "embedding", "bucket", _bucket_fn(12))
             .select("doc_id", "bucket", salt(DedupConfig()).alias("salt")))
     cand = (bucket_pairs(keys, ["bucket"], 8)
             .where(F.col("src") < F.col("dst"))
             .dropDuplicates(["src", "dst"]))
-    vec = _with_norm(slim, vec_col, "vb", "norm_b").select(
+    vec = _with_norm(slim, "embedding", "vb", "norm_b").select(
         "doc_id", "vb", "norm_b")
     va = vec.withColumnsRenamed({"doc_id": "src", "vb": "va",
                                  "norm_b": "norm_a"})

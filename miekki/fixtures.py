@@ -156,11 +156,10 @@ def make_corpus(documents: pd.DataFrame, cfg: DedupConfig = DedupConfig(),
     return corpus, truth_pairs, truth_clusters
 
 
-def write_fixture(sf_dir: str, out_dir: str, cfg: DedupConfig = DedupConfig(),
-                  seed: int = 42) -> dict[str, str]:
+def write_fixture(sf_dir: str, out_dir: str) -> dict[str, str]:
     """Generate the fixture corpus for one testdata SF dir → parquet."""
     docs = pd.read_parquet(os.path.join(sf_dir, "documents.parquet"))
-    corpus, tp, tc = make_corpus(docs, cfg, seed)
+    corpus, tp, tc = make_corpus(docs)
     os.makedirs(out_dir, exist_ok=True)
     paths = {}
     for name, df in [("corpus", corpus), ("truth_pairs", tp), ("truth_clusters", tc)]:

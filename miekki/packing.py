@@ -59,7 +59,6 @@ N_BUCKETS_DEFAULT = 1024
 
 def seq_pack(docs: DataFrame, seq_len: int = SEQ_LEN_DEFAULT,
              n_buckets: int = N_BUCKETS_DEFAULT,
-             tok_col: str = "n_tok",
              bucket_col: F.Column | None = None,
              rank_col: F.Column | None = None,
              carry: tuple[str, ...] = ()) -> DataFrame:
@@ -67,7 +66,7 @@ def seq_pack(docs: DataFrame, seq_len: int = SEQ_LEN_DEFAULT,
     seq_first, seq_last, n_seqs[, *carry]). See module doc for the
     pinned spec.
 
-    `docs` needs (doc_id, tok_col); tok_col is the doc's token count
+    `docs` needs (doc_id, n_tok); n_tok is the doc's token count
     (X30's n_tok or X5's token counter — integer, >= 0). `carry`
     names extra columns to thread through the window (pack_pieces
     carries the token array — same one-shuffle shape, no join-back)."""
@@ -79,7 +78,7 @@ def seq_pack(docs: DataFrame, seq_len: int = SEQ_LEN_DEFAULT,
     rank = (rank_col if rank_col is not None
             else F.pmod(F.xxhash64(F.lit("packrk"), F.col("doc_id")),
                         F.lit(1 << 31)))
-    tok = F.col(tok_col).cast("long")
+    tok = F.col("n_tok").cast("long")
     w = (Window.partitionBy("bucket")
          .orderBy("rk", "doc_id")
          .rowsBetween(Window.unboundedPreceding, -1))
@@ -127,23 +126,20 @@ def pack_stats(packed: DataFrame, seq_len: int = SEQ_LEN_DEFAULT
 
 
 def seq_pack_duck_sql(docs_cte: str, seq_len: int = SEQ_LEN_DEFAULT,
-                      n_buckets: int = N_BUCKETS_DEFAULT,
-                      bucket_sql: str | None = None,
-                      rank_sql: str | None = None) -> str:
-    """DuckDB twin recomputing identical values; pair the portable
-    bucket/rank defaults with the same expressions passed as Spark
+                      n_buckets: int = N_BUCKETS_DEFAULT) -> str:
+    """DuckDB twin recomputing identical values; pair its portable
+    bucket/rank expressions with the same expressions passed as Spark
     columns (production defaults are xxhash64-based and need the
     Spark-side hash)."""
-    # the portable defaults reduce doc_id mod a prime BEFORE the
+    # the portable keys reduce doc_id mod a prime BEFORE the
     # multiplicative mix: DuckDB raises on BIGINT overflow (unlike
     # Spark's wrapping pmod), so a bare doc_id * K would crash the
     # twin for ids past ~2^63/K; after the mod the product is
     # bounded by 1000002 * 2654435761 < 2^52
-    bucket_sql = bucket_sql or (
-        f"(((doc_id % 1000003 + 1000003) % 1000003)"
-        f" * 2654435761) % {n_buckets}")
-    rank_sql = rank_sql or ("(((doc_id % 1000003 + 1000003) % 1000003)"
-                            " * 48271) % 2147483648")
+    bucket_sql = (f"(((doc_id % 1000003 + 1000003) % 1000003)"
+                  f" * 2654435761) % {n_buckets}")
+    rank_sql = ("(((doc_id % 1000003 + 1000003) % 1000003)"
+                " * 48271) % 2147483648")
     return f"""
 WITH docs AS ({docs_cte}),
 keyed AS (
@@ -234,18 +230,16 @@ def pack_pieces(docs: DataFrame, seq_len: int = SEQ_LEN_DEFAULT,
 
 
 def pack_pieces_duck_sql(docs_cte: str, seq_len: int = SEQ_LEN_DEFAULT,
-                         n_buckets: int = N_BUCKETS_DEFAULT,
-                         bucket_sql: str | None = None,
-                         rank_sql: str | None = None) -> str:
-    """DuckDB twin of pack_pieces: identical rows with the piece
-    array rendered as a space-joined string (both engines stringify —
-    a raw list column hashes differently through pandas). docs_cte
-    must yield (doc_id, toks: list<varchar>)."""
-    bucket_sql = bucket_sql or (
-        f"(((doc_id % 1000003 + 1000003) % 1000003)"
-        f" * 2654435761) % {n_buckets}")
-    rank_sql = rank_sql or ("(((doc_id % 1000003 + 1000003) % 1000003)"
-                            " * 48271) % 2147483648")
+                         n_buckets: int = N_BUCKETS_DEFAULT) -> str:
+    """DuckDB twin of pack_pieces (seq_pack_duck_sql's portable
+    bucket/rank): identical rows with the piece array rendered as a
+    space-joined string (both engines stringify — a raw list column
+    hashes differently through pandas). docs_cte must yield (doc_id,
+    toks: list<varchar>)."""
+    bucket_sql = (f"(((doc_id % 1000003 + 1000003) % 1000003)"
+                  f" * 2654435761) % {n_buckets}")
+    rank_sql = ("(((doc_id % 1000003 + 1000003) % 1000003)"
+                " * 48271) % 2147483648")
     L = int(seq_len)
     return f"""
 WITH docs AS ({docs_cte}),

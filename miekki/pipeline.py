@@ -94,8 +94,7 @@ def dedup_labels(corpus: DataFrame, cfg: DedupConfig = DedupConfig(),
 
 def run(spark, catalog, cfg: DedupConfig = DedupConfig(),
         run_id: str = "run0", corpus_table: str = "corpus",
-        check_invariant: bool = False,
-        use_simhash: bool = True, use_substr: bool = True,
+        check_invariant: bool = False, use_substr: bool = True,
         n_buckets: int = 32,
         emit_tiers: bool = False) -> dict:
     """Durable pipeline: corpus table → checkpointed T1/T2/T4/T5 in
@@ -143,7 +142,7 @@ def run(spark, catalog, cfg: DedupConfig = DedupConfig(),
         bucket_by=(n_buckets, ["doc_id"]))
     edges = runner.materialize(
         "candidate_edges",
-        lambda: dedup_edges(docs, sigs, cfg, use_simhash, use_substr),
+        lambda: dedup_edges(docs, sigs, cfg, use_substr=use_substr),
         bucket_by=(n_buckets, ["src"]))
     labels = runner.materialize(
         "cluster_labels", lambda: cluster_labels(edges, docs, corpus))

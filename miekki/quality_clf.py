@@ -70,8 +70,7 @@ class ClfModel(NamedTuple):
 
 def fit_from_triples(doc_key: np.ndarray, bucket: np.ndarray,
                      cnt: np.ndarray, y_by_doc: dict[int, float],
-                     b: int, iters: int = FIT_ITERS, lr: float = FIT_LR,
-                     l2: float = FIT_L2) -> tuple[np.ndarray, float]:
+                     b: int) -> tuple[np.ndarray, float]:
     """THE shared fit kernel — the Spark path and the DuckDB oracle
     path both reduce their corpora to (doc_key, bucket, cnt) triples
     plus per-doc labels and call this, so the two engines' weights
@@ -87,40 +86,38 @@ def fit_from_triples(doc_key: np.ndarray, bucket: np.ndarray,
     xval = cnt / n_feat[doc_idx]            # L1-normalized counts
     w = np.zeros(b)
     bias = 0.0
-    for _ in range(iters):
+    for _ in range(FIT_ITERS):
         z = np.zeros(n_docs)
         np.add.at(z, doc_idx, xval * w[bucket])
         p = 1.0 / (1.0 + np.exp(-(z + bias)))
         err = (p - y) / n_docs
         gw = np.zeros(b)
         np.add.at(gw, bucket, xval * err[doc_idx])
-        w -= lr * (gw + l2 * w)
-        bias -= lr * float(err.sum())
+        w -= FIT_LR * (gw + FIT_L2 * w)
+        bias -= FIT_LR * float(err.sum())
     return w, bias
 
 
-def _sample(docs: DataFrame, sample: int, norm_col: str) -> DataFrame:
+def _sample(docs: DataFrame, sample: int) -> DataFrame:
     # lowest doc_ids: deterministic under re-runs / repartitioning
     # (TakeOrderedAndProject — per-partition heaps, never a full sort)
-    return (docs.select("doc_id", norm_col).orderBy("doc_id")
+    return (docs.select("doc_id", "norm").orderBy("doc_id")
             .limit(sample))
 
 
 def fit_quality_clf(pos: DataFrame, neg: DataFrame,
                     b: int = B_CLF_DEFAULT,
                     bucket_fn: Callable[[F.Column], F.Column] | None = None,
-                    sample: int = FIT_SAMPLE,
-                    norm_col: str = "norm") -> ClfModel:
+                    sample: int = FIT_SAMPLE) -> ClfModel:
     """Fit on deterministic samples of the positive (curated/target)
     and negative (raw crawl) corpora. The ONE collect here is the
     bounded triple table of the fit sample — never the corpus."""
     bucket_fn = bucket_fn or xxhash_bucket(b)
-    lab = (_sample(pos, sample, norm_col).withColumn("y", F.lit(1))
-           .unionByName(
-               _sample(neg, sample, norm_col).withColumn("y", F.lit(0))))
+    lab = (_sample(pos, sample).withColumn("y", F.lit(1))
+           .unionByName(_sample(neg, sample).withColumn("y", F.lit(0))))
     triples = (lab
                .select("doc_id", "y",
-                       F.explode(features_col(norm_col)).alias("feat"))
+                       F.explode(features_col("norm")).alias("feat"))
                .select("doc_id", "y", bucket_fn(F.col("feat")).alias("bucket"))
                .groupBy("doc_id", "y", "bucket")
                .agg(F.count(F.lit(1)).alias("c"))
@@ -138,8 +135,7 @@ def fit_quality_clf(pos: DataFrame, neg: DataFrame,
 
 
 def clf_score(docs: DataFrame, model: ClfModel,
-              threshold: float = 0.5,
-              norm_col: str = "norm") -> DataFrame:
+              threshold: float = 0.5) -> DataFrame:
     """Per-doc (doc_id, n_feat, logit, score, kept) — see module doc.
     One broadcast join + one doc_id shuffle + map-only sigmoid."""
     spark = docs.sparkSession
@@ -147,7 +143,7 @@ def clf_score(docs: DataFrame, model: ClfModel,
     wdf = spark.createDataFrame(
         [(int(i), float(model.w[i])) for i in nz], "bucket long, w double")
     feat = docs.select(
-        "doc_id", F.explode(features_col(norm_col)).alias("feat"))
+        "doc_id", F.explode(features_col("norm")).alias("feat"))
     scored = (feat
               .select("doc_id", model.bucket_fn(F.col("feat")).alias("bucket"))
               .join(F.broadcast(wdf), "bucket", "left")
@@ -155,7 +151,7 @@ def clf_score(docs: DataFrame, model: ClfModel,
               .agg(F.count(F.lit(1)).alias("n_feat"),
                    F.sum(F.coalesce("w", F.lit(0.0))).alias("s")))
     logit = F.round(F.lit(float(model.bias)) + F.col("s") / F.col("n_feat"), 4)
-    empties = (docs.where(F.size(features_col(norm_col)) == 0)
+    empties = (docs.where(F.size(features_col("norm")) == 0)
                .select("doc_id", F.lit(0).cast("long").alias("n_feat"),
                        F.lit(0.0).alias("s")))
     out = (scored.withColumn("logit", logit)

@@ -23,13 +23,13 @@ _SIDE = "__asof_side"
 
 
 def asof_join(left: DataFrame, right: DataFrame, on: str, ts_col: str,
-              value_cols: list[str], suffix: str = "_asof") -> DataFrame:
+              value_cols: list[str]) -> DataFrame:
     """For every left row, attach the ``value_cols`` of the LATEST
     right row with the same ``on`` key and right.ts <= left.ts
     (inclusive — matches DuckDB ASOF JOIN semantics, which the driver
     oracle uses); NULLs where no right row precedes.
 
-    Returns all left columns plus one ``<col><suffix>`` per value col.
+    Returns all left columns plus one ``<col>_asof`` per value col.
     """
     l = left.withColumn(_SIDE, F.lit(1))
     r = (right.select(on, ts_col, *value_cols)
@@ -50,7 +50,7 @@ def asof_join(left: DataFrame, right: DataFrame, on: str, ts_col: str,
     w = (Window.partitionBy(on).orderBy(ts_col, _SIDE, payload)
          .rowsBetween(Window.unboundedPreceding, 0))
     latest = F.last(payload, ignorenulls=True).over(w)
-    carried = [latest[c].alias(c + suffix) for c in value_cols]
+    carried = [latest[c].alias(c + "_asof") for c in value_cols]
     return (u.select("*", *carried)
              .where(F.col(_SIDE) == 1)
              .drop(_SIDE))

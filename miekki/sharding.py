@@ -11,7 +11,7 @@ sees an i.i.d.-like stream without ever shuffling again.
 
 Spec (pinned so any engine recomputes every row):
 
-- rank   = hash64("shard", seed, key)  — a pseudo-random but
+- rank   = hash64("shard", 0, doc_id)  — a pseudo-random but
   REPRODUCIBLE permutation key. Salted with the literal "shard" so it
   decorrelates from the split/mix/cap samplers hashing the same key
   (the r4 lesson: two unsalted samplers over one key correlate and
@@ -54,14 +54,13 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
 def shard_assign(docs: DataFrame, n_shards: int = 1024,
-                 key_col: str = "doc_id", seed: int = 0,
                  rank_col: Column | None = None) -> DataFrame:
     """(doc_id, rank, shard, pos) for every input doc — see module
     docstring for the pinned spec."""
     if n_shards <= 0:
         raise ValueError(f"n_shards must be positive, got {n_shards}")
     rk = (rank_col if rank_col is not None
-          else F.xxhash64(F.lit("shard"), F.lit(seed), F.col(key_col)))
+          else F.xxhash64(F.lit("shard"), F.lit(0), F.col("doc_id")))
     w = (Window.partitionBy("shard")
          .orderBy(F.col("rank"), F.col("doc_id")))
     return (docs

@@ -164,15 +164,13 @@ def hll_estimate(registers: DataFrame,
 
 
 def hll_prod_estimate(df: DataFrame, col: str,
-                      group_cols: Sequence[str] = (),
                       lg_k: int = HLL_P_DEFAULT) -> DataFrame:
     """Production path: Apache DataSketches HLL via the built-in
     aggregate (binary sketch on the executors, never the driver).
     Store `sketch`, merge later builds with F.hll_union_agg, read
     with F.hll_sketch_estimate."""
-    return (df.groupBy(*group_cols)
-            .agg(F.hll_sketch_agg(col, F.lit(lg_k)).alias("sketch"))
-            .select(*group_cols, "sketch",
+    return (df.agg(F.hll_sketch_agg(col, F.lit(lg_k)).alias("sketch"))
+            .select("sketch",
                     F.hll_sketch_estimate("sketch").alias("est_distinct")))
 
 
@@ -180,36 +178,30 @@ def hll_prod_estimate(df: DataFrame, col: str,
 # hll_vocab — per-language vocabulary cardinality over documents
 # =====================================================================
 
-def hll_vocab(docs: DataFrame, norm_col: str = "norm",
-              lang_col: str = "lang", p: int = HLL_P_DEFAULT,
-              hash_fn: str = "xxhash64",
-              tol_sigmas: float = 5.0) -> DataFrame:
+def hll_vocab(docs: DataFrame, hash_fn: str = "xxhash64") -> DataFrame:
     """Per-language distinct-token estimate next to the exact count
     (X21's token convention: split norm on ' ', drop empties).
-    within_tol pins the accuracy contract at tol_sigmas standard
-    errors. The exact column exists to EVIDENCE the estimator at
-    test scale — at 10^12 rows you ship only the sketch columns
-    (that being the point)."""
-    toks = (docs.select(lang_col,
-                        F.explode(F.split(F.col(norm_col), " "))
+    within_tol pins the accuracy contract at 5 standard errors. The
+    exact column exists to EVIDENCE the estimator at test scale — at
+    10^12 rows you ship only the sketch columns (that being the
+    point)."""
+    toks = (docs.select("lang",
+                        F.explode(F.split(F.col("norm"), " "))
                         .alias("token"))
             .where(F.col("token") != ""))
-    est = hll_estimate(hll_registers(toks, "token", (lang_col,), p,
-                                     hash_fn), (lang_col,), p)
-    exact = toks.groupBy(lang_col).agg(
+    est = hll_estimate(hll_registers(toks, "token", ("lang",),
+                                     hash_fn=hash_fn), ("lang",))
+    exact = toks.groupBy("lang").agg(
         F.count_distinct("token").alias("n_tokens"))
-    tol = tol_sigmas * hll_rel_err(p)
-    return (exact.join(est, lang_col)
-            .select(lang_col, "n_tokens", "n_present", "v_zero",
+    tol = 5.0 * hll_rel_err(HLL_P_DEFAULT)
+    return (exact.join(est, "lang")
+            .select("lang", "n_tokens", "n_present", "v_zero",
                     "s_scaled", "est_distinct")
             .withColumn("within_tol", F.expr(
                 f"abs(est_distinct / n_tokens - 1.0) <= {repr(tol)}")))
 
 
 def hll_update_state(cat, table: str, batch: DataFrame, col: str,
-                     group_cols: Sequence[str] = (),
-                     p: int = HLL_P_DEFAULT,
-                     hash_fn: str = "xxhash64",
                      run_id: str = "hll-0") -> None:
     """Incremental sketch maintenance for the streaming path: merge
     one micro-batch's registers into a persistent register table
@@ -227,7 +219,7 @@ def hll_update_state(cat, table: str, batch: DataFrame, col: str,
     batch sequence number) — the catalog keys each overwrite
     generation's directory by run_id, and reusing one id would
     rewrite the directory a live reader may still have file-listed."""
-    regs = hll_registers(batch, col, group_cols, p, hash_fn)
+    regs = hll_registers(batch, col)
     if cat.exists(table):
         regs = hll_merge(cat.read(table), regs)
     # localCheckpoint: the merged frame reads the table it is about
@@ -269,43 +261,42 @@ CMS_D_DEFAULT = 4                   # P(err bound violated) <= e^-4 ≈ 1.8%
 CMS_WP_DEFAULT = 12                 # w = 4096 cells/row: err <= e·N/4096
 
 
-def cms_err_bound(n_total: int, wp: int = CMS_WP_DEFAULT) -> float:
+def cms_err_bound(n_total: int) -> float:
     """Classic CMS additive-error bound e·N/w (holds per query with
     probability >= 1 - e^-d)."""
-    return math.e * n_total / float(1 << wp)
+    return math.e * n_total / float(1 << CMS_WP_DEFAULT)
 
 
 def _cms_cells(df: DataFrame, col: str, group_cols: Sequence[str],
-               d: int, wp: int, hash_fn: str) -> DataFrame:
+               hash_fn: str) -> DataFrame:
     """Map-only (group…, row_idx, col_idx) projection: d cells per
     input row via ONE struct-array explode (codegen'd, no Python)."""
-    w_mask = (1 << wp) - 1
+    w_mask = (1 << CMS_WP_DEFAULT) - 1
     cells = [F.struct(F.lit(r).alias("row_idx"),
                       _sketch_hash(F.col(col), hash_fn, f"cms{r}")
                       .bitwiseAND(F.lit(w_mask)).cast("int")
                       .alias("col_idx"))
-             for r in range(d)]
+             for r in range(CMS_D_DEFAULT)]
     return (df.select(*group_cols, F.explode(F.array(*cells)).alias("c"))
             .select(*group_cols, "c.row_idx", "c.col_idx"))
 
 
 def cms_build(df: DataFrame, col: str,
               group_cols: Sequence[str] = (),
-              d: int = CMS_D_DEFAULT, wp: int = CMS_WP_DEFAULT,
               hash_fn: str = "xxhash64") -> DataFrame:
     """The sketch: (group…, row_idx int, col_idx int, cnt long),
     ≤ d·2^wp rows per group. Cells no value hashed into are absent
     (cnt treated as 0 by the probe). Mergeable: union two frames and
     groupBy(keys).sum(cnt) — or concatenate inputs and rebuild; both
     yield the identical frame (cms_merge; tested)."""
-    return (_cms_cells(df, col, group_cols, d, wp, hash_fn)
+    return (_cms_cells(df, col, group_cols, hash_fn)
             .groupBy(*group_cols, "row_idx", "col_idx")
             .agg(F.count(F.lit(1)).alias("cnt")))
 
 
 def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Cell-wise SUM of sketches built with the same (d, wp,
-    hash_fn): the sketch of the concatenation of their inputs."""
+    """Cell-wise SUM of sketches built with the same hash_fn: the
+    sketch of the concatenation of their inputs."""
     out = sketches[0]
     for other in sketches[1:]:
         out = out.unionByName(other)
@@ -314,25 +305,20 @@ def cms_merge(*sketches: DataFrame) -> DataFrame:
 
 
 def cms_probe(sketch: DataFrame, items: DataFrame, col: str,
-              group_cols: Sequence[str] = (),
-              d: int = CMS_D_DEFAULT, wp: int = CMS_WP_DEFAULT,
               hash_fn: str = "xxhash64") -> DataFrame:
     """Point queries: items + `cms_est` = min over the d counters the
-    item hashes to (absent cell = 0). items must be distinct on
-    (group…, col). ONE equi-join (broadcast at default sizes) + ONE
-    min over exactly d rows per item."""
-    keys = [*group_cols, "row_idx", "col_idx"]
-    cells = _cms_cells(items, col, (*group_cols, col), d, wp, hash_fn)
-    return (cells.join(sketch, keys, "left")
-            .groupBy(*group_cols, col)
+    item hashes to (absent cell = 0). items must be distinct on col
+    and the sketch ungrouped. ONE equi-join (broadcast at default
+    sizes) + ONE min over exactly d rows per item."""
+    cells = _cms_cells(items, col, (col,), hash_fn)
+    return (cells.join(sketch, ["row_idx", "col_idx"], "left")
+            .groupBy(col)
             .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0)))
                  .alias("cms_est")))
 
 
 def cms_update_state(cat, table: str, batch: DataFrame, col: str,
-                     bseq: int, group_cols: Sequence[str] = (),
-                     d: int = CMS_D_DEFAULT, wp: int = CMS_WP_DEFAULT,
-                     hash_fn: str = "xxhash64") -> bool:
+                     bseq: int, group_cols: Sequence[str] = ()) -> bool:
     """Incremental CMS maintenance — the frequency counterpart of
     hll_update_state, with one semantic difference that changes the
     protocol: register-max (HLL) is idempotent under replay, cell-SUM
@@ -354,9 +340,9 @@ def cms_update_state(cat, table: str, batch: DataFrame, col: str,
             return False
         sketch = cms_merge(
             prev.where(F.col("row_idx") >= 0),
-            cms_build(batch, col, group_cols, d, wp, hash_fn))
+            cms_build(batch, col, group_cols))
     else:
-        sketch = cms_build(batch, col, group_cols, d, wp, hash_fn)
+        sketch = cms_build(batch, col, group_cols)
     rider = local_df(sketch.sparkSession, [(-1, -1, bseq)],
                      "row_idx int, col_idx int, cnt long")
     if group_cols:
@@ -373,8 +359,7 @@ def cms_update_state(cat, table: str, batch: DataFrame, col: str,
     return True
 
 
-def cms_vocab(docs: DataFrame, norm_col: str = "norm", k: int = 100,
-              d: int = CMS_D_DEFAULT, wp: int = CMS_WP_DEFAULT,
+def cms_vocab(docs: DataFrame, k: int = 100,
               hash_fn: str = "xxhash64") -> DataFrame:
     """X21's exact vocabulary top-k next to the CMS estimate for each
     of those tokens: (token, n, cms_est, no_underest). no_underest
@@ -384,25 +369,24 @@ def cms_vocab(docs: DataFrame, norm_col: str = "norm", k: int = 100,
     exact column exists to EVIDENCE the estimator at test scale."""
     from miekki.webstats import vocab_topk
 
-    toks = (docs.select(F.explode(F.split(F.col(norm_col), " "))
+    toks = (docs.select(F.explode(F.split(F.col("norm"), " "))
                         .alias("token"))
             .where(F.col("token") != ""))
-    exact = vocab_topk(docs, k=k, norm_col=norm_col)
-    sketch = cms_build(toks, "token", (), d, wp, hash_fn)
+    exact = vocab_topk(docs, k=k, norm_col="norm")
+    sketch = cms_build(toks, "token", hash_fn=hash_fn)
     probed = cms_probe(sketch, exact.select("token"), "token",
-                       (), d, wp, hash_fn)
+                       hash_fn=hash_fn)
     return (exact.join(probed, "token")
             .select("token", "n", "cms_est",
                     (F.col("cms_est") >= F.col("n")).alias("no_underest")))
 
 
-def cms_vocab_duck_sql(norm_cte: str, k: int = 100,
-                       d: int = CMS_D_DEFAULT,
-                       wp: int = CMS_WP_DEFAULT) -> str:
+def cms_vocab_duck_sql(norm_cte: str, k: int = 100) -> str:
     """DuckDB twin of cms_vocab(hash_fn='md5'): identical hashes,
     identical cells, identical min-estimates — the APPROXIMATE
     structure value-twinned bit-for-bit (collisions included)."""
-    w_mask = (1 << wp) - 1
+    d = CMS_D_DEFAULT
+    w_mask = (1 << CMS_WP_DEFAULT) - 1
     hh = ("CAST(('0x' || substr(md5('cms' || r || '|' || token), 1, 15))"
           " AS BIGINT)")
     return f"""
@@ -461,18 +445,18 @@ HDR_SUBS_DEFAULT = 16               # 16 sub-buckets/octave: ≤6.7% width
 HDR_QS_DEFAULT = ((1, 2), (9, 10), (99, 100))   # p50 / p90 / p99
 
 
-def _hdr_bin_expr(col: str, s: int) -> str:
+def _hdr_bin_expr(col: str) -> str:
     """Spark/DuckDB-shared integer binning text (engine-portable ops:
     CASE, length(bin()), DIV//, *). Caller substitutes the DIV token."""
+    s = HDR_SUBS_DEFAULT
     return (f"CASE WHEN {col} <= 0 THEN -1 ELSE "
             f"(length(bin({col})) - 1) * {s} + "
             f"(({col} - __p) * {s}) {{div}} __p END")
 
 
 def hdr_histogram(df: DataFrame, col: str,
-                  group_cols: Sequence[str] = (),
-                  s: int = HDR_SUBS_DEFAULT) -> DataFrame:
-    """The sketch: (group…, bin int, cnt long) — ≤ bitlen(max)·s bins
+                  group_cols: Sequence[str] = ()) -> DataFrame:
+    """The sketch: (group…, bin int, cnt long) — ≤ bitlen(max)·S bins
     per group at any input size. ONE groupBy whose sum partials
     collapse map-side. Merge shard histograms by bin-wise sum
     (hdr_merge = cms_merge's algebra; or rebuild over the concat —
@@ -486,7 +470,7 @@ def hdr_histogram(df: DataFrame, col: str,
               .select(*group_cols, F.col(col),
                       F.expr(p).alias("__p"))
               .select(*group_cols,
-                      F.expr(_hdr_bin_expr(col, s).format(div="DIV"))
+                      F.expr(_hdr_bin_expr(col).format(div="DIV"))
                       .cast("int").alias("bin")))
     return (binned.groupBy(*group_cols, "bin")
             .agg(F.count(F.lit(1)).alias("cnt")))
@@ -509,19 +493,18 @@ def hdr_bounds(bin_col: str, s: int) -> tuple[str, str]:
     return lo, hi
 
 
-def hdr_quantiles(hist: DataFrame, group_cols: Sequence[str] = (),
-                  s: int = HDR_SUBS_DEFAULT,
-                  qs: Sequence[tuple[int, int]] = HDR_QS_DEFAULT) \
-        -> DataFrame:
-    """Quantile read-out over a histogram frame: for each (group, q)
-    the first bin whose running count reaches r = ceil(n·num/den),
-    with its [lo, hi] value bounds. One groupBy collects each group's
-    sorted (bin, cnt) list (≤ ~60·s entries, bounded regardless of
-    input size) and one aggregate() walks it per quantile — no
-    window, so the ungrouped read-out needs no partition spec.
+def hdr_quantiles(hist: DataFrame,
+                  group_cols: Sequence[str] = ()) -> DataFrame:
+    """Quantile read-out over a histogram frame: for each (group, q in
+    HDR_QS_DEFAULT) the first bin whose running count reaches
+    r = ceil(n·num/den), with its [lo, hi] value bounds. One groupBy
+    collects each group's sorted (bin, cnt) list (≤ ~60·S entries,
+    bounded regardless of input size) and one aggregate() walks it
+    per quantile — no window, so the ungrouped read-out needs no
+    partition spec.
     Output: (group…, q string, n_vals, r, bin, lo, hi)."""
     q_rows = ", ".join(f"({num}, {den}, '{num/den:.2f}')"
-                       for num, den in qs)
+                       for num, den in HDR_QS_DEFAULT)
     quants = hist.sparkSession.sql(
         f"SELECT col1 AS q_num, col2 AS q_den, col3 AS q FROM "
         f"VALUES {q_rows}")
@@ -538,7 +521,7 @@ def hdr_quantiles(hist: DataFrame, group_cols: Sequence[str] = (),
         " (a, x) -> named_struct('cum', a.cum + x.cnt, 'bin',"
         " coalesce(a.bin, IF(a.cum + x.cnt >= r, x.bin, NULL))),"
         " a -> a.bin)")
-    lo, hi = hdr_bounds("bin", s)
+    lo, hi = hdr_bounds("bin", HDR_SUBS_DEFAULT)
     return (per_group.crossJoin(F.broadcast(quants))
             .withColumn("r", F.expr(
                 "(n_vals * q_num + q_den - 1) DIV q_den"))
@@ -549,8 +532,6 @@ def hdr_quantiles(hist: DataFrame, group_cols: Sequence[str] = (),
 
 def len_quantiles(docs: DataFrame, len_col: str = "n_chars",
                   group_col: str = "lang",
-                  s: int = HDR_SUBS_DEFAULT,
-                  qs: Sequence[tuple[int, int]] = HDR_QS_DEFAULT,
                   max_rows: int = 10_000_000) -> DataFrame:
     """Per-language document-length quantiles by the pinned histogram,
     next to the EXACT rank statistic and the containment boolean
@@ -570,8 +551,8 @@ def len_quantiles(docs: DataFrame, len_col: str = "n_chars",
             f"rank over more than max_rows={max_rows} rows); use "
             f"hdr_quantiles(hdr_histogram(...)) in production")
 
-    est = hdr_quantiles(
-        hdr_histogram(docs, len_col, (group_col,), s), (group_col,), s, qs)
+    est = hdr_quantiles(hdr_histogram(docs, len_col, (group_col,)),
+                        (group_col,))
     # fresh column names on the evidence side: est and ranked share
     # docs as lineage, and joining same-id attributes is the ambiguous
     # self-join trap (condition silently resolves to both sides'
@@ -590,16 +571,14 @@ def len_quantiles(docs: DataFrame, len_col: str = "n_chars",
                         & (F.col("exact") <= F.col("hi"))))
 
 
-def len_quantiles_duck_sql(src: str, len_col: str = "n_chars",
-                           group_col: str = "lang",
-                           s: int = HDR_SUBS_DEFAULT,
-                           qs: Sequence[tuple[int, int]] = HDR_QS_DEFAULT) \
-        -> str:
-    """DuckDB twin of len_quantiles: identical integer bins, identical
-    integer ranks, identical bounds, identical exact rank statistic —
-    a full value twin of the APPROXIMATE structure plus its evidence."""
+def len_quantiles_duck_sql(src: str) -> str:
+    """DuckDB twin of len_quantiles over (lang, n_chars): identical
+    integer bins, identical integer ranks, identical bounds, identical
+    exact rank statistic — a full value twin of the APPROXIMATE
+    structure plus its evidence."""
+    s = HDR_SUBS_DEFAULT
     q_rows = ", ".join(f"({num}, {den}, '{num/den:.2f}')"
-                       for num, den in qs)
+                       for num, den in HDR_QS_DEFAULT)
     bin_expr = (f"CASE WHEN x <= 0 THEN -1 ELSE "
                 f"(length(bin(x)) - 1) * {s} + "
                 f"((x - (1::BIGINT << (length(bin(x)) - 1))) * {s})"
@@ -611,8 +590,8 @@ def len_quantiles_duck_sql(src: str, len_col: str = "n_chars",
     hi = (f"CASE WHEN bin < 0 THEN 0::BIGINT"
           f" ELSE {p} + (({sub} + 1) * {p} + {s} - 1) // {s} - 1 END")
     return f"""
-WITH vals AS (SELECT {group_col} AS g, CAST({len_col} AS BIGINT) AS x
-              FROM {src} WHERE {len_col} IS NOT NULL),
+WITH vals AS (SELECT lang AS g, CAST(n_chars AS BIGINT) AS x
+              FROM {src} WHERE n_chars IS NOT NULL),
 binned AS (SELECT g, CAST({bin_expr} AS INT) AS bin FROM vals),
 hist AS (SELECT g, bin, CAST(count(*) AS BIGINT) AS cnt
          FROM binned GROUP BY 1, 2),
@@ -633,20 +612,20 @@ bounds AS (SELECT g, q, n_vals, r, bin, {lo} AS lo, {hi} AS hi FROM hit),
 ranked AS (SELECT g, x,
                   row_number() OVER (PARTITION BY g ORDER BY x) AS rn
            FROM vals)
-SELECT bounds.g AS {group_col}, q, n_vals, r, bin, lo, hi,
+SELECT bounds.g AS lang, q, n_vals, r, bin, lo, hi,
        ranked.x AS exact, (lo <= ranked.x AND ranked.x <= hi) AS contained
 FROM bounds JOIN ranked ON bounds.g = ranked.g AND bounds.r = ranked.rn"""
 
 
-def hll_vocab_duck_sql(norm_lang_cte: str, p: int = HLL_P_DEFAULT,
-                       tol_sigmas: float = 5.0) -> str:
+def hll_vocab_duck_sql(norm_lang_cte: str) -> str:
     """DuckDB twin of hll_vocab(hash_fn='md5'): identical hashes,
     identical registers, identical integer harmonic core, identical
     estimator text — a full value twin of the APPROXIMATE structure
     (the estimate is checked bit-for-bit, not merely 'close')."""
+    p = HLL_P_DEFAULT
     m = 1 << p
     big_r = 61 - p
-    tol = tol_sigmas * hll_rel_err(p)
+    tol = 5.0 * hll_rel_err(p)
     hh = f"CAST(('0x' || substr(md5('hll|' || token), 1, 15)) AS BIGINT)"
     return f"""
 WITH toks AS (

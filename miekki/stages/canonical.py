@@ -18,10 +18,10 @@ def select_canonical(labels: DataFrame, docs_meta: DataFrame) -> DataFrame:
               .drop("rn"))
 
 
-def cluster_stats(labels: DataFrame, top_k: int = 20) -> DataFrame:
-    """Largest clusters: (cluster_id, n_docs) top-k by size."""
+def cluster_stats(labels: DataFrame) -> DataFrame:
+    """Largest clusters: (cluster_id, n_docs), the 20 biggest."""
     return (labels.groupBy("cluster_id")
             .agg(F.count(F.lit(1)).alias("n_docs"))
             .orderBy(F.desc("n_docs"), "cluster_id")
-            .limit(top_k))
+            .limit(20))
 

@@ -131,15 +131,14 @@ def cc_fixpoint(edges: DataFrame, max_iter: int = 64) -> DataFrame:
     return e
 
 
-def cc_labels(edges: DataFrame, nodes: DataFrame,
-              node_col: str = "doc_id") -> DataFrame:
+def cc_labels(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     """(src, dst) edges + node table → T5 labels (doc_id, cluster_id).
 
     Isolated nodes become singleton clusters labeled by themselves."""
     star = cc_fixpoint(edges)
-    lab = star.groupBy(F.col("src").alias(node_col)).agg(
+    lab = star.groupBy(F.col("src").alias("doc_id")).agg(
         F.min("dst").alias("cluster_id"))
-    return (nodes.select(node_col).distinct()
-            .join(lab, node_col, "left")
+    return (nodes.select("doc_id").distinct()
+            .join(lab, "doc_id", "left")
             .withColumn("cluster_id",
-                        F.coalesce("cluster_id", F.col(node_col))))
+                        F.coalesce("cluster_id", F.col("doc_id"))))

@@ -29,14 +29,13 @@ def norm_text_col(col_name: str = "text") -> F.Column:
         F.lower(F.coalesce(F.col(col_name), F.lit(""))), WS_PATTERN, " "))
 
 
-def assert_nfc_sample(corpus: DataFrame, max_rows: int = 512,
-                      text_col: str = "text") -> int:
+def assert_nfc_sample(corpus: DataFrame) -> int:
     """Sampled NFC guard (SURVEY.md §2.1): byte-identity with the
     oracle (and the exact-substring pass) assumes the corpus arrives
     NFC-normalized; non-NFC input would silently break parity rather
-    than error. Checks a deterministic ``max_rows`` sample driver-side
-    (unicodedata.is_normalized is C-speed; the sample is tiny by
-    design) and raises listing offending rows. Returns the number of
+    than error. Checks a deterministic 512-row sample of ``text``
+    driver-side (unicodedata.is_normalized is C-speed; the sample is
+    tiny by design) and raises listing offending rows. Returns the number of
     rows checked."""
     import unicodedata
 
@@ -45,10 +44,10 @@ def assert_nfc_sample(corpus: DataFrame, max_rows: int = 512,
     # actually vary across runs/partitionings — a sparsely non-NFC
     # corpus could pass one run and fail the next. TakeOrdered on the
     # text hash keeps it a cheap top-k, never a full sort.
-    rows = (corpus.select(text_col)
-            .where(F.col(text_col).isNotNull())
-            .orderBy(F.xxhash64(text_col), text_col)
-            .limit(max_rows).collect())
+    rows = (corpus.select("text")
+            .where(F.col("text").isNotNull())
+            .orderBy(F.xxhash64("text"), "text")
+            .limit(512).collect())
     bad = [r[0][:60] for r in rows
            if not unicodedata.is_normalized("NFC", r[0])]
     if bad:
@@ -70,14 +69,13 @@ def normalize(corpus: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
 
 
-def audit_id_collisions(docs: DataFrame, id_col: str = "doc_id",
-                        url_col: str = "url") -> DataFrame:
+def audit_id_collisions(docs: DataFrame) -> DataFrame:
     """64-bit doc_id = xxhash64(url) expects ~2.7x10^4 birthday
     collisions at 10^12 docs (SCALE.md collision math); a collision
     silently merges two unrelated urls into one doc. This audit
     surfaces them — (doc_id, n_urls) for every id claimed by more
     than one distinct url — so a run can fail fast or route the
     colliding ids to the 128-bit path (ROADMAP)."""
-    return (docs.groupBy(id_col)
-            .agg(F.countDistinct(url_col).alias("n_urls"))
+    return (docs.groupBy("doc_id")
+            .agg(F.countDistinct("url").alias("n_urls"))
             .where(F.col("n_urls") > 1))

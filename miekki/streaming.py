@@ -186,13 +186,10 @@ def incremental_dedup_batch(spark: SparkSession, catalog: Catalog,
              .select("src", "dst").localCheckpoint())
 
     if catalog.exists("stream_labels"):
-        # fold the label delta ONCE per doc (min = latest, see
-        # read_stream_labels); the table is bucketed by doc_id so the
-        # fold is Sort-only — no Exchange — and both consumers below
-        # reuse the folded one-skinny-row-per-doc frame
-        cur = (catalog.read("stream_labels")
-               .groupBy("doc_id")
-               .agg(F.min("cluster_id").alias("cluster_id")))
+        # fold the label delta ONCE per doc; the table is bucketed by
+        # doc_id so the fold is Sort-only — no Exchange — and both
+        # consumers below reuse the folded one-skinny-row-per-doc frame
+        cur = read_stream_labels(catalog)
         ep = (edges.select(F.col("src").alias("doc_id"))
               .unionByName(edges.select(F.col("dst").alias("doc_id")))
               .distinct())
@@ -496,12 +493,12 @@ def sessionize_events_stream(events_stream: DataFrame,
                                     GroupStateTimeout.EventTimeTimeout))
 
 
-def windowed_event_counts(events: DataFrame, window: str = "1 hour",
-                          watermark: str = "2 hours") -> DataFrame:
-    """Watermarked tumbling-window aggregation over the events table
-    (works identically on a stream or a batch DataFrame)."""
-    return (events.withWatermark("ts", watermark)
-            .groupBy(F.window("ts", window).alias("w"), "event_type")
+def windowed_event_counts(events: DataFrame) -> DataFrame:
+    """Watermarked (2 hours) 1-hour tumbling-window aggregation over the
+    events table (works identically on a stream or a batch
+    DataFrame)."""
+    return (events.withWatermark("ts", "2 hours")
+            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
             .agg(F.count(F.lit(1)).alias("n_events"),
                  F.round(F.sum("value"), 2).alias("sum_value"))
             .select(F.col("w.start").alias("window_start"),

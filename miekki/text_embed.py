@@ -47,44 +47,37 @@ DIM_DEFAULT = 64
 SEED_DEFAULT = 1089
 
 
-def projection_matrix(b: int = B_EMBED, dim: int = DIM_DEFAULT,
-                      seed: int = SEED_DEFAULT) -> np.ndarray:
-    """(b, dim) ±1/sqrt(dim) matrix from a seeded PCG64 — every
-    executor re-derives the identical matrix."""
-    rng = np.random.Generator(np.random.PCG64(seed))
-    signs = rng.integers(0, 2, size=(b, dim)).astype(np.float64)
-    return (signs * 2.0 - 1.0) / np.sqrt(dim)
+def projection_matrix() -> np.ndarray:
+    """(B_EMBED, DIM_DEFAULT) ±1/sqrt(dim) matrix from a seeded PCG64 —
+    every executor re-derives the identical matrix."""
+    rng = np.random.Generator(np.random.PCG64(SEED_DEFAULT))
+    signs = rng.integers(0, 2, size=(B_EMBED, DIM_DEFAULT)).astype(np.float64)
+    return (signs * 2.0 - 1.0) / np.sqrt(DIM_DEFAULT)
 
 
-def text_embed(docs: DataFrame, dim: int = DIM_DEFAULT,
-               b: int = B_EMBED, k: int | None = None,
-               seed: int = SEED_DEFAULT,
-               norm_col: str = "norm") -> DataFrame:
-    """(doc_id, vec: array<double>) — see module doc. `k` defaults to
-    the repo's shingle width (DedupConfig.shingle_k) so the feature
-    space matches O5/O6's."""
-    if k is None:
-        from miekki.config import DedupConfig
+def text_embed(docs: DataFrame) -> DataFrame:
+    """(doc_id, vec: array<double>) of the ``norm`` column — see module
+    doc. Shingles are the repo's shingle width (DedupConfig.shingle_k)
+    so the feature space matches O5/O6's."""
+    from miekki.config import DedupConfig
 
-        k = DedupConfig().shingle_k
-    shingle_k = int(k)
-    n_dim, n_buckets, rng_seed = int(dim), int(b), int(seed)
+    shingle_k = DedupConfig().shingle_k
 
     def kernel(batches):
         import pyarrow as pa
 
         from miekki.kernels import _utf8_view, shingle_hashes
 
-        R = projection_matrix(n_buckets, n_dim, rng_seed)
+        R = projection_matrix()
         for batch in batches:
             doc_id = batch.column("doc_id")
             data, rel = _utf8_view(batch.column("norm_col_"))
             values, counts = shingle_hashes(data, rel, shingle_k)
             n_rows = len(counts)
-            buckets = (values % np.uint64(n_buckets)).astype(np.int64)
+            buckets = (values % np.uint64(B_EMBED)).astype(np.int64)
             row_idx = np.repeat(np.arange(n_rows, dtype=np.int64),
                                 counts)
-            v = np.zeros((n_rows, n_dim), dtype=np.float64)
+            v = np.zeros((n_rows, DIM_DEFAULT), dtype=np.float64)
             np.add.at(v, row_idx, R[buckets])
             nrm = np.linalg.norm(v, axis=1, keepdims=True)
             # a ±1 sum can cancel to exactly 0 only on adversarial
@@ -96,12 +89,13 @@ def text_embed(docs: DataFrame, dim: int = DIM_DEFAULT,
                 nrm[dead, 0] = np.linalg.norm(R[0])
             v /= nrm
             vec = pa.ListArray.from_arrays(
-                pa.array(np.arange(n_rows + 1, dtype=np.int32) * n_dim),
+                pa.array(np.arange(n_rows + 1, dtype=np.int32)
+                         * DIM_DEFAULT),
                 pa.array(v.reshape(-1)))
             yield pa.RecordBatch.from_arrays([doc_id, vec],
                                              names=["doc_id", "vec"])
 
     slim = docs.select(
         "doc_id",
-        F.coalesce(F.col(norm_col), F.lit("")).alias("norm_col_"))
+        F.coalesce(F.col("norm"), F.lit("")).alias("norm_col_"))
     return slim.mapInArrow(kernel, "doc_id long, vec array<double>")

@@ -64,8 +64,8 @@ def predict_lang(norm_col) -> F.Column:
     return F.when(best > 0, expr).otherwise(F.lit("und"))
 
 
-def lang_id(docs_norm: DataFrame, norm_col: str = "norm_text") -> DataFrame:
-    return docs_norm.withColumn("pred_lang", predict_lang(norm_col))
+def lang_id(docs_norm: DataFrame) -> DataFrame:
+    return docs_norm.withColumn("pred_lang", predict_lang("norm_text"))
 
 
 # --- token counting --------------------------------------------------
@@ -135,8 +135,8 @@ def quality_ok_duck() -> str:
             f" AND digit_ratio <= {QUALITY_MAX_DIGIT_RATIO})")
 
 
-def quality_score(docs_norm: DataFrame, norm_col: str = "norm_text") -> DataFrame:
-    cols = quality_columns(norm_col)
+def quality_score(docs_norm: DataFrame) -> DataFrame:
+    cols = quality_columns("norm_text")
     out = docs_norm
     for name, col in cols.items():
         out = out.withColumn(name, col)

@@ -52,17 +52,7 @@ UNIQUE_TIER = "unique"
 MIX_BUCKETS = 10000
 
 
-def _origin_rank_col(origin, priority: tuple[str, ...]) -> Column:
-    c = origin if isinstance(origin, Column) else F.col(origin)
-    expr = F.lit(len(priority))          # unknown origins rank weakest
-    for i, name in reversed(list(enumerate(priority))):
-        expr = F.when(c == name, F.lit(i)).otherwise(expr)
-    return expr
-
-
-def tier_labels(docs: DataFrame, edges: DataFrame,
-                priority: tuple[str, ...] = TIER_PRIORITY,
-                doc_col: str = "doc_id") -> DataFrame:
+def tier_labels(docs: DataFrame, edges: DataFrame) -> DataFrame:
     """Per-doc strongest dup tier → (doc_id, tier). ``edges`` is any
     (src, dst, origin) table — T4 candidate_edges in production, a
     portable reconstruction in the driver twin. A doc incident to no
@@ -72,31 +62,32 @@ def tier_labels(docs: DataFrame, edges: DataFrame,
     associative (partial-aggregates map-side — the same argument as
     X23's min(struct) winners), and the final left join is a plain
     equi-join AQE can broadcast when the edge side is small."""
-    rank = _origin_rank_col("origin", priority)
-    endpoints = (edges.select(F.col("src").alias(doc_col),
+    rank = F.lit(len(TIER_PRIORITY))     # unknown origins rank weakest
+    for i, name in reversed(list(enumerate(TIER_PRIORITY))):
+        rank = F.when(F.col("origin") == name, F.lit(i)).otherwise(rank)
+    endpoints = (edges.select(F.col("src").alias("doc_id"),
                               rank.alias("rk"))
-                 .unionByName(edges.select(F.col("dst").alias(doc_col),
+                 .unionByName(edges.select(F.col("dst").alias("doc_id"),
                                            rank.alias("rk"))))
-    best = endpoints.groupBy(doc_col).agg(F.min("rk").alias("rk"))
+    best = endpoints.groupBy("doc_id").agg(F.min("rk").alias("rk"))
     tier = F.lit(UNIQUE_TIER)
-    for i, name in reversed(list(enumerate(priority))):
+    for i, name in reversed(list(enumerate(TIER_PRIORITY))):
         tier = F.when(F.col("rk") == i, F.lit(name)).otherwise(tier)
-    return (docs.select(doc_col).join(best, doc_col, "left")
-            .select(doc_col, F.coalesce(
+    return (docs.select("doc_id").join(best, "doc_id", "left")
+            .select("doc_id", F.coalesce(
                 F.when(F.col("rk").isNotNull(), tier),
                 F.lit(UNIQUE_TIER)).alias("tier")))
 
 
-def tier_labels_duck_sql(docs_src: str, edges_src: str,
-                         priority: tuple[str, ...] = TIER_PRIORITY) -> str:
+def tier_labels_duck_sql(docs_src: str, edges_src: str) -> str:
     """DuckDB twin: same endpoint-union + min-rank + left-join shape,
     written independently in SQL. ``docs_src`` provides doc_id;
     ``edges_src`` provides (src, dst, origin)."""
     rank_case = "CASE origin " + " ".join(
-        f"WHEN '{name}' THEN {i}" for i, name in enumerate(priority)
-    ) + f" ELSE {len(priority)} END"
+        f"WHEN '{name}' THEN {i}" for i, name in enumerate(TIER_PRIORITY)
+    ) + f" ELSE {len(TIER_PRIORITY)} END"
     tier_case = "CASE rk " + " ".join(
-        f"WHEN {i} THEN '{name}'" for i, name in enumerate(priority)
+        f"WHEN {i} THEN '{name}'" for i, name in enumerate(TIER_PRIORITY)
     ) + f" ELSE '{UNIQUE_TIER}' END"
     return f"""
 WITH eps AS (
@@ -110,9 +101,7 @@ SELECT d.doc_id,
 FROM {docs_src} d LEFT JOIN best USING (doc_id)"""
 
 
-def pipeline_doc_tiers(docs_norm: DataFrame, edges: DataFrame,
-                       norm_col: str = "norm_text",
-                       priority: tuple[str, ...] = TIER_PRIORITY) -> DataFrame:
+def pipeline_doc_tiers(docs_norm: DataFrame, edges: DataFrame) -> DataFrame:
     """Production tier labels from the pipeline's own tables:
     T1 docs_norm (doc_id, norm_text) + T4 candidate_edges (src, dst,
     origin ∈ {minhash, simhash, substr}) → (doc_id, tier).
@@ -127,14 +116,14 @@ def pipeline_doc_tiers(docs_norm: DataFrame, edges: DataFrame,
     hot family (a window min would buffer it in ONE task) — emitting
     |family|-1 star edges, never all-pairs."""
     keyed = docs_norm.select(
-        "doc_id", F.md5(F.col(norm_col).cast("binary")).alias("key"))
+        "doc_id", F.md5(F.col("norm_text").cast("binary")).alias("key"))
     mins = keyed.groupBy("key").agg(F.min("doc_id").alias("src"))
     exact = (keyed.join(mins, "key")
              .where(F.col("doc_id") != F.col("src"))
              .select("src", F.col("doc_id").alias("dst"),
                      F.lit("exact").alias("origin")))
     all_edges = edges.select("src", "dst", "origin").unionByName(exact)
-    return tier_labels(docs_norm, all_edges, priority=priority)
+    return tier_labels(docs_norm, all_edges)
 
 
 # =====================================================================
@@ -145,14 +134,14 @@ CLUSTER_CAP_SALTS = 64
 
 
 def capped_topk(df: DataFrame, key_cols: list[str], k: int,
-                rank_col: str = "rk", tie_col: str = "doc_id",
+                rank_col: str = "rk",
                 salts: int = CLUSTER_CAP_SALTS) -> DataFrame:
-    """EXACT k-smallest-by-(rank, tie) rows per ``key_cols``, skew-free
+    """EXACT k-smallest-by-(rank, doc_id) rows per ``key_cols``, skew-free
     — the two-level selection X25 (webstats.domain_cap) established,
     factored out so any hot-key group (hosts, dup clusters, LSH
     buckets) reuses it:
 
-      level 1: row_number over (key, pmod(xxhash64(tie), salts)) —
+      level 1: row_number over (key, pmod(xxhash64(doc_id), salts)) —
                group size bounded by |key|/salts for any rank type or
                rank ties; keep rn <= k.
       level 2: row_number over key alone, over at most k*salts
@@ -161,12 +150,12 @@ def capped_topk(df: DataFrame, key_cols: list[str], k: int,
     Exact because membership in a group's k smallest is monotone
     under taking subsets that contain the row: level 1 never discards
     a level-2 winner. Adds an int column 'rn' (1..k)."""
-    w1 = Window.partitionBy(*key_cols, "__salt").orderBy(rank_col, tie_col)
+    w1 = Window.partitionBy(*key_cols, "__salt").orderBy(rank_col, "doc_id")
     lvl1 = (df.withColumn("__salt",
-                          F.pmod(F.xxhash64(tie_col), F.lit(salts)))
+                          F.pmod(F.xxhash64("doc_id"), F.lit(salts)))
             .withColumn("rn1", F.row_number().over(w1))
             .where(F.col("rn1") <= k).drop("rn1", "__salt"))
-    w2 = Window.partitionBy(*key_cols).orderBy(rank_col, tie_col)
+    w2 = Window.partitionBy(*key_cols).orderBy(rank_col, "doc_id")
     return (lvl1.withColumn("rn", F.row_number().over(w2))
             .where(F.col("rn") <= k)
             .withColumn("rn", F.col("rn").cast("int")))
@@ -206,11 +195,11 @@ def cluster_cap_duck_sql(labels_src: str, rank_expr: str, k: int) -> str:
 
 def mix_sample(docs: DataFrame, rates: tuple[tuple[str, float], ...],
                stratum_col: str = "lang", key_col: str = "url",
-               default_rate: float = 0.0, buckets: int = MIX_BUCKETS,
+               default_rate: float = 0.0,
                rank_col: Column | None = None) -> DataFrame:
     """Per-stratum deterministic subsampling → (doc_id, stratum,
-    kept). A doc is kept iff pmod(xxhash64(key), buckets) <
-    round(rate·buckets) for its stratum's rate (strata absent from
+    kept). A doc is kept iff pmod(xxhash64(key), MIX_BUCKETS) <
+    round(rate·MIX_BUCKETS) for its stratum's rate (strata absent from
     ``rates`` use ``default_rate``). Expectation-exact rates,
     reproducible membership (X26's argument: re-runs, appends, and
     repartitioning never flip a doc), and upstream-composable — the
@@ -230,13 +219,13 @@ def mix_sample(docs: DataFrame, rates: tuple[tuple[str, float], ...],
     # compositions stay independent.
     rk = (rank_col if rank_col is not None
           else F.pmod(F.xxhash64(F.lit("mix"), F.col(key_col)),
-                      F.lit(buckets)))
+                      F.lit(MIX_BUCKETS)))
     # a duplicated stratum key would duplicate every matching doc
     # through the join — reject it loudly rather than inflate counts
     strata = [s for s, _ in rates]
     if len(strata) != len(set(strata)):
         raise ValueError(f"duplicate strata in rates: {strata}")
-    default_below = int(round(default_rate * buckets))
+    default_below = int(round(default_rate * MIX_BUCKETS))
     base = docs.select("doc_id", stratum_col, rk.alias("rk"))
     if not rates:
         # empty rates = sample every stratum at the default rate
@@ -244,7 +233,7 @@ def mix_sample(docs: DataFrame, rates: tuple[tuple[str, float], ...],
         return base.select(
             "doc_id", F.col(stratum_col).alias("stratum"),
             (F.col("rk") < F.lit(default_below)).alias("kept"))
-    thresholds = [(s, int(round(r * buckets))) for s, r in rates]
+    thresholds = [(s, int(round(r * MIX_BUCKETS))) for s, r in rates]
     rates_df = spark.createDataFrame(thresholds, [stratum_col, "keep_below"])
     return (base
             .join(F.broadcast(rates_df), stratum_col, "left")
@@ -257,14 +246,13 @@ def mix_sample(docs: DataFrame, rates: tuple[tuple[str, float], ...],
 def mix_sample_duck_sql(src: str, rank_expr: str,
                         rates: tuple[tuple[str, float], ...],
                         stratum_expr: str = "lang",
-                        default_rate: float = 0.0,
-                        buckets: int = MIX_BUCKETS) -> str:
+                        default_rate: float = 0.0) -> str:
     """DuckDB twin: identical thresholds via a CASE chain (an
     independent formulation — no join). ``src`` provides doc_id and
     the stratum column."""
     whens = " ".join(
-        f"WHEN '{s}' THEN {int(round(r * buckets))}" for s, r in rates)
-    default_below = int(round(default_rate * buckets))
+        f"WHEN '{s}' THEN {int(round(r * MIX_BUCKETS))}" for s, r in rates)
+    default_below = int(round(default_rate * MIX_BUCKETS))
     return (f"SELECT doc_id, stratum, rk < keep_below AS kept FROM ("
             f"SELECT doc_id, {stratum_expr} AS stratum, {rank_expr} AS rk,"
             f" CASE {stratum_expr} {whens} ELSE {default_below} END"
@@ -275,9 +263,9 @@ def mix_sample_duck_sql(src: str, rank_expr: str,
 # X40 — soft dedup (cluster-size-aware probabilistic retention)
 # =====================================================================
 
-def _soft_keep_below(n: Column, alpha: float, buckets: int) -> Column:
-    """Integer keep-threshold floor(buckets * n^(-alpha)). For the
-    default alpha = 0.5 this is computed as buckets / sqrt(n): sqrt
+def _soft_keep_below(n: Column, alpha: float) -> Column:
+    """Integer keep-threshold floor(MIX_BUCKETS * n^(-alpha)). For the
+    default alpha = 0.5 this is computed as MIX_BUCKETS / sqrt(n): sqrt
     and division are IEEE-754 correctly-rounded on every engine, so
     the threshold — and therefore every kept bit — is bit-portable
     between Spark and the DuckDB twin. General alpha goes through
@@ -287,12 +275,11 @@ def _soft_keep_below(n: Column, alpha: float, buckets: int) -> Column:
     an integer boundary)."""
     nd = n.cast("double")
     if alpha == 0.5:
-        return F.floor(F.lit(float(buckets)) / F.sqrt(nd))
-    return F.floor(F.lit(float(buckets)) * F.pow(nd, F.lit(-alpha)))
+        return F.floor(F.lit(float(MIX_BUCKETS)) / F.sqrt(nd))
+    return F.floor(F.lit(float(MIX_BUCKETS)) * F.pow(nd, F.lit(-alpha)))
 
 
 def soft_dedup(labels: DataFrame, alpha: float = 0.5,
-               buckets: int = MIX_BUCKETS,
                rank_col: Column | None = None) -> DataFrame:
     """X40 — soft dedup: keep each member of a dup cluster of size n
     with probability p(n) = n^(-alpha), so the cluster retains
@@ -304,7 +291,7 @@ def soft_dedup(labels: DataFrame, alpha: float = 0.5,
     moderate repetition retains value but its marginal worth decays).
 
     Deterministic and composition-safe like X26/X29: a doc is kept
-    iff its domain-tagged hash bucket < floor(buckets / n^alpha), so
+    iff its domain-tagged hash bucket < floor(MIX_BUCKETS / n^alpha), so
     membership never flips across re-runs, appends, or
     repartitioning, and is independent of split/mix membership (each
     hash-rank operator salts its own literal domain tag). The
@@ -325,12 +312,12 @@ def soft_dedup(labels: DataFrame, alpha: float = 0.5,
     Output: (doc_id, cluster_id, n_members, kept)."""
     rk = (rank_col if rank_col is not None
           else F.pmod(F.xxhash64(F.lit("soft"), F.col("doc_id")),
-                      F.lit(buckets)))
+                      F.lit(MIX_BUCKETS)))
     base = labels.select("doc_id", "cluster_id", rk.alias("rk"))
     stats = base.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("n_members"),
         F.min("rk").alias("min_rk"))
-    keep_below = _soft_keep_below(F.col("n_members"), alpha, buckets)
+    keep_below = _soft_keep_below(F.col("n_members"), alpha)
     return (base.join(stats, "cluster_id")
             .select("doc_id", "cluster_id", "n_members",
                     ((F.col("rk") < keep_below)
@@ -338,8 +325,7 @@ def soft_dedup(labels: DataFrame, alpha: float = 0.5,
 
 
 def soft_dedup_duck_sql(labels_src: str, rank_expr: str,
-                        alpha: float = 0.5,
-                        buckets: int = MIX_BUCKETS) -> str:
+                        alpha: float = 0.5) -> str:
     """DuckDB twin: window functions over cluster_id instead of the
     groupBy+join decomposition (independent formulation). Only
     alpha = 0.5 is offered — the sqrt path is the one with a
@@ -347,7 +333,7 @@ def soft_dedup_duck_sql(labels_src: str, rank_expr: str,
     if alpha != 0.5:
         raise ValueError("twin pins alpha=0.5 (portable sqrt path)")
     return (f"SELECT doc_id, cluster_id, n_members,"
-            f" (rk < CAST(floor({buckets} / sqrt(n_members)) AS BIGINT)"
+            f" (rk < CAST(floor({MIX_BUCKETS} / sqrt(n_members)) AS BIGINT)"
             f" OR rk = min_rk) AS kept FROM ("
             f"SELECT doc_id, cluster_id, {rank_expr} AS rk,"
             f" count(*) OVER (PARTITION BY cluster_id) AS n_members,"

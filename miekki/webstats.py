@@ -117,12 +117,12 @@ def redact_pii_col(text_col) -> Column:
     return c
 
 
-def pii_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def pii_stats(df: DataFrame) -> DataFrame:
     """Map-only operator: doc_id + PII counts + redacted text."""
-    cols = pii_columns(text_col)
+    cols = pii_columns("text")
     return df.select("doc_id",
                      *[c.alias(n) for n, c in cols.items()],
-                     redact_pii_col(text_col).alias("redacted"))
+                     redact_pii_col("text").alias("redacted"))
 
 
 def pii_duck_cols(expr: str) -> str:
@@ -155,8 +155,7 @@ def host_col(url_col) -> Column:
         F.regexp_replace(hp, ":[0-9]+$", ""), "^www\\.", "")
 
 
-def domain_stats(df: DataFrame, url_col: str = "url",
-                 chars_col: str | None = None,
+def domain_stats(df: DataFrame, chars_col: str | None = None,
                  blocklist: tuple[str, ...] = ()) -> DataFrame:
     """Per-domain rollup: (host, n_docs[, sum_chars], blocked).
     One partial-aggregated shuffle keyed by host; the blocklist is a
@@ -165,7 +164,7 @@ def domain_stats(df: DataFrame, url_col: str = "url",
     aggs = [F.count(F.lit(1)).alias("n_docs")]
     if chars_col:
         aggs.append(F.sum(chars_col).cast("bigint").alias("sum_chars"))
-    out = (df.withColumn("host", host_col(url_col))
+    out = (df.withColumn("host", host_col("url"))
            .groupBy("host").agg(*aggs))
     blocked = (F.col("host").isin(*blocklist) if blocklist
                else F.lit(False))
@@ -226,8 +225,7 @@ def vocab_topk_duck_sql(norm_cte: str, k: int = 100) -> str:
 # X22 — repetition scores
 # =====================================================================
 
-def repetition_columns(norm_col, ns: tuple[int, ...] = (2, 3)) \
-        -> dict[str, Column]:
+def repetition_columns(norm_col) -> dict[str, Column]:
     """{dup{n}gram_frac: Column} — fraction of word n-grams that are
     repeats of an earlier n-gram in the same doc (0.0 for docs with
     <= 1 gram). Pure per-row array ops; rounded to 4 so float
@@ -244,7 +242,7 @@ def repetition_columns(norm_col, ns: tuple[int, ...] = (2, 3)) \
     # untouched.
     from miekki.exprs import zip_word_grams
 
-    for n in ns:
+    for n in (2, 3):
         grams = zip_word_grams(words, n)
         total = F.size(grams)
         frac = (total - F.size(F.array_distinct(grams))) / total
@@ -372,11 +370,11 @@ def line_dedup(docs: DataFrame, text_col: str = "text",
                     .alias("n_kept")))
 
 
-def paragraph_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def paragraph_dedup(docs: DataFrame) -> DataFrame:
     """Dolma-style corpus-wide keep-first PARAGRAPH dedup: X23's
     exact machinery with the blank-line separator. Same schema,
     same skew-safety, same twin (line_dedup_duck_sql(sep='\\n\\n'))."""
-    return line_dedup(docs, text_col, sep="\n\n")
+    return line_dedup(docs, "text", sep="\n\n")
 
 
 def line_dedup_duck_sql(src: str, sep: str = "\n") -> str:
@@ -409,9 +407,9 @@ SELECT d.doc_id, coalesce(kept.clean_text, '') AS clean_text,
 FROM d LEFT JOIN kept USING (doc_id)"""
 
 
-def repetition_duck_cols(expr: str, ns: tuple[int, ...] = (2, 3)) -> str:
+def repetition_duck_cols(expr: str) -> str:
     parts = []
-    for n in ns:
+    for n in (2, 3):
         k = n - 1
         grams = (f"list_transform(generate_series(1, greatest(1,"
                  f" length(str_split({expr}, ' ')) - {k})),"
@@ -431,7 +429,7 @@ def repetition_duck_cols(expr: str, ns: tuple[int, ...] = (2, 3)) -> str:
 DOMAIN_CAP_SALTS = 64
 
 
-def domain_cap(docs: DataFrame, k: int = 100, url_col: str = "url",
+def domain_cap(docs: DataFrame, k: int = 100,
                rank_col: Column | None = None,
                salts: int = DOMAIN_CAP_SALTS) -> DataFrame:
     """Keep at most ``k`` docs per registrable host, selected
@@ -463,7 +461,7 @@ def domain_cap(docs: DataFrame, k: int = 100, url_col: str = "url",
 
     rk = (rank_col if rank_col is not None
           else F.xxhash64(F.lit("dcap"), F.col("doc_id")))  # domain tag
-    base = docs.select("doc_id", host_col(url_col).alias("host"),
+    base = docs.select("doc_id", host_col("url").alias("host"),
                        rk.alias("rk"))
     return (capped_topk(base, ["host"], k, salts=salts)
             .select("doc_id", "host", "rn"))
@@ -494,7 +492,7 @@ SPLIT_BUCKETS = 10000
 def split_assign(docs: DataFrame,
                  weights: tuple[tuple[str, float], ...] = (
                      ("train", 0.98), ("val", 0.01), ("test", 0.01)),
-                 key_col: str = "url", buckets: int = SPLIT_BUCKETS,
+                 key_col: str = "url",
                  rank_col: Column | None = None) -> DataFrame:
     """Assign every doc to a named split by hashing a stable key —
     the reproducible alternative to rand(): re-running the pipeline,
@@ -502,8 +500,8 @@ def split_assign(docs: DataFrame,
     between splits (critical for eval hygiene: a val doc that drifts
     into train silently contaminates every later comparison).
 
-    bucket = pmod(xxhash64(key), buckets); split boundaries are the
-    cumulative weights scaled to ``buckets`` and rounded once, so the
+    bucket = pmod(xxhash64(key), SPLIT_BUCKETS); split boundaries are
+    the cumulative weights scaled to SPLIT_BUCKETS and rounded once, so the
     realized proportions are exact in expectation and every engine
     computing the same buckets agrees on every row. Map-only: one
     codegen'd projection, no shuffle, composes with any downstream
@@ -516,9 +514,9 @@ def split_assign(docs: DataFrame,
     # val/test entirely)
     rk = (rank_col if rank_col is not None
           else F.pmod(F.xxhash64(F.lit("split"), F.col(key_col)),
-                      F.lit(buckets)))
+                      F.lit(SPLIT_BUCKETS)))
     names = [n for n, _ in weights]
-    bounds = _split_bounds(weights, buckets)
+    bounds = _split_bounds(weights, SPLIT_BUCKETS)
     expr = F.lit(names[-1])
     for name, hi in reversed(list(zip(names[:-1], bounds[:-1]))):
         expr = F.when(rk < hi, F.lit(name)).otherwise(expr)
@@ -555,11 +553,10 @@ def split_leakage(labeled_splits: DataFrame) -> DataFrame:
 def split_assign_duck_sql(src: str, rank_expr: str,
                           weights: tuple[tuple[str, float], ...] = (
                               ("train", 0.98), ("val", 0.01),
-                              ("test", 0.01)),
-                          buckets: int = SPLIT_BUCKETS) -> str:
+                              ("test", 0.01))) -> str:
     """DuckDB twin: identical CASE chain over ``rank_expr``."""
     names = [n for n, _ in weights]
-    bounds = _split_bounds(weights, buckets)
+    bounds = _split_bounds(weights, SPLIT_BUCKETS)
     whens = " ".join(
         f"WHEN rk < {hi} THEN '{name}'"
         for name, hi in zip(names[:-1], bounds[:-1]))
