@@ -128,7 +128,7 @@ def main():
 
     from miekki.config import DedupConfig
     from miekki.pipeline import candidate_edges, dedup_labels
-    from miekki.session import build_spark
+    from miekki.session import build_spark, codegen_compiles
     from miekki.stages.normalize import normalize
     from miekki.stages.signatures import signatures_from_text
 
@@ -192,16 +192,17 @@ def main():
     # minimum is this repo's established uncontended-wall estimator
     # clamp >= 1: reps=0 would crash min([]) and leave n_labels unbound
     reps = max(1, int(os.environ.get("MIEKKI_BENCH_E2E_REPS", "2")))
-    e2e_walls, loads = [], []
+    e2e_walls, loads, compiles = [], [], []
     for i in range(reps):
         # 1-min load BEFORE the rep: bounds external tenant noise
         # entering the measurement (our own executors keep the average
         # elevated into the NEXT rep's reading — it bounds, not
         # measures; BENCH/BASELINE.md)
         loads.append(round(os.getloadavg()[0], 2))
-        t0 = time.time()
+        c0, t0 = codegen_compiles(spark), time.time()
         n_labels = dedup_labels(corpus, cfg).count()
         e2e_walls.append(round(time.time() - t0, 2))
+        compiles.append(codegen_compiles(spark) - c0)
         timings[f"dedup_e2e_rep{i + 1}"] = e2e_walls[-1]
     e2e = min(e2e_walls)
     timings["dedup_e2e"] = e2e
@@ -255,6 +256,10 @@ def main():
         # bounds external noise entering each e2e rep
         "calib_sec": calib,
         "loadavg_pre_rep": loads,
+        # generated classes compiled during each e2e rep: a warm rep
+        # should compile ~none (miekki/session.py sizes the cache); a
+        # count near a rep's distinct-class total is cache thrash
+        "codegen_compiles": compiles,
     }))
 
 

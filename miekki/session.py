@@ -50,6 +50,17 @@ def build_spark(
         # standard sizing for pUDF-heavy PySpark jobs). Default stays 1
         # so generic relational queries keep full slot counts.
         .config("spark.task.cpus", os.environ.get("MIEKKI_TASK_CPUS", "1"))
+        # compile each generated class once per JVM: the default cache
+        # of 100 classes is smaller than the pipeline's working set (the
+        # first perfbench dense_pairs op compiles 156 classes, the first
+        # pages_long op 246), so eviction recompiled ~185 and ~300
+        # classes per warm op. AQE renumbers codegen stages between
+        # runs, so with the stage id in the class name identical code
+        # misses the cache; three dedup_labels runs on the sf0.001
+        # fixtures (local[8]) compiled 263/256/265 classes by default,
+        # 257/50/24 with the larger cache alone and 207/0/0 with both.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     # local-cluster[N,cores,memMB] = N SEPARATE executor JVMs on one
     # host — the multi-JVM scaling protocol (BASELINE.md): executors
@@ -80,3 +91,13 @@ def build_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Janino has compiled in the driver JVM so far (the count
+    of ``CodegenMetrics``' compile-time histogram); the difference
+    across an action is that action's codegen cache misses. In local
+    mode tasks run in the driver JVM, so their compiles count too; on a
+    cluster each executor compiles, and counts, its own."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

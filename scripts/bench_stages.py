@@ -25,8 +25,10 @@ MIEKKI_BENCH_PARTITIONS and MIEKKI_MASTER, as in bench.py.
 
 Prints one JSON line: {"stages": {name: min sec}, "reps": {name:
 [sec, ...]}, "load": {name: [before, after]}, "steal_pct": {name: %},
-"total": sum of the dedup-path stages, "docs", "mult", "cpus",
-"master", "calib_sec"}.
+"compiles": {name: [classes compiled per rep, ...]}, "total": sum of
+the dedup-path stages, "docs", "mult", "cpus", "master", "calib_sec"}.
+A warm rep compiles ~no classes; counts near a stage's class total
+mean the codegen cache is evicting (miekki/session.py sizes it).
 """
 
 from __future__ import annotations
@@ -81,7 +83,7 @@ def main():
     from miekki.bpe import bpe_tokenize, fit_bpe
     from miekki.config import DedupConfig
     from miekki.pipeline import _doc_meta, dedup_labels
-    from miekki.session import build_spark
+    from miekki.session import build_spark, codegen_compiles
     from miekki.sketches import (cms_build, hdr_histogram, hdr_quantiles,
                                  hll_estimate, hll_registers)
     from miekki.stages.canonical import select_canonical
@@ -173,28 +175,30 @@ def main():
         os.makedirs(pdir, exist_ok=True)
         mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode
 
-    walls, reps, load, steal = {}, {}, {}, {}
+    walls, reps, load, steal, compiles = {}, {}, {}, {}, {}
     for name in only:
         needs, build = stages[name]
         ins = [ck(n) for n in needs]
-        times = []
+        times, compiles[name] = [], []
         l0, s0 = _load(), _steal()
         for rep in range(args.reps):
             spark.sparkContext.setJobDescription(f"{name} rep{rep + 1}")
-            t0 = time.time()
+            c0, t0 = codegen_compiles(spark), time.time()
             df = build(*ins)
             if name in COUNTED:
                 df.count()
             else:
                 df.write.format("noop").mode("overwrite").save()
             times.append(round(time.time() - t0, 2))
+            compiles[name].append(codegen_compiles(spark) - c0)
         # steal% = other tenants on the physical host during the stage
         steal[name] = round(100 * (_steal() - s0) / os.sysconf("SC_CLK_TCK")
                             / max(sum(times), 1e-9) / os.cpu_count(), 1)
         load[name] = [l0, _load()]
         walls[name], reps[name] = min(times), times
         print(f"  {name}: {times} (load {l0:.1f}->{load[name][1]:.1f},"
-              f" steal {steal[name]}%)", file=sys.stderr, flush=True)
+              f" steal {steal[name]}%, compiles {compiles[name]})",
+              file=sys.stderr, flush=True)
         if args.explain:
             with open(os.path.join(pdir, f"{name}.txt"), "w") as f:
                 f.write(df._jdf.queryExecution().explainString(
@@ -203,6 +207,7 @@ def main():
     spark.stop()
     print(json.dumps({
         "stages": walls, "reps": reps, "load": load, "steal_pct": steal,
+        "compiles": compiles,
         "total": round(sum(walls[s] for s in DEDUP_PATH if s in walls), 2),
         "docs": n_docs, "mult": mult, "cpus": int(cpus), "master": master,
         "calib_sec": calib}))
