@@ -25,6 +25,9 @@ Env knobs:
                       pipeline — docs/sec at mult=1 saturates at ~700
                       regardless of any kernel speedup
   SPARK_GRAFT_CPUS    cores for local[N]; default 32
+  SPARK_GRAFT_SF_DIR  testdata scale directory; default sf0.1
+  MIEKKI_MASTER       master URL; default local[$SPARK_GRAFT_CPUS]
+  MIEKKI_BENCH_PARTITIONS  corpus partitions; default 96
   MIEKKI_SHUFFLE_PARTITIONS  shuffle partitions; default 64
 """
 
@@ -34,11 +37,13 @@ import json
 import os
 import sys
 import time
+from typing import NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 
 
 def widen_documents(docs: pd.DataFrame, mult: int) -> pd.DataFrame:
@@ -85,6 +90,57 @@ def prepare_corpus(sf_dir: str, mult: int, cache_root: str) -> tuple[str, int]:
     return path, len(corpus)
 
 
+class BenchSetup(NamedTuple):
+    spark: SparkSession
+    corpus: DataFrame       # lazy: read + repartition, no action run
+    sf_dir: str
+    cpus: int
+    mult: int
+    master: str
+    n_docs: int
+    calib_sec: float | None
+
+
+def bench_setup(app_name: str, default_mult: int = 16,
+                calibrate: bool = True) -> BenchSetup:
+    """The setup every timing script shares, from the env knobs above:
+    build (or reuse) the corpus, run the box-speed probe before the
+    JVM exists, start the session and read the corpus split into
+    MIEKKI_BENCH_PARTITIONS partitions."""
+    from miekki.session import build_spark
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    mult = int(os.environ.get("MIEKKI_BENCH_MULT", str(default_mult)))
+    repo = os.path.dirname(os.path.abspath(__file__))
+    corpus_path, n_docs = prepare_corpus(sf_dir, mult,
+                                         os.path.join(repo, ".cache"))
+    # box-speed calibration BEFORE the JVM exists (quietest moment)
+    calib = calibration_probe() if calibrate else None
+    # the dedup pipeline is Arrow-kernel-heavy: each hot task runs a
+    # JVM thread + a python worker, and this box sustains ~16 such
+    # pairs before co-scheduling inflates per-task walls. Reserve
+    # 2 cpus per task ONLY above 16 threads (measured e2e: local[32]
+    # 125 s at task.cpus=1 vs 42 s at 2; but local[16] 205 s at 1 vs
+    # 309 s at 2 — below the knee the overlap is pure win).
+    if cpus > 16:
+        os.environ.setdefault("MIEKKI_TASK_CPUS", "2")
+    # MIEKKI_MASTER overrides the master URL — the multi-JVM scaling
+    # protocol passes local-cluster[N,cores,memMB] here (SPARK_GRAFT_CPUS
+    # must then name the TOTAL core count for the task.cpus knee above)
+    master = os.environ.get("MIEKKI_MASTER", f"local[{cpus}]")
+    spark = build_spark(master=master, app_name=app_name)
+    # the cached corpus is one small parquet file (< maxPartitionBytes
+    # = 1 split); real corpora arrive as thousands of splits — emulate
+    # that with an explicit repartition so all cores participate.
+    # FIXED partition count (not cpus-derived) so the scaling protocol
+    # varies parallelism only (BASELINE.md §scaling)
+    n_parts = int(os.environ.get("MIEKKI_BENCH_PARTITIONS", "96"))
+    corpus = spark.read.parquet(corpus_path).repartition(n_parts)
+    return BenchSetup(spark, corpus, sf_dir, cpus, mult, master, n_docs,
+                      calib)
+
+
 def calibration_probe() -> float:
     """Pinned single-process run of the repo's hottest kernel (fused
     shingle+minhash+simhash, miekki/kernels.py) over a deterministic
@@ -117,43 +173,17 @@ def calibration_probe() -> float:
 
 
 def main():
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    mult = int(os.environ.get("MIEKKI_BENCH_MULT", "16"))
-    repo = os.path.dirname(os.path.abspath(__file__))
-    corpus_path, n_docs = prepare_corpus(sf_dir, mult,
-                                         os.path.join(repo, ".cache"))
-    # box-speed calibration BEFORE the JVM exists (quietest moment)
-    calib = calibration_probe()
+    b = bench_setup("miekki-bench")
+    spark, sf_dir, n_docs = b.spark, b.sf_dir, b.n_docs
 
     from miekki.config import DedupConfig
     from miekki.pipeline import candidate_edges, dedup_labels
-    from miekki.session import build_spark, codegen_compiles
+    from miekki.session import codegen_compiles
     from miekki.stages.normalize import normalize
     from miekki.stages.signatures import signatures_from_text
 
     cfg = DedupConfig()
-    # the dedup pipeline is Arrow-kernel-heavy: each hot task runs a
-    # JVM thread + a python worker, and this box sustains ~16 such
-    # pairs before co-scheduling inflates per-task walls. Reserve
-    # 2 cpus per task ONLY above 16 threads (measured e2e: local[32]
-    # 125 s at task.cpus=1 vs 42 s at 2; but local[16] 205 s at 1 vs
-    # 309 s at 2 — below the knee the overlap is pure win).
-    if int(cpus) > 16:
-        os.environ.setdefault("MIEKKI_TASK_CPUS", "2")
-    # MIEKKI_MASTER overrides the master URL — the multi-JVM scaling
-    # protocol passes local-cluster[N,cores,memMB] here (SPARK_GRAFT_CPUS
-    # must then name the TOTAL core count for the task.cpus knee above)
-    master = os.environ.get("MIEKKI_MASTER", f"local[{cpus}]")
-    spark = build_spark(master=master, app_name="miekki-bench",
-                        extra_conf={"spark.ui.showConsoleProgress": "false"})
-    # the cached corpus is one small parquet file (< maxPartitionBytes
-    # = 1 split); real corpora arrive as thousands of splits — emulate
-    # that with an explicit repartition so all cores participate.
-    # FIXED partition count (not cpus-derived) so the scaling protocol
-    # varies parallelism only (BASELINE.md §scaling)
-    n_parts = int(os.environ.get("MIEKKI_BENCH_PARTITIONS", "96"))
-    corpus = spark.read.parquet(corpus_path).repartition(n_parts)
+    corpus = b.corpus
     # warm the JVM/python workers so stage timings measure compute
     corpus.count()
     corpus = corpus.localCheckpoint()
@@ -249,12 +279,12 @@ def main():
         "sf": sf_dir,
         "docs": n_docs,
         "docs_per_sec": round(n_docs / e2e, 1),
-        "cpus": int(cpus),
-        "mult": mult,
+        "cpus": b.cpus,
+        "mult": b.mult,
         # self-adjudication (VERDICT r4): compare calib_sec across
         # rounds to normalize out box-speed drift; loadavg_pre_rep
         # bounds external noise entering each e2e rep
-        "calib_sec": calib,
+        "calib_sec": b.calib_sec,
         "loadavg_pre_rep": loads,
         # generated classes compiled during each e2e rep: a warm rep
         # should compile ~none (miekki/session.py sizes the cache); a

@@ -25,8 +25,7 @@ def _get_spark(args):
     from miekki.session import build_spark
 
     return build_spark(master=args.master, app_name="miekki-cli",
-                       shuffle_partitions=args.shuffle_partitions,
-                       extra_conf={"spark.ui.showConsoleProgress": "false"})
+                       shuffle_partitions=args.shuffle_partitions)
 
 
 def _get_catalog(spark, args):

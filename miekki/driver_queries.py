@@ -11,7 +11,11 @@ PORTABLE bucketing (md5 of normalized text) so the *operator shape*
 — two-level salted star-edge extraction, large/small-star rounds, CC
 fixpoint, canonical window — is genuinely cross-checked even though
 xxhash64/MinHash themselves are not SQL-portable (those are covered
-by the pure-Python oracle in tests/ and by rows-only driver checks).
+by the pure-Python oracle in tests/ and by contract keys whose oracle
+pins the required booleans).
+
+QUERIES and ORACLE_SQL at the end of the file are the registry: the
+50 driver keys in driver order, each with its oracle.
 """
 
 from __future__ import annotations
@@ -22,7 +26,25 @@ from collections.abc import Callable
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from miekki.bloom import bloom_decontam_duck_sql
+from miekki.chunking import chunk_duck_sql, chunk_tokens_duck_sql
 from miekki.config import DedupConfig
+from miekki.decontam import decontaminate_duck_sql, url_dedup_duck_sql
+from miekki.dsir import RANK_BUCKETS, dsir_duck_sql
+from miekki.lm import lm_score_duck_sql
+from miekki.packing import pack_pieces_duck_sql, seq_pack_duck_sql
+from miekki.sharding import shard_assign_duck_sql
+from miekki.sketches import (cms_vocab_duck_sql, hll_vocab_duck_sql,
+                             len_quantiles_duck_sql)
+from miekki.stages.lsh import lsh_plan_duck_sql
+from miekki.textstats import lang_id_duck_sql, quality_duck_cols
+from miekki.tiers import (MIX_BUCKETS, cluster_cap_duck_sql,
+                          mix_sample_duck_sql, soft_dedup_duck_sql,
+                          tier_labels_duck_sql)
+from miekki.webstats import (SPLIT_BUCKETS, domain_cap_duck_sql,
+                             domain_stats_duck_sql, filter_battery_duck_sql,
+                             line_dedup_duck_sql, pii_duck_cols,
+                             repetition_duck_cols, split_assign_duck_sql)
 
 CFG = DedupConfig()
 
@@ -185,15 +207,21 @@ def q_edge_union(spark, sf_dir):
 
 
 def q_cc_largestar(spark, sf_dir):
-    from miekki.stages.cc import large_star
+    """One large-star pass of cc_fixpoint over the chain edges."""
+    from miekki.stages.cc import _large_pass
 
-    return large_star(_chain_edges(spark, sf_dir))
+    return _large_pass(_chain_edges(spark, sf_dir))[0].distinct()
 
 
 def q_cc_smallstar(spark, sf_dir):
-    from miekki.stages.cc import small_star
+    """One small-star pass of cc_fixpoint over the chain edges, fed in
+    the (greater, lesser) orientation large-star output has."""
+    from miekki.stages.cc import _small_pass
 
-    return small_star(_chain_edges(spark, sf_dir))
+    e = _chain_edges(spark, sf_dir)
+    return _small_pass(e.select(F.greatest("src", "dst").alias("src"),
+                                F.least("src", "dst").alias("dst"))
+                       .where("src != dst"))
 
 
 def q_cc_labels(spark, sf_dir):
@@ -593,21 +621,6 @@ def q_incremental_dedup(spark, sf_dir):
 # training-data extras: text analysis, similarity search, multimodal
 # --------------------------------------------------------------------
 
-def q_lang_id(spark, sf_dir):
-    from miekki.textstats import predict_lang
-
-    return (_norm_docs(spark, sf_dir)
-            .select("doc_id", predict_lang("norm").alias("pred_lang")))
-
-
-def q_quality(spark, sf_dir):
-    from miekki.textstats import quality_columns
-
-    df = _norm_docs(spark, sf_dir)
-    cols = quality_columns("norm")
-    return df.select("doc_id", *[c.alias(n) for n, c in cols.items()])
-
-
 def q_text_quality(spark, sf_dir):
     """lang_id + quality_score + repetition folded (r5: frees registry
     slots for hll_vocab / len_quantiles under the driver's 50-key
@@ -672,11 +685,12 @@ def q_ngram_jaccard(spark, sf_dir):
                     .alias("jaccard_w3")))
 
 
-# messy-URL synthesis for the url_canon cross-check: both dialects
-# build the SAME deterministic url from doc_id (mixed-case scheme/
-# host, default + non-default ports, trailing slashes, tracking
-# params, fragments), then each engine canonicalizes it with its own
-# independently-written implementation (miekki/decontam.py).
+# messy-URL synthesis for the domain_stats / domain_cap / url_dedup
+# cross-checks: both dialects build the SAME deterministic url from
+# doc_id (mixed-case scheme/host, default + non-default ports,
+# trailing slashes, tracking params, fragments), then each engine
+# canonicalizes it with its own independently-written implementation
+# (miekki/decontam.py).
 _MESSY_URL_SPARK = (
     "concat(case when pmod(doc_id, 2) = 0 then 'HTTPS' else 'Http' end,"
     " '://WWW.Site', cast(pmod(doc_id, 7) as string), '.Example.COM',"
@@ -703,17 +717,6 @@ _MESSY_URL_DUCK = (
     " || CASE WHEN ((doc_id % 5) + 5) % 5 = 0 THEN '&fbclid=xYz'"
     "    ELSE '' END"
     " || '#Sec-' || CAST(((doc_id % 5) + 5) % 5 AS VARCHAR)")
-
-
-def q_url_canon(spark, sf_dir):
-    """X18: canonicalize a synthesized messy URL per doc (map-only,
-    codegen'd string ops). DuckDB recomputes the full per-row value
-    with its own implementation of the pinned spec."""
-    from miekki.decontam import canonical_url_col
-
-    return (_t(spark, sf_dir, "documents")
-            .select("doc_id", F.expr(_MESSY_URL_SPARK).alias("url"))
-            .select("doc_id", canonical_url_col("url").alias("canon_url")))
 
 
 # Recrawl variant of the messy-URL fixture: page identity is
@@ -814,14 +817,6 @@ def q_domain_stats(spark, sf_dir):
         chars_col="n_chars", blocklist=("site3.example.com",))
 
 
-def q_vocab_topk(spark, sf_dir):
-    """X21: corpus vocabulary top-100 (map-side partial aggregation +
-    TakeOrderedAndProject; ties broken by token in both engines)."""
-    from miekki.webstats import vocab_topk
-
-    return vocab_topk(_norm_docs(spark, sf_dir), k=100)
-
-
 def q_cms_vocab(spark, sf_dir):
     """X44: X21's exact vocabulary top-100 next to the Count-Min
     Sketch estimate for each token (p=md5 twin mode, d=4, w=4096) —
@@ -832,16 +827,6 @@ def q_cms_vocab(spark, sf_dir):
     from miekki.sketches import cms_vocab
 
     return cms_vocab(_norm_docs(spark, sf_dir), k=100, hash_fn="md5")
-
-
-def q_repetition(spark, sf_dir):
-    """X22: Gopher-style duplicate-n-gram fractions (n = 2, 3),
-    map-only per-row array ops; full per-row DuckDB value twin."""
-    from miekki.webstats import repetition_columns
-
-    cols = repetition_columns("norm")
-    return _norm_docs(spark, sf_dir).select(
-        "doc_id", *[c.alias(n) for n, c in cols.items()])
 
 
 # line-ified text for the line_dedup cross-check: the fixture text is
@@ -1044,7 +1029,6 @@ def q_curate_funnel(spark, sf_dir):
         # recompute Σ n_chunks from the pinned X34 arithmetic over the
         # curated survivors' normalized text
         from miekki.config import DedupConfig
-        from miekki.exprs import doc_id_sql
         from miekki.stages.normalize import normalize
 
         cfg = DedupConfig()
@@ -1460,13 +1444,23 @@ def _media(spark, sf_dir):
     return synthesize_media(_t(spark, sf_dir, "documents"))
 
 
+def _same_row_set(got: DataFrame, key: str, want: DataFrame,
+                  flag: str) -> DataFrame:
+    """``got`` full-outer-joined to the ``key`` set of ``want``: a
+    wanted row ``got`` lacks has every boolean of ``got`` false, and a
+    ``got`` row not wanted has the added ``flag`` column false, so
+    "every boolean true" also says the two row sets are equal."""
+    j = got.join(want.select(key, F.lit(True).alias(flag)), key, "full")
+    return j.select(*[F.coalesce(c, F.lit(False)).alias(c)
+                      if t == "boolean" else c for c, t in j.dtypes])
+
+
 def q_media_decode(spark, sf_dir):
     """X11 — per-row decode contract (r3): every media row decodes
     exactly once (row set == documents), the kind mapping is the
-    pinned doc_id%3 one (DuckDB recomputes it), and the fake-decode
-    dimensions respect the stub's documented bounds (width/height in
-    [16, 1039], channels in [1, 4], image/audio frames == 1, video
-    frames in [2, 9])."""
+    pinned doc_id%3 one, and the fake-decode dimensions respect the
+    stub's documented bounds (width/height in [16, 1039], channels in
+    [1, 4], image/audio frames == 1, video frames in [2, 9])."""
     from miekki.multimodal import decode_media
 
     d = decode_media(_media(spark, sf_dir))
@@ -1477,8 +1471,17 @@ def q_media_decode(spark, sf_dir):
     frames_ok = F.when(F.col("kind") == "video",
                        F.col("n_frames").between(2, 9)) \
                  .otherwise(F.col("n_frames") == 1)
-    return d.select("media_id", "kind", dims_ok.alias("dims_ok"),
-                    frames_ok.alias("frames_ok"))
+    r = F.pmod(F.col("media_id"), F.lit(3))
+    pinned = (F.when(r == 0, "image").when(r == 1, "audio")
+              .otherwise("video"))
+    return _same_row_set(
+        d.select("media_id", "kind", dims_ok.alias("dims_ok"),
+                 frames_ok.alias("frames_ok"),
+                 (F.col("kind") == pinned).alias("kind_pinned")),
+        "media_id",
+        _t(spark, sf_dir, "documents").select(
+            F.col("doc_id").alias("media_id")),
+        "in_documents")
 
 
 def q_media_features(spark, sf_dir):
@@ -1499,21 +1502,28 @@ def q_media_frames(spark, sf_dir):
     """X13 — 1→N frame fan-out contract (r3): every NON-EMPTY video
     yields between 1 and max_frames frames with dense 0..n-1 indices
     and non-empty payloads; row set == the non-empty video subset of
-    documents (DuckDB recomputes doc_id%3 == 2 and the length gate —
-    empty payloads yield no frames by pinned spec)."""
+    documents (doc_id%3 == 2 and the length gate — empty payloads
+    yield no frames by pinned spec)."""
     from miekki.multimodal import sample_frames
 
     frames = sample_frames(_media(spark, sf_dir))
-    return (frames.groupBy("media_id")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.max("frame_idx").alias("mx"),
-                 F.countDistinct("frame_idx").alias("nd"),
-                 F.min(F.length("frame_payload")).alias("minlen"))
-            .select("media_id",
-                    F.col("n").between(1, 4).alias("count_ok"),
-                    ((F.col("mx") == F.col("n") - 1)
-                     & (F.col("nd") == F.col("n"))).alias("idx_dense"),
-                    (F.col("minlen") > 0).alias("payload_nonempty")))
+    videos = _t(spark, sf_dir, "documents").where(
+        (F.pmod(F.col("doc_id"), F.lit(3)) == 2)
+        & (F.length(F.coalesce(F.col("text"), F.lit(""))) > 0))
+    return _same_row_set(
+        frames.groupBy("media_id")
+        .agg(F.count(F.lit(1)).alias("n"),
+             F.max("frame_idx").alias("mx"),
+             F.countDistinct("frame_idx").alias("nd"),
+             F.min(F.length("frame_payload")).alias("minlen"))
+        .select("media_id",
+                F.col("n").between(1, 4).alias("count_ok"),
+                ((F.col("mx") == F.col("n") - 1)
+                 & (F.col("nd") == F.col("n"))).alias("idx_dense"),
+                (F.col("minlen") > 0).alias("payload_nonempty")),
+        "media_id",
+        videos.select(F.col("doc_id").alias("media_id")),
+        "nonempty_video")
 
 
 def q_windowed_events(spark, sf_dir):
@@ -1590,631 +1600,20 @@ def q_sessions(spark, sf_dir):
 def q_doc_fingerprint(spark, sf_dir):
     """X6 — winnowing fingerprint contract (r3): a doc gets >= 1
     anchor iff its normalized UTF-8 byte length >= anchor_k (one
-    rolling-hash window exists), which DuckDB can decide per doc with
-    strlen() — so the row SET is fully oracle-checked even though the
-    fingerprint values are engine-specific (those are pinned by the
-    winnowing-oracle pytest suite)."""
+    rolling-hash window exists), so the anchored row SET is checked
+    even though the fingerprint values are engine-specific (those are
+    pinned by the winnowing-oracle pytest suite)."""
     from miekki.stages.substr import anchor_table
 
     docs = _norm_docs(spark, sf_dir).withColumnRenamed("norm", "norm_text")
-    return (anchor_table(docs, CFG)
-            .groupBy("doc_id")
-            .agg((F.count(F.lit(1)) >= 1).alias("has_anchors")))
+    return _same_row_set(
+        anchor_table(docs, CFG).groupBy("doc_id")
+        .agg((F.count(F.lit(1)) >= 1).alias("has_anchors")),
+        "doc_id",
+        docs.where(F.octet_length("norm_text") >= CFG.anchor_k),
+        "len_ge_anchor_k")
 
 
-# --------------------------------------------------------------------
-# registry + DuckDB oracles
-# --------------------------------------------------------------------
-
-QUERIES: dict[str, Callable] = {
-    "scan_corpus": q_scan_corpus,
-    "normalize": q_normalize,
-    "shingles": q_shingles,
-    "profile": q_profile,
-    "profile_approx": q_profile_approx,
-    "exact_dups": q_exact_dups,
-    "canonical": q_canonical,
-    "cluster_stats": q_cluster_stats,
-    "bucket_edges": q_bucket_edges,
-    "edge_union": q_edge_union,
-    "cc_largestar": q_cc_largestar,
-    "cc_smallstar": q_cc_smallstar,
-    "cc_labels": q_cc_labels,
-    "q1_lineitem_agg": q1_lineitem_agg,
-    "q3_join": q3_join,
-    "q_window": q_window,
-    "q_topk": q_topk,
-    "q_setops": q_setops,
-    "events_json": q_json,
-    "determinism": q_determinism,
-    "simhash_sorted": q_simhash_sorted,
-    "metrics_rollup": q_metrics_rollup,
-    "extract_invariant": q_extract_invariant,
-    "minhash_sig": q_minhash_contract,
-    "simhash_sig": q_simhash_contract,
-    "bands": q_bands,
-    "simhash_pairs": q_simhash_pairs,
-    "substr_pairs": q_substr_pairs,
-    "verify_jaccard": q_verify_jaccard,
-    "dedup_pipeline": q_dedup_pipeline,
-    "recall": q_recall,
-    "incremental_dedup": q_incremental_dedup,
-    # training-data extras
-    "lang_id": q_lang_id,
-    "quality_score": q_quality,
-    "text_quality": q_text_quality,
-    "len_quantiles": q_len_quantiles,
-    "hll_vocab": q_hll_vocab,
-    "ngram_jaccard": q_ngram_jaccard,
-    "url_canon": q_url_canon,
-    "url_dedup": q_url_dedup,
-    "decontam": q_decontam,
-    "pii_stats": q_pii,
-    "domain_stats": q_domain_stats,
-    "vocab_topk": q_vocab_topk,
-    "cms_vocab": q_cms_vocab,
-    "repetition": q_repetition,
-    "line_dedup": q_line_dedup,
-    "filter_battery": q_filter_battery,
-    "domain_cap": q_domain_cap,
-    "split_assign": q_split_assign,
-    "shard_assign": q_shard_assign,
-    "dedup_tiers": q_dedup_tiers,
-    "cluster_cap": q_cluster_cap,
-    "soft_dedup": q_soft_dedup,
-    "lsh_plan": q_lsh_plan,
-    "bloom_decontam": q_bloom_decontam,
-    "mix_sample": q_mix_sample,
-    "lm_score": q_lm_score,
-    "quality_clf": q_quality_clf,
-    "curate_funnel": q_curate_funnel,
-    "semdedup_text": q_semdedup_text,
-    "dsir_select": q_dsir_select,
-    "seq_pack": q_seq_pack,
-    "chunk_passages": q_chunk_passages,
-    "pack_pieces": q_pack_pieces,
-    "chunk_tokens": q_chunk_tokens,
-    "semantic_dedup": q_semantic_dedup,
-    "embedding_norms": q_embedding_norms,
-    "ann_brute": q_ann_brute,
-    "ann_lsh": q_ann_lsh,
-    "ann_ivf": q_ann_ivf,
-    "embedding_dedup": q_embedding_dedup,
-    "media_decode": q_media_decode,
-    "media_features": q_media_features,
-    "media_frames": q_media_frames,
-    "doc_fingerprint": q_doc_fingerprint,
-    "windowed_events": q_windowed_events,
-    "sessions": q_sessions,
-    "id_collisions": q_id_collisions,
-    "asof_join": q_asof_join,
-    "semi_anti": q_semi_anti,
-}
-
-_NORM_CTE = f"SELECT doc_id, {_NORM_DUCK} AS norm FROM documents"
-_BUCKET1 = (f"SELECT doc_id, substr(md5(norm), 1, 1) AS bucket"
-            f" FROM ({_NORM_CTE})")
-# ((x % 4) + 4) % 4 matches Spark pmod for negative doc_ids too
-# (ADVICE r1: plain doc_id % 4 is negative for negative ids in DuckDB)
-_BUCKET2 = (f"SELECT doc_id, substr(md5(norm), 1, 2) AS bucket,"
-            f" ((doc_id % 4) + 4) % 4 AS salt FROM ({_NORM_CTE})")
-_CHAIN = (f"SELECT src, dst FROM (SELECT lag(doc_id) OVER"
-          f" (PARTITION BY bucket ORDER BY doc_id) AS src,"
-          f" doc_id AS dst FROM ({_BUCKET1})) WHERE src IS NOT NULL")
-
-ORACLE_SQL: dict[str, str] = {
-    "scan_corpus": (
-        "SELECT lang, count(*) AS n_docs,"
-        " CAST(sum(n_chars) AS BIGINT) AS total_chars"
-        " FROM documents GROUP BY lang"),
-    "normalize": f"SELECT doc_id, {_NORM_DUCK} AS norm_text FROM documents",
-    "shingles": (
-        "SELECT doc_id, CAST(length(list_distinct(list_transform("
-        f"generate_series(1, greatest(1, length(norm) - {CFG.shingle_k - 1})),"
-        f" i -> substr(norm, CAST(i AS INT), {CFG.shingle_k})))) AS BIGINT)"
-        f" AS n_shingles FROM ({_NORM_CTE})"),
-    "profile": (
-        "SELECT lang, count(*) AS n_docs,"
-        " CAST(count(DISTINCT source) AS BIGINT) AS n_sources,"
-        " round(avg(n_chars), 3) AS avg_chars"
-        " FROM documents GROUP BY lang"),
-    # the sketch value is engine-specific; the pinned contract is the
-    # HLL++ accuracy bound (within max(5%, 1) of exact)
-    "profile_approx": (
-        "SELECT lang, true AS within_5pct FROM documents GROUP BY lang"),
-    "windowed_events": (
-        "SELECT CAST(epoch(time_bucket(INTERVAL '1 hour', ts)) AS BIGINT)"
-        " AS window_epoch, event_type, count(*) AS n_events,"
-        " round(sum(value), 2) AS sum_value FROM events"
-        " GROUP BY 1, 2"),
-    "asof_join": (
-        "SELECT a.event_id, a.user_id,"
-        " CAST(floor(epoch(a.ts)) AS BIGINT) AS click_epoch,"
-        " round(b.value, 2) AS prev_purchase_value"
-        " FROM (SELECT * FROM events WHERE event_type = 'click') a"
-        " ASOF LEFT JOIN"
-        " (SELECT * FROM events WHERE event_type = 'purchase') b"
-        " ON a.user_id = b.user_id AND b.ts <= a.ts"),
-    "semi_anti": (
-        "SELECT (SELECT count(*) FROM documents WHERE doc_id IN"
-        " (SELECT vec_id FROM embeddings)) AS n_semi,"
-        " (SELECT count(*) FROM documents WHERE doc_id NOT IN"
-        " (SELECT vec_id FROM embeddings)) AS n_anti"),
-    "id_collisions": (
-        "SELECT doc_id, n_urls FROM ("
-        " SELECT ((doc_id % 997) + 997) % 997 AS doc_id,"
-        " CAST(count(DISTINCT doc_id) AS BIGINT) AS n_urls"
-        " FROM documents GROUP BY 1) WHERE n_urls > 1"),
-    # floor(epoch(...)) matches Spark's cast(timestamp as long)
-    # truncation; a bare CAST in DuckDB would ROUND the sub-second part
-    "sessions": (
-        "WITH x AS (SELECT user_id, ts, event_id, value,"
-        " CASE WHEN lag(ts) OVER w IS NULL"
-        " OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE THEN 1 ELSE 0 END"
-        " AS ns FROM events"
-        " WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),"
-        " y AS (SELECT *, sum(ns) OVER (PARTITION BY user_id"
-        " ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS sess FROM x)"
-        " SELECT user_id,"
-        " CAST(floor(epoch(min(ts))) AS BIGINT) AS start_epoch,"
-        " CAST(floor(epoch(max(ts))) AS BIGINT) AS end_epoch,"
-        " count(*) AS n_events, round(sum(value), 2) AS sum_value"
-        " FROM y GROUP BY user_id, sess"),
-    "exact_dups": (
-        "SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(norm))"
-        f" AS exact_cluster FROM ({_NORM_CTE})"),
-    "canonical": (
-        "WITH c AS (SELECT doc_id,"
-        " TIMESTAMP '2025-01-01 00:00:00' + INTERVAL (doc_id * 137) SECOND"
-        " AS warc_ts,"
-        " min(doc_id) OVER (PARTITION BY md5(norm)) AS cluster"
-        f" FROM ({_NORM_CTE}))"
-        " SELECT doc_id, cluster, (row_number() OVER (PARTITION BY cluster"
-        " ORDER BY warc_ts, doc_id)) = 1 AS is_canonical FROM c"),
-    "cluster_stats": (
-        "WITH cl AS (SELECT min(doc_id) OVER (PARTITION BY md5(norm))"
-        f" AS exact_cluster FROM ({_NORM_CTE})),"
-        " s AS (SELECT exact_cluster, count(*) AS n_docs FROM cl"
-        " GROUP BY exact_cluster)"
-        " SELECT n_docs, count(*) AS n_clusters FROM s GROUP BY n_docs"),
-    "bucket_edges": (
-        f"WITH b AS ({_BUCKET2}),"
-        " l1 AS (SELECT *, min(doc_id) OVER (PARTITION BY bucket, salt)"
-        " AS m1 FROM b),"
-        " e1 AS (SELECT m1 AS src, doc_id AS dst FROM l1 WHERE doc_id <> m1),"
-        " sm AS (SELECT DISTINCT bucket, salt, m1 FROM l1),"
-        " l2 AS (SELECT *, min(m1) OVER (PARTITION BY bucket) AS m2 FROM sm),"
-        " e2 AS (SELECT m2 AS src, m1 AS dst FROM l2 WHERE m1 <> m2)"
-        " SELECT DISTINCT src, dst FROM (SELECT * FROM e1"
-        " UNION ALL SELECT * FROM e2)"),
-    "edge_union": (
-        f"WITH b AS ({_BUCKET2}),"
-        " l1 AS (SELECT *, min(doc_id) OVER (PARTITION BY bucket, salt)"
-        " AS m1 FROM b),"
-        " e1 AS (SELECT m1 AS src, doc_id AS dst FROM l1 WHERE doc_id <> m1),"
-        " sm AS (SELECT DISTINCT bucket, salt, m1 FROM l1),"
-        " l2 AS (SELECT *, min(m1) OVER (PARTITION BY bucket) AS m2 FROM sm),"
-        " e2 AS (SELECT m2 AS src, m1 AS dst FROM l2 WHERE m1 <> m2)"
-        " SELECT DISTINCT src, dst FROM (SELECT * FROM e1"
-        " UNION ALL SELECT * FROM e2"
-        f" UNION ALL SELECT * FROM ({_CHAIN}))"),
-    "cc_largestar": (
-        f"WITH e AS ({_CHAIN}),"
-        " sym AS (SELECT src AS u, dst AS v FROM e WHERE src <> dst"
-        " UNION SELECT dst, src FROM e WHERE src <> dst),"
-        " m AS (SELECT u, least(min(v), u) AS m FROM sym GROUP BY u)"
-        " SELECT DISTINCT s.v AS src, m.m AS dst FROM sym s"
-        " JOIN m USING (u) WHERE s.v > s.u AND s.v <> m.m"),
-    "cc_smallstar": (
-        f"WITH e0 AS ({_CHAIN}),"
-        " e AS (SELECT DISTINCT greatest(src, dst) AS u, least(src, dst) AS v"
-        " FROM e0 WHERE src <> dst),"
-        " m AS (SELECT u, min(v) AS mn FROM e GROUP BY u)"
-        " SELECT DISTINCT src, dst FROM ("
-        "  SELECT e.v AS src, m.mn AS dst FROM e JOIN m USING (u)"
-        "  UNION ALL SELECT u AS src, mn AS dst FROM m"
-        " ) WHERE src <> dst"),
-    "cc_labels": (
-        "SELECT doc_id, min(doc_id) OVER (PARTITION BY bucket) AS cluster_id"
-        f" FROM ({_BUCKET1})"),
-    "q1_lineitem_agg": (
-        "SELECT l_returnflag, l_linestatus,"
-        " round(sum(l_quantity), 2) AS sum_qty,"
-        " round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,"
-        " count(*) AS n_rows FROM lineitem"
-        " WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'"
-        " GROUP BY l_returnflag, l_linestatus"),
-    "q3_join": (
-        "SELECT c_mktsegment,"
-        " round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,"
-        " CAST(count(DISTINCT o_orderkey) AS BIGINT) AS n_orders"
-        " FROM customer JOIN orders ON c_custkey = o_custkey"
-        " JOIN lineitem ON o_orderkey = l_orderkey"
-        " GROUP BY c_mktsegment"),
-    "q_window": (
-        "SELECT o_orderkey, CAST(row_number() OVER (PARTITION BY o_custkey"
-        " ORDER BY o_orderdate, o_orderkey) AS INT) AS rn FROM orders"),
-    "q_topk": (
-        "SELECT o_orderkey, o_totalprice FROM orders"
-        " ORDER BY o_totalprice DESC, o_orderkey LIMIT 20"),
-    "q_setops": (
-        "SELECT (SELECT count(*) FROM (SELECT DISTINCT o_custkey FROM orders"
-        " EXCEPT SELECT DISTINCT c_custkey FROM customer)) AS n_orphans,"
-        " (SELECT count(*) FROM (SELECT DISTINCT c_custkey FROM customer"
-        " INTERSECT SELECT DISTINCT o_custkey FROM orders)) AS n_active"),
-    "determinism": ("SELECT CAST(0 AS BIGINT) AS n_only_first,"
-                    " CAST(0 AS BIGINT) AS n_only_second"),
-    "events_json": (
-        "SELECT event_type,"
-        " CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT))"
-        " AS BIGINT) AS sum_k,"
-        " round(sum(value), 2) AS sum_value FROM events GROUP BY event_type"),
-    "metrics_rollup": (
-        "SELECT coalesce(l_returnflag, 'ALL') AS rflag,"
-        " coalesce(l_linestatus, 'ALL') AS lstatus, count(*) AS n"
-        " FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)"),
-    # extract_invariant: Spark computes the real per-row byte-identity
-    # check; the oracle pins the REQUIRED answer (0 violations).
-    "extract_invariant": "SELECT CAST(0 AS BIGINT) AS n_violations",
-    # ---- contract oracles (r3): Spark computes the real property;
-    # DuckDB pins the REQUIRED booleans (the profile_approx /
-    # extract_invariant pattern). Hash values themselves stay pinned
-    # bit-for-bit by the pure-Python oracle pytest suite.
-    "bands": ("SELECT true AS count_complete, true AS all_band_ids,"
-              " true AS hashes_nontrivial"),
-    "simhash_pairs": ("SELECT true AS hamming_bounded,"
-                      " true AS src_lt_dst, true AS nonempty"),
-    "minhash_sig": ("SELECT true AS one_sig_per_doc,"
-                    " true AS doc_ids_unique, true AS len_is_n_perm,"
-                    " true AS digests_vary"),
-    "simhash_sig": ("SELECT true AS one_fp_per_doc,"
-                    " true AS fingerprints_vary, true AS popcount_sane"),
-    "simhash_sorted": ("SELECT true AS hamming_bounded,"
-                       " true AS src_lt_dst, true AS nonempty"),
-    "substr_pairs": ("SELECT true AS weight_ge_threshold,"
-                     " true AS weight_le_cap, true AS no_self_edges,"
-                     " true AS nonempty"),
-    "verify_jaccard": ("SELECT true AS weight_ge_tau, true AS src_lt_dst,"
-                       " true AS nonempty, true AS pairs_distinct"),
-    "dedup_pipeline": ("SELECT true AS one_label_per_doc,"
-                       " true AS doc_ids_unique, true AS cluster_is_min,"
-                       " true AS merged_some"),
-    "recall": ("SELECT true AS recall_ok, true AS precision_ok,"
-               " true AS specificity_ok, true AS pairs_nonempty"),
-    "incremental_dedup": ("SELECT true AS all_docs_labeled,"
-                          " true AS inc_to_batch_functional,"
-                          " true AS batch_to_inc_functional,"
-                          " true AS nontrivial"),
-    "ann_lsh": ("SELECT true AS recall_ok, true AS twin_recall_ok,"
-                " true AS nonempty"),
-    "ann_ivf": ("SELECT true AS recall_ok, true AS twin_recall_ok,"
-                " true AS nonempty"),
-    "embedding_dedup": ("SELECT true AS cosine_ge_threshold,"
-                        " true AS src_lt_dst, true AS planted_recovered"),
-    "semantic_dedup": ("SELECT true AS rows_preserved,"
-                       " true AS planted_kept_one,"
-                       " true AS no_false_dups"),
-    # per-ROW contracts: DuckDB recomputes the row set + pinned parts
-    # (anchor existence iff byte length >= anchor_k; the doc_id%3 kind
-    # mapping; the video subset) so membership is genuinely checked
-    "doc_fingerprint": (
-        f"SELECT doc_id, true AS has_anchors FROM ({_NORM_CTE})"
-        f" WHERE strlen(norm) >= {CFG.anchor_k}"),
-    "media_decode": (
-        "SELECT doc_id AS media_id,"
-        " CASE ((doc_id % 3) + 3) % 3 WHEN 0 THEN 'image'"
-        " WHEN 1 THEN 'audio' ELSE 'video' END AS kind,"
-        " true AS dims_ok, true AS frames_ok FROM documents"),
-    "media_features": ("SELECT doc_id AS media_id, true AS dim_ok,"
-                       " true AS finite_ok FROM documents"),
-    "media_frames": (
-        # empty-payload videos yield no frames (pinned in
-        # sample_frames), so the expected row set excludes them
-        "SELECT doc_id AS media_id, true AS count_ok,"
-        " true AS idx_dense, true AS payload_nonempty FROM documents"
-        " WHERE ((doc_id % 3) + 3) % 3 = 2"
-        " AND length(coalesce(text, '')) > 0"),
-}
-
-
-def _quality_clf_oracle() -> str:
-    """Oracle for X35: REFIT the classifier from the parquet with
-    DuckDB (same pinned sample/fit spec — fit_triples_duck shares the
-    numpy kernel, so the weights are bit-identical to the Spark fit's
-    unless the two engines' triples diverge anywhere), then embed the
-    weights in the score twin. The fit corpus is the driver's check
-    scale (sf0.01); scripts/check_driver.py overrides via
-    MIEKKI_ORACLE_SF_DIR when it runs at another sf."""
-    import duckdb as _duck
-    import numpy as _np
-
-    from miekki.quality_clf import fit_triples_duck
-
-    sf_dir = os.environ.get("MIEKKI_ORACLE_SF_DIR",
-                            "/root/testdata/sf0.01")
-    con = _duck.connect()
-    con.execute(f"CREATE VIEW documents AS SELECT * FROM"
-                f" read_parquet('{os.path.join(sf_dir, 'documents.parquet')}')")
-    w, bias = fit_triples_duck(
-        con,
-        f"SELECT doc_id, {_NORM_DUCK} AS norm FROM documents"
-        f" WHERE lang = 'en'",
-        f"SELECT doc_id, {_NORM_DUCK} AS norm FROM documents"
-        f" WHERE lang <> 'en'",
-        b=_CLF_B, sample=_CLF_SAMPLE)
-    con.close()
-    from miekki.quality_clf import quality_clf_duck_sql
-
-    return quality_clf_duck_sql(
-        _NORM_CTE,
-        [(int(i), float(w[i])) for i in _np.flatnonzero(w)],
-        bias, _CLF_THR, b=_CLF_B)
-
-
-def _extras_oracle_sql() -> dict[str, str]:
-    from miekki.bloom import bloom_decontam_duck_sql
-    from miekki.sketches import (cms_vocab_duck_sql, hll_vocab_duck_sql,
-                                 len_quantiles_duck_sql)
-    from miekki.decontam import (canonical_url_duck, decontaminate_duck_sql,
-                                 url_dedup_duck_sql)
-    from miekki.chunking import chunk_duck_sql, chunk_tokens_duck_sql
-    from miekki.dsir import RANK_BUCKETS, dsir_duck_sql
-    from miekki.lm import lm_score_duck_sql
-    from miekki.packing import pack_pieces_duck_sql, seq_pack_duck_sql
-    from miekki.sharding import shard_assign_duck_sql
-    from miekki.textstats import lang_id_duck_sql, quality_duck_cols
-    from miekki.stages.lsh import lsh_plan_duck_sql
-    from miekki.tiers import (MIX_BUCKETS, cluster_cap_duck_sql,
-                              mix_sample_duck_sql, soft_dedup_duck_sql,
-                              tier_labels_duck_sql)
-    from miekki.webstats import (SPLIT_BUCKETS, domain_cap_duck_sql,
-                                 domain_stats_duck_sql,
-                                 filter_battery_duck_sql,
-                                 line_dedup_duck_sql, pii_duck_cols,
-                                 repetition_duck_cols,
-                                 split_assign_duck_sql,
-                                 vocab_topk_duck_sql)
-
-    # portable (src, dst, origin) edges twin for dedup_tiers — the
-    # independent DuckDB formulation of _portable_pair_edges (QUALIFY
-    # picks exact star edges; list_* ops recompute the w3 jaccard)
-    _W3GRAMS_DUCK = (
-        "list_distinct(list_transform("
-        " generate_series(1, greatest(1, length(str_split(norm, ' ')) - 2)),"
-        " i -> array_to_string(list_slice(str_split(norm, ' '), i, i + 2),"
-        " ' ')))")
-    _JAC_PAIRS_DUCK = (
-        f"SELECT a.doc_id AS src, b.doc_id AS dst,"
-        f" round(length(list_intersect(a.grams, b.grams))"
-        f" / CAST(length(list_distinct(a.grams || b.grams)) AS DOUBLE), 4)"
-        f" AS j"
-        f" FROM (SELECT doc_id, {_W3GRAMS_DUCK} AS grams"
-        f" FROM ({_NORM_CTE})) a"
-        f" JOIN (SELECT doc_id, {_W3GRAMS_DUCK} AS grams"
-        f" FROM ({_NORM_CTE})) b ON b.doc_id = a.doc_id + 1")
-    _EDGES_DUCK = (
-        f"(SELECT src, dst, 'exact' AS origin FROM ("
-        f" SELECT min(doc_id) OVER (PARTITION BY md5(norm)) AS src,"
-        f" doc_id AS dst FROM ({_NORM_CTE})) WHERE dst <> src"
-        f" UNION ALL"
-        f" SELECT src, dst, 'minhash' AS origin FROM ({_JAC_PAIRS_DUCK})"
-        f" WHERE j >= 0.5"
-        f" UNION ALL"
-        f" SELECT src, dst, 'simhash' AS origin FROM ({_JAC_PAIRS_DUCK})"
-        f" WHERE j >= 0.2 AND j < 0.5)")
-
-    return {
-        "dedup_tiers": tier_labels_duck_sql(
-            "(SELECT doc_id FROM documents)", _EDGES_DUCK),
-        "cluster_cap": cluster_cap_duck_sql(
-            "(SELECT doc_id, doc_id - ((doc_id % 7 + 7) % 7) AS cluster_id"
-            " FROM documents)",
-            "((doc_id * 2654435761) % 9973 + 9973) % 9973", k=3),
-        "soft_dedup": soft_dedup_duck_sql(
-            "(SELECT doc_id, doc_id - ((doc_id % 25 + 25) % 25)"
-            " AS cluster_id FROM documents)",
-            f"((doc_id * 2654435761) % {MIX_BUCKETS} + {MIX_BUCKETS})"
-            f" % {MIX_BUCKETS}", alpha=0.5),
-        "lsh_plan": lsh_plan_duck_sql(n_perm=128, threshold=0.5,
-                                      s_steps=50),
-        "bloom_decontam": bloom_decontam_duck_sql(
-            _NORM_CTE, n=5, m_bits=1 << 12, k=7),
-        "mix_sample": mix_sample_duck_sql(
-            "documents",
-            f"((doc_id * 2654435761) % {MIX_BUCKETS} + {MIX_BUCKETS})"
-            f" % {MIX_BUCKETS}",
-            rates=(("en", 0.5), ("fr", 1.0), ("zh", 0.05)),
-            stratum_expr="lang", default_rate=0.25),
-        "url_canon": (
-            f"SELECT doc_id, {canonical_url_duck(_MESSY_URL_DUCK)}"
-            " AS canon_url FROM documents"),
-        "url_dedup": url_dedup_duck_sql(
-            f"(SELECT doc_id, {_RECRAWL_URL_DUCK} AS url, n_chars"
-            f" FROM documents)"),
-        "decontam": decontaminate_duck_sql(_NORM_CTE, n=8),
-        "pii_stats": (
-            f"SELECT doc_id, {pii_duck_cols('text')} FROM"
-            f" (SELECT doc_id, {_PII_TEXT_DUCK} AS text FROM documents)"),
-        "domain_stats": domain_stats_duck_sql(
-            f"(SELECT {_MESSY_URL_DUCK} AS url, n_chars FROM documents)",
-            "url", chars_col="n_chars",
-            blocklist=("site3.example.com",)),
-        "vocab_topk": vocab_topk_duck_sql(_NORM_CTE, k=100),
-        "cms_vocab": cms_vocab_duck_sql(_NORM_CTE, k=100),
-        "lm_score": lm_score_duck_sql(_NORM_CTE),
-        "quality_clf": _quality_clf_oracle(),
-        "semdedup_text": (
-            "SELECT true AS rows_once, true AS twins_collapsed,"
-            " count(*) AS n_docs FROM documents"),
-        "curate_funnel": (
-            "SELECT true AS filter_conserved, true AS dedup_conserved,"
-            " true AS tiers_conserved, true AS tiers_consistent,"
-            " true AS cap_respected, true AS mix_monotone,"
-            " true AS splits_nonempty, true AS pack_matches,"
-            " true AS chunks_match"),
-        "chunk_passages": chunk_duck_sql(
-            _NORM_CTE, chunk_len=64, stride=48),
-        "seq_pack": seq_pack_duck_sql(
-            f"SELECT doc_id, CAST(len(list_filter(str_split(norm, ' '),"
-            f" t -> t <> '')) AS BIGINT) AS n_tok FROM ({_NORM_CTE})",
-            seq_len=512, n_buckets=8),
-        "pack_pieces": pack_pieces_duck_sql(
-            f"SELECT doc_id, list_filter(str_split(norm, ' '),"
-            f" t -> t <> '') AS toks FROM ({_NORM_CTE})",
-            seq_len=512, n_buckets=8),
-        "chunk_tokens": chunk_tokens_duck_sql(
-            f"SELECT doc_id, list_filter(str_split(norm, ' '),"
-            f" t -> t <> '') AS toks FROM ({_NORM_CTE})",
-            chunk_len=64, stride=48),
-        "dsir_select": dsir_duck_sql(
-            _NORM_CTE,
-            f"SELECT doc_id, {_NORM_DUCK} AS norm FROM documents"
-            f" WHERE lang = 'en'",
-            threshold=-8.0,
-            rank_sql=f"((doc_id * 2654435761 % {RANK_BUCKETS})"
-                     f" + {RANK_BUCKETS}) % {RANK_BUCKETS}"),
-        "repetition": (
-            f"SELECT doc_id, {repetition_duck_cols('norm')}"
-            f" FROM ({_NORM_CTE})"),
-        "line_dedup": line_dedup_duck_sql(
-            f"(SELECT doc_id, {_LINE_TEXT_DUCK} AS text FROM documents)"),
-        "domain_cap": domain_cap_duck_sql(
-            f"(SELECT doc_id, {_MESSY_URL_DUCK} AS url FROM documents)",
-            "url", "((doc_id * 2654435761) % 9973 + 9973) % 9973", k=10),
-        "split_assign": split_assign_duck_sql(
-            "documents",
-            f"((doc_id * 2654435761) % {SPLIT_BUCKETS} + {SPLIT_BUCKETS})"
-            f" % {SPLIT_BUCKETS}",
-            weights=(("train", 0.8), ("val", 0.1), ("test", 0.1))),
-        "shard_assign": shard_assign_duck_sql(
-            "documents",
-            f"((doc_id * 2654435761) % {_SHARD_RANK_MOD}"
-            f" + {_SHARD_RANK_MOD}) % {_SHARD_RANK_MOD}",
-            n_shards=_N_SHARDS_TWIN),
-        "filter_battery": filter_battery_duck_sql(
-            f"(SELECT doc_id, {_NORM_DUCK} AS norm,"
-            f" {_PII_TEXT_DUCK} AS ptext FROM documents)",
-            norm_expr="norm", pii_expr="ptext", allowed_langs=("en",)),
-        "text_quality": (
-            f"SELECT doc_id, {lang_id_duck_sql('norm')} AS pred_lang,"
-            f" {quality_duck_cols('norm')},"
-            f" {repetition_duck_cols('norm')} FROM ({_NORM_CTE})"),
-        "len_quantiles": len_quantiles_duck_sql("documents"),
-        "hll_vocab": hll_vocab_duck_sql(
-            f"SELECT lang, {_NORM_DUCK} AS norm FROM documents"),
-        "lang_id": (f"SELECT doc_id, {lang_id_duck_sql('norm')} AS pred_lang"
-                    f" FROM ({_NORM_CTE})"),
-        "quality_score": (f"SELECT doc_id, {quality_duck_cols('norm')}"
-                          f" FROM ({_NORM_CTE})"),
-        "ngram_jaccard": (
-            "WITH g AS (SELECT doc_id, list_distinct(list_transform("
-            " generate_series(1, greatest(1, length(str_split(norm, ' ')) - 2)),"
-            " i -> array_to_string(list_slice(str_split(norm, ' '), i, i + 2),"
-            " ' '))) AS grams"
-            f" FROM ({_NORM_CTE}))"
-            " SELECT a.doc_id AS src,"
-            " round(length(list_intersect(a.grams, b.grams))"
-            " / length(list_distinct(a.grams || b.grams)), 4) AS jaccard_w3"
-            " FROM g a JOIN g b ON b.doc_id = a.doc_id + 1"),
-        # ::DOUBLE[] matters: DuckDB then does the same float32→double
-        # upcast as the Spark side, making round(...,6) EXACTLY equal
-        # (verified 0 ulp at sf0.01); without it the float32 fold
-        # differs in the 6th decimal
-        "ann_brute": (
-            "SELECT query_id, neighbor_id, rank, cosine FROM ("
-            " SELECT q.vec_id AS query_id, v.vec_id AS neighbor_id,"
-            " round(list_cosine_similarity(q.embedding::DOUBLE[],"
-            " v.embedding::DOUBLE[]), 6) AS cosine,"
-            " CAST(row_number() OVER (PARTITION BY q.vec_id"
-            " ORDER BY list_cosine_similarity(q.embedding::DOUBLE[],"
-            " v.embedding::DOUBLE[]) DESC, v.vec_id) AS INT) AS rank"
-            " FROM embeddings q, embeddings v"
-            " WHERE q.vec_id < 20 AND q.vec_id <> v.vec_id)"
-            " WHERE rank <= 5"),
-        "embedding_norms": (
-            "SELECT vec_id, CAST(length(embedding) AS INT) AS dim,"
-            " round(sqrt(list_aggregate(list_transform(embedding,"
-            " x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')), 4)"
-            " AS l2_norm FROM embeddings"),
-    }
-
-
-ORACLE_SQL.update(_extras_oracle_sql())
-
-
-# ======================================================================
-# Round-5 registry: fold sibling contract keys + reorder (VERDICT r4
-# next-step #1).
-#
-# Evidence: CORRECTNESS_r04.json recorded exactly the FIRST 50 keys of
-# the then-67-key dict, in dict order — the driver caps its check at 50
-# keys. r3 recorded all 48 of 48. So the registry must stay <= 50 keys
-# for every operator to get an artifact row. Two moves:
-#   * FOLD sibling contract keys (1-row boolean pins) into per-family
-#     (contract, ok) union keys — sig_contracts, pipeline_contracts,
-#     embed_media_suite — and the small full-value twins into ONE
-#     long-format (metric, value) key, relational_counts, which keeps
-#     their value-twin status (DuckDB still recomputes every number).
-#   * ORDER the dict so keys that have never appeared in a driver
-#     artifact (and this round's new keys) come first.
-# The unfolded per-key queries remain importable for pytest and local
-# debugging via _ALL_QUERIES/_ALL_ORACLE_SQL.
-# ======================================================================
-
-_ALL_QUERIES: dict[str, Callable] = dict(QUERIES)
-_ALL_ORACLE_SQL: dict[str, str] = dict(ORACLE_SQL)
-
-
-def _contract_fold(subs: dict[str, Callable]) -> Callable:
-    """Fold contract sub-keys into one (contract, ok) frame: per
-    sub-key, ok = frame is non-empty AND every boolean column is
-    all-true AND (for frames with NO boolean columns — the pinned-
-    zero pattern: extract_invariant, determinism) every integer
-    column is all-zero. The Spark side computes the real properties;
-    the oracle pins one `true` per sub-key."""
-    def q(spark, sf_dir):
-        frames = []
-        for name, fn in subs.items():
-            df = fn(spark, sf_dir)
-            bools = [c for c, t in df.dtypes if t == "boolean"]
-            longs = [c for c, t in df.dtypes
-                     if t in ("bigint", "int", "smallint")]
-            aggs = [F.count(F.lit(1)).alias("_n")]
-            aggs += [F.min(F.col(c).cast("int")).alias(f"_b_{c}")
-                     for c in bools]
-            if not bools:
-                aggs += [F.max(F.abs(F.col(c))).alias(f"_z_{c}")
-                         for c in longs]
-            agg = df.agg(*aggs)
-            ok = F.col("_n") > 0
-            for c in bools:
-                ok = ok & (F.col(f"_b_{c}") == 1)
-            if not bools:
-                for c in longs:
-                    ok = ok & (F.col(f"_z_{c}") == 0)
-            frames.append(agg.select(F.lit(name).alias("contract"),
-                                     ok.alias("ok")))
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
-    return q
-
-
-def _contract_fold_oracle(names) -> str:
-    return " UNION ALL ".join(
-        f"SELECT '{n}' AS contract, true AS ok" for n in names)
-
-
-_SIG_CONTRACTS = {
-    "minhash_sig": q_minhash_contract,
-    "simhash_sig": q_simhash_contract,
-    "bands": q_bands,
-    "simhash_pairs": q_simhash_pairs,
-    "substr_pairs": q_substr_pairs,
-    "verify_jaccard": q_verify_jaccard,
-    "doc_fingerprint": q_doc_fingerprint,
-}
 def q_dedup_splits_contract(spark, sf_dir):
     """Dedup-aware split assignment contract (the Lee'22 train-test
     leakage concern): over the corpus' exact-dup clusters
@@ -2333,27 +1732,6 @@ def q_bpe_contract(spark, sf_dir):
         "round_trip boolean, nonempty boolean, vocab_bounded boolean")
 
 
-_PIPELINE_CONTRACTS = {
-    "extract_invariant": q_extract_invariant,
-    "dedup_pipeline": q_dedup_pipeline,
-    "incremental_dedup": q_incremental_dedup,
-    "determinism": q_determinism,
-    "simhash_sorted": q_simhash_sorted,
-    "bpe_tokenize": q_bpe_contract,
-    "cross_dedup": q_cross_contract,
-    "dedup_splits": q_dedup_splits_contract,
-}
-_EMBED_MEDIA_SUITE = {
-    "ann_lsh": q_ann_lsh,
-    "ann_ivf": q_ann_ivf,
-    "embedding_dedup": q_embedding_dedup,
-    "semantic_dedup": q_semantic_dedup,
-    "media_decode": q_media_decode,
-    "media_features": q_media_features,
-    "media_frames": q_media_frames,
-}
-
-
 def q_profile_full(spark, sf_dir):
     """profile + profile_approx + scan_corpus folded: the per-lang
     exact profile (full value twin) with scan_corpus's total_chars and
@@ -2411,40 +1789,6 @@ def q_relational_counts(spark, sf_dir):
     return out
 
 
-def _relational_counts_oracle() -> str:
-    o = _ALL_ORACLE_SQL
-    parts = [
-        f"SELECT 'setops_orphans' AS metric,"
-        f" CAST(n_orphans AS DOUBLE) AS value FROM ({o['q_setops']})",
-        f"SELECT 'setops_active', CAST(n_active AS DOUBLE)"
-        f" FROM ({o['q_setops']})",
-        f"SELECT 'semi', CAST(n_semi AS DOUBLE) FROM ({o['semi_anti']})",
-        f"SELECT 'anti', CAST(n_anti AS DOUBLE) FROM ({o['semi_anti']})",
-        f"SELECT 'idcol_' || CAST(doc_id AS VARCHAR),"
-        f" CAST(n_urls AS DOUBLE) FROM ({o['id_collisions']})",
-        f"SELECT 'dim_' || CAST(vec_id AS VARCHAR), CAST(dim AS DOUBLE)"
-        f" FROM ({o['embedding_norms']})",
-        f"SELECT 'l2_' || CAST(vec_id AS VARCHAR), l2_norm"
-        f" FROM ({o['embedding_norms']})",
-        f"SELECT 'we_' || CAST(window_epoch AS VARCHAR) || '_' ||"
-        f" event_type || '_n', CAST(n_events AS DOUBLE)"
-        f" FROM ({o['windowed_events']})",
-        f"SELECT 'we_' || CAST(window_epoch AS VARCHAR) || '_' ||"
-        f" event_type || '_sum', sum_value"
-        f" FROM ({o['windowed_events']})",
-        f"SELECT 'sess_' || CAST(user_id AS VARCHAR) || '_' ||"
-        f" CAST(start_epoch AS VARCHAR) || '_n', CAST(n_events AS DOUBLE)"
-        f" FROM ({o['sessions']})",
-        f"SELECT 'sess_' || CAST(user_id AS VARCHAR) || '_' ||"
-        f" CAST(start_epoch AS VARCHAR) || '_sum', sum_value"
-        f" FROM ({o['sessions']})",
-        f"SELECT 'sess_' || CAST(user_id AS VARCHAR) || '_' ||"
-        f" CAST(start_epoch AS VARCHAR) || '_end',"
-        f" CAST(end_epoch AS DOUBLE) FROM ({o['sessions']})",
-    ]
-    return " UNION ALL ".join(parts)
-
-
 def q_cc_edge_ops(spark, sf_dir):
     """O10/O14/O15/O16 folded (r5: frees registry slots for
     soft_dedup + lsh_plan + bloom_decontam under the driver's 50-key
@@ -2462,59 +1806,518 @@ def q_cc_edge_ops(spark, sf_dir):
             .unionByName(tag("smallstar", q_cc_smallstar(spark, sf_dir))))
 
 
-def _cc_edge_ops_oracle() -> str:
-    o = _ALL_ORACLE_SQL
-    return (f"SELECT 'bucket' AS stage, src, dst"
-            f" FROM ({o['bucket_edges']})"
-            f" UNION ALL SELECT 'union', src, dst"
-            f" FROM ({o['edge_union']})"
-            f" UNION ALL SELECT 'largestar', src, dst"
-            f" FROM ({o['cc_largestar']})"
-            f" UNION ALL SELECT 'smallstar', src, dst"
-            f" FROM ({o['cc_smallstar']})")
+def _contract_fold(subs: dict[str, Callable]) -> Callable:
+    """Fold contract sub-keys into one (contract, ok) frame: per
+    sub-key, ok = frame is non-empty AND every boolean column is
+    all-true AND (for frames with NO boolean columns — the pinned-
+    zero pattern: extract_invariant, determinism) every integer
+    column is all-zero. The Spark side computes the real properties;
+    the oracle pins one `true` per sub-key."""
+    def q(spark, sf_dir):
+        frames = []
+        for name, fn in subs.items():
+            df = fn(spark, sf_dir)
+            bools = [c for c, t in df.dtypes if t == "boolean"]
+            longs = [c for c, t in df.dtypes
+                     if t in ("bigint", "int", "smallint")]
+            aggs = [F.count(F.lit(1)).alias("_n")]
+            aggs += [F.min(F.col(c).cast("int")).alias(f"_b_{c}")
+                     for c in bools]
+            if not bools:
+                aggs += [F.max(F.abs(F.col(c))).alias(f"_z_{c}")
+                         for c in longs]
+            agg = df.agg(*aggs)
+            ok = F.col("_n") > 0
+            for c in bools:
+                ok = ok & (F.col(f"_b_{c}") == 1)
+            if not bools:
+                for c in longs:
+                    ok = ok & (F.col(f"_z_{c}") == 0)
+            frames.append(agg.select(F.lit(name).alias("contract"),
+                                     ok.alias("ok")))
+        out = frames[0]
+        for f in frames[1:]:
+            out = out.unionByName(f)
+        return out
+    return q
 
 
-_FOLDED_AWAY = (set(_SIG_CONTRACTS) | set(_PIPELINE_CONTRACTS)
-                | set(_EMBED_MEDIA_SUITE)
-                | {"q_setops", "semi_anti", "id_collisions",
-                   "embedding_norms", "windowed_events", "sessions",
-                   "profile", "profile_approx", "scan_corpus",
-                   "edge_union", "cc_largestar", "cc_smallstar",
-                   "bucket_edges", "lang_id", "quality_score",
-                   "vocab_topk", "repetition", "url_canon"})
+def _contract_fold_oracle(names) -> str:
+    return " UNION ALL ".join(
+        f"SELECT '{n}' AS contract, true AS ok" for n in names)
 
-# never-driver-recorded (r4 artifact stopped at key 50) and new-this-
-# round keys FIRST; previously-recorded full twins after
-_FRONT = [
-    "seq_pack", "chunk_passages", "pack_pieces", "chunk_tokens",
-    "quality_clf", "semdedup_text", "curate_funnel", "shard_assign",
-    "soft_dedup", "lsh_plan", "bloom_decontam", "hll_vocab",
-    "cms_vocab", "len_quantiles", "url_dedup", "text_quality",
-    "asof_join", "ann_brute",
-]
 
-QUERIES = {name: _ALL_QUERIES[name] for name in _FRONT}
-QUERIES["cc_edge_ops"] = q_cc_edge_ops
-QUERIES["embed_media_suite"] = _contract_fold(_EMBED_MEDIA_SUITE)
-QUERIES["relational_counts"] = q_relational_counts
-QUERIES["sig_contracts"] = _contract_fold(_SIG_CONTRACTS)
-QUERIES["pipeline_contracts"] = _contract_fold(_PIPELINE_CONTRACTS)
-QUERIES["profile"] = q_profile_full
-for _name, _fn in _ALL_QUERIES.items():
-    if _name not in QUERIES and _name not in _FOLDED_AWAY:
-        QUERIES[_name] = _fn
 
-ORACLE_SQL = {k: v for k, v in _ALL_ORACLE_SQL.items()
-              if k in QUERIES and k != "profile"}
-ORACLE_SQL["embed_media_suite"] = _contract_fold_oracle(_EMBED_MEDIA_SUITE)
-ORACLE_SQL["relational_counts"] = _relational_counts_oracle()
-ORACLE_SQL["cc_edge_ops"] = _cc_edge_ops_oracle()
-ORACLE_SQL["sig_contracts"] = _contract_fold_oracle(_SIG_CONTRACTS)
-ORACLE_SQL["pipeline_contracts"] = _contract_fold_oracle(_PIPELINE_CONTRACTS)
-ORACLE_SQL["profile"] = (
-    f"SELECT p.*, s.total_chars, true AS within_5pct"
-    f" FROM ({_ALL_ORACLE_SQL['profile']}) p"
-    f" JOIN ({_ALL_ORACLE_SQL['scan_corpus']}) s USING (lang)")
-ORACLE_SQL = {k: ORACLE_SQL[k] for k in QUERIES if k in ORACLE_SQL}
+# --------------------------------------------------------------------
+# registry + DuckDB oracles
+#
+# The driver checks at most the first 50 keys, in dict order. Sibling
+# contract keys (1-row boolean pins) are folded into per-family
+# (contract, ok) keys, and small full-value twins into the long-format
+# relational_counts / cc_edge_ops / profile keys, whose oracles still
+# recompute every number. Keys that no driver artifact has recorded
+# come first.
+# --------------------------------------------------------------------
 
-assert len(QUERIES) <= 50, len(QUERIES)
+_SIG_CONTRACTS = {
+    "minhash_sig": q_minhash_contract,
+    "simhash_sig": q_simhash_contract,
+    "bands": q_bands,
+    "simhash_pairs": q_simhash_pairs,
+    "substr_pairs": q_substr_pairs,
+    "verify_jaccard": q_verify_jaccard,
+    "doc_fingerprint": q_doc_fingerprint,
+}
+_PIPELINE_CONTRACTS = {
+    "extract_invariant": q_extract_invariant,
+    "dedup_pipeline": q_dedup_pipeline,
+    "incremental_dedup": q_incremental_dedup,
+    "determinism": q_determinism,
+    "simhash_sorted": q_simhash_sorted,
+    "bpe_tokenize": q_bpe_contract,
+    "cross_dedup": q_cross_contract,
+    "dedup_splits": q_dedup_splits_contract,
+}
+_EMBED_MEDIA_SUITE = {
+    "ann_lsh": q_ann_lsh,
+    "ann_ivf": q_ann_ivf,
+    "embedding_dedup": q_embedding_dedup,
+    "semantic_dedup": q_semantic_dedup,
+    "media_decode": q_media_decode,
+    "media_features": q_media_features,
+    "media_frames": q_media_frames,
+}
+
+QUERIES: dict[str, Callable] = {
+    "seq_pack": q_seq_pack,
+    "chunk_passages": q_chunk_passages,
+    "pack_pieces": q_pack_pieces,
+    "chunk_tokens": q_chunk_tokens,
+    "quality_clf": q_quality_clf,
+    "semdedup_text": q_semdedup_text,
+    "curate_funnel": q_curate_funnel,
+    "shard_assign": q_shard_assign,
+    "soft_dedup": q_soft_dedup,
+    "lsh_plan": q_lsh_plan,
+    "bloom_decontam": q_bloom_decontam,
+    "hll_vocab": q_hll_vocab,
+    "cms_vocab": q_cms_vocab,
+    "len_quantiles": q_len_quantiles,
+    "url_dedup": q_url_dedup,
+    "text_quality": q_text_quality,
+    "asof_join": q_asof_join,
+    "ann_brute": q_ann_brute,
+    "cc_edge_ops": q_cc_edge_ops,
+    "embed_media_suite": _contract_fold(_EMBED_MEDIA_SUITE),
+    "relational_counts": q_relational_counts,
+    "sig_contracts": _contract_fold(_SIG_CONTRACTS),
+    "pipeline_contracts": _contract_fold(_PIPELINE_CONTRACTS),
+    "profile": q_profile_full,
+    "normalize": q_normalize,
+    "shingles": q_shingles,
+    "exact_dups": q_exact_dups,
+    "canonical": q_canonical,
+    "cluster_stats": q_cluster_stats,
+    "cc_labels": q_cc_labels,
+    "q1_lineitem_agg": q1_lineitem_agg,
+    "q3_join": q3_join,
+    "q_window": q_window,
+    "q_topk": q_topk,
+    "events_json": q_json,
+    "metrics_rollup": q_metrics_rollup,
+    "recall": q_recall,
+    "ngram_jaccard": q_ngram_jaccard,
+    "decontam": q_decontam,
+    "pii_stats": q_pii,
+    "domain_stats": q_domain_stats,
+    "line_dedup": q_line_dedup,
+    "filter_battery": q_filter_battery,
+    "domain_cap": q_domain_cap,
+    "split_assign": q_split_assign,
+    "dedup_tiers": q_dedup_tiers,
+    "cluster_cap": q_cluster_cap,
+    "mix_sample": q_mix_sample,
+    "lm_score": q_lm_score,
+    "dsir_select": q_dsir_select,
+}
+
+_NORM_CTE = f"SELECT doc_id, {_NORM_DUCK} AS norm FROM documents"
+_BUCKET1 = (f"SELECT doc_id, substr(md5(norm), 1, 1) AS bucket"
+            f" FROM ({_NORM_CTE})")
+# ((x % 4) + 4) % 4 matches Spark pmod for negative doc_ids too
+# (ADVICE r1: plain doc_id % 4 is negative for negative ids in DuckDB)
+_BUCKET2 = (f"SELECT doc_id, substr(md5(norm), 1, 2) AS bucket,"
+            f" ((doc_id % 4) + 4) % 4 AS salt FROM ({_NORM_CTE})")
+_CHAIN = (f"SELECT src, dst FROM (SELECT lag(doc_id) OVER"
+          f" (PARTITION BY bucket ORDER BY doc_id) AS src,"
+          f" doc_id AS dst FROM ({_BUCKET1})) WHERE src IS NOT NULL")
+
+# the four edge sets of cc_edge_ops; bucket and union share the
+# two-level salted star CTEs, union adds the chain edges
+_STAR_EDGES = (
+    f"WITH b AS ({_BUCKET2}),"
+    " l1 AS (SELECT *, min(doc_id) OVER (PARTITION BY bucket, salt)"
+    " AS m1 FROM b),"
+    " e1 AS (SELECT m1 AS src, doc_id AS dst FROM l1 WHERE doc_id <> m1),"
+    " sm AS (SELECT DISTINCT bucket, salt, m1 FROM l1),"
+    " l2 AS (SELECT *, min(m1) OVER (PARTITION BY bucket) AS m2 FROM sm),"
+    " e2 AS (SELECT m2 AS src, m1 AS dst FROM l2 WHERE m1 <> m2)"
+    " SELECT DISTINCT src, dst FROM (SELECT * FROM e1"
+    " UNION ALL SELECT * FROM e2")
+_BUCKET_EDGES_DUCK = _STAR_EDGES + ")"
+_EDGE_UNION_DUCK = _STAR_EDGES + f" UNION ALL SELECT * FROM ({_CHAIN}))"
+_LARGESTAR_DUCK = (
+    f"WITH e AS ({_CHAIN}),"
+    " sym AS (SELECT src AS u, dst AS v FROM e WHERE src <> dst"
+    " UNION SELECT dst, src FROM e WHERE src <> dst),"
+    " m AS (SELECT u, least(min(v), u) AS m FROM sym GROUP BY u)"
+    " SELECT DISTINCT s.v AS src, m.m AS dst FROM sym s"
+    " JOIN m USING (u) WHERE s.v > s.u AND s.v <> m.m")
+_SMALLSTAR_DUCK = (
+    f"WITH e0 AS ({_CHAIN}),"
+    " e AS (SELECT DISTINCT greatest(src, dst) AS u, least(src, dst) AS v"
+    " FROM e0 WHERE src <> dst),"
+    " m AS (SELECT u, min(v) AS mn FROM e GROUP BY u)"
+    " SELECT DISTINCT src, dst FROM ("
+    "  SELECT e.v AS src, m.mn AS dst FROM e JOIN m USING (u)"
+    "  UNION ALL SELECT u AS src, mn AS dst FROM m"
+    " ) WHERE src <> dst")
+
+# the per-lang profile and scan_corpus twins joined by profile
+_PROFILE_DUCK = (
+    "SELECT lang, count(*) AS n_docs,"
+    " CAST(count(DISTINCT source) AS BIGINT) AS n_sources,"
+    " round(avg(n_chars), 3) AS avg_chars"
+    " FROM documents GROUP BY lang")
+_SCAN_CORPUS_DUCK = (
+    "SELECT lang, count(*) AS n_docs,"
+    " CAST(sum(n_chars) AS BIGINT) AS total_chars"
+    " FROM documents GROUP BY lang")
+
+# the six value twins relational_counts unions in long format
+_SETOPS_DUCK = (
+    "SELECT (SELECT count(*) FROM (SELECT DISTINCT o_custkey FROM orders"
+    " EXCEPT SELECT DISTINCT c_custkey FROM customer)) AS n_orphans,"
+    " (SELECT count(*) FROM (SELECT DISTINCT c_custkey FROM customer"
+    " INTERSECT SELECT DISTINCT o_custkey FROM orders)) AS n_active")
+_SEMI_ANTI_DUCK = (
+    "SELECT (SELECT count(*) FROM documents WHERE doc_id IN"
+    " (SELECT vec_id FROM embeddings)) AS n_semi,"
+    " (SELECT count(*) FROM documents WHERE doc_id NOT IN"
+    " (SELECT vec_id FROM embeddings)) AS n_anti")
+_ID_COLLISIONS_DUCK = (
+    "SELECT doc_id, n_urls FROM ("
+    " SELECT ((doc_id % 997) + 997) % 997 AS doc_id,"
+    " CAST(count(DISTINCT doc_id) AS BIGINT) AS n_urls"
+    " FROM documents GROUP BY 1) WHERE n_urls > 1")
+_EMBEDDING_NORMS_DUCK = (
+    "SELECT vec_id, CAST(length(embedding) AS INT) AS dim,"
+    " round(sqrt(list_aggregate(list_transform(embedding,"
+    " x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')), 4)"
+    " AS l2_norm FROM embeddings")
+_WINDOWED_EVENTS_DUCK = (
+    "SELECT CAST(epoch(time_bucket(INTERVAL '1 hour', ts)) AS BIGINT)"
+    " AS window_epoch, event_type, count(*) AS n_events,"
+    " round(sum(value), 2) AS sum_value FROM events"
+    " GROUP BY 1, 2")
+# floor(epoch(...)) matches Spark's cast(timestamp as long)
+# truncation; a bare CAST in DuckDB would ROUND the sub-second part
+_SESSIONS_DUCK = (
+    "WITH x AS (SELECT user_id, ts, event_id, value,"
+    " CASE WHEN lag(ts) OVER w IS NULL"
+    " OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE THEN 1 ELSE 0 END"
+    " AS ns FROM events"
+    " WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),"
+    " y AS (SELECT *, sum(ns) OVER (PARTITION BY user_id"
+    " ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS sess FROM x)"
+    " SELECT user_id,"
+    " CAST(floor(epoch(min(ts))) AS BIGINT) AS start_epoch,"
+    " CAST(floor(epoch(max(ts))) AS BIGINT) AS end_epoch,"
+    " count(*) AS n_events, round(sum(value), 2) AS sum_value"
+    " FROM y GROUP BY user_id, sess")
+_SESS_KEY = ("'sess_' || CAST(user_id AS VARCHAR) || '_' ||"
+             " CAST(start_epoch AS VARCHAR) || ")
+_WE_KEY = ("'we_' || CAST(window_epoch AS VARCHAR) || '_' ||"
+           " event_type || ")
+_RELATIONAL_COUNTS_DUCK = " UNION ALL ".join([
+    f"SELECT 'setops_orphans' AS metric,"
+    f" CAST(n_orphans AS DOUBLE) AS value FROM ({_SETOPS_DUCK})",
+    f"SELECT 'setops_active', CAST(n_active AS DOUBLE)"
+    f" FROM ({_SETOPS_DUCK})",
+    f"SELECT 'semi', CAST(n_semi AS DOUBLE) FROM ({_SEMI_ANTI_DUCK})",
+    f"SELECT 'anti', CAST(n_anti AS DOUBLE) FROM ({_SEMI_ANTI_DUCK})",
+    f"SELECT 'idcol_' || CAST(doc_id AS VARCHAR),"
+    f" CAST(n_urls AS DOUBLE) FROM ({_ID_COLLISIONS_DUCK})",
+    f"SELECT 'dim_' || CAST(vec_id AS VARCHAR), CAST(dim AS DOUBLE)"
+    f" FROM ({_EMBEDDING_NORMS_DUCK})",
+    f"SELECT 'l2_' || CAST(vec_id AS VARCHAR), l2_norm"
+    f" FROM ({_EMBEDDING_NORMS_DUCK})",
+    f"SELECT {_WE_KEY}'_n', CAST(n_events AS DOUBLE)"
+    f" FROM ({_WINDOWED_EVENTS_DUCK})",
+    f"SELECT {_WE_KEY}'_sum', sum_value"
+    f" FROM ({_WINDOWED_EVENTS_DUCK})",
+    f"SELECT {_SESS_KEY}'_n', CAST(n_events AS DOUBLE)"
+    f" FROM ({_SESSIONS_DUCK})",
+    f"SELECT {_SESS_KEY}'_sum', sum_value"
+    f" FROM ({_SESSIONS_DUCK})",
+    f"SELECT {_SESS_KEY}'_end',"
+    f" CAST(end_epoch AS DOUBLE) FROM ({_SESSIONS_DUCK})",
+])
+
+# portable (src, dst, origin) edges twin for dedup_tiers — the
+# independent DuckDB formulation of _portable_pair_edges (QUALIFY
+# picks exact star edges; list_* ops recompute the w3 jaccard)
+_W3GRAMS_DUCK = (
+    "list_distinct(list_transform("
+    " generate_series(1, greatest(1, length(str_split(norm, ' ')) - 2)),"
+    " i -> array_to_string(list_slice(str_split(norm, ' '), i, i + 2),"
+    " ' ')))")
+_JAC_PAIRS_DUCK = (
+    f"SELECT a.doc_id AS src, b.doc_id AS dst,"
+    f" round(length(list_intersect(a.grams, b.grams))"
+    f" / CAST(length(list_distinct(a.grams || b.grams)) AS DOUBLE), 4)"
+    f" AS j"
+    f" FROM (SELECT doc_id, {_W3GRAMS_DUCK} AS grams"
+    f" FROM ({_NORM_CTE})) a"
+    f" JOIN (SELECT doc_id, {_W3GRAMS_DUCK} AS grams"
+    f" FROM ({_NORM_CTE})) b ON b.doc_id = a.doc_id + 1")
+_EDGES_DUCK = (
+    f"(SELECT src, dst, 'exact' AS origin FROM ("
+    f" SELECT min(doc_id) OVER (PARTITION BY md5(norm)) AS src,"
+    f" doc_id AS dst FROM ({_NORM_CTE})) WHERE dst <> src"
+    f" UNION ALL"
+    f" SELECT src, dst, 'minhash' AS origin FROM ({_JAC_PAIRS_DUCK})"
+    f" WHERE j >= 0.5"
+    f" UNION ALL"
+    f" SELECT src, dst, 'simhash' AS origin FROM ({_JAC_PAIRS_DUCK})"
+    f" WHERE j >= 0.2 AND j < 0.5)")
+
+# tokens of X30's tokenizer, as DuckDB lists
+_TOKS_DUCK = (f"SELECT doc_id, list_filter(str_split(norm, ' '),"
+              f" t -> t <> '') AS toks FROM ({_NORM_CTE})")
+
+
+def _quality_clf_oracle() -> str:
+    """Oracle for X35: REFIT the classifier from the parquet with
+    DuckDB (same pinned sample/fit spec — fit_triples_duck shares the
+    numpy kernel, so the weights are bit-identical to the Spark fit's
+    unless the two engines' triples diverge anywhere), then embed the
+    weights in the score twin. The fit corpus is the driver's check
+    scale (sf0.01); scripts/check_driver.py overrides via
+    MIEKKI_ORACLE_SF_DIR when it runs at another sf."""
+    import duckdb as _duck
+    import numpy as _np
+
+    from miekki.quality_clf import fit_triples_duck, quality_clf_duck_sql
+
+    sf_dir = os.environ.get("MIEKKI_ORACLE_SF_DIR",
+                            "/root/testdata/sf0.01")
+    con = _duck.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM"
+                f" read_parquet('{os.path.join(sf_dir, 'documents.parquet')}')")
+    w, bias = fit_triples_duck(
+        con,
+        f"SELECT doc_id, {_NORM_DUCK} AS norm FROM documents"
+        f" WHERE lang = 'en'",
+        f"SELECT doc_id, {_NORM_DUCK} AS norm FROM documents"
+        f" WHERE lang <> 'en'",
+        b=_CLF_B, sample=_CLF_SAMPLE)
+    con.close()
+    return quality_clf_duck_sql(
+        _NORM_CTE,
+        [(int(i), float(w[i])) for i in _np.flatnonzero(w)],
+        bias, _CLF_THR, b=_CLF_B)
+
+
+ORACLE_SQL: dict[str, str] = {
+    "seq_pack": seq_pack_duck_sql(
+        f"SELECT doc_id, CAST(len(list_filter(str_split(norm, ' '),"
+        f" t -> t <> '')) AS BIGINT) AS n_tok FROM ({_NORM_CTE})",
+        seq_len=512, n_buckets=8),
+    "chunk_passages": chunk_duck_sql(_NORM_CTE, chunk_len=64, stride=48),
+    "pack_pieces": pack_pieces_duck_sql(_TOKS_DUCK, seq_len=512,
+                                        n_buckets=8),
+    "chunk_tokens": chunk_tokens_duck_sql(_TOKS_DUCK, chunk_len=64,
+                                          stride=48),
+    "quality_clf": _quality_clf_oracle(),
+    "semdedup_text": (
+        "SELECT true AS rows_once, true AS twins_collapsed,"
+        " count(*) AS n_docs FROM documents"),
+    "curate_funnel": (
+        "SELECT true AS filter_conserved, true AS dedup_conserved,"
+        " true AS tiers_conserved, true AS tiers_consistent,"
+        " true AS cap_respected, true AS mix_monotone,"
+        " true AS splits_nonempty, true AS pack_matches,"
+        " true AS chunks_match"),
+    "shard_assign": shard_assign_duck_sql(
+        "documents",
+        f"((doc_id * 2654435761) % {_SHARD_RANK_MOD}"
+        f" + {_SHARD_RANK_MOD}) % {_SHARD_RANK_MOD}",
+        n_shards=_N_SHARDS_TWIN),
+    "soft_dedup": soft_dedup_duck_sql(
+        "(SELECT doc_id, doc_id - ((doc_id % 25 + 25) % 25)"
+        " AS cluster_id FROM documents)",
+        f"((doc_id * 2654435761) % {MIX_BUCKETS} + {MIX_BUCKETS})"
+        f" % {MIX_BUCKETS}", alpha=0.5),
+    "lsh_plan": lsh_plan_duck_sql(n_perm=128, threshold=0.5, s_steps=50),
+    "bloom_decontam": bloom_decontam_duck_sql(
+        _NORM_CTE, n=5, m_bits=1 << 12, k=7),
+    "hll_vocab": hll_vocab_duck_sql(
+        f"SELECT lang, {_NORM_DUCK} AS norm FROM documents"),
+    "cms_vocab": cms_vocab_duck_sql(_NORM_CTE, k=100),
+    "len_quantiles": len_quantiles_duck_sql("documents"),
+    "url_dedup": url_dedup_duck_sql(
+        f"(SELECT doc_id, {_RECRAWL_URL_DUCK} AS url, n_chars"
+        f" FROM documents)"),
+    "text_quality": (
+        f"SELECT doc_id, {lang_id_duck_sql('norm')} AS pred_lang,"
+        f" {quality_duck_cols('norm')},"
+        f" {repetition_duck_cols('norm')} FROM ({_NORM_CTE})"),
+    "asof_join": (
+        "SELECT a.event_id, a.user_id,"
+        " CAST(floor(epoch(a.ts)) AS BIGINT) AS click_epoch,"
+        " round(b.value, 2) AS prev_purchase_value"
+        " FROM (SELECT * FROM events WHERE event_type = 'click') a"
+        " ASOF LEFT JOIN"
+        " (SELECT * FROM events WHERE event_type = 'purchase') b"
+        " ON a.user_id = b.user_id AND b.ts <= a.ts"),
+    # ::DOUBLE[] matters: DuckDB then does the same float32→double
+    # upcast as the Spark side, making round(...,6) EXACTLY equal
+    # (verified 0 ulp at sf0.01); without it the float32 fold
+    # differs in the 6th decimal
+    "ann_brute": (
+        "SELECT query_id, neighbor_id, rank, cosine FROM ("
+        " SELECT q.vec_id AS query_id, v.vec_id AS neighbor_id,"
+        " round(list_cosine_similarity(q.embedding::DOUBLE[],"
+        " v.embedding::DOUBLE[]), 6) AS cosine,"
+        " CAST(row_number() OVER (PARTITION BY q.vec_id"
+        " ORDER BY list_cosine_similarity(q.embedding::DOUBLE[],"
+        " v.embedding::DOUBLE[]) DESC, v.vec_id) AS INT) AS rank"
+        " FROM embeddings q, embeddings v"
+        " WHERE q.vec_id < 20 AND q.vec_id <> v.vec_id)"
+        " WHERE rank <= 5"),
+    "cc_edge_ops": (
+        f"SELECT 'bucket' AS stage, src, dst FROM ({_BUCKET_EDGES_DUCK})"
+        f" UNION ALL SELECT 'union', src, dst FROM ({_EDGE_UNION_DUCK})"
+        f" UNION ALL SELECT 'largestar', src, dst FROM ({_LARGESTAR_DUCK})"
+        f" UNION ALL SELECT 'smallstar', src, dst"
+        f" FROM ({_SMALLSTAR_DUCK})"),
+    "embed_media_suite": _contract_fold_oracle(_EMBED_MEDIA_SUITE),
+    "relational_counts": _RELATIONAL_COUNTS_DUCK,
+    "sig_contracts": _contract_fold_oracle(_SIG_CONTRACTS),
+    "pipeline_contracts": _contract_fold_oracle(_PIPELINE_CONTRACTS),
+    "profile": (
+        f"SELECT p.*, s.total_chars, true AS within_5pct"
+        f" FROM ({_PROFILE_DUCK}) p"
+        f" JOIN ({_SCAN_CORPUS_DUCK}) s USING (lang)"),
+    "normalize": f"SELECT doc_id, {_NORM_DUCK} AS norm_text FROM documents",
+    "shingles": (
+        "SELECT doc_id, CAST(length(list_distinct(list_transform("
+        f"generate_series(1, greatest(1, length(norm) - {CFG.shingle_k - 1})),"
+        f" i -> substr(norm, CAST(i AS INT), {CFG.shingle_k})))) AS BIGINT)"
+        f" AS n_shingles FROM ({_NORM_CTE})"),
+    "exact_dups": (
+        "SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(norm))"
+        f" AS exact_cluster FROM ({_NORM_CTE})"),
+    "canonical": (
+        "WITH c AS (SELECT doc_id,"
+        " TIMESTAMP '2025-01-01 00:00:00' + INTERVAL (doc_id * 137) SECOND"
+        " AS warc_ts,"
+        " min(doc_id) OVER (PARTITION BY md5(norm)) AS cluster"
+        f" FROM ({_NORM_CTE}))"
+        " SELECT doc_id, cluster, (row_number() OVER (PARTITION BY cluster"
+        " ORDER BY warc_ts, doc_id)) = 1 AS is_canonical FROM c"),
+    "cluster_stats": (
+        "WITH cl AS (SELECT min(doc_id) OVER (PARTITION BY md5(norm))"
+        f" AS exact_cluster FROM ({_NORM_CTE})),"
+        " s AS (SELECT exact_cluster, count(*) AS n_docs FROM cl"
+        " GROUP BY exact_cluster)"
+        " SELECT n_docs, count(*) AS n_clusters FROM s GROUP BY n_docs"),
+    "cc_labels": (
+        "SELECT doc_id, min(doc_id) OVER (PARTITION BY bucket) AS cluster_id"
+        f" FROM ({_BUCKET1})"),
+    "q1_lineitem_agg": (
+        "SELECT l_returnflag, l_linestatus,"
+        " round(sum(l_quantity), 2) AS sum_qty,"
+        " round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,"
+        " count(*) AS n_rows FROM lineitem"
+        " WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'"
+        " GROUP BY l_returnflag, l_linestatus"),
+    "q3_join": (
+        "SELECT c_mktsegment,"
+        " round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,"
+        " CAST(count(DISTINCT o_orderkey) AS BIGINT) AS n_orders"
+        " FROM customer JOIN orders ON c_custkey = o_custkey"
+        " JOIN lineitem ON o_orderkey = l_orderkey"
+        " GROUP BY c_mktsegment"),
+    "q_window": (
+        "SELECT o_orderkey, CAST(row_number() OVER (PARTITION BY o_custkey"
+        " ORDER BY o_orderdate, o_orderkey) AS INT) AS rn FROM orders"),
+    "q_topk": (
+        "SELECT o_orderkey, o_totalprice FROM orders"
+        " ORDER BY o_totalprice DESC, o_orderkey LIMIT 20"),
+    "events_json": (
+        "SELECT event_type,"
+        " CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT))"
+        " AS BIGINT) AS sum_k,"
+        " round(sum(value), 2) AS sum_value FROM events GROUP BY event_type"),
+    "metrics_rollup": (
+        "SELECT coalesce(l_returnflag, 'ALL') AS rflag,"
+        " coalesce(l_linestatus, 'ALL') AS lstatus, count(*) AS n"
+        " FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)"),
+    "recall": ("SELECT true AS recall_ok, true AS precision_ok,"
+               " true AS specificity_ok, true AS pairs_nonempty"),
+    "ngram_jaccard": (
+        "WITH g AS (SELECT doc_id, list_distinct(list_transform("
+        " generate_series(1, greatest(1, length(str_split(norm, ' ')) - 2)),"
+        " i -> array_to_string(list_slice(str_split(norm, ' '), i, i + 2),"
+        " ' '))) AS grams"
+        f" FROM ({_NORM_CTE}))"
+        " SELECT a.doc_id AS src,"
+        " round(length(list_intersect(a.grams, b.grams))"
+        " / length(list_distinct(a.grams || b.grams)), 4) AS jaccard_w3"
+        " FROM g a JOIN g b ON b.doc_id = a.doc_id + 1"),
+    "decontam": decontaminate_duck_sql(_NORM_CTE, n=8),
+    "pii_stats": (
+        f"SELECT doc_id, {pii_duck_cols('text')} FROM"
+        f" (SELECT doc_id, {_PII_TEXT_DUCK} AS text FROM documents)"),
+    "domain_stats": domain_stats_duck_sql(
+        f"(SELECT {_MESSY_URL_DUCK} AS url, n_chars FROM documents)",
+        "url", chars_col="n_chars", blocklist=("site3.example.com",)),
+    "line_dedup": line_dedup_duck_sql(
+        f"(SELECT doc_id, {_LINE_TEXT_DUCK} AS text FROM documents)"),
+    "filter_battery": filter_battery_duck_sql(
+        f"(SELECT doc_id, {_NORM_DUCK} AS norm,"
+        f" {_PII_TEXT_DUCK} AS ptext FROM documents)",
+        norm_expr="norm", pii_expr="ptext", allowed_langs=("en",)),
+    "domain_cap": domain_cap_duck_sql(
+        f"(SELECT doc_id, {_MESSY_URL_DUCK} AS url FROM documents)",
+        "url", "((doc_id * 2654435761) % 9973 + 9973) % 9973", k=10),
+    "split_assign": split_assign_duck_sql(
+        "documents",
+        f"((doc_id * 2654435761) % {SPLIT_BUCKETS} + {SPLIT_BUCKETS})"
+        f" % {SPLIT_BUCKETS}",
+        weights=(("train", 0.8), ("val", 0.1), ("test", 0.1))),
+    "dedup_tiers": tier_labels_duck_sql(
+        "(SELECT doc_id FROM documents)", _EDGES_DUCK),
+    "cluster_cap": cluster_cap_duck_sql(
+        "(SELECT doc_id, doc_id - ((doc_id % 7 + 7) % 7) AS cluster_id"
+        " FROM documents)",
+        "((doc_id * 2654435761) % 9973 + 9973) % 9973", k=3),
+    "mix_sample": mix_sample_duck_sql(
+        "documents",
+        f"((doc_id * 2654435761) % {MIX_BUCKETS} + {MIX_BUCKETS})"
+        f" % {MIX_BUCKETS}",
+        rates=(("en", 0.5), ("fr", 1.0), ("zh", 0.05)),
+        stratum_expr="lang", default_rate=0.25),
+    "lm_score": lm_score_duck_sql(_NORM_CTE),
+    "dsir_select": dsir_duck_sql(
+        _NORM_CTE,
+        f"SELECT doc_id, {_NORM_DUCK} AS norm FROM documents"
+        f" WHERE lang = 'en'",
+        threshold=-8.0,
+        rank_sql=f"((doc_id * 2654435761 % {RANK_BUCKETS})"
+                 f" + {RANK_BUCKETS}) % {RANK_BUCKETS}"),
+}
+
+assert list(ORACLE_SQL) == list(QUERIES) and len(QUERIES) <= 50

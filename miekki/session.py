@@ -38,6 +38,8 @@ def build_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.driver.memory", os.environ.get("MIEKKI_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
+        # progress bars would interleave with the scripts' stdout lines
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         # shuffle/spill to tmpfs: the sandbox disk is shared with
         # other tenants; real clusters set local dirs on fast media

@@ -10,7 +10,10 @@ three Exchanges — with one ``localCheckpoint()`` (which also truncates
 lineage: without it the plan doubles per round). It stops as soon as
 the graph is a forest of stars centred on the component minima, a
 state the large-star window detects in the same pass.
-``large_star``/``small_star`` are the join-based reference operators.
+``large_star``/``small_star`` are the join-based reference operators:
+nothing on the pipeline path calls them, they are what
+tests/test_cc.py checks one ``_large_pass`` + ``_small_pass`` round
+against. The driver's cc_edge_ops key runs the two passes themselves.
 """
 
 from __future__ import annotations

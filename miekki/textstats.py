@@ -1,9 +1,7 @@
 """Text-analysis operators for large-scale training-data pipelines:
-language ID, quality scoring, token counting, document
-fingerprinting. All but fingerprinting are pure Spark SQL (codegen'd,
-no Python) with exact DuckDB twins for the driver cross-check;
-fingerprinting reuses the winnowing kernel (rows-only check +
-Python-oracle tests).
+language ID, quality scoring and token counting, all pure Spark SQL
+(codegen'd, no Python) with exact DuckDB twins for the driver
+cross-check (the text_quality key).
 
 The regex patterns are deliberately ASCII-safe and lookahead-free so
 Java regex (Spark) and RE2 (DuckDB) agree byte-for-byte; stopword
@@ -62,10 +60,6 @@ def predict_lang(norm_col) -> F.Column:
     for lang in reversed(LANG_ORDER):
         expr = F.when(scores[lang] == best, F.lit(lang)).otherwise(expr)
     return F.when(best > 0, expr).otherwise(F.lit("und"))
-
-
-def lang_id(docs_norm: DataFrame) -> DataFrame:
-    return docs_norm.withColumn("pred_lang", predict_lang("norm_text"))
 
 
 # --- token counting --------------------------------------------------

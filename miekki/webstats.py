@@ -213,14 +213,6 @@ def vocab_topk(docs_norm: DataFrame, k: int = 100,
             .limit(k))
 
 
-def vocab_topk_duck_sql(norm_cte: str, k: int = 100) -> str:
-    return ("SELECT token, CAST(count(*) AS BIGINT) AS n"
-            " FROM (SELECT unnest(str_split(norm, ' ')) AS token"
-            f" FROM ({norm_cte}))"
-            " WHERE token <> ''"
-            " GROUP BY token ORDER BY n DESC, token LIMIT " + str(k))
-
-
 # =====================================================================
 # X22 — repetition scores
 # =====================================================================

@@ -34,31 +34,20 @@ sys.path.insert(0, REPO)
 
 
 def main():
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    mult = int(os.environ.get("MIEKKI_BENCH_MULT", "32"))
     cat_root = os.environ.get("MIEKKI_CATALOG_ROOT", "/dev/shm/miekki_cat")
 
-    from bench import prepare_corpus
+    from bench import bench_setup
     from miekki.catalog import HadoopCatalog
     from miekki.config import DedupConfig
     from miekki.pipeline import run
-    from miekki.session import build_spark
 
-    corpus_path, n_docs = prepare_corpus(sf_dir, mult,
-                                         os.path.join(REPO, ".cache"))
+    b = bench_setup("miekki-durable", default_mult=32, calibrate=False)
+    spark, n_docs = b.spark, b.n_docs
     cfg = DedupConfig()
-    if int(cpus) > 16:
-        os.environ.setdefault("MIEKKI_TASK_CPUS", "2")
-    master = os.environ.get("MIEKKI_MASTER", f"local[{cpus}]")
-    spark = build_spark(master=master, app_name="miekki-durable",
-                        extra_conf={"spark.ui.showConsoleProgress": "false"})
     shutil.rmtree(cat_root, ignore_errors=True)
     cat = HadoopCatalog(spark, cat_root)
-    n_parts = int(os.environ.get("MIEKKI_BENCH_PARTITIONS", "96"))
-    corpus = spark.read.parquet(corpus_path).repartition(n_parts)
     # ingest is NOT timed (the corpus pre-exists in a real deployment)
-    cat.overwrite("corpus", corpus, run_id="ingest")
+    cat.overwrite("corpus", b.corpus, run_id="ingest")
 
     # warm python workers / codegen (workers are long-lived on a real
     # cluster; the protocol measures the workload, not process spawn)
@@ -74,12 +63,12 @@ def main():
         "metric": "durable_dedup_e2e_wall",
         "value": e2e,
         "unit": "sec",
-        "sf": sf_dir,
+        "sf": b.sf_dir,
         "docs": n_docs,
         "docs_per_sec": round(n_docs / e2e, 1),
-        "cpus": int(cpus),
-        "mult": mult,
-        "master": master,
+        "cpus": b.cpus,
+        "mult": b.mult,
+        "master": b.master,
         "executed": res["executed"],
     }))
 

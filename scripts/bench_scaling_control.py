@@ -49,8 +49,7 @@ def run_once(n_exec: int) -> float:
     corpus_path, _ = prepare_corpus("/root/testdata/sf0.1", MULT,
                                     os.path.join(REPO, ".cache"))
     spark = build_spark(master=f"local-cluster[{n_exec},{CORES},{MEM_MB}]",
-                        app_name="scaling-control",
-                        extra_conf={"spark.ui.showConsoleProgress": "false"})
+                        app_name="scaling-control")
     corpus = spark.read.parquet(corpus_path).repartition(96)
     signatures_from_text(normalize(corpus.limit(512), cfg), cfg).count()
     t0 = time.time()

@@ -69,21 +69,16 @@ def main():
     if args.reps < 1:
         ap.error("--reps must be >= 1")
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    mult = int(os.environ.get("MIEKKI_BENCH_MULT", "16"))
-
-    from bench import calibration_probe, prepare_corpus
-    corpus_path, n_docs = prepare_corpus(sf_dir, mult,
-                                         os.path.join(REPO, ".cache"))
-    calib = calibration_probe()   # before the JVM exists, as bench.py
+    from bench import bench_setup
+    b = bench_setup("miekki-stages")
+    spark = b.spark
 
     from pyspark.sql import functions as F
 
     from miekki.bpe import bpe_tokenize, fit_bpe
     from miekki.config import DedupConfig
     from miekki.pipeline import _doc_meta, dedup_labels
-    from miekki.session import build_spark, codegen_compiles
+    from miekki.session import codegen_compiles
     from miekki.sketches import (cms_build, hdr_histogram, hdr_quantiles,
                                  hll_estimate, hll_registers)
     from miekki.stages.canonical import select_canonical
@@ -98,13 +93,7 @@ def main():
     from miekki.webstats import filter_battery
 
     cfg = DedupConfig()
-    if int(cpus) > 16:
-        os.environ.setdefault("MIEKKI_TASK_CPUS", "2")
-    master = os.environ.get("MIEKKI_MASTER", f"local[{cpus}]")
-    spark = build_spark(master=master, app_name="miekki-stages",
-                        extra_conf={"spark.ui.showConsoleProgress": "false"})
-    n_parts = int(os.environ.get("MIEKKI_BENCH_PARTITIONS", "96"))
-    corpus = spark.read.parquet(corpus_path).repartition(n_parts)
+    corpus = b.corpus
     corpus.count()
     corpus = corpus.localCheckpoint()
 
@@ -209,8 +198,8 @@ def main():
         "stages": walls, "reps": reps, "load": load, "steal_pct": steal,
         "compiles": compiles,
         "total": round(sum(walls[s] for s in DEDUP_PATH if s in walls), 2),
-        "docs": n_docs, "mult": mult, "cpus": int(cpus), "master": master,
-        "calib_sec": calib}))
+        "docs": b.n_docs, "mult": b.mult, "cpus": b.cpus, "master": b.master,
+        "calib_sec": b.calib_sec}))
 
 
 if __name__ == "__main__":

@@ -46,8 +46,7 @@ def main():
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
-    spark = build_spark(master="local[16]", shuffle_partitions=16,
-                        extra_conf={"spark.ui.showConsoleProgress": "false"})
+    spark = build_spark(master="local[16]", shuffle_partitions=16)
     qs, osql = entrymod.queries(), entrymod.oracle_sql()
 
     print(f"== entry() smoke ==", flush=True)
@@ -68,7 +67,8 @@ def main():
             print(f"{name:18s} SPARK ERROR: {str(exc)[:200]}", flush=True)
             continue
         if name not in osql:
-            print(f"{name:18s} rows-only: {len(sdf):7d} rows"
+            failures.append((name, "NO ORACLE"))
+            print(f"{name:18s} NO ORACLE: {len(sdf):7d} rows"
                   f" ({time.time()-t0:.0f}s)", flush=True)
             continue
         try:
@@ -84,7 +84,6 @@ def main():
             problems.append(f"cols {sorted(sdf.columns)} != {sorted(odf.columns)}")
         elif value_hash(sdf) != value_hash(odf):
             problems.append("value-hash mismatch")
-            merged = sdf[sorted(sdf.columns)].round(6) if len(sdf) else sdf
         status = "OK " if not problems else "FAIL " + "; ".join(problems)
         print(f"{name:18s} {len(sdf):7d} rows  {status} ({time.time()-t0:.0f}s)",
               flush=True)

@@ -24,8 +24,7 @@ cfg = DedupConfig()
 
 docs = pd.read_parquet("/root/testdata/sf0.001/documents.parquet")
 corpus_pdf, _, _ = make_corpus(docs)
-spark = build_spark(master="local[8]", shuffle_partitions=8,
-                    extra_conf={"spark.ui.showConsoleProgress": "false"})
+spark = build_spark(master="local[8]", shuffle_partitions=8)
 corpus = spark.createDataFrame(corpus_pdf[["url", "warc_ts", "text", "lang"]])
 
 labels = (dedup_labels(corpus, cfg).toPandas()[["doc_id", "cluster_id"]]

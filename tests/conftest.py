@@ -32,20 +32,19 @@ def spark():
         master="local[8]",
         app_name="miekki-tests",
         shuffle_partitions=8,
-        extra_conf={"spark.ui.showConsoleProgress": "false",
-                    # the 24g production default lets G1 grow the
-                    # heap past the RAM of a small test host, where
-                    # the kernel then kills the JVM mid-suite; the
-                    # sf0.001 fixtures need a fraction of this
-                    "spark.driver.memory":
-                        os.environ.get("MIEKKI_DRIVER_MEM", "4g"),
-                    "spark.eventLog.enabled": "true",
-                    # single uncompressed file so eventlog.Tail can
-                    # follow it by byte offset (Spark 4 defaults to a
-                    # rolling zstd v2 layout)
-                    "spark.eventLog.rolling.enabled": "false",
-                    "spark.eventLog.compress": "false",
-                    "spark.eventLog.dir": evlog},
+        extra_conf={
+            # the 24g production default lets G1 grow the heap past
+            # the RAM of a small test host, where the kernel then
+            # kills the JVM mid-suite; the sf0.001 fixtures need a
+            # fraction of this
+            "spark.driver.memory": os.environ.get("MIEKKI_DRIVER_MEM", "4g"),
+            "spark.eventLog.enabled": "true",
+            # single uncompressed file so eventlog.Tail can follow it
+            # by byte offset (Spark 4 defaults to a rolling zstd v2
+            # layout)
+            "spark.eventLog.rolling.enabled": "false",
+            "spark.eventLog.compress": "false",
+            "spark.eventLog.dir": evlog},
     )
     yield s
     s.stop()

@@ -1,7 +1,7 @@
 """Web-corpus filter battery (SURVEY.md §2.0c X19–X22) unit pins.
 
-The driver cross-check (pii_stats / domain_stats / vocab_topk /
-repetition keys) already compares full outputs against independently
+The driver cross-check (pii_stats / domain_stats / cms_vocab /
+text_quality keys) already compares full outputs against independently
 written DuckDB twins at sf0.01; these tests pin hand-computed values
 on crafted rows — the cases where a shared bug in both dialect twins
 could hide (regex ordering, tie-breaks, transform arity).
