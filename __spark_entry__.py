@@ -45,6 +45,6 @@ def oracle_sql() -> dict[str, str]:
     semantics are SQL-expressible, pinned contract booleans where they
     are not (MinHash/SimHash arrays stay bit-exact via the pure-Python
     oracle goldens in tests/)."""
-    from miekki.driver_queries import ORACLE_SQL
+    from miekki import driver_queries
 
-    return dict(ORACLE_SQL)
+    return dict(driver_queries.oracle_sql())

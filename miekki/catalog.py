@@ -12,9 +12,10 @@ The pipeline speaks only this interface. Two implementations:
   logic is unit-tested through interface-level fakes and kept
   deliberately thin.
 
-Writes are atomic at the manifest level: data lands under
-``_tmp_<run_id>`` and the manifest flips last, so a crashed half-write
-is invisible to readers and simply overwritten on retry (idempotent
+Writes are atomic at the manifest level: data lands under a fresh
+``data_<run_id>_<uuid8>`` directory and the manifest flips last, so a
+crashed half-write is invisible to readers; the next overwrite sweeps
+every ``data_*`` directory the manifest does not name (idempotent
 resume, BASELINE.json north_rule).
 """
 
@@ -139,12 +140,12 @@ class HadoopCatalog(Catalog):
         # without bound. Any data_* dir not named by the current
         # manifest is garbage by construction (single-writer contract),
         # so sweep them before writing the new one.
-        current = None
+        old = None
         if os.path.exists(self._manifest(name)):
             with open(self._manifest(name)) as f:
-                current = json.load(f)["data"]
+                old = json.load(f)["data"]
         for entry in os.listdir(d):
-            if (entry.startswith("data_") and entry != current
+            if (entry.startswith("data_") and entry != old
                     and os.path.isdir(os.path.join(d, entry))):
                 shutil.rmtree(os.path.join(d, entry), ignore_errors=True)
         data = f"data_{run_id}_{uuid.uuid4().hex[:8]}"
@@ -171,10 +172,6 @@ class HadoopCatalog(Catalog):
                .parquet(path))
         else:
             df.write.mode("overwrite").parquet(path)
-        old = None
-        if os.path.exists(self._manifest(name)):
-            with open(self._manifest(name)) as f:
-                old = json.load(f)["data"]
         tmp = self._manifest(name) + ".tmp"
         with open(tmp, "w") as f:
             json.dump({"data": data, "run_id": run_id,
@@ -316,15 +313,8 @@ class IcebergCatalog(Catalog):
     def overwrite(self, name: str, df: DataFrame, run_id: str,
                   bucket_by: tuple[int, list[str]] | None = None,
                   partition_by: list[str] | None = None) -> None:
-        try:  # Spark 4 home of the partition transforms
-            from pyspark.sql.functions import partitioning as P
-
-            bucket = P.bucket
-        except ImportError:  # pragma: no cover - Spark 3.x fallback
-            from pyspark.sql import functions as F
-
-            bucket = F.bucket
         from pyspark.sql import functions as F
+        from pyspark.sql.functions import partitioning as P
 
         w = (df.writeTo(self._tbl(name))
                .tableProperty("write.run-id", run_id)
@@ -334,7 +324,7 @@ class IcebergCatalog(Catalog):
             # Iceberg's native analog: hidden bucket partition
             # transform — readers get the same co-location from table
             # metadata with no session-catalog registration
-            w = w.partitionedBy(*[bucket(n, c) for c in cols])
+            w = w.partitionedBy(*[P.bucket(n, c) for c in cols])
         elif partition_by:
             # identity partitioning; Iceberg metadata prunes partitions
             # on filtered reads, same contract as the Hadoop impl

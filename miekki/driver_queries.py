@@ -1,7 +1,7 @@
 """Driver-contract queries (SURVEY.md §3.2/§5.4, __spark_entry__.py).
 
 One entry per operator key from SURVEY.md §2.0/§2.0b. Each Spark
-callable takes (spark, sf_dir) and returns a DataFrame; ORACLE_SQL
+callable takes (spark, sf_dir) and returns a DataFrame; oracle_sql()
 holds the DuckDB twin executed by the driver on the same parquet
 views. Column names and types are aligned on both sides (the driver
 hashes values after sorting columns by name).
@@ -14,12 +14,13 @@ xxhash64/MinHash themselves are not SQL-portable (those are covered
 by the pure-Python oracle in tests/ and by contract keys whose oracle
 pins the required booleans).
 
-QUERIES and ORACLE_SQL at the end of the file are the registry: the
+QUERIES and oracle_sql() at the end of the file are the registry: the
 50 driver keys in driver order, each with its oracle.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Callable
 
@@ -2129,195 +2130,206 @@ def _quality_clf_oracle() -> str:
         bias, _CLF_THR, b=_CLF_B)
 
 
-ORACLE_SQL: dict[str, str] = {
-    "seq_pack": seq_pack_duck_sql(
-        f"SELECT doc_id, CAST(len(list_filter(str_split(norm, ' '),"
-        f" t -> t <> '')) AS BIGINT) AS n_tok FROM ({_NORM_CTE})",
-        seq_len=512, n_buckets=8),
-    "chunk_passages": chunk_duck_sql(_NORM_CTE, chunk_len=64, stride=48),
-    "pack_pieces": pack_pieces_duck_sql(_TOKS_DUCK, seq_len=512,
-                                        n_buckets=8),
-    "chunk_tokens": chunk_tokens_duck_sql(_TOKS_DUCK, chunk_len=64,
-                                          stride=48),
-    "quality_clf": _quality_clf_oracle(),
-    "semdedup_text": (
-        "SELECT true AS rows_once, true AS twins_collapsed,"
-        " count(*) AS n_docs FROM documents"),
-    "curate_funnel": (
-        "SELECT true AS filter_conserved, true AS dedup_conserved,"
-        " true AS tiers_conserved, true AS tiers_consistent,"
-        " true AS cap_respected, true AS mix_monotone,"
-        " true AS splits_nonempty, true AS pack_matches,"
-        " true AS chunks_match"),
-    "shard_assign": shard_assign_duck_sql(
-        "documents",
-        f"((doc_id * 2654435761) % {_SHARD_RANK_MOD}"
-        f" + {_SHARD_RANK_MOD}) % {_SHARD_RANK_MOD}",
-        n_shards=_N_SHARDS_TWIN),
-    "soft_dedup": soft_dedup_duck_sql(
-        "(SELECT doc_id, doc_id - ((doc_id % 25 + 25) % 25)"
-        " AS cluster_id FROM documents)",
-        f"((doc_id * 2654435761) % {MIX_BUCKETS} + {MIX_BUCKETS})"
-        f" % {MIX_BUCKETS}", alpha=0.5),
-    "lsh_plan": lsh_plan_duck_sql(n_perm=128, threshold=0.5, s_steps=50),
-    "bloom_decontam": bloom_decontam_duck_sql(
-        _NORM_CTE, n=5, m_bits=1 << 12, k=7),
-    "hll_vocab": hll_vocab_duck_sql(
-        f"SELECT lang, {_NORM_DUCK} AS norm FROM documents"),
-    "cms_vocab": cms_vocab_duck_sql(_NORM_CTE, k=100),
-    "len_quantiles": len_quantiles_duck_sql("documents"),
-    "url_dedup": url_dedup_duck_sql(
-        f"(SELECT doc_id, {_RECRAWL_URL_DUCK} AS url, n_chars"
-        f" FROM documents)"),
-    "text_quality": (
-        f"SELECT doc_id, {lang_id_duck_sql('norm')} AS pred_lang,"
-        f" {quality_duck_cols('norm')},"
-        f" {repetition_duck_cols('norm')} FROM ({_NORM_CTE})"),
-    "asof_join": (
-        "SELECT a.event_id, a.user_id,"
-        " CAST(floor(epoch(a.ts)) AS BIGINT) AS click_epoch,"
-        " round(b.value, 2) AS prev_purchase_value"
-        " FROM (SELECT * FROM events WHERE event_type = 'click') a"
-        " ASOF LEFT JOIN"
-        " (SELECT * FROM events WHERE event_type = 'purchase') b"
-        " ON a.user_id = b.user_id AND b.ts <= a.ts"),
-    # ::DOUBLE[] matters: DuckDB then does the same float32→double
-    # upcast as the Spark side, making round(...,6) EXACTLY equal
-    # (verified 0 ulp at sf0.01); without it the float32 fold
-    # differs in the 6th decimal
-    "ann_brute": (
-        "SELECT query_id, neighbor_id, rank, cosine FROM ("
-        " SELECT q.vec_id AS query_id, v.vec_id AS neighbor_id,"
-        " round(list_cosine_similarity(q.embedding::DOUBLE[],"
-        " v.embedding::DOUBLE[]), 6) AS cosine,"
-        " CAST(row_number() OVER (PARTITION BY q.vec_id"
-        " ORDER BY list_cosine_similarity(q.embedding::DOUBLE[],"
-        " v.embedding::DOUBLE[]) DESC, v.vec_id) AS INT) AS rank"
-        " FROM embeddings q, embeddings v"
-        " WHERE q.vec_id < 20 AND q.vec_id <> v.vec_id)"
-        " WHERE rank <= 5"),
-    "cc_edge_ops": (
-        f"SELECT 'bucket' AS stage, src, dst FROM ({_BUCKET_EDGES_DUCK})"
-        f" UNION ALL SELECT 'union', src, dst FROM ({_EDGE_UNION_DUCK})"
-        f" UNION ALL SELECT 'largestar', src, dst FROM ({_LARGESTAR_DUCK})"
-        f" UNION ALL SELECT 'smallstar', src, dst"
-        f" FROM ({_SMALLSTAR_DUCK})"),
-    "embed_media_suite": _contract_fold_oracle(_EMBED_MEDIA_SUITE),
-    "relational_counts": _RELATIONAL_COUNTS_DUCK,
-    "sig_contracts": _contract_fold_oracle(_SIG_CONTRACTS),
-    "pipeline_contracts": _contract_fold_oracle(_PIPELINE_CONTRACTS),
-    "profile": (
-        f"SELECT p.*, s.total_chars, true AS within_5pct"
-        f" FROM ({_PROFILE_DUCK}) p"
-        f" JOIN ({_SCAN_CORPUS_DUCK}) s USING (lang)"),
-    "normalize": f"SELECT doc_id, {_NORM_DUCK} AS norm_text FROM documents",
-    "shingles": (
-        "SELECT doc_id, CAST(length(list_distinct(list_transform("
-        f"generate_series(1, greatest(1, length(norm) - {CFG.shingle_k - 1})),"
-        f" i -> substr(norm, CAST(i AS INT), {CFG.shingle_k})))) AS BIGINT)"
-        f" AS n_shingles FROM ({_NORM_CTE})"),
-    "exact_dups": (
-        "SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(norm))"
-        f" AS exact_cluster FROM ({_NORM_CTE})"),
-    "canonical": (
-        "WITH c AS (SELECT doc_id,"
-        " TIMESTAMP '2025-01-01 00:00:00' + INTERVAL (doc_id * 137) SECOND"
-        " AS warc_ts,"
-        " min(doc_id) OVER (PARTITION BY md5(norm)) AS cluster"
-        f" FROM ({_NORM_CTE}))"
-        " SELECT doc_id, cluster, (row_number() OVER (PARTITION BY cluster"
-        " ORDER BY warc_ts, doc_id)) = 1 AS is_canonical FROM c"),
-    "cluster_stats": (
-        "WITH cl AS (SELECT min(doc_id) OVER (PARTITION BY md5(norm))"
-        f" AS exact_cluster FROM ({_NORM_CTE})),"
-        " s AS (SELECT exact_cluster, count(*) AS n_docs FROM cl"
-        " GROUP BY exact_cluster)"
-        " SELECT n_docs, count(*) AS n_clusters FROM s GROUP BY n_docs"),
-    "cc_labels": (
-        "SELECT doc_id, min(doc_id) OVER (PARTITION BY bucket) AS cluster_id"
-        f" FROM ({_BUCKET1})"),
-    "q1_lineitem_agg": (
-        "SELECT l_returnflag, l_linestatus,"
-        " round(sum(l_quantity), 2) AS sum_qty,"
-        " round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,"
-        " count(*) AS n_rows FROM lineitem"
-        " WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'"
-        " GROUP BY l_returnflag, l_linestatus"),
-    "q3_join": (
-        "SELECT c_mktsegment,"
-        " round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,"
-        " CAST(count(DISTINCT o_orderkey) AS BIGINT) AS n_orders"
-        " FROM customer JOIN orders ON c_custkey = o_custkey"
-        " JOIN lineitem ON o_orderkey = l_orderkey"
-        " GROUP BY c_mktsegment"),
-    "q_window": (
-        "SELECT o_orderkey, CAST(row_number() OVER (PARTITION BY o_custkey"
-        " ORDER BY o_orderdate, o_orderkey) AS INT) AS rn FROM orders"),
-    "q_topk": (
-        "SELECT o_orderkey, o_totalprice FROM orders"
-        " ORDER BY o_totalprice DESC, o_orderkey LIMIT 20"),
-    "events_json": (
-        "SELECT event_type,"
-        " CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT))"
-        " AS BIGINT) AS sum_k,"
-        " round(sum(value), 2) AS sum_value FROM events GROUP BY event_type"),
-    "metrics_rollup": (
-        "SELECT coalesce(l_returnflag, 'ALL') AS rflag,"
-        " coalesce(l_linestatus, 'ALL') AS lstatus, count(*) AS n"
-        " FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)"),
-    "recall": ("SELECT true AS recall_ok, true AS precision_ok,"
-               " true AS specificity_ok, true AS pairs_nonempty"),
-    "ngram_jaccard": (
-        "WITH g AS (SELECT doc_id, list_distinct(list_transform("
-        " generate_series(1, greatest(1, length(str_split(norm, ' ')) - 2)),"
-        " i -> array_to_string(list_slice(str_split(norm, ' '), i, i + 2),"
-        " ' '))) AS grams"
-        f" FROM ({_NORM_CTE}))"
-        " SELECT a.doc_id AS src,"
-        " round(length(list_intersect(a.grams, b.grams))"
-        " / length(list_distinct(a.grams || b.grams)), 4) AS jaccard_w3"
-        " FROM g a JOIN g b ON b.doc_id = a.doc_id + 1"),
-    "decontam": decontaminate_duck_sql(_NORM_CTE, n=8),
-    "pii_stats": (
-        f"SELECT doc_id, {pii_duck_cols('text')} FROM"
-        f" (SELECT doc_id, {_PII_TEXT_DUCK} AS text FROM documents)"),
-    "domain_stats": domain_stats_duck_sql(
-        f"(SELECT {_MESSY_URL_DUCK} AS url, n_chars FROM documents)",
-        "url", chars_col="n_chars", blocklist=("site3.example.com",)),
-    "line_dedup": line_dedup_duck_sql(
-        f"(SELECT doc_id, {_LINE_TEXT_DUCK} AS text FROM documents)"),
-    "filter_battery": filter_battery_duck_sql(
-        f"(SELECT doc_id, {_NORM_DUCK} AS norm,"
-        f" {_PII_TEXT_DUCK} AS ptext FROM documents)",
-        norm_expr="norm", pii_expr="ptext", allowed_langs=("en",)),
-    "domain_cap": domain_cap_duck_sql(
-        f"(SELECT doc_id, {_MESSY_URL_DUCK} AS url FROM documents)",
-        "url", "((doc_id * 2654435761) % 9973 + 9973) % 9973", k=10),
-    "split_assign": split_assign_duck_sql(
-        "documents",
-        f"((doc_id * 2654435761) % {SPLIT_BUCKETS} + {SPLIT_BUCKETS})"
-        f" % {SPLIT_BUCKETS}",
-        weights=(("train", 0.8), ("val", 0.1), ("test", 0.1))),
-    "dedup_tiers": tier_labels_duck_sql(
-        "(SELECT doc_id FROM documents)", _EDGES_DUCK),
-    "cluster_cap": cluster_cap_duck_sql(
-        "(SELECT doc_id, doc_id - ((doc_id % 7 + 7) % 7) AS cluster_id"
-        " FROM documents)",
-        "((doc_id * 2654435761) % 9973 + 9973) % 9973", k=3),
-    "mix_sample": mix_sample_duck_sql(
-        "documents",
-        f"((doc_id * 2654435761) % {MIX_BUCKETS} + {MIX_BUCKETS})"
-        f" % {MIX_BUCKETS}",
-        rates=(("en", 0.5), ("fr", 1.0), ("zh", 0.05)),
-        stratum_expr="lang", default_rate=0.25),
-    "lm_score": lm_score_duck_sql(_NORM_CTE),
-    "dsir_select": dsir_duck_sql(
-        _NORM_CTE,
-        f"SELECT doc_id, {_NORM_DUCK} AS norm FROM documents"
-        f" WHERE lang = 'en'",
-        threshold=-8.0,
-        rank_sql=f"((doc_id * 2654435761 % {RANK_BUCKETS})"
-                 f" + {RANK_BUCKETS}) % {RANK_BUCKETS}"),
-}
-
-assert list(ORACLE_SQL) == list(QUERIES) and len(QUERIES) <= 50
+@functools.cache
+def oracle_sql() -> dict[str, str]:
+    """The DuckDB twin of every key, in driver order. Built on first
+    call, not at import: the quality_clf twin refits its classifier
+    over MIEKKI_ORACLE_SF_DIR."""
+    sql = {
+        "seq_pack": seq_pack_duck_sql(
+            f"SELECT doc_id, CAST(len(list_filter(str_split(norm, ' '),"
+            f" t -> t <> '')) AS BIGINT) AS n_tok FROM ({_NORM_CTE})",
+            seq_len=512, n_buckets=8),
+        "chunk_passages": chunk_duck_sql(_NORM_CTE, chunk_len=64, stride=48),
+        "pack_pieces": pack_pieces_duck_sql(_TOKS_DUCK, seq_len=512,
+                                            n_buckets=8),
+        "chunk_tokens": chunk_tokens_duck_sql(_TOKS_DUCK, chunk_len=64,
+                                              stride=48),
+        "quality_clf": _quality_clf_oracle(),
+        "semdedup_text": (
+            "SELECT true AS rows_once, true AS twins_collapsed,"
+            " count(*) AS n_docs FROM documents"),
+        "curate_funnel": (
+            "SELECT true AS filter_conserved, true AS dedup_conserved,"
+            " true AS tiers_conserved, true AS tiers_consistent,"
+            " true AS cap_respected, true AS mix_monotone,"
+            " true AS splits_nonempty, true AS pack_matches,"
+            " true AS chunks_match"),
+        "shard_assign": shard_assign_duck_sql(
+            "documents",
+            f"((doc_id * 2654435761) % {_SHARD_RANK_MOD}"
+            f" + {_SHARD_RANK_MOD}) % {_SHARD_RANK_MOD}",
+            n_shards=_N_SHARDS_TWIN),
+        "soft_dedup": soft_dedup_duck_sql(
+            "(SELECT doc_id, doc_id - ((doc_id % 25 + 25) % 25)"
+            " AS cluster_id FROM documents)",
+            f"((doc_id * 2654435761) % {MIX_BUCKETS} + {MIX_BUCKETS})"
+            f" % {MIX_BUCKETS}", alpha=0.5),
+        "lsh_plan": lsh_plan_duck_sql(n_perm=128, threshold=0.5, s_steps=50),
+        "bloom_decontam": bloom_decontam_duck_sql(
+            _NORM_CTE, n=5, m_bits=1 << 12, k=7),
+        "hll_vocab": hll_vocab_duck_sql(
+            f"SELECT lang, {_NORM_DUCK} AS norm FROM documents"),
+        "cms_vocab": cms_vocab_duck_sql(_NORM_CTE, k=100),
+        "len_quantiles": len_quantiles_duck_sql("documents"),
+        "url_dedup": url_dedup_duck_sql(
+            f"(SELECT doc_id, {_RECRAWL_URL_DUCK} AS url, n_chars"
+            f" FROM documents)"),
+        "text_quality": (
+            f"SELECT doc_id, {lang_id_duck_sql('norm')} AS pred_lang,"
+            f" {quality_duck_cols('norm')},"
+            f" {repetition_duck_cols('norm')} FROM ({_NORM_CTE})"),
+        "asof_join": (
+            "SELECT a.event_id, a.user_id,"
+            " CAST(floor(epoch(a.ts)) AS BIGINT) AS click_epoch,"
+            " round(b.value, 2) AS prev_purchase_value"
+            " FROM (SELECT * FROM events WHERE event_type = 'click') a"
+            " ASOF LEFT JOIN"
+            " (SELECT * FROM events WHERE event_type = 'purchase') b"
+            " ON a.user_id = b.user_id AND b.ts <= a.ts"),
+        # ::DOUBLE[] matters: DuckDB then does the same float32→double
+        # upcast as the Spark side, making round(...,6) EXACTLY equal
+        # (verified 0 ulp at sf0.01); without it the float32 fold
+        # differs in the 6th decimal
+        "ann_brute": (
+            "SELECT query_id, neighbor_id, rank, cosine FROM ("
+            " SELECT q.vec_id AS query_id, v.vec_id AS neighbor_id,"
+            " round(list_cosine_similarity(q.embedding::DOUBLE[],"
+            " v.embedding::DOUBLE[]), 6) AS cosine,"
+            " CAST(row_number() OVER (PARTITION BY q.vec_id"
+            " ORDER BY list_cosine_similarity(q.embedding::DOUBLE[],"
+            " v.embedding::DOUBLE[]) DESC, v.vec_id) AS INT) AS rank"
+            " FROM embeddings q, embeddings v"
+            " WHERE q.vec_id < 20 AND q.vec_id <> v.vec_id)"
+            " WHERE rank <= 5"),
+        "cc_edge_ops": (
+            f"SELECT 'bucket' AS stage, src, dst FROM ({_BUCKET_EDGES_DUCK})"
+            f" UNION ALL SELECT 'union', src, dst FROM ({_EDGE_UNION_DUCK})"
+            f" UNION ALL SELECT 'largestar', src, dst FROM ({_LARGESTAR_DUCK})"
+            f" UNION ALL SELECT 'smallstar', src, dst"
+            f" FROM ({_SMALLSTAR_DUCK})"),
+        "embed_media_suite": _contract_fold_oracle(_EMBED_MEDIA_SUITE),
+        "relational_counts": _RELATIONAL_COUNTS_DUCK,
+        "sig_contracts": _contract_fold_oracle(_SIG_CONTRACTS),
+        "pipeline_contracts": _contract_fold_oracle(_PIPELINE_CONTRACTS),
+        "profile": (
+            f"SELECT p.*, s.total_chars, true AS within_5pct"
+            f" FROM ({_PROFILE_DUCK}) p"
+            f" JOIN ({_SCAN_CORPUS_DUCK}) s USING (lang)"),
+        "normalize": (f"SELECT doc_id, {_NORM_DUCK} AS norm_text"
+                      " FROM documents"),
+        "shingles": (
+            "SELECT doc_id, CAST(length(list_distinct(list_transform("
+            "generate_series(1, greatest(1, length(norm)"
+            f" - {CFG.shingle_k - 1})),"
+            f" i -> substr(norm, CAST(i AS INT), {CFG.shingle_k}))))"
+            " AS BIGINT)"
+            f" AS n_shingles FROM ({_NORM_CTE})"),
+        "exact_dups": (
+            "SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(norm))"
+            f" AS exact_cluster FROM ({_NORM_CTE})"),
+        "canonical": (
+            "WITH c AS (SELECT doc_id,"
+            " TIMESTAMP '2025-01-01 00:00:00' + INTERVAL (doc_id * 137) SECOND"
+            " AS warc_ts,"
+            " min(doc_id) OVER (PARTITION BY md5(norm)) AS cluster"
+            f" FROM ({_NORM_CTE}))"
+            " SELECT doc_id, cluster, (row_number() OVER (PARTITION BY cluster"
+            " ORDER BY warc_ts, doc_id)) = 1 AS is_canonical FROM c"),
+        "cluster_stats": (
+            "WITH cl AS (SELECT min(doc_id) OVER (PARTITION BY md5(norm))"
+            f" AS exact_cluster FROM ({_NORM_CTE})),"
+            " s AS (SELECT exact_cluster, count(*) AS n_docs FROM cl"
+            " GROUP BY exact_cluster)"
+            " SELECT n_docs, count(*) AS n_clusters FROM s GROUP BY n_docs"),
+        "cc_labels": (
+            "SELECT doc_id, min(doc_id) OVER (PARTITION BY bucket)"
+            " AS cluster_id"
+            f" FROM ({_BUCKET1})"),
+        "q1_lineitem_agg": (
+            "SELECT l_returnflag, l_linestatus,"
+            " round(sum(l_quantity), 2) AS sum_qty,"
+            " round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,"
+            " count(*) AS n_rows FROM lineitem"
+            " WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'"
+            " GROUP BY l_returnflag, l_linestatus"),
+        "q3_join": (
+            "SELECT c_mktsegment,"
+            " round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,"
+            " CAST(count(DISTINCT o_orderkey) AS BIGINT) AS n_orders"
+            " FROM customer JOIN orders ON c_custkey = o_custkey"
+            " JOIN lineitem ON o_orderkey = l_orderkey"
+            " GROUP BY c_mktsegment"),
+        "q_window": (
+            "SELECT o_orderkey, CAST(row_number() OVER (PARTITION BY o_custkey"
+            " ORDER BY o_orderdate, o_orderkey) AS INT) AS rn FROM orders"),
+        "q_topk": (
+            "SELECT o_orderkey, o_totalprice FROM orders"
+            " ORDER BY o_totalprice DESC, o_orderkey LIMIT 20"),
+        "events_json": (
+            "SELECT event_type,"
+            " CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT))"
+            " AS BIGINT) AS sum_k,"
+            " round(sum(value), 2) AS sum_value FROM events"
+            " GROUP BY event_type"),
+        "metrics_rollup": (
+            "SELECT coalesce(l_returnflag, 'ALL') AS rflag,"
+            " coalesce(l_linestatus, 'ALL') AS lstatus, count(*) AS n"
+            " FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)"),
+        "recall": ("SELECT true AS recall_ok, true AS precision_ok,"
+                   " true AS specificity_ok, true AS pairs_nonempty"),
+        "ngram_jaccard": (
+            "WITH g AS (SELECT doc_id, list_distinct(list_transform("
+            " generate_series(1,"
+            " greatest(1, length(str_split(norm, ' ')) - 2)),"
+            " i -> array_to_string(list_slice(str_split(norm, ' '), i, i + 2),"
+            " ' '))) AS grams"
+            f" FROM ({_NORM_CTE}))"
+            " SELECT a.doc_id AS src,"
+            " round(length(list_intersect(a.grams, b.grams))"
+            " / length(list_distinct(a.grams || b.grams)), 4) AS jaccard_w3"
+            " FROM g a JOIN g b ON b.doc_id = a.doc_id + 1"),
+        "decontam": decontaminate_duck_sql(_NORM_CTE, n=8),
+        "pii_stats": (
+            f"SELECT doc_id, {pii_duck_cols('text')} FROM"
+            f" (SELECT doc_id, {_PII_TEXT_DUCK} AS text FROM documents)"),
+        "domain_stats": domain_stats_duck_sql(
+            f"(SELECT {_MESSY_URL_DUCK} AS url, n_chars FROM documents)",
+            "url", chars_col="n_chars", blocklist=("site3.example.com",)),
+        "line_dedup": line_dedup_duck_sql(
+            f"(SELECT doc_id, {_LINE_TEXT_DUCK} AS text FROM documents)"),
+        "filter_battery": filter_battery_duck_sql(
+            f"(SELECT doc_id, {_NORM_DUCK} AS norm,"
+            f" {_PII_TEXT_DUCK} AS ptext FROM documents)",
+            norm_expr="norm", pii_expr="ptext", allowed_langs=("en",)),
+        "domain_cap": domain_cap_duck_sql(
+            f"(SELECT doc_id, {_MESSY_URL_DUCK} AS url FROM documents)",
+            "url", "((doc_id * 2654435761) % 9973 + 9973) % 9973", k=10),
+        "split_assign": split_assign_duck_sql(
+            "documents",
+            f"((doc_id * 2654435761) % {SPLIT_BUCKETS} + {SPLIT_BUCKETS})"
+            f" % {SPLIT_BUCKETS}",
+            weights=(("train", 0.8), ("val", 0.1), ("test", 0.1))),
+        "dedup_tiers": tier_labels_duck_sql(
+            "(SELECT doc_id FROM documents)", _EDGES_DUCK),
+        "cluster_cap": cluster_cap_duck_sql(
+            "(SELECT doc_id, doc_id - ((doc_id % 7 + 7) % 7) AS cluster_id"
+            " FROM documents)",
+            "((doc_id * 2654435761) % 9973 + 9973) % 9973", k=3),
+        "mix_sample": mix_sample_duck_sql(
+            "documents",
+            f"((doc_id * 2654435761) % {MIX_BUCKETS} + {MIX_BUCKETS})"
+            f" % {MIX_BUCKETS}",
+            rates=(("en", 0.5), ("fr", 1.0), ("zh", 0.05)),
+            stratum_expr="lang", default_rate=0.25),
+        "lm_score": lm_score_duck_sql(_NORM_CTE),
+        "dsir_select": dsir_duck_sql(
+            _NORM_CTE,
+            f"SELECT doc_id, {_NORM_DUCK} AS norm FROM documents"
+            f" WHERE lang = 'en'",
+            threshold=-8.0,
+            rank_sql=f"((doc_id * 2654435761 % {RANK_BUCKETS})"
+                     f" + {RANK_BUCKETS}) % {RANK_BUCKETS}"),
+    }
+    assert list(sql) == list(QUERIES) and len(QUERIES) <= 50
+    return sql

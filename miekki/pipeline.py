@@ -1,7 +1,7 @@
 """End-to-end dedup pipeline (SURVEY.md §3.1).
 
 The stage graph is defined once: ``dedup_edges`` (T1 + T2 → T4) and
-``cluster_labels`` (T4 + T1 → T5). ``dedup_labels`` composes them as
+``cluster_labels`` (T4 + T0 → T5). ``dedup_labels`` composes them as
 the pure dataflow (DataFrame in → DataFrame out, no I/O) used by tests
 and the driver contract; ``run`` materializes the same functions with
 checkpointing / lineage / metrics via the catalog layer (O21–O23) and
@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from miekki.config import DedupConfig
+from miekki.exprs import doc_id_sql
 from miekki.stages.canonical import select_canonical
 from miekki.stages.cc import cc_labels
 from miekki.stages.lsh import minhash_candidate_edges
@@ -46,28 +47,26 @@ def dedup_edges(docs: DataFrame, sigs: DataFrame, cfg: DedupConfig,
     return edges
 
 
-def _doc_meta(docs, corpus):
-    """(doc_id, url, warc_ts) with EXACTLY one row per doc: url is
-    T0's primary key, but a dirty input carrying the same url twice
-    (recrawl appended instead of upserted) would otherwise fan out
-    quadratically through this join and emit duplicate label rows per
-    doc_id. Pin min(warc_ts) per url (deterministic; the canonical
-    tie-break prefers the earliest crawl anyway) and fold docs to one
-    row per doc_id (url is a function of doc_id — same hash preimage)."""
-    meta_ts = (corpus.select("url", "warc_ts")
-               .groupBy("url").agg(F.min("warc_ts").alias("warc_ts")))
-    return (docs.select("doc_id", "url").dropDuplicates(["doc_id"])
-            .join(meta_ts, "url"))
+def _doc_meta(corpus: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """(doc_id, url, warc_ts) with EXACTLY one row per doc, in one
+    aggregate over T0: doc_id is the url hash, so a dirty input
+    carrying the same url twice (recrawl appended instead of upserted)
+    folds to one row, pinned to its earliest capture (warc_ts is
+    non-null; the canonical tie-break prefers the earliest crawl
+    anyway)."""
+    earliest = F.min(F.struct("warc_ts", "url")).alias("m")
+    return (corpus.groupBy(F.expr(doc_id_sql("url", cfg)).alias("doc_id"))
+            .agg(earliest).select("doc_id", "m.url", "m.warc_ts"))
 
 
-def cluster_labels(edges: DataFrame, docs: DataFrame,
-                   corpus: DataFrame) -> DataFrame:
-    """T4 + T1 → T5 (doc_id, cluster_id, url, warc_ts, is_canonical):
+def cluster_labels(edges: DataFrame, corpus: DataFrame,
+                   cfg: DedupConfig) -> DataFrame:
+    """T4 + T0 → T5 (doc_id, cluster_id, url, warc_ts, is_canonical):
     CC over the de-duplicated (src, dst) pairs, then one canonical per
     cluster."""
     pairs = edges.select("src", "dst").dropDuplicates(["src", "dst"])
-    labels = cc_labels(pairs, docs.select("doc_id"))
-    return select_canonical(labels, _doc_meta(docs, corpus))
+    meta = _doc_meta(corpus, cfg)
+    return select_canonical(cc_labels(pairs, meta.select("doc_id")), meta)
 
 
 def dedup_labels(corpus: DataFrame, cfg: DedupConfig = DedupConfig(),
@@ -89,7 +88,7 @@ def dedup_labels(corpus: DataFrame, cfg: DedupConfig = DedupConfig(),
     docs = normalize(corpus, cfg).localCheckpoint()
     sigs = signatures_from_text(docs, cfg).localCheckpoint()
     edges = dedup_edges(docs, sigs, cfg, use_simhash, use_substr)
-    return cluster_labels(edges, docs, corpus)
+    return cluster_labels(edges, corpus, cfg)
 
 
 def run(spark, catalog, cfg: DedupConfig = DedupConfig(),
@@ -104,7 +103,7 @@ def run(spark, catalog, cfg: DedupConfig = DedupConfig(),
       docs_norm      ← corpus                      (O3/O4)
       signatures     ← docs_norm                   (O5–O7 + n_shingles)
       candidate_edges← signatures [+ docs_norm]    (O8–O14)
-      cluster_labels ← candidate_edges + docs_norm (O15–O19)
+      cluster_labels ← candidate_edges + corpus    (O15–O19)
       doc_tiers      ← candidate_edges + docs_norm (X27, opt-in:
                        emit_tiers=True — off by default so the
                        benchmarked 4-stage job stays comparable
@@ -145,7 +144,7 @@ def run(spark, catalog, cfg: DedupConfig = DedupConfig(),
         lambda: dedup_edges(docs, sigs, cfg, use_substr=use_substr),
         bucket_by=(n_buckets, ["src"]))
     labels = runner.materialize(
-        "cluster_labels", lambda: cluster_labels(edges, docs, corpus))
+        "cluster_labels", lambda: cluster_labels(edges, corpus, cfg))
 
     out = {
         "labels": labels,

@@ -10,19 +10,11 @@ so shard sketches union into the corpus sketch without re-reading
 data (register-wise max of two builds == the build of the union —
 tested).
 
-Two paths, same contract:
-
-- PRODUCTION: Spark's built-in DataSketches HLL
-  (`F.hll_sketch_agg` / `F.hll_union_agg`) — binary, compact,
-  store-and-merge in the metrics catalog. `hll_prod_estimate`
-  wraps it. The right default on a real cluster.
-- PINNED (this module's register frame): the sketch as a DATAFRAME
-  of (group…, reg_idx int, rho int) with an engine-portable
-  pinned spec, so DuckDB replays the ENTIRE approximate structure —
-  registers, scaled harmonic sum, estimator branch — bit-for-bit.
-  That cross-engine verifiability is what the binary DataSketches
-  format cannot give; it is also the resumable form (plain rows in
-  any catalog table, no format lock-in).
+The sketch is a DATAFRAME of (group…, reg_idx int, rho int) with an
+engine-portable pinned spec, so DuckDB replays the ENTIRE approximate
+structure — registers, scaled harmonic sum, estimator branch —
+bit-for-bit, which a binary sketch format cannot give. Plain rows in
+any catalog table also make it the resumable form.
 
 Pinned spec (both hash modes mask to the same 60-bit domain so the
 scaled sum below never overflows a signed 64):
@@ -161,17 +153,6 @@ def hll_estimate(registers: DataFrame,
                       * F.lit(1 << big_r)).cast("long")
                      .alias("s_scaled"))
             .withColumn("est_distinct", F.expr(_est_expr_sql(p))))
-
-
-def hll_prod_estimate(df: DataFrame, col: str,
-                      lg_k: int = HLL_P_DEFAULT) -> DataFrame:
-    """Production path: Apache DataSketches HLL via the built-in
-    aggregate (binary sketch on the executors, never the driver).
-    Store `sketch`, merge later builds with F.hll_union_agg, read
-    with F.hll_sketch_estimate."""
-    return (df.agg(F.hll_sketch_agg(col, F.lit(lg_k)).alias("sketch"))
-            .select("sketch",
-                    F.hll_sketch_estimate("sketch").alias("est_distinct")))
 
 
 # =====================================================================

@@ -10,10 +10,6 @@ three Exchanges — with one ``localCheckpoint()`` (which also truncates
 lineage: without it the plan doubles per round). It stops as soon as
 the graph is a forest of stars centred on the component minima, a
 state the large-star window detects in the same pass.
-``large_star``/``small_star`` are the join-based reference operators:
-nothing on the pipeline path calls them, they are what
-tests/test_cc.py checks one ``_large_pass`` + ``_small_pass`` round
-against. The driver's cc_edge_ops key runs the two passes themselves.
 """
 
 from __future__ import annotations
@@ -28,36 +24,6 @@ log = logging.getLogger(__name__)
 # form (0 = the input already was stars); grows O(log max component
 # diameter), observed 1-6 on real corpora
 LAST_ROUNDS: int | None = None
-
-
-def _symmetrize(edges: DataFrame) -> DataFrame:
-    fwd = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    rev = edges.select(F.col("dst").alias("u"), F.col("src").alias("v"))
-    return fwd.unionByName(rev).where("u != v")
-
-
-def large_star(edges: DataFrame) -> DataFrame:
-    """∀u: connect strictly-larger neighbors to m = min(Γ(u) ∪ {u})."""
-    sym = _symmetrize(edges)
-    mins = (sym.groupBy("u").agg(F.min("v").alias("mn"))
-               .select("u", F.least("mn", "u").alias("m")))
-    return (sym.join(mins, "u")
-               .where(F.col("v") > F.col("u"))
-               .select(F.col("v").alias("src"), F.col("m").alias("dst"))
-               .where("src != dst")
-               .distinct())
-
-
-def small_star(edges: DataFrame) -> DataFrame:
-    """∀u: connect smaller-or-equal neighbors (and u) to the min."""
-    e = (edges.select(F.greatest("src", "dst").alias("u"),
-                      F.least("src", "dst").alias("v"))
-              .where("u != v").distinct())
-    mins = e.groupBy("u").agg(F.min("v").alias("mn"))
-    j = e.join(mins, "u")
-    out1 = j.select(F.col("v").alias("src"), F.col("mn").alias("dst"))
-    out2 = mins.select(F.col("u").alias("src"), F.col("mn").alias("dst"))
-    return out1.unionByName(out2).where("src != dst").distinct()
 
 
 # Over PARTITION BY u ORDER BY v, first(v) is the neighbourhood minimum,

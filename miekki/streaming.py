@@ -3,7 +3,11 @@ of newly crawled pages against the historical corpus, plus the
 watermark/window primitives over the events table.
 
 The batch kernel (``incremental_dedup_batch``) reuses the batch
-stages verbatim — they are batch-agnostic DataFrame transforms. The
+normalize, signature, banding, verify and CC stages, but runs the
+MinHash pass only: no SimHash pass and no exact-substring pass. On the
+default config a stream over the same pages can therefore merge fewer
+clusters than ``pipeline.run()``; its batch twin is
+``dedup_labels(use_simhash=False, use_substr=False)``. The
 streaming wrapper is readStream → foreachBatch (no watermark — it
 would be inert without a stateful operator; late pages are accepted
 by design, bseq latest-wins); state (signatures + labels) lives in

@@ -128,8 +128,8 @@ def main():
                        .select("src", "dst").dropDuplicates(["src", "dst"])),
         "cc": (("edge_union", "normalize"),
                lambda p, d: cc_labels(p, d.select("doc_id"))),
-        "canonical": (("cc", "normalize"), lambda lab, d: select_canonical(
-            lab, _doc_meta(d, corpus))),
+        "canonical": (("cc",), lambda lab: select_canonical(
+            lab, _doc_meta(corpus, cfg))),
         "filter_battery": (("normalize",), lambda d: filter_battery(
             d, norm_col="norm_text")),
         "hll": (("normalize",), lambda d: hll_estimate(

@@ -60,7 +60,7 @@ print(f"shingle-count/minhash/simhash parity on {len(sample)} docs:"
 # (minhash ∪ simhash ∪ substr), so CC parity compares like with like
 t1 = time.time()
 edges = dedup_edges(dn, sigs, cfg).localCheckpoint()
-lab_pdf = cluster_labels(edges, dn, corpus).toPandas()
+lab_pdf = cluster_labels(edges, corpus, cfg).toPandas()
 print(f"edges + labels: {len(lab_pdf)} labels, {lab_pdf.cluster_id.nunique()}"
       f" clusters ({time.time()-t1:.1f}s)")
 edges_pdf = edges.select("src", "dst").toPandas()

@@ -113,5 +113,5 @@ def pipeline_result(spark, corpus_df):
     docs = normalize(corpus_df, cfg).localCheckpoint()
     sigs = signatures_from_text(docs, cfg).localCheckpoint()
     edges = dedup_edges(docs, sigs, cfg).localCheckpoint()
-    labels = cluster_labels(edges, docs, corpus_df)
+    labels = cluster_labels(edges, corpus_df, cfg)
     return labels.toPandas(), edges.toPandas()

@@ -126,6 +126,28 @@ def test_run_labels_equal_dedup_labels(spark, corpus_df, tmp_path):
                     "cluster_labels": "+".join(snaps[1:4])}
 
 
+def test_recrawled_urls_fold_to_earliest_capture(spark, fixture_corpus):
+    """T0 carrying a url more than once (a re-crawl appended instead of
+    upserted) still gives one T5 row per doc, stamped with the url's
+    earliest capture, and one canonical per cluster: 200 fixture docs
+    plus 5 copies crawled 3 days earlier and 3 crawled 3 days later
+    with changed text."""
+    from miekki.pipeline import dedup_labels
+
+    corpus_pdf, _, _ = fixture_corpus
+    base = corpus_pdf[["url", "warc_ts", "html", "text", "lang"]].iloc[:200]
+    days = pd.Timedelta(days=3)
+    earlier = base.iloc[:5].assign(warc_ts=base.warc_ts.iloc[:5] - days)
+    later = base.iloc[5:8].assign(warc_ts=base.warc_ts.iloc[5:8] + days,
+                                  text=base.text.iloc[5:8] + " recrawled")
+    corpus = spark.createDataFrame(pd.concat([base, earlier, later]))
+    labels = dedup_labels(corpus).toPandas()
+    first = corpus.toPandas().groupby("url").warc_ts.min()
+    assert len(labels) == labels.doc_id.nunique() == 200
+    assert (labels.warc_ts.values == first[labels.url].values).all()
+    assert (labels.groupby("cluster_id").is_canonical.sum() == 1).all()
+
+
 def test_golden_labels(pipeline_result):
     """Freeze end-to-end semantics: any drift fails loudly
     (FIXTURES.md F3). Regenerate via scripts/gen_golden.py ONLY on an

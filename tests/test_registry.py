@@ -12,7 +12,7 @@ import pytest
 
 import __spark_entry__ as entry
 from miekki import driver_queries as dq
-from miekki.driver_queries import ORACLE_SQL, QUERIES
+from miekki.driver_queries import QUERIES, oracle_sql
 
 pytestmark = pytest.mark.fast
 
@@ -24,7 +24,7 @@ def test_registry_at_most_50_keys():
 
 
 def test_every_key_has_an_oracle():
-    assert set(ORACLE_SQL) == set(QUERIES)
+    assert set(oracle_sql()) == set(QUERIES)
 
 
 def test_entry_module_exports_the_folded_registry():
